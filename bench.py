@@ -260,7 +260,6 @@ def streaming_dedup_bench(spark, sf_dir: str) -> dict:
         n_files: int,
         fpt: int,
         compact_every: int | None,
-        store_bloom: bool = False,
     ) -> dict:
         tmp = tempfile.mkdtemp(prefix="sdedup_bench_")
         try:
@@ -271,7 +270,6 @@ def streaming_dedup_bench(spark, sf_dir: str) -> dict:
                 store_dir=os.path.join(tmp, "store"),
                 checkpoint_dir=os.path.join(tmp, "ckpt"),
                 compact_every=compact_every,
-                store_bloom=store_bloom,
             )
             batch_secs: list[float] = []
             inner = ingest.process_batch
@@ -306,8 +304,7 @@ def streaming_dedup_bench(spark, sf_dir: str) -> dict:
                 "first8_batch_sec": round(sum(head) / max(len(head), 1), 4),
                 "last8_batch_sec": round(sum(tail) / max(len(tail), 1), 4),
                 # round-11 census sub splits: sig / store-probe / merge
-                # slices of the dedup stage, summed over the run — the
-                # number the store_bloom A/B moves (or honestly doesn't)
+                # slices of the dedup stage, summed over the run
                 "sub": ingest.gate_census().get("dedup", {}).get("sub"),
             }
         finally:
@@ -325,20 +322,6 @@ def streaming_dedup_bench(spark, sf_dir: str) -> dict:
     )
     no_compact = compaction_ab["off"]
     sweep.append(no_compact)
-    # round-11 store-bloom A/B (census-guided: the probe is ~56% of
-    # the dedup stage): same many-small-batches regime, bloom-over-
-    # batch-band-keys prefilter on the store side OFF vs ON; each arm
-    # carries its sig/probe/merge sub splits so the row shows WHERE
-    # the bloom moves cost.  At bench-scale stores the extra build job
-    # can wash out the shuffle savings — the row records whichever way
-    # it lands; the knob exists for stores that dwarf the batch.
-    store_bloom_ab = interleaved_best(
-        {
-            "off": lambda: one_run(32, 1, None),
-            "on": lambda: one_run(32, 1, None, store_bloom=True),
-        },
-        rate=lambda r: r["docs_per_sec"],
-    )
     # headline comes from the compaction-OFF sweep only, and carries
     # compact_every explicitly — a compaction-assisted number must
     # never masquerade as the plain ingest configuration
@@ -361,7 +344,6 @@ def streaming_dedup_bench(spark, sf_dir: str) -> dict:
         "n_docs": n_docs,
         "sweep": sweep,
         "compaction_ab": compaction_ab,
-        "store_bloom_ab": store_bloom_ab,
     }
 
 
@@ -643,28 +625,23 @@ def learned_ops_bench(spark, sf_dir: str) -> dict:
     t0 = time.perf_counter()
     lm3 = NgramKN.fit(train, order=3)
     t_kn3_fit = time.perf_counter() - t0
-    lm_gate_ab: dict = {}
-    lm_kernel_ab: dict = {}
+    lm_gate: dict = {}
     try:
         t_kn3, kn3_samples = timed_best(
             lambda: noop_write(lm3.score(held))
         )
-        # round 8: the INGEST LM gate's broadcast A/B — a PRUNED
-        # deployed-shape model (min_count=2; the configuration the
-        # auto-broadcast default exists for — an unpruned sf-fit
-        # model's tables are exactly the case the docstring says to
-        # broadcast=False on) riding StreamingDedupIngest over a
-        # 4-batch stream of the held split, threshold set above every
-        # score so the arms do identical routing work; the only
-        # difference is whether each micro-batch's 2n−1 model joins
-        # broadcast (map-only gate) or sort-merge (per-batch shuffles)
+        # the INGEST LM gate: a PRUNED deployed-shape model
+        # (min_count=2, under the dict scorer's row ceiling, so the
+        # gate scores with the broadcast flat payload) riding
+        # StreamingDedupIngest over a 4-batch stream of the held split,
+        # threshold set above every score so no doc is rejected
         from consume_kafka_avro_data_spark.streaming.dedup import (
             StreamingDedupIngest,
         )
 
         lm3g = NgramKN.fit(train, order=3, min_count=2)
 
-        def lm_gate_run(broadcast) -> dict:
+        def lm_gate_run() -> dict:
             tmp = tempfile.mkdtemp(prefix="lmgate_bench_")
             try:
                 topic = os.path.join(tmp, "docs")
@@ -675,7 +652,6 @@ def learned_ops_bench(spark, sf_dir: str) -> dict:
                     checkpoint_dir=os.path.join(tmp, "ckpt"),
                     lm_model=lm3g,
                     lm_threshold=1e9,
-                    lm_broadcast=broadcast,
                 )
                 stream = (
                     spark.readStream.schema(held.schema)
@@ -695,86 +671,10 @@ def learned_ops_bench(spark, sf_dir: str) -> dict:
                 shutil.rmtree(tmp, ignore_errors=True)
 
         try:
-            # best-of-2 per arm, arms interleaved, samples on record
-            # (interleaved_best); round 9 added the dict arm (the
-            # broadcast-DICT Arrow scorer — model collected once,
-            # zero model joins per micro-batch); round 10 splits it
-            # into the two payload layouts: "dict" = flat kernel
-            # (int-interned keys + per-batch gram memo, the deployed
-            # default) vs "dict_tuple" = the round-9 string-tuple
-            # kernel (raw-kernel micro-bench: ~57k vs ~70k docs/s at
-            # 50k-doc batches; at THIS bench's 625-doc micro-batches
-            # per-batch fixed costs dominate both)
-            lm_gate_ab = interleaved_best(
-                {
-                    "off": lambda: lm_gate_run(False),
-                    "on": lambda: lm_gate_run(True),
-                    "dict": lambda: lm_gate_run("dict"),
-                    "dict_tuple": lambda: lm_gate_run("dict-tuple"),
-                },
-                rate=lambda r: r["docs_per_sec"],
-            )
-            # round 10: the RAW kernel A/B the gate A/B can't see —
-            # at the stream's 625-doc micro-batches per-batch fixed
-            # costs dominate, so the two dict payload layouts are
-            # measured here on one big cached batch where the Python
-            # loop is the cost: flat (int-interned + gram memo) vs
-            # the round-9 string-tuple kernel, same model, same docs
-            big = held.select("doc_id", "text")
-            for i in range(19):
-                big = big.union(
-                    held.select(
-                        (F.col("doc_id") + (i + 1) * 10_000_000).alias(
-                            "doc_id"
-                        ),
-                        "text",
-                    )
-                )
-            big = big.repartition(32).cache()
-            n_big = big.count()
-            tup_payload = lm3g.local_tables()
-            from consume_kafka_avro_data_spark.operators.lm import (
-                flatten_local_tables,
-            )
-
-            flat_payload = flatten_local_tables(tup_payload)
-
-            def kernel_run(payload) -> dict:
-                bc = spark.sparkContext.broadcast(payload)
-                try:
-                    t0 = time.perf_counter()
-                    noop_write(lm3g.score_broadcast(big, _local=bc))
-                    dt = time.perf_counter() - t0
-                    return {
-                        "docs": n_big,
-                        "sec": round(dt, 4),
-                        "docs_per_sec": round(n_big / dt, 1),
-                    }
-                finally:
-                    bc.unpersist()
-
-            # warm the Python workers OUTSIDE the timers: the first
-            # pandas-UDF pass of the session pays worker spawn for all
-            # 32 executor threads, and without this the arm that runs
-            # FIRST eats it (the r10 seal's flat sample read 10.7k vs
-            # its warm 41k docs/s purely from run order)
-            kernel_run(tup_payload)
-            # round 11: N=5 interleaved repetitions (was 2) — the r10
-            # seals disagreed on the winner in both A/B rows at 2
-            # samples per arm, so the committed artifact now carries
-            # enough samples to settle flat-vs-tuple per seal instead
-            # of re-litigating it from single-run noise; each run is
-            # ~1-2 s at this batch size, so the wider protocol costs
-            # seconds
-            lm_kernel_ab = interleaved_best(
-                {
-                    "flat": lambda: kernel_run(flat_payload),
-                    "tuple": lambda: kernel_run(tup_payload),
-                },
-                rate=lambda r: r["docs_per_sec"],
-                runs=5,
-            )
-            big.unpersist()
+            # best-of-2, samples on record (interleaved_best)
+            lm_gate = interleaved_best(
+                {"auto": lm_gate_run}, rate=lambda r: r["docs_per_sec"]
+            )["auto"]
         finally:
             lm3g.unpersist()
     finally:
@@ -1000,8 +900,7 @@ def learned_ops_bench(spark, sf_dir: str) -> dict:
         "kn5_score_sec": round(t_kn5, 4),
         "kn5_docs_per_sec": round(n_held / t_kn5, 1),
         "kn5_score_samples": kn5_samples,
-        "lm_gate_broadcast_ab": lm_gate_ab,
-        "lm_kernel_ab": lm_kernel_ab,
+        "lm_gate": lm_gate,
         "quality_train_sec": round(t_train, 4),
         "quality_score_sec": round(t_score, 4),
         "quality_score_docs_per_sec": round(n_docs / t_score, 1),
@@ -1978,21 +1877,8 @@ def main() -> None:
                 learned["dsir_score_docs_per_sec"],
                 learned["dsir_jvm_docs_per_sec"],
             ],
-            # ingest LM gate docs/s: [sort-merge, broadcast_model
-            # joins, broadcast-DICT flat kernel, broadcast-DICT
-            # round-9 tuple kernel]
-            "lm_gate_docs_per_sec": [
-                learned["lm_gate_broadcast_ab"]["off"]["docs_per_sec"],
-                learned["lm_gate_broadcast_ab"]["on"]["docs_per_sec"],
-                learned["lm_gate_broadcast_ab"]["dict"]["docs_per_sec"],
-                learned["lm_gate_broadcast_ab"]["dict_tuple"]["docs_per_sec"],
-            ],
-            # round-10 raw dict-kernel A/B docs/s: [flat, tuple] —
-            # one big cached batch, Python loop is the cost
-            "lm_kernel_docs_per_sec": [
-                learned["lm_kernel_ab"]["flat"]["docs_per_sec"],
-                learned["lm_kernel_ab"]["tuple"]["docs_per_sec"],
-            ],
+            # ingest LM gate docs/s, size-selected scorer
+            "lm_gate_docs_per_sec": learned["lm_gate"]["docs_per_sec"],
             # round-9 gate kernel rate (merged-interval coverage)
             "gopher_rep_docs_per_sec": learned["gopher_rep_docs_per_sec"],
             # batch ANN [exact knn_join, codes-only ADC, ADC+rerank50]
@@ -2036,7 +1922,6 @@ def main() -> None:
         "ann_recall_at_10_adc",
         "bpe_train16_sec",
         "kn3_docs_per_sec",
-        "lm_kernel_docs_per_sec",
         "quality_docs_per_sec",
         "dsir_docs_per_sec",
         "lm_gate_docs_per_sec",

@@ -87,7 +87,7 @@ def flatten_local_tables(local: dict) -> dict:
     FLAT scoring kernel: every model token is interned to a small int
     (``vocab``), and every probs/lams key becomes a tuple of ints.
 
-    Why: the round-9 kernel's per-gram cost is string-tuple
+    Why: over string keys the per-gram cost is string-tuple
     construction + string hashing per backoff tier
     (``tuple(g[lo:n])`` over token STRINGS, whose hashes are
     recomputed for every fresh slice).  Int tuples hash in a few ns
@@ -103,9 +103,8 @@ def flatten_local_tables(local: dict) -> dict:
     only on (known-token ids, OOV position pattern), which is exactly
     what the collapsed key encodes.
 
-    The payload is marked by its ``vocab`` key; ``score_broadcast``
-    dispatches kernels on that marker, so either layout can ride the
-    stream-lifetime broadcast variable."""
+    The payload is marked by its ``vocab`` key, which
+    ``score_broadcast`` checks before scoring a provided payload."""
     n = int(local["order"])
     vocab: dict = {}
 
@@ -536,9 +535,9 @@ class NgramKN:
     def model_rows(self) -> int:
         """Total rows across every model table — THE broadcastability
         number: bench reports it per pruning arm, ``local_tables``
-        guards on it, and the ingest gate's auto-broadcast resolution
-        compares it to ``MAX_LOCAL_MODEL_ROWS`` before defaulting the
-        per-batch joins onto executor heaps."""
+        guards on it, and the ingest gate compares it to
+        ``MAX_LOCAL_MODEL_ROWS`` to choose the dict scorer over the
+        relational one."""
         return (
             sum(df.count() for df in self.probs.values())
             + sum(df.count() for df in self.lams.values())
@@ -605,7 +604,6 @@ class NgramKN:
         id_col: str = "doc_id",
         p_floor: float = 1e-9,
         max_model_rows: int = MAX_LOCAL_MODEL_ROWS,
-        kernel: str = "flat",
         _local: dict | None = None,
     ) -> DataFrame:
         """(id_col, n_ngrams, avg_nll) — :meth:`score`'s contract from
@@ -645,122 +643,83 @@ class NgramKN:
         aggregate per DISTINCT id (NULLs one group) via the narrow
         (id, count, Σlog) aggregate that follows the Arrow pass.
 
-        ``kernel`` picks the Python-side scoring loop (round 10):
-        ``"flat"`` (default) interns tokens to ints and memoizes the
-        backoff cascade per distinct gram per batch
-        (:func:`flatten_local_tables` — measured the faster arm in
-        bench.py's four-arm ``lm_gate_broadcast_ab``); ``"tuple"`` is
-        the round-9 string-tuple kernel, kept for the A/B and as the
-        reference the flat arm is pinned against.  Both are
-        value-identical to :meth:`score` by pytest pin.
+        The scoring loop runs on the FLAT payload
+        (:func:`flatten_local_tables`): tokens interned to ints and the
+        backoff cascade memoized per distinct gram per batch.
 
         ``_local`` lets a long-lived caller (the ingest gate) collect
         the dicts once and reuse them across scoring calls — pass the
-        result of :meth:`local_tables` / :meth:`local_tables_flat`, or
-        an already-broadcast ``Broadcast`` of either (the streaming
-        shape: ONE broadcast for the stream's whole life, instead of
-        one fresh broadcast variable per micro-batch waiting on the
-        ContextCleaner).  A provided payload's LAYOUT wins over
-        ``kernel`` — the broadcast already exists, re-keying it per
-        call would defeat the collect-once contract."""
+        result of :meth:`local_tables_flat`, or an already-broadcast
+        ``Broadcast`` of it (the streaming shape: ONE broadcast for the
+        stream's whole life, instead of one fresh broadcast variable
+        per micro-batch waiting on the ContextCleaner)."""
         from pyspark.broadcast import Broadcast
 
-        if kernel not in ("tuple", "flat"):
-            raise ValueError(f"kernel must be 'tuple' or 'flat', got {kernel!r}")
-        spark = docs.sparkSession
         if isinstance(_local, Broadcast):
             bc, local = _local, _local.value  # .value is driver-cached
         else:
+            bc = None
             local = (
                 _local
                 if _local is not None
-                else self.local_tables(max_model_rows)
+                else self.local_tables_flat(max_model_rows)
             )
-            if _local is None and kernel == "flat":
-                local = flatten_local_tables(local)
-            bc = spark.sparkContext.broadcast(local)
+        if "vocab" not in local:  # the marker of flatten_local_tables
+            raise ValueError(
+                "_local must be the flat payload (local_tables_flat), "
+                "not the local_tables layout"
+            )
         n = int(local["order"])
         if n != self.order:
             raise ValueError(
                 f"_local tables carry order {n}, model is order {self.order}"
             )
+        if bc is None:
+            bc = docs.sparkSession.sparkContext.broadcast(local)
         floor = float(p_floor)
 
-        if "vocab" in local:  # flat layout (see flatten_local_tables)
-
-            @F.pandas_udf("struct<_n: long, _slp: double>")
-            def kn_partials(texts: pd.Series) -> pd.DataFrame:
-                m = bc.value
-                vget = m["vocab"].get
-                p1 = m["p1"]
-                # hoisted per batch: (suffix offset, probs_k, lams_k)
-                # per tier, highest order last — no per-gram dict-of-
-                # dict indexing
-                tiers = [
-                    (n - k, m["probs"][k], m["lams"][k])
-                    for k in range(2, n + 1)
-                ]
-                log = math.log
-                counts, sums = [], []
-                cache: dict = {}  # gram-id tuple -> final log P̂
-                cget = cache.get
-                for text in texts:
-                    toks = _py_tokens(text)
-                    w = len(toks) - (n - 1)
-                    s = 0.0
-                    if w <= 0:
-                        w = 0
-                    else:
-                        ids = [vget(t, -1) for t in toks]
-                        for i in range(w):
-                            g = tuple(ids[i : i + n])
-                            v = cget(g)
-                            if v is None:
-                                ph = p1.get(g[n - 1], 0.0)
-                                for lo, pks, lms in tiers:
-                                    pk = pks.get(g[lo:])
-                                    if pk is not None:
-                                        ph = pk
-                                    else:
-                                        lam = lms.get(g[lo : n - 1])
-                                        ph = (1.0 if lam is None else lam) * ph
-                                v = log(ph if ph > floor else floor)
-                                cache[g] = v
-                            s += v
-                    counts.append(w)
-                    sums.append(s)
-                return pd.DataFrame({"_n": counts, "_slp": sums})
-
-        else:
-
-            @F.pandas_udf("struct<_n: long, _slp: double>")
-            def kn_partials(texts: pd.Series) -> pd.DataFrame:
-                m = bc.value
-                probs, lams, p1 = m["probs"], m["lams"], m["p1"]
-                log = math.log
-                counts, sums = [], []
-                for text in texts:
-                    toks = _py_tokens(text)
-                    w = len(toks) - (n - 1)
-                    s = 0.0
-                    if w <= 0:
-                        w = 0
-                    else:
-                        for i in range(w):
-                            g = toks[i : i + n]
+        @F.pandas_udf("struct<_n: long, _slp: double>")
+        def kn_partials(texts: pd.Series) -> pd.DataFrame:
+            m = bc.value
+            vget = m["vocab"].get
+            p1 = m["p1"]
+            # hoisted per batch: (suffix offset, probs_k, lams_k)
+            # per tier, highest order last — no per-gram dict-of-
+            # dict indexing
+            tiers = [
+                (n - k, m["probs"][k], m["lams"][k])
+                for k in range(2, n + 1)
+            ]
+            log = math.log
+            counts, sums = [], []
+            cache: dict = {}  # gram-id tuple -> final log P̂
+            cget = cache.get
+            for text in texts:
+                toks = _py_tokens(text)
+                w = len(toks) - (n - 1)
+                s = 0.0
+                if w <= 0:
+                    w = 0
+                else:
+                    ids = [vget(t, -1) for t in toks]
+                    for i in range(w):
+                        g = tuple(ids[i : i + n])
+                        v = cget(g)
+                        if v is None:
                             ph = p1.get(g[n - 1], 0.0)
-                            for k in range(2, n + 1):
-                                lo = n - k
-                                pk = probs[k].get(tuple(g[lo:n]))
+                            for lo, pks, lms in tiers:
+                                pk = pks.get(g[lo:])
                                 if pk is not None:
                                     ph = pk
                                 else:
-                                    lam = lams[k].get(tuple(g[lo : n - 1]))
+                                    lam = lms.get(g[lo : n - 1])
                                     ph = (1.0 if lam is None else lam) * ph
-                            s += log(ph if ph > floor else floor)
-                    counts.append(w)
-                    sums.append(s)
-                return pd.DataFrame({"_n": counts, "_slp": sums})
+                            v = log(ph if ph > floor else floor)
+                            cache[g] = v
+                        s += v
+                counts.append(w)
+                sums.append(s)
+            return pd.DataFrame({"_n": counts, "_slp": sums})
 
         partials = docs.select(
             id_col, kn_partials(F.col(text_col)).alias("_s")

@@ -15,6 +15,10 @@ cluster:
 * ``spark.sql.legacy.parquet.nanosAsLong`` — the driver testdata's
   ``events.ts`` column is parquet TIMESTAMP(NANOS), which Spark's reader
   refuses by default; we read it as raw nanos and convert (see tables.py).
+* The package's parent directory on the Python workers' ``PYTHONPATH``
+  (Spark merges it with its own and the inherited one): pandas UDFs
+  unpickle package functions there, and a worker only finds the package
+  by accident when the driver was started from the repository root.
 """
 
 from __future__ import annotations
@@ -22,6 +26,12 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: the directory holding this package — what a Python worker needs on
+#: its path to unpickle the package's UDFs
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__))
+)
 
 
 def _cpus() -> int:
@@ -83,6 +93,7 @@ def get_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config(
             "spark.driver.memory",
             driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),

@@ -29,7 +29,6 @@ of the graph tables.
 
 from __future__ import annotations
 
-import inspect
 import json
 import os
 import time
@@ -79,6 +78,20 @@ class DedupMetrics:
     gate_census_by_batch: dict[int, list] = field(default_factory=dict)
 
 
+@dataclass
+class _BatchRun:
+    """One micro-batch's walk through the gates: the surviving rows,
+    the per-gate census rows so far ``(gate, docs_rejected, sec)`` in
+    pipeline order, the frames checkpointed along the way (released
+    when the batch ends), and the clock of the current stage."""
+
+    batch: DataFrame
+    batch_id: int
+    census: list = field(default_factory=list)
+    held: list = field(default_factory=list)
+    t: float = field(default_factory=time.perf_counter)
+
+
 class StreamingDedupIngest(BoundedReplayMixin):
     """readStream(docs) → sign → LSH vs store → route → merge novel."""
 
@@ -115,7 +128,6 @@ class StreamingDedupIngest(BoundedReplayMixin):
         lm_model=None,
         lm_threshold: float | None = None,
         lm_rejects_dir: str | None = None,
-        lm_broadcast: bool | None = None,
         c4: bool = False,
         c4_min_line_words: int = 5,
         c4_min_sentences: int = 3,
@@ -129,7 +141,6 @@ class StreamingDedupIngest(BoundedReplayMixin):
         contam_dir: str | None = None,
         drift_monitor=None,
         sketch_monitor=None,
-        store_bloom: bool = False,
     ):
         """``id_type`` is the document-id column's Spark type (default
         LongType) — it shapes the persisted store schema, so a stream
@@ -191,39 +202,19 @@ class StreamingDedupIngest(BoundedReplayMixin):
         per-doc aggregate over joined n-grams), so it runs after
         them, on their survivors only.
 
-        ``lm_broadcast`` controls how the LM gate's model reaches the
-        per-batch score:
-
-        * ``True`` — model tables hinted into the joins' build side
-          (``NgramKN.score(broadcast_model=True)``): the per-batch
-          score is MAP-ONLY up to the final per-doc aggregate — the
-          deployed CCNet shape, where the filter model is fit once on
-          a bounded (usually ``min_count``-pruned) trusted corpus and
-          then sweeps every arriving batch.
-        * ``"dict"`` (round 9) — the model is collected ONCE at
-          construction into plain dicts and shipped as a broadcast
-          variable; each batch scores inside one ``mapInPandas``
-          (``NgramKN.score_broadcast``) with ZERO model joins per
-          micro-batch.  Value-identical to the relational scorer
-          (pinned); requires a model small enough for
-          ``local_tables``'s row ceiling — the pruned deployed shape.
-          Round 10 ships the FLAT payload (``local_tables_flat`` —
-          int-interned keys + per-batch gram memo, the
-          measured-faster kernel); ``"dict-tuple"`` keeps the round-9
-          string-tuple layout, retained for the bench A/B.
-        * ``False`` — plain joins, sized by Catalyst.  Choose this
-          when the model was fit UNPRUNED on a corpus large enough
-          that its gram-type tables rival executor memory — otherwise
-          every micro-batch pays up to 2n−1 sort-merge shuffles
-          against the model tables, per batch, forever.
-        * ``None`` (default) = AUTO: ``True`` when the model's
-          ``score`` supports the hint (NgramKN) AND its
-          ``model_rows()`` fits under the dict-tier row ceiling —
-          the size check (r08 advisor) that keeps auto from forcing
-          an unpruned web-scale model's tables onto executor heaps;
-          oversize models resolve to ``False`` (degrade to sort-merge,
-          never OOM by default).  BigramKN's two-table score has no
-          hint and broadcasts by size like any small join.
+        The LM gate picks its scorer from the model's size, once, at
+        construction.  A model with ``score_broadcast`` (NgramKN) whose
+        ``model_rows()`` fit under ``operators/lm.MAX_LOCAL_MODEL_ROWS``
+        — the pruned deployed shape — is collected ONCE into the flat
+        dict payload (``local_tables_flat``) and shipped as one
+        stream-lifetime broadcast variable; each batch then scores
+        inside one Arrow pass with ZERO model joins (value-identical
+        to ``score()``, pinned in tests/test_ngram_lm.py; it won every
+        gate A/B against the broadcast-hinted and sort-merge joins).
+        A larger model, or one without the dict tier (BigramKN), scores
+        through the relational ``score()``: an unpruned web-scale fit
+        degrades to sort-merge joins instead of landing on executor
+        heaps.
 
         ``c4=True`` enables the C4 LINE-LEVEL cleaning stage (Raffel
         et al. 2020 §2.2; ``operators/text.c4_clean``) as the FIRST
@@ -344,56 +335,19 @@ class StreamingDedupIngest(BoundedReplayMixin):
         self.lm_model = lm_model
         self.lm_threshold = lm_threshold
         self.lm_rejects_dir = lm_rejects_dir
-        # resolve the broadcast mode EAGERLY (config-layer, not batch 0)
-        supports_hint = lm_model is not None and (
-            "broadcast_model"
-            in inspect.signature(lm_model.score).parameters
-        )
-        self._lm_local = None  # Broadcast[dict] when lm_broadcast="dict"
-        if lm_broadcast in ("dict", "dict-tuple"):
-            if lm_model is None or not hasattr(lm_model, "score_broadcast"):
-                raise ValueError(
-                    'lm_broadcast="dict" needs an lm_model with '
-                    "score_broadcast (NgramKN) — fit/load one, or use "
-                    "True/False/None for the relational scorer"
-                )
-            # collect ONCE here (local_tables enforces its row
-            # ceiling) and broadcast ONCE — every micro-batch reuses
-            # the same broadcast variable for the stream's whole life.
-            # "dict" ships the round-10 FLAT payload (int-interned +
-            # per-batch gram memo — the measured-faster kernel);
-            # "dict-tuple" keeps the round-9 string-tuple layout for
-            # the bench A/B.  score_broadcast dispatches on the
-            # payload, so the per-batch path below is layout-blind.
-            self._lm_local = spark.sparkContext.broadcast(
-                lm_model.local_tables_flat()
-                if lm_broadcast == "dict"
-                else lm_model.local_tables()
-            )
-            self.lm_broadcast: bool | str = "dict"
-        elif lm_broadcast is None:
-            # AUTO = hint on iff supported AND the model is actually
-            # broadcast-sized (one-time table counts; an unpruned
-            # web-scale fit degrades to sort-merge instead of OOMing
-            # executors by default — r08 advisor)
+        # the dict scorer's payload, collected and broadcast ONCE here
+        # (one-time table counts decide it): every micro-batch reuses
+        # the same broadcast variable for the stream's whole life
+        self._lm_local = None
+        if lm_model is not None and hasattr(lm_model, "score_broadcast"):
             from consume_kafka_avro_data_spark.operators.lm import (
                 MAX_LOCAL_MODEL_ROWS,
             )
 
-            self.lm_broadcast = bool(
-                supports_hint
-                and hasattr(lm_model, "model_rows")
-                and lm_model.model_rows() <= MAX_LOCAL_MODEL_ROWS
-            )
-        else:
-            if lm_broadcast and lm_model is not None and not supports_hint:
-                raise ValueError(
-                    "lm_broadcast=True but this lm_model's score() has no "
-                    "broadcast_model hint (BigramKN's two-table score "
-                    "broadcasts by size on its own) — drop the flag or use "
-                    "an NgramKN model"
+            if lm_model.model_rows() <= MAX_LOCAL_MODEL_ROWS:
+                self._lm_local = spark.sparkContext.broadcast(
+                    lm_model.local_tables_flat(MAX_LOCAL_MODEL_ROWS)
                 )
-            self.lm_broadcast = bool(lm_broadcast)
         self.c4 = c4
         self.c4_min_line_words = c4_min_line_words
         self.c4_min_sentences = c4_min_sentences
@@ -504,29 +458,6 @@ class StreamingDedupIngest(BoundedReplayMixin):
         self._seen_batches: set[int] = set()
         self.drift_monitor = drift_monitor
         self.sketch_monitor = sketch_monitor
-        #: round-11 scale knob, from the census profile (the store
-        #: band-join probe is ~56% of the dedup stage, itself the
-        #: six-gate pipeline's wall-clock floor): build a bloom over
-        #: THIS BATCH's band keys (small side — docs × bands entries)
-        #: and prefilter the STORE's banded rows with it as a pure-JVM
-        #: bit test in the scan stage — the q_decontaminate_bloom
-        #: two-phase shape applied to the signature store.  Exact: a
-        #: bloom has no false negatives, all rows of one bucket share
-        #: one verdict (so surviving buckets' hot-counts stay exact),
-        #: and false-positive buckets can't equi-join any probe key.
-        #: What it buys at scale: the per-batch plan loses its two
-        #: FULL-STORE SHUFFLES (the hot-bucket aggregate and the band
-        #: join's store side both shrink to ~colliding buckets), so
-        #: per-batch cost tracks collisions instead of corpus size.
-        #: Default OFF, honestly: bench's ``store_bloom_ab`` row
-        #: measured the bloom arm SLOWER at bench scale (9.3 → 7.0
-        #: docs/s at 16-doc batches over a ≤ 500-row store — the
-        #: per-batch build job costs more than the tiny shuffles it
-        #: removes; the probe there is job-scheduling-bound, not
-        #: data-bound).  Enable it when the store dwarfs the batch —
-        #: the regime where the removed shuffles grow with the corpus
-        #: and the build job stays batch-sized.
-        self.store_bloom = store_bloom
 
     def _reset(self) -> None:
         # a monitor riding this ingest shares its run lifecycle: a new
@@ -678,30 +609,78 @@ class StreamingDedupIngest(BoundedReplayMixin):
 
     def _lm_scored(self, batch: DataFrame) -> DataFrame:
         """The LM gate's per-batch scoring frame — split out so tests
-        can pin its PLAN: with ``lm_broadcast`` resolved on (the NgramKN
-        auto default) every model-table join is a BroadcastHashJoin and
-        the batch side reaches the per-doc aggregate without an
-        Exchange — the map-only CCNet sweep shape, per micro-batch.
-        With ``"dict"`` the plan has ZERO model joins: the payload
-        collected at construction rides a broadcast variable into one
-        ``mapInPandas`` pass (pinned value-identical to the relational
-        scorer in tests/test_ngram_lm.py)."""
-        if self.lm_broadcast == "dict":
+        can pin its PLAN: with the dict payload collected at
+        construction the plan has ZERO model joins (one Arrow pass
+        plus the per-doc aggregate); otherwise it is the relational
+        ``score()``."""
+        docs = batch.select(self.id_col, self.text_col)
+        if self._lm_local is not None:
             return self.lm_model.score_broadcast(
-                batch.select(self.id_col, self.text_col),
+                docs,
                 text_col=self.text_col,
                 id_col=self.id_col,
                 _local=self._lm_local,
             )
-        kwargs = (
-            {"broadcast_model": True} if self.lm_broadcast else {}
-        )
         return self.lm_model.score(
-            batch.select(self.id_col, self.text_col),
-            text_col=self.text_col,
-            id_col=self.id_col,
-            **kwargs,
+            docs, text_col=self.text_col, id_col=self.id_col
         )
+
+    @staticmethod
+    def _write_audit(df: DataFrame, out_dir: str | None, batch_id: int) -> None:
+        """Write ``df`` as batch ``batch_id``'s partition of ``out_dir``
+        (nothing without a dir).  Partition by batch id + dynamic
+        overwrite: a replayed batch REPLACES its own rows, so every
+        audit trail (gate rejects, contamination, dupes) is
+        replay-stable — the same contract as the ingest DLQ."""
+        if out_dir:
+            (
+                df.withColumn("batch_id", F.lit(batch_id))
+                .write.partitionBy("batch_id")
+                .option("partitionOverwriteMode", "dynamic")
+                .mode("overwrite")
+                .parquet(out_dir)
+            )
+
+    def _gate(
+        self,
+        run: _BatchRun,
+        gate: str,
+        scored: DataFrame,
+        reject: Column,
+        audit: list,
+        out_dir: str | None,
+        rewrites: bool = False,
+    ) -> None:
+        """One pre-dedup gate: the rows of ``scored`` matching
+        ``reject``, projected to their ``audit`` columns, are
+        checkpointed (three consumers: audit write, count, anti-join —
+        the cut also keeps the scoring expressions from re-running per
+        consumer), written to ``out_dir``, counted, and removed from
+        the batch NULL-safely; the gate's census row closes the step.
+
+        ``rewrites`` marks a gate whose scored frame IS the new batch
+        (C4 replaces the text for every later gate): the whole scored
+        frame is checkpointed instead, and its kept rows, minus the
+        scorer's helper columns, replace the batch — no anti-join."""
+        if rewrites:
+            scored = scored.localCheckpoint(eager=True)
+            run.held.append(scored)
+            flagged = scored.where(reject).select(*audit)
+        else:
+            flagged = scored.where(reject).select(*audit).localCheckpoint(
+                eager=True
+            )
+            run.held.append(flagged)
+        self._write_audit(flagged, out_dir, run.batch_id)
+        n = flagged.count()
+        if rewrites:
+            helpers = set(scored.columns) - set(run.batch.columns)
+            run.batch = scored.where(~reject).drop(*helpers)
+        elif n:
+            run.batch = self._anti_by_id(run.batch, flagged)
+        now = time.perf_counter()
+        run.census.append((gate, n, now - run.t))
+        run.t = now
 
     # -- per-micro-batch body ------------------------------------------------
 
@@ -721,325 +700,176 @@ class StreamingDedupIngest(BoundedReplayMixin):
         if self.sketch_monitor is not None:
             # same raw-batch / replace-on-replay contract
             self.sketch_monitor.process_batch(batch, batch_id)
-        n_rejected = 0
-        # per-gate census rows (round 10): (gate, docs_rejected, sec)
-        # in PIPELINE order; docs_in per gate is reconstructed from the
-        # survivor count by walking the chain backwards at the end of
-        # the batch — zero extra count jobs
-        _census: list[tuple[str, int, float]] = []
-        _t_gate = time.perf_counter()
-        c4_cleaned = None
-        if self.c4:
-            from consume_kafka_avro_data_spark.operators.text import c4_clean
-
-            # line-clean FIRST (the published C4 order: line rules below
-            # the doc gates) — map-only JVM, no shuffle added.  The
-            # cleaned text REPLACES text_col for everything downstream:
-            # gates, signatures, and the store all see boilerplate-
-            # stripped content.  Checkpointed: three consumers (rejects
-            # write, count, the surviving-batch split) would otherwise
-            # re-run the expression pipeline per consumer, and every
-            # later gate builds on the surviving slice.
-            clash = {"n_lines", "n_lines_kept", "c4_keep"} & set(
-                batch.columns
-            )
-            if clash:
-                # c4_clean appends these columns; duplicated names would
-                # make the downstream drop ambiguous — fail loudly
-                raise ValueError(
-                    f"c4 gate needs columns {sorted(clash)} free, but the "
-                    "stream already carries them"
-                )
-            c4_cleaned = c4_clean(
-                batch,
-                text_col=self.text_col,
-                min_line_words=self.c4_min_line_words,
-                min_sentences=self.c4_min_sentences,
-            ).localCheckpoint(eager=True)
-            c4_rejects = c4_cleaned.where(~F.col("c4_keep")).select(
-                self.id_col, "n_lines", "n_lines_kept"
-            )
-            if self.c4_rejects_dir:
-                # partition by batch id + dynamic overwrite: a replayed
-                # batch REPLACES its own rows (same contract as rejects)
-                (
-                    c4_rejects.withColumn("batch_id", F.lit(batch_id))
-                    .write.partitionBy("batch_id")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .mode("overwrite")
-                    .parquet(self.c4_rejects_dir)
-                )
-            n_c4_rejected = c4_rejects.count()
-            n_rejected += n_c4_rejected
-            # survivors carry the CLEANED text forward; the helper
-            # columns stop here (downstream gates own their schemas)
-            batch = c4_cleaned.where(F.col("c4_keep")).drop(
-                "n_lines", "n_lines_kept", "c4_keep"
-            )
-            _census.append(
-                ("c4", n_c4_rejected, time.perf_counter() - _t_gate)
-            )
-            _t_gate = time.perf_counter()
-        rejects = None
-        if self.quality_threshold is not None:
-            from consume_kafka_avro_data_spark.operators.text import (
-                quality_score,
-            )
-
-            scored = quality_score(
-                batch.select(self.id_col, self.text_col), self.text_col
-            )
-            # checkpointed: up to three consumers (rejects write, count,
-            # the gate anti-join) — and the cut keeps the feature
-            # expressions from being re-evaluated per consumer
-            rejects = (
-                scored.where(F.col("quality") < self.quality_threshold)
-                .select(self.id_col, "quality")
-                .localCheckpoint(eager=True)
-            )
-            if self.rejects_dir:
-                # partition by batch id + dynamic overwrite: a replayed
-                # batch REPLACES its own rows (same contract as dupes)
-                (
-                    rejects.withColumn("batch_id", F.lit(batch_id))
-                    .write.partitionBy("batch_id")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .mode("overwrite")
-                    .parquet(self.rejects_dir)
-                )
-            # += not = : overwriting would silently drop the c4 gate's
-            # count from rejected_docs whenever both gates are on
-            # (round-10 sweep finding, pinned by the census-sums test)
-            n_q_rejected = rejects.count()
-            n_rejected += n_q_rejected
-            if n_q_rejected:
-                batch = self._anti_by_id(batch, rejects)
-            _census.append(
-                ("quality", n_q_rejected, time.perf_counter() - _t_gate)
-            )
-            _t_gate = time.perf_counter()
-        model_rejects = None
-        if self.quality_model is not None:
-            from consume_kafka_avro_data_spark.operators.quality import (
-                quality_probability,
-            )
-
-            scored_m = quality_probability(
-                self.quality_model,
-                batch.select(self.id_col, self.text_col),
-                self.text_col,
-            )
-            # checkpointed for the same three consumers as the
-            # heuristic gate (dir write, count, anti-join)
-            model_rejects = (
-                scored_m.where(
-                    F.col("quality_prob") < self.quality_model_threshold
-                )
-                .select(self.id_col, "quality_prob")
-                .localCheckpoint(eager=True)
-            )
-            if self.model_rejects_dir:
-                # partition by batch id + dynamic overwrite: a replayed
-                # batch REPLACES its own rows (same contract as rejects)
-                (
-                    model_rejects.withColumn("batch_id", F.lit(batch_id))
-                    .write.partitionBy("batch_id")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .mode("overwrite")
-                    .parquet(self.model_rejects_dir)
-                )
-            n_model_rejected = model_rejects.count()
-            if n_model_rejected:
-                batch = self._anti_by_id(batch, model_rejects)
-            n_rejected += n_model_rejected
-            _census.append(
-                (
-                    "quality_model",
-                    n_model_rejected,
-                    time.perf_counter() - _t_gate,
-                )
-            )
-            _t_gate = time.perf_counter()
-        rep_rejects = None
-        if self.gopher_rep:
-            from consume_kafka_avro_data_spark.operators.text import (
-                GOPHER_REP_THRESHOLDS,
-                gopher_repetition,
-            )
-
-            # published repetition removal on the JVM gates' survivors
-            # — one Arrow map pass, no shuffle; audit rows carry every
-            # metric so a rejection is explainable
-            scored_rep = gopher_repetition(
-                batch.select(self.id_col, self.text_col),
-                text_col=self.text_col,
-                thresholds=self.gopher_rep_thresholds,
-            )
-            rep_rejects = (
-                scored_rep.where(~F.col("gopher_rep_keep"))
-                .select(self.id_col, *GOPHER_REP_THRESHOLDS)
-                .localCheckpoint(eager=True)  # dir write + count + anti-join
-            )
-            if self.gopher_rep_rejects_dir:
-                # partition by batch id + dynamic overwrite: a replayed
-                # batch REPLACES its own rows (same contract as rejects)
-                (
-                    rep_rejects.withColumn("batch_id", F.lit(batch_id))
-                    .write.partitionBy("batch_id")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .mode("overwrite")
-                    .parquet(self.gopher_rep_rejects_dir)
-                )
-            n_rep_rejected = rep_rejects.count()
-            if n_rep_rejected:
-                batch = self._anti_by_id(batch, rep_rejects)
-            n_rejected += n_rep_rejected
-            _census.append(
-                (
-                    "gopher_rep",
-                    n_rep_rejected,
-                    time.perf_counter() - _t_gate,
-                )
-            )
-            _t_gate = time.perf_counter()
-        dsir_rejects = None
-        if self.dsir_model is not None:
-            from consume_kafka_avro_data_spark.operators.dsir import (
-                dsir_log_weights,
-            )
-
-            # distribution-matching cut on the classifier survivors —
-            # map-only Arrow pass, no shuffle added to the batch plan
-            scored_d = dsir_log_weights(
-                self.dsir_model,
-                batch.select(self.id_col, self.text_col),
-                self.text_col,
-            )
-            dsir_rejects = (
-                scored_d.where(F.col("dsir_logw") < self.dsir_threshold)
-                .select(self.id_col, "dsir_logw")
-                .localCheckpoint(eager=True)  # dir write + count + anti-join
-            )
-            if self.dsir_rejects_dir:
-                # partition by batch id + dynamic overwrite: a replayed
-                # batch REPLACES its own rows (same contract as rejects)
-                (
-                    dsir_rejects.withColumn("batch_id", F.lit(batch_id))
-                    .write.partitionBy("batch_id")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .mode("overwrite")
-                    .parquet(self.dsir_rejects_dir)
-                )
-            n_dsir_rejected = dsir_rejects.count()
-            if n_dsir_rejected:
-                batch = self._anti_by_id(batch, dsir_rejects)
-            n_rejected += n_dsir_rejected
-            _census.append(
-                ("dsir", n_dsir_rejected, time.perf_counter() - _t_gate)
-            )
-            _t_gate = time.perf_counter()
-        lm_rejects = None
-        if self.lm_model is not None:
-            # CCNet-style perplexity cut on the cheaper gates'
-            # survivors; avg_nll NULL (doc shorter than the model
-            # order) never exceeds the threshold, so shorts pass
-            scored_lm = self._lm_scored(batch)
-            # evidence-count column name differs per model generation
-            # (NgramKN: n_ngrams; BigramKN: n_bigrams) — normalize so
-            # the audit trail has ONE schema either way
-            count_col = (
-                "n_ngrams" if "n_ngrams" in scored_lm.columns else "n_bigrams"
-            )
-            lm_rejects = (
-                scored_lm.where(F.col("avg_nll") > self.lm_threshold)
-                .select(
-                    self.id_col,
-                    F.col(count_col).alias("n_ngrams"),
-                    "avg_nll",
-                )
-                .localCheckpoint(eager=True)  # dir write + count + anti-join
-            )
-            if self.lm_rejects_dir:
-                # partition by batch id + dynamic overwrite: a replayed
-                # batch REPLACES its own rows (same contract as rejects)
-                (
-                    lm_rejects.withColumn("batch_id", F.lit(batch_id))
-                    .write.partitionBy("batch_id")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .mode("overwrite")
-                    .parquet(self.lm_rejects_dir)
-                )
-            n_lm_rejected = lm_rejects.count()
-            if n_lm_rejected:
-                batch = self._anti_by_id(batch, lm_rejects)
-            n_rejected += n_lm_rejected
-            _census.append(
-                ("lm", n_lm_rejected, time.perf_counter() - _t_gate)
-            )
-            _t_gate = time.perf_counter()
-        n_contam = 0
-        contam = None
-        if self._eval_grams is not None:
-            from consume_kafka_avro_data_spark.functions.textops import (
-                exploded_word_grams,
-            )
-
-            grams = exploded_word_grams(
-                batch.select(self.id_col, F.col(self.text_col).alias("text")),
-                self.id_col,
-                n=self.contam_gram_n,
-            )
-            # bloom prefilter = pure-JVM bit tests in the scan stage
-            # (prunes ~all clean grams); the exact broadcast verify
-            # join makes the decision FP-free, same two-phase shape as
-            # q_decontaminate_bloom
-            # prefilter (not bare might_contain): ``g`` is a derived
-            # column, and the fence keeps the probe predicate's 4k gram
-            # references from each re-building it (operators/bloom r11)
-            pre = self._bloom.prefilter(grams, "g")
-            contam = (
-                # broadcast justified: bounded eval gram set (see
-                # __init__ — MAX_BITS-guarded, checkpointed once)
-                pre.join(F.broadcast(self._eval_grams), "g")
-                .groupBy(self.id_col)
-                .agg(F.count_distinct("g").alias("eval_gram_hits"))
-                .where(F.col("eval_gram_hits") >= self.contam_min_hits)
-                .localCheckpoint(eager=True)  # dir write + count + anti-join
-            )
-            if self.contam_dir:
-                # partition by batch id + dynamic overwrite: a replayed
-                # batch REPLACES its own rows (same contract as rejects)
-                (
-                    contam.withColumn("batch_id", F.lit(batch_id))
-                    .write.partitionBy("batch_id")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .mode("overwrite")
-                    .parquet(self.contam_dir)
-                )
-            n_contam = contam.count()
-            if n_contam:
-                batch = self._anti_by_id(batch, contam)
-            _census.append(
-                ("decontaminate", n_contam, time.perf_counter() - _t_gate)
-            )
-            _t_gate = time.perf_counter()
-        # sub-stage timers (round 11): the census showed the dedup
-        # stage is ~48% of six-gate wall time — these split it into
-        # signature computation / store band-join probe / merge_new
-        # write so the next optimization aims at the real component
-        _t_sub = time.perf_counter()
-        sigs = minhash_sig_table(
-            batch,
-            self.id_col,
-            self.text_col,
-            self.shingle_k,
-            self.bands,
-            self.rows,
-            self.hash_fn,
-        ).localCheckpoint(eager=True)  # signed once; used by 3 consumers
-        _sub_sig = time.perf_counter() - _t_sub
-        dup_map = None
+        run = _BatchRun(batch, batch_id)
+        idc, txt = self.id_col, self.text_col
         try:
+            # gates in pipeline order, cheapest first: map-only JVM
+            # expressions, then the Arrow (Python-worker) passes, then
+            # the LM gate and decontamination, which shuffle
+            if self.c4:
+                from consume_kafka_avro_data_spark.operators.text import c4_clean
+
+                clash = {"n_lines", "n_lines_kept", "c4_keep"} & set(
+                    batch.columns
+                )
+                if clash:
+                    # c4_clean appends these columns; duplicated names
+                    # would make the downstream drop ambiguous
+                    raise ValueError(
+                        f"c4 gate needs columns {sorted(clash)} free, but "
+                        "the stream already carries them"
+                    )
+                # line-clean FIRST (the published C4 order: line rules
+                # below the doc gates); the cleaned text replaces
+                # text_col for the later gates, signatures and store
+                self._gate(
+                    run,
+                    "c4",
+                    c4_clean(
+                        batch,
+                        text_col=txt,
+                        min_line_words=self.c4_min_line_words,
+                        min_sentences=self.c4_min_sentences,
+                    ),
+                    ~F.col("c4_keep"),
+                    [idc, "n_lines", "n_lines_kept"],
+                    self.c4_rejects_dir,
+                    rewrites=True,
+                )
+            if self.quality_threshold is not None:
+                from consume_kafka_avro_data_spark.operators.text import (
+                    quality_score,
+                )
+
+                self._gate(
+                    run,
+                    "quality",
+                    quality_score(run.batch.select(idc, txt), txt),
+                    F.col("quality") < self.quality_threshold,
+                    [idc, "quality"],
+                    self.rejects_dir,
+                )
+            if self.quality_model is not None:
+                from consume_kafka_avro_data_spark.operators.quality import (
+                    quality_probability,
+                )
+
+                self._gate(
+                    run,
+                    "quality_model",
+                    quality_probability(
+                        self.quality_model, run.batch.select(idc, txt), txt
+                    ),
+                    F.col("quality_prob") < self.quality_model_threshold,
+                    [idc, "quality_prob"],
+                    self.model_rejects_dir,
+                )
+            if self.gopher_rep:
+                from consume_kafka_avro_data_spark.operators.text import (
+                    GOPHER_REP_THRESHOLDS,
+                    gopher_repetition,
+                )
+
+                # audit rows carry every metric: a rejection explains itself
+                self._gate(
+                    run,
+                    "gopher_rep",
+                    gopher_repetition(
+                        run.batch.select(idc, txt),
+                        text_col=txt,
+                        thresholds=self.gopher_rep_thresholds,
+                    ),
+                    ~F.col("gopher_rep_keep"),
+                    [idc, *GOPHER_REP_THRESHOLDS],
+                    self.gopher_rep_rejects_dir,
+                )
+            if self.dsir_model is not None:
+                from consume_kafka_avro_data_spark.operators.dsir import (
+                    dsir_log_weights,
+                )
+
+                self._gate(
+                    run,
+                    "dsir",
+                    dsir_log_weights(
+                        self.dsir_model, run.batch.select(idc, txt), txt
+                    ),
+                    F.col("dsir_logw") < self.dsir_threshold,
+                    [idc, "dsir_logw"],
+                    self.dsir_rejects_dir,
+                )
+            if self.lm_model is not None:
+                # avg_nll NULL (doc shorter than the model order) never
+                # exceeds the threshold, so shorts pass
+                scored_lm = self._lm_scored(run.batch)
+                # evidence-count column name differs per model generation
+                # (NgramKN: n_ngrams; BigramKN: n_bigrams) — normalize so
+                # the audit trail has ONE schema either way
+                count_col = (
+                    "n_ngrams" if "n_ngrams" in scored_lm.columns else "n_bigrams"
+                )
+                self._gate(
+                    run,
+                    "lm",
+                    scored_lm,
+                    F.col("avg_nll") > self.lm_threshold,
+                    [idc, F.col(count_col).alias("n_ngrams"), "avg_nll"],
+                    self.lm_rejects_dir,
+                )
+            if self._eval_grams is not None:
+                from consume_kafka_avro_data_spark.functions.textops import (
+                    exploded_word_grams,
+                )
+
+                grams = exploded_word_grams(
+                    run.batch.select(idc, F.col(txt).alias("text")),
+                    idc,
+                    n=self.contam_gram_n,
+                )
+                # bloom prefilter = pure-JVM bit tests in the scan stage
+                # (prunes ~all clean grams); the exact broadcast verify
+                # join makes the decision FP-free, same two-phase shape as
+                # q_decontaminate_bloom
+                # prefilter (not bare might_contain): ``g`` is a derived
+                # column, and the fence keeps the probe predicate's 4k gram
+                # references from each re-building it (operators/bloom r11)
+                hits = (
+                    self._bloom.prefilter(grams, "g")
+                    # broadcast justified: bounded eval gram set (see
+                    # __init__ — MAX_BITS-guarded, checkpointed once)
+                    .join(F.broadcast(self._eval_grams), "g")
+                    .groupBy(idc)
+                    .agg(F.count_distinct("g").alias("eval_gram_hits"))
+                )
+                self._gate(
+                    run,
+                    "decontaminate",
+                    hits,
+                    F.col("eval_gram_hits") >= self.contam_min_hits,
+                    [idc, "eval_gram_hits"],
+                    self.contam_dir,
+                )
+            # decontamination counts into contaminated_docs, every other
+            # gate into rejected_docs
+            n_contam = sum(n for g, n, _ in run.census if g == "decontaminate")
+            n_rejected = sum(n for _, n, _ in run.census) - n_contam
+            batch = run.batch
+            # sub-stage timers (round 11): the census showed the dedup
+            # stage is ~48% of six-gate wall time — these split it into
+            # signature computation / store band-join probe / merge_new
+            # write so the next optimization aims at the real component
+            _t_sub = time.perf_counter()
+            sigs = minhash_sig_table(
+                batch,
+                self.id_col,
+                self.text_col,
+                self.shingle_k,
+                self.bands,
+                self.rows,
+                self.hash_fn,
+            ).localCheckpoint(eager=True)  # signed once; used by 3 consumers
+            run.held.append(sigs)
+            _sub_sig = time.perf_counter() - _t_sub
             _t_sub = time.perf_counter()
             banded = self._banded(sigs)
             # REPLAY DETERMINISM: probe the store MINUS this batch's own
@@ -1060,28 +890,7 @@ class StreamingDedupIngest(BoundedReplayMixin):
                 how="left_anti",
             )
             n_docs = sigs.count()  # checkpointed; shared with metrics
-            store_banded = self._banded(store_rows)
-            if self.store_bloom:
-                from consume_kafka_avro_data_spark.operators.bloom import (
-                    MAX_BITS,
-                    BroadcastBloom,
-                )
-
-                # sized from the batch's band-key count (docs × bands,
-                # the build side); a batch too large for plan-literal
-                # transport falls back to the unfiltered join rather
-                # than refuse the micro-batch
-                n_keys = n_docs * self.bands
-                if 0 < n_keys * 16 <= MAX_BITS:
-                    blk_bloom = BroadcastBloom.build(
-                        banded.select("_block"),
-                        "_block",
-                        n_bits=max(128, 16 * n_keys),
-                    )
-                    store_banded = store_banded.where(
-                        blk_bloom.might_contain("_block")
-                    )
-            vs_store = self._matches(banded, store_banded)
+            vs_store = self._matches(banded, self._banded(store_rows))
             # intra-batch canonical rule: a doc whose id is ALREADY
             # STORED is canonical regardless of id order (the exclusion
             # above removed its store copy from the probe target, so a
@@ -1166,17 +975,9 @@ class StreamingDedupIngest(BoundedReplayMixin):
                 )
                 .localCheckpoint(eager=True)
             )
-            if self.dupes_dir:
-                # partition by batch id + dynamic overwrite: a replayed
-                # batch REPLACES its own rows (same contract as the
-                # ingest DLQ) — the dup routing stays queryable state
-                (
-                    dup_map.withColumn("batch_id", F.lit(batch_id))
-                    .write.partitionBy("batch_id")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .mode("overwrite")
-                    .parquet(self.dupes_dir)
-                )
+            run.held.append(dup_map)
+            # the dup routing stays queryable state
+            self._write_audit(dup_map, self.dupes_dir, batch_id)
             n_dupes = dup_map.count()
             _sub_probe = time.perf_counter() - _t_sub
             _t_sub = time.perf_counter()
@@ -1191,11 +992,11 @@ class StreamingDedupIngest(BoundedReplayMixin):
             )
             self.store.merge_new(novel)
             _sub_merge = time.perf_counter() - _t_sub
-            _census.append(
+            run.census.append(
                 (
                     "dedup",
                     n_dupes,
-                    time.perf_counter() - _t_gate,
+                    time.perf_counter() - run.t,
                     {
                         "sig": round(_sub_sig, 4),
                         "probe": round(_sub_probe, 4),
@@ -1219,7 +1020,7 @@ class StreamingDedupIngest(BoundedReplayMixin):
                 # already existed
                 rows: list[dict] = []
                 docs_in = n_docs  # dedup stage input = gate survivors
-                for gate, n_rej, sec, *extra in reversed(_census):
+                for gate, n_rej, sec, *extra in reversed(run.census):
                     # a reject gate's input includes what it rejected;
                     # dupes are ROUTED at the dedup stage, not removed
                     # from its input
@@ -1271,21 +1072,5 @@ class StreamingDedupIngest(BoundedReplayMixin):
             # the lineage cuts explicit about their lifetimes anyway —
             # a long-running processingTime stream must not accumulate
             # superseded batches' blocks until driver GC gets around to it
-            sigs.unpersist()
-            if dup_map is not None:
-                dup_map.unpersist()
-            if rejects is not None:
-                rejects.unpersist()
-            if model_rejects is not None:
-                model_rejects.unpersist()
-            if dsir_rejects is not None:
-                dsir_rejects.unpersist()
-            if lm_rejects is not None:
-                lm_rejects.unpersist()
-            if contam is not None:
-                contam.unpersist()
-            if c4_cleaned is not None:
-                c4_cleaned.unpersist()
-            if rep_rejects is not None:
-                rep_rejects.unpersist()
-
+            for df in run.held:
+                df.unpersist()

@@ -88,7 +88,7 @@ SLOW_TESTS = {
     "test_llm_ops.py::test_signature_tables_equal_hof_columns",
     "test_llm_ops.py::test_simhash_identity_and_locality",
     "test_lsh_tuning.py::test_tune_for_parity_across_banding_consumers",
-    "test_ngram_lm.py::test_flat_kernel_identical_to_tuple_kernel",
+    "test_ngram_lm.py::test_flat_kernel_identical_to_relational",
     "test_ngram_lm.py::test_local_tables_guard_and_reuse",
     "test_ngram_lm.py::test_local_tables_keyed_by_name_not_position",
     "test_ngram_lm.py::test_score_broadcast_at_orders_2_and_5",
@@ -141,11 +141,8 @@ SLOW_TESTS = {
     "test_streaming_dedup.py::test_gopher_repetition_gate_at_ingest",
     "test_streaming_dedup.py::test_learned_quality_gate_at_ingest",
     "test_streaming_dedup.py::test_lm_gate_accepts_bigram_model",
-    "test_streaming_dedup.py::test_lm_gate_dict_payload_layouts",
-    "test_streaming_dedup.py::test_lm_gate_dict_tier_and_size_gated_auto",
     "test_streaming_dedup.py::test_lm_perplexity_gate_at_ingest",
     "test_streaming_dedup.py::test_replay_after_merge_keeps_dup_routing_stable",
-    "test_streaming_dedup.py::test_store_bloom_prefilter_routing_identical",
     "test_streaming_dedup.py::test_streaming_decontamination_gate",
     "test_streaming_dedup.py::test_streaming_dedup_auto_compaction",
     "test_streaming_dedup.py::test_streaming_dedup_replay_is_idempotent",

@@ -710,7 +710,7 @@ def test_local_tables_guard_and_reuse(spark, tri):
     collect-once shape) — including through an explicit broadcast."""
     with pytest.raises(ValueError, match="past the local-dict ceiling"):
         tri.local_tables(max_rows=3)
-    local = tri.local_tables()
+    local = tri.local_tables_flat()
     assert local["order"] == 3
     docs = spark.createDataFrame(
         [(1, "the cat sat on the mat"), (2, "hi")],
@@ -787,13 +787,13 @@ def test_local_tables_keyed_by_name_not_position(spark, corpus_df):
         m.unpersist()
 
 
-def test_flat_kernel_identical_to_tuple_kernel(spark, tri, corpus_df):
-    """Round-10 flat kernel (int-interned vocab + per-batch gram memo,
-    flatten_local_tables): value-identical to the round-9 tuple kernel
-    and to the relational scorer — including the OOV-collapse argument
-    (distinct OOV tokens in the same positions score identically, OOV
-    in context vs final position, repeated grams that exercise the
-    memo) and duplicate/NULL ids."""
+def test_flat_kernel_identical_to_relational(spark, tri, corpus_df):
+    """The flat kernel (int-interned vocab + per-batch gram memo,
+    flatten_local_tables) is value-identical to the relational scorer
+    — including the OOV-collapse argument (distinct OOV tokens in the
+    same positions score identically, OOV in context vs final
+    position, repeated grams that exercise the memo) and duplicate/NULL
+    ids."""
     docs = spark.createDataFrame(
         [
             (1, "the cat sat on the mat"),
@@ -808,52 +808,38 @@ def test_flat_kernel_identical_to_tuple_kernel(spark, tri, corpus_df):
         ],
         "doc_id long, text string",
     )
-    want = _score_map(tri.score(docs))
-    flat = _score_map(tri.score_broadcast(docs, kernel="flat"))
-    tup = _score_map(tri.score_broadcast(docs, kernel="tuple"))
-    _assert_scores_equal(flat, want)
-    _assert_scores_equal(tup, want)
+    flat = _score_map(tri.score_broadcast(docs))
+    _assert_scores_equal(flat, _score_map(tri.score(docs)))
     # the OOV-token identity must not leak into the score
     assert flat[2] == flat[3]
-    # both kernels at order 5 with pruning (the deployed shape)
+    # order 5 with pruning (the deployed shape)
     corpus5 = [t + " so it goes on and on again" for t in CORPUS] * 2
     df5 = spark.createDataFrame([(t,) for t in corpus5], "text string")
     m = NgramKN.fit(df5, order=5, min_count=2)
     try:
-        w5 = _score_map(m.score(docs))
         _assert_scores_equal(
-            _score_map(m.score_broadcast(docs, kernel="flat")), w5
-        )
-        _assert_scores_equal(
-            _score_map(m.score_broadcast(docs, kernel="tuple")), w5
+            _score_map(m.score_broadcast(docs)), _score_map(m.score(docs))
         )
     finally:
         m.unpersist()
-    with pytest.raises(ValueError, match="kernel must be"):
-        tri.score_broadcast(docs, kernel="nope")
 
 
 def test_score_broadcast_payload_layout_wins(spark, tri):
-    """A provided _local payload's LAYOUT picks the kernel regardless
-    of the kernel= argument — re-keying an existing broadcast per call
-    would defeat the collect-once contract."""
+    """A provided _local payload is scored as it is — as a dict or
+    through a pre-broadcast variable (the streaming shape, one
+    broadcast for the stream's life) — and only the flat layout is
+    accepted: a local_tables payload is refused before any broadcast."""
     docs = spark.createDataFrame(
         [(1, "the cat sat on the mat"), (2, "zzz qqq")],
         "doc_id long, text string",
     )
     want = _score_map(tri.score(docs))
     flat_payload = tri.local_tables_flat()
-    tup_payload = tri.local_tables()
-    # cross the payloads against the opposite kernel= value
     _assert_scores_equal(
-        _score_map(tri.score_broadcast(docs, kernel="tuple", _local=flat_payload)),
-        want,
+        _score_map(tri.score_broadcast(docs, _local=flat_payload)), want
     )
-    _assert_scores_equal(
-        _score_map(tri.score_broadcast(docs, kernel="flat", _local=tup_payload)),
-        want,
-    )
-    # and through a pre-broadcast flat payload (the streaming shape)
     bc = spark.sparkContext.broadcast(flat_payload)
     _assert_scores_equal(_score_map(tri.score_broadcast(docs, _local=bc)), want)
     bc.unpersist()
+    with pytest.raises(ValueError, match="flat payload"):
+        tri.score_broadcast(docs, _local=tri.local_tables())

@@ -815,14 +815,14 @@ def test_lm_gate_accepts_bigram_model(spark, tmp_path):
     lm.unpersist()
 
 
-def test_lm_gate_broadcast_auto_and_plan(spark, tmp_path):
-    """Round-8: the LM gate scores with the model tables BROADCAST by
-    default (NgramKN auto-detects the hint), so each micro-batch's
-    score plan is map-only up to the per-doc aggregate — without it,
-    every batch pays up to 2n−1 sort-merge shuffles against the model
-    tables.  Pinned on the deployed form (save/load-ed model: parquet
-    tables); BigramKN auto-resolves OFF (its score has no hint) and
-    forcing the flag on it is an eager config error."""
+def test_lm_gate_broadcast_auto_and_plan(spark, tmp_path, monkeypatch):
+    """The LM gate picks its scorer from the model's size: under
+    MAX_LOCAL_MODEL_ROWS an NgramKN model (pinned on the deployed,
+    save/load-ed form) is collected once into the broadcast flat
+    payload and the per-batch score plan has NO join; with the ceiling
+    below the model's rows the relational score() runs.  Both route
+    the same docs, and BigramKN (no dict tier) still gates."""
+    from consume_kafka_avro_data_spark.operators import lm as lm_mod
     from consume_kafka_avro_data_spark.operators.lm import BigramKN, NgramKN
 
     trusted = spark.createDataFrame(
@@ -832,149 +832,53 @@ def test_lm_gate_broadcast_auto_and_plan(spark, tmp_path):
     lm.save(str(tmp_path / "m"))
     lm.unpersist()
     loaded = NgramKN.load(spark, str(tmp_path / "m"))
-
-    ingest = StreamingDedupIngest(
-        spark,
-        store_dir=str(tmp_path / "store"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        lm_model=loaded,
-        lm_threshold=5.0,
-    )
-    assert ingest.lm_broadcast is True  # auto: NgramKN supports the hint
-
+    salad = " ".join(reversed(BASE.split()))
+    # 3: one token, shorter than the model order — no score, passes
     batch = spark.createDataFrame(
-        [(1, BASE), (2, " ".join(reversed(BASE.split())))],
-        "doc_id long, text string",
+        [(1, BASE), (2, salad), (3, "hi")], "doc_id long, text string"
     )
-    scored = ingest._lm_scored(batch)
-    plan = scored._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        scored._jdf.queryExecution(), "simple"
-    )
-    # all 2n−1 = 3 model joins broadcast; the only sort-merge allowed
-    # is the final doc-sized id-restore join
-    assert plan.count("BroadcastHashJoin") >= 3, plan
-    assert plan.count("SortMergeJoin") <= 1, plan
-    # and the hinted scores are the plain path's scores, exactly
-    off = StreamingDedupIngest(
-        spark,
-        store_dir=str(tmp_path / "store2"),
-        checkpoint_dir=str(tmp_path / "ckpt2"),
-        lm_model=loaded,
-        lm_threshold=5.0,
-        lm_broadcast=False,
-    )
-    assert off.lm_broadcast is False
-    want = {
-        r.doc_id: (r.n_ngrams, r.avg_nll)
-        for r in off._lm_scored(batch).collect()
-    }
-    got = {r.doc_id: (r.n_ngrams, r.avg_nll) for r in scored.collect()}
-    assert got == want
+
+    def plan_of(df):
+        return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+            df._jdf.queryExecution(), "simple"
+        )
+
+    def route(tag, model):
+        nll = {r.doc_id: r.avg_nll for r in model.score(batch).collect()}
+        ingest = StreamingDedupIngest(
+            spark,
+            store_dir=str(tmp_path / f"store_{tag}"),
+            checkpoint_dir=str(tmp_path / f"ckpt_{tag}"),
+            lm_model=model,
+            lm_threshold=(nll[1] + nll[2]) / 2,
+            lm_rejects_dir=str(tmp_path / f"rej_{tag}"),
+        )
+        ingest.process_batch(batch, 0)
+        m = ingest.metrics
+        rej = spark.read.parquet(str(tmp_path / f"rej_{tag}")).collect()
+        routed = (m.docs, m.rejected_docs, m.novel_docs, [r.doc_id for r in rej])
+        return ingest, routed
+
+    dict_gate, dict_routed = route("dict", loaded)
+    assert dict_gate._lm_local is not None  # collected at construction
+    plan = plan_of(dict_gate._lm_scored(batch))
+    assert "Join" not in plan, plan
+    assert "ArrowEvalPython" in plan, plan
+    assert dict_routed == (3, 1, 2, [2])
+
+    monkeypatch.setattr(lm_mod, "MAX_LOCAL_MODEL_ROWS", loaded.model_rows() - 1)
+    rel_gate, rel_routed = route("rel", loaded)
+    assert rel_gate._lm_local is None
+    assert "Join" in plan_of(rel_gate._lm_scored(batch))
+    assert rel_routed == dict_routed
 
     bg = BigramKN.fit(trusted)
     try:
-        auto = StreamingDedupIngest(
-            spark,
-            store_dir=str(tmp_path / "store3"),
-            checkpoint_dir=str(tmp_path / "ckpt3"),
-            lm_model=bg,
-            lm_threshold=5.0,
-        )
-        assert auto.lm_broadcast is False  # BigramKN: no hint to turn on
-        with pytest.raises(ValueError, match="broadcast_model"):
-            StreamingDedupIngest(
-                spark,
-                store_dir=str(tmp_path / "store4"),
-                checkpoint_dir=str(tmp_path / "ckpt4"),
-                lm_model=bg,
-                lm_threshold=5.0,
-                lm_broadcast=True,
-            )
+        bg_gate, bg_routed = route("bg", bg)
+        assert bg_gate._lm_local is None
+        assert bg_routed == dict_routed
     finally:
         bg.unpersist()
-
-
-def test_lm_gate_dict_tier_and_size_gated_auto(spark, tmp_path):
-    """Round-9: (a) lm_broadcast="dict" collects the model ONCE at
-    construction and scores each micro-batch through the broadcast-
-    dict Arrow kernel — the per-batch plan has ZERO joins, and the
-    gate's routing (rejects, metrics, audit trail) is identical to the
-    relational arms; (b) AUTO now size-gates: a model reporting
-    table rows past the local-dict ceiling resolves lm_broadcast to
-    False (sort-merge degrade) instead of forcing broadcast (r08
-    advisor); (c) "dict" with a hint-less model is an eager config
-    error."""
-    from consume_kafka_avro_data_spark.operators.lm import BigramKN, NgramKN
-
-    trusted = spark.createDataFrame(
-        [(i, BASE) for i in range(10)], "doc_id long, text string"
-    )
-    lm = NgramKN.fit(trusted, order=2)
-    try:
-        salad = " ".join(reversed(BASE.split()))
-        probe = spark.createDataFrame(
-            [(1, BASE), (2, salad)], "doc_id long, text string"
-        )
-        nll = {r.doc_id: r.avg_nll for r in lm.score(probe).collect()}
-        cut = (nll[1] + nll[2]) / 2
-        ingest = StreamingDedupIngest(
-            spark,
-            store_dir=str(tmp_path / "store"),
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            lm_model=lm,
-            lm_threshold=cut,
-            lm_broadcast="dict",
-            lm_rejects_dir=str(tmp_path / "lm_rejects"),
-        )
-        assert ingest.lm_broadcast == "dict"
-        assert ingest._lm_local is not None  # collected at construction
-        batch = spark.createDataFrame(
-            [(1, BASE), (2, salad)], "doc_id long, text string"
-        )
-        scored = ingest._lm_scored(batch)
-        plan = scored._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-            scored._jdf.queryExecution(), "simple"
-        )
-        assert "Join" not in plan, plan
-        assert "ArrowEvalPython" in plan, plan
-        # end-to-end: same routing as the relational gate
-        stream = _doc_stream(spark, tmp_path, [[(1, BASE), (2, salad)]])
-        m = ingest.run_to_completion(stream)
-        assert m.docs == 2 and m.rejected_docs == 1
-        rej = spark.read.parquet(str(tmp_path / "lm_rejects")).collect()
-        assert [r.doc_id for r in rej] == [2]
-
-        # (b) size-gated auto: past-ceiling model rows resolve to False
-        class _Huge(NgramKN):
-            def model_rows(self):
-                return 10_000_000
-
-        huge = _Huge(lm.order, lm.probs, lm.lams, lm.p1, lm.discount)
-        auto = StreamingDedupIngest(
-            spark,
-            store_dir=str(tmp_path / "store2"),
-            checkpoint_dir=str(tmp_path / "ckpt2"),
-            lm_model=huge,
-            lm_threshold=cut,
-        )
-        assert auto.lm_broadcast is False
-
-        # (c) "dict" demands score_broadcast support
-        bg = BigramKN.fit(trusted)
-        try:
-            with pytest.raises(ValueError, match="score_broadcast"):
-                StreamingDedupIngest(
-                    spark,
-                    store_dir=str(tmp_path / "store3"),
-                    checkpoint_dir=str(tmp_path / "ckpt3"),
-                    lm_model=bg,
-                    lm_threshold=cut,
-                    lm_broadcast="dict",
-                )
-        finally:
-            bg.unpersist()
-    finally:
-        lm.unpersist()
 
 
 def test_c4_gate_cleans_text_before_downstream_gates(spark, tmp_path):
@@ -1128,12 +1032,13 @@ def test_dsir_gate_validated_eagerly(spark, tmp_path):
 
 
 def test_all_gates_compose_on_one_stream(spark, tmp_path):
-    """Round-7/8 integration: the C4 line-clean gate, the learned
-    classifier gate, the DSIR distribution gate, the LM perplexity
-    gate, the decontamination gate, and dedup all ride ONE
-    foreachBatch — each gate catches exactly its designed doc, the
-    audit trails stay disjoint, the counters sum to docs, and a full
-    fresh-checkpoint replay leaves every artifact byte-stable."""
+    """Round-7/8 integration: all seven pre-dedup gates — C4 line
+    cleaning, the heuristic quality score, the learned classifier,
+    Gopher repetition, the DSIR distribution gate, the LM perplexity
+    gate and decontamination — and dedup ride ONE foreachBatch: each
+    gate catches exactly its designed doc, the audit trails stay
+    disjoint, the counters sum to docs, and a full fresh-checkpoint
+    replay leaves every artifact byte-stable."""
     import random
 
     from pyspark.sql import functions as F
@@ -1148,6 +1053,7 @@ def test_all_gates_compose_on_one_stream(spark, tmp_path):
         quality_training_frame,
         train_quality_classifier,
     )
+    from consume_kafka_avro_data_spark.operators.text import quality_score
 
     # c4-formatted: every doc the later gates must SEE is one kept
     # line (ends in a terminal, ≥5 words) = one sentence, so the c4
@@ -1187,6 +1093,11 @@ def test_all_gates_compose_on_one_stream(spark, tmp_path):
     assert nll[9] > cut  # the salad doc is the LM gate's target
 
     spam_doc = doc(spam_words)
+    # the heuristic gate's designed victim: one token repeated (no
+    # lexical diversity); the Gopher gate's: a phrase looped five
+    # times, which the heuristic and the classifier must pass
+    junk = P(" ".join(["aaa"] * 14))
+    loop = P(" ".join(["the quick brown fox jumps over"] * 5))
     # the DSIR gate's designed victim: fluent but OFF-DISTRIBUTION —
     # no spam vocabulary (classifier must pass it), no eval overlap,
     # content words disjoint from the trusted corpus
@@ -1240,6 +1151,7 @@ def test_all_gates_compose_on_one_stream(spark, tmp_path):
                     (5, pfar),
                     (7, new_text),
                     (8, astro_doc),
+                    (12, loop),
                 ]
             ),
             "text",
@@ -1248,6 +1160,28 @@ def test_all_gates_compose_on_one_stream(spark, tmp_path):
     pass_min = min(v for i, v in probs.items() if i != 2)
     assert probs[2] < pass_min
     clf_threshold = (probs[2] + pass_min) / 2
+    # heuristic cut: below every doc that reaches the gate but junk
+    heur = {
+        r.doc_id: r.quality
+        for r in quality_score(
+            mk(
+                [
+                    (1, pbase),
+                    (2, spam_doc),
+                    (3, salad),
+                    (4, palso),
+                    (5, pfar),
+                    (7, new_text),
+                    (8, astro_doc),
+                    (11, junk),
+                    (12, loop),
+                ]
+            )
+        ).collect()
+    }
+    heur_pass_min = min(v for i, v in heur.items() if i != 11)
+    assert heur[11] < heur_pass_min
+    heur_threshold = (heur[11] + heur_pass_min) / 2
 
     # the C4 gate's designed victim: a properly punctuated long line
     # (survives the LINE rules) whose cleaned text carries a curly
@@ -1257,8 +1191,8 @@ def test_all_gates_compose_on_one_stream(spark, tmp_path):
         "long and properly terminated line."
     )
 
-    b1 = [(1, pbase), (2, spam_doc), (3, salad), (4, palso), (5, pfar)]
-    b2 = [(6, pbase), (7, new_text), (8, astro_doc), (10, code_doc)]
+    b1 = [(1, pbase), (2, spam_doc), (3, salad), (4, palso), (5, pfar), (11, junk)]
+    b2 = [(6, pbase), (7, new_text), (8, astro_doc), (10, code_doc), (12, loop)]
 
     def make(tag):
         return StreamingDedupIngest(
@@ -1269,9 +1203,13 @@ def test_all_gates_compose_on_one_stream(spark, tmp_path):
             c4=True,
             c4_min_sentences=1,
             c4_rejects_dir=str(tmp_path / "c4_rejects"),
+            quality_threshold=heur_threshold,
+            rejects_dir=str(tmp_path / "rejects"),
             quality_model=clf,
             quality_model_threshold=clf_threshold,
             model_rejects_dir=str(tmp_path / "model_rejects"),
+            gopher_rep=True,
+            gopher_rep_rejects_dir=str(tmp_path / "rep_rejects"),
             dsir_model=dsir,
             dsir_threshold=dsir_cut,
             dsir_rejects_dir=str(tmp_path / "dsir_rejects"),
@@ -1285,9 +1223,10 @@ def test_all_gates_compose_on_one_stream(spark, tmp_path):
     stream = _doc_stream(spark, tmp_path, [b1, b2])
     ing_a = make("a")
     m = ing_a.run_to_completion(stream)
-    assert m.docs == 9
-    # c4 (10) + classifier (2) + DSIR (8) + LM (3)
-    assert m.rejected_docs == 4
+    assert m.docs == 11
+    # c4 (10) + heuristic (11) + classifier (2) + Gopher (12) + DSIR (8)
+    # + LM (3)
+    assert m.rejected_docs == 6
     assert m.contaminated_docs == 1  # eval overlap (4)
     assert m.dup_docs == 1 and m.novel_docs == 3
     assert (
@@ -1301,11 +1240,12 @@ def test_all_gates_compose_on_one_stream(spark, tmp_path):
     # recorded
     census = ing_a.gate_census()
     assert list(census) == [
-        "c4", "quality_model", "dsir", "lm", "decontaminate", "dedup",
+        "c4", "quality", "quality_model", "gopher_rep", "dsir", "lm",
+        "decontaminate", "dedup",
     ]
     for gate, want_rej in [
-        ("c4", 1), ("quality_model", 1), ("dsir", 1), ("lm", 1),
-        ("decontaminate", 1), ("dedup", 1),
+        ("c4", 1), ("quality", 1), ("quality_model", 1), ("gopher_rep", 1),
+        ("dsir", 1), ("lm", 1), ("decontaminate", 1), ("dedup", 1),
     ]:
         assert census[gate]["docs_rejected"] == want_rej, gate
         assert census[gate]["batches"] == 2
@@ -1320,35 +1260,21 @@ def test_all_gates_compose_on_one_stream(spark, tmp_path):
                 if prev["gate"] != "dedup"
                 else True
             )
-    # census rejected-sums match the audit dirs exactly
-    for gate, d in [
-        ("c4", "c4_rejects"), ("quality_model", "model_rejects"),
-        ("dsir", "dsir_rejects"), ("lm", "lm_rejects"),
-        ("decontaminate", "contam"),
-    ]:
-        n_dir = spark.read.parquet(str(tmp_path / d)).count()
-        assert census[gate]["docs_rejected"] == n_dir, gate
-    # disjoint audit trails, each holding exactly its gate's doc
-    assert [
-        r.doc_id
-        for r in spark.read.parquet(str(tmp_path / "c4_rejects")).collect()
-    ] == [10]
-    assert [
-        r.doc_id
-        for r in spark.read.parquet(str(tmp_path / "model_rejects")).collect()
-    ] == [2]
-    assert [
-        r.doc_id
-        for r in spark.read.parquet(str(tmp_path / "dsir_rejects")).collect()
-    ] == [8]
-    assert [
-        r.doc_id
-        for r in spark.read.parquet(str(tmp_path / "lm_rejects")).collect()
-    ] == [3]
-    assert [
-        r.doc_id
-        for r in spark.read.parquet(str(tmp_path / "contam")).collect()
-    ] == [4]
+    # census rejected-sums match the audit dirs exactly, and the
+    # trails are disjoint, each holding exactly its gate's doc
+    gate_dirs = {
+        "c4": ("c4_rejects", 10),
+        "quality": ("rejects", 11),
+        "quality_model": ("model_rejects", 2),
+        "gopher_rep": ("rep_rejects", 12),
+        "dsir": ("dsir_rejects", 8),
+        "lm": ("lm_rejects", 3),
+        "decontaminate": ("contam", 4),
+    }
+    for gate, (d, victim) in gate_dirs.items():
+        ids = [r.doc_id for r in spark.read.parquet(str(tmp_path / d)).collect()]
+        assert ids == [victim], gate
+        assert census[gate]["docs_rejected"] == len(ids), gate
     dupes = {
         r.dup_id: r.match_id
         for r in spark.read.parquet(str(tmp_path / "dupes")).collect()
@@ -1357,14 +1283,18 @@ def test_all_gates_compose_on_one_stream(spark, tmp_path):
     stored = sorted(r["_id"] for r in make("probe").store.read().collect())
     assert stored == [1, 5, 7]
 
+    def artifacts():
+        return {
+            d: sorted(spark.read.parquet(str(tmp_path / d)).collect(), key=str)
+            for d in [d for d, _ in gate_dirs.values()] + ["dupes"]
+        }
+
+    before = artifacts()
     # full replay, fresh checkpoint: everything byte-stable
     m2 = make("b").run_to_completion(_doc_stream(spark, tmp_path, []))
-    assert m2.rejected_docs == 4 and m2.contaminated_docs == 1
+    assert m2.rejected_docs == 6 and m2.contaminated_docs == 1
     assert m2.dup_docs == 1
-    assert [
-        r.doc_id
-        for r in spark.read.parquet(str(tmp_path / "c4_rejects")).collect()
-    ] == [10]
+    assert artifacts() == before
     assert sorted(
         r["_id"] for r in make("probe2").store.read().collect()
     ) == stored
@@ -1424,59 +1354,6 @@ def test_gopher_repetition_gate_at_ingest(spark, tmp_path):
         )
 
 
-def test_lm_gate_dict_payload_layouts(spark, tmp_path):
-    """Round-10: lm_broadcast="dict" ships the FLAT payload
-    (local_tables_flat — int-interned keys, per-batch gram memo) while
-    "dict-tuple" keeps the round-9 string-tuple layout for the bench
-    A/B; both collect once at construction, both plans stay join-free,
-    and both route micro-batches identically to the relational gate."""
-    from consume_kafka_avro_data_spark.operators.lm import NgramKN
-
-    trusted = spark.createDataFrame(
-        [(i, BASE) for i in range(10)], "doc_id long, text string"
-    )
-    lm = NgramKN.fit(trusted, order=2)
-    try:
-        salad = " ".join(reversed(BASE.split()))
-        probe = spark.createDataFrame(
-            [(1, BASE), (2, salad)], "doc_id long, text string"
-        )
-        nll = {r.doc_id: r.avg_nll for r in lm.score(probe).collect()}
-        cut = (nll[1] + nll[2]) / 2
-        for i, (mode, flat_expected) in enumerate(
-            [("dict", True), ("dict-tuple", False)]
-        ):
-            ingest = StreamingDedupIngest(
-                spark,
-                store_dir=str(tmp_path / f"store{i}"),
-                checkpoint_dir=str(tmp_path / f"ckpt{i}"),
-                lm_model=lm,
-                lm_threshold=cut,
-                lm_broadcast=mode,
-                lm_rejects_dir=str(tmp_path / f"rej{i}"),
-            )
-            assert ingest.lm_broadcast == "dict"
-            payload = ingest._lm_local.value
-            assert ("vocab" in payload) is flat_expected, mode
-            batch = spark.createDataFrame(
-                [(1, BASE), (2, salad)], "doc_id long, text string"
-            )
-            scored = ingest._lm_scored(batch)
-            plan = scored._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-                scored._jdf.queryExecution(), "simple"
-            )
-            assert "Join" not in plan, (mode, plan)
-            stream = _doc_stream(
-                spark, tmp_path / f"s{i}", [[(1, BASE), (2, salad)]]
-            )
-            m = ingest.run_to_completion(stream)
-            assert m.docs == 2 and m.rejected_docs == 1, mode
-            rej = spark.read.parquet(str(tmp_path / f"rej{i}")).collect()
-            assert [r.doc_id for r in rej] == [2], mode
-    finally:
-        lm.unpersist()
-
-
 def test_c4_and_heuristic_quality_counts_both_rejects(spark, tmp_path):
     """Round-10 sweep fix: with the C4 gate AND the heuristic quality
     gate both on, rejected_docs must count BOTH gates' rejects — the
@@ -1526,49 +1403,3 @@ def test_c4_and_heuristic_quality_counts_both_rejects(spark, tmp_path):
             spark.read.parquet(str(tmp_path / "c4_rejects")).collect()] == [3]
     assert [r.doc_id for r in
             spark.read.parquet(str(tmp_path / "rejects")).collect()] == [2]
-
-
-def test_store_bloom_prefilter_routing_identical(spark, tmp_path):
-    """Round-11 scale knob: store_bloom=True prefilters the store's
-    banded rows with a bloom over the batch's band keys (pure-JVM bit
-    test in the scan stage — the q_decontaminate_bloom shape applied
-    to the signature store, removing both full-store shuffles from the
-    per-batch probe).  Exactness pinned: same stream, same store dir
-    layout, IDENTICAL routing (dupes map, stored canonicals, metrics,
-    census counts) as the unfiltered run — a bloom has no false
-    negatives, a bucket's rows share one verdict (hot-counts stay
-    exact), and FP buckets can't equi-join any probe key."""
-    runs = {}
-    for name, flag in (("plain", False), ("bloom", True)):
-        ing = StreamingDedupIngest(
-            spark,
-            store_dir=str(tmp_path / f"store_{name}"),
-            checkpoint_dir=str(tmp_path / f"ckpt_{name}"),
-            dupes_dir=str(tmp_path / f"dupes_{name}"),
-            store_bloom=flag,
-        )
-        m = ing.run_to_completion(
-            _doc_stream(spark, tmp_path / name, [BATCH1, BATCH2])
-        )
-        stored = sorted(r["_id"] for r in ing.store.read().collect())
-        dupes = {
-            r.dup_id: r.match_id
-            for r in spark.read.parquet(
-                str(tmp_path / f"dupes_{name}")
-            ).collect()
-        }
-        census = ing.gate_census()
-        runs[name] = {
-            "docs": m.docs,
-            "dup": m.dup_docs,
-            "novel": m.novel_docs,
-            "stored": stored,
-            "dupes": dupes,
-            "census_counts": {
-                g: (v["docs_in"], v["docs_rejected"])
-                for g, v in census.items()
-            },
-        }
-    assert runs["plain"] == runs["bloom"]
-    assert runs["bloom"]["dupes"] == {2: 1, 4: 1}
-    assert runs["bloom"]["stored"] == [1, 3, 5]
