@@ -682,16 +682,16 @@ def learned_ops_bench(spark, sf_dir: str) -> dict:
     # round 8: CCNet's DEPLOYED order — kn5 at bench scale, with the
     # min_count pruning A/B that decides broadcastability: the pruned
     # arm is the deployed shape (fit once on trusted text, tables small
-    # enough to broadcast, then score map-only via broadcast_model),
-    # the unpruned arm records what pruning saves in model rows
-    # (model_rows() is the same count the local-dict ceiling enforces)
+    # enough to broadcast), the unpruned arm records what pruning saves
+    # in model rows (model_rows() is the same count the local-dict
+    # ceiling enforces); the pruned arm's relational score() is timed
     t0 = time.perf_counter()
     lm5 = NgramKN.fit(train, order=5, min_count=2)
     t_kn5_fit = time.perf_counter() - t0
     kn5_rows_pruned = lm5.model_rows()
     try:
         t_kn5, kn5_samples = timed_best(
-            lambda: noop_write(lm5.score(held, broadcast_model=True))
+            lambda: noop_write(lm5.score(held))
         )
     finally:
         lm5.unpersist()

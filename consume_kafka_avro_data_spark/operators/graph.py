@@ -951,8 +951,8 @@ class GraphStore:
     Both tables live under the manifest-commit protocol — see
     :class:`~consume_kafka_avro_data_spark.operators.store.ManifestTable`
     (generalized from this class) for the staging/publish/crash-safety
-    contract.  The path-keyed private methods below are thin shims kept
-    for the existing call sites and tests."""
+    contract.  ``_manifest_files(path)`` names the files a table's
+    manifest publishes."""
 
     MANIFEST = ManifestTable.MANIFEST
 
@@ -973,18 +973,8 @@ class GraphStore:
             ),
         }
 
-    # -- path-keyed shims -----------------------------------------------------
-
     def _manifest_files(self, path: str) -> list[str]:
         return self._tables[path].files()
-
-    def _publish(self, path: str, files: list[str]) -> None:
-        self._tables[path].publish(files)
-
-    def _stage(
-        self, df: DataFrame, path: str, n_files: int | None = None
-    ) -> list[str]:
-        return self._tables[path].stage(df, n_files)
 
     # -- reads ---------------------------------------------------------------
 

@@ -264,8 +264,8 @@ class NgramKN:
         reference implementing the same pruning).  This is the lever
         that keeps the model tables broadcastable when fitting on a
         large trusted corpus (singleton top-order grams dominate table
-        size by Zipf), enabling ``score(broadcast_model=True)``'s
-        map-only sweep."""
+        size by Zipf), under ``MAX_LOCAL_MODEL_ROWS`` for
+        ``score_broadcast``'s map-only sweep."""
         if order < 2:
             raise ValueError(f"NgramKN order must be >= 2, got {order}")
         if not 0.0 < discount < 1.0:
@@ -454,25 +454,15 @@ class NgramKN:
         text_col: str = "text",
         id_col: str = "doc_id",
         p_floor: float = 1e-9,
-        broadcast_model: bool = False,
     ) -> DataFrame:
         """(id_col, n_ngrams, avg_nll) — per-document mean negative
         log-likelihood of its order-n token windows, the CCNet-style
         quality signal.  Docs with < order tokens report n_ngrams=0
         and NULL avg_nll (no evidence ≠ perfect fluency), and NULL-id
-        docs keep their scores — both the BigramKN conventions.
-
-        ``broadcast_model=True`` hints every model table into the
-        joins' build side, making the whole score MAP-ONLY up to the
-        final per-doc aggregate — the deployed CCNet shape, where the
-        filter model is fit once on a bounded trusted corpus (possibly
-        pruned, see ``fit(min_count=…)``) and then sweeps petabytes:
-        without the hint, each of the 2n−1 joins can sort-merge, which
-        shuffles the corpus-sized gram table once PER ORDER.  Leave
-        False when the model's gram-type tables rival executor memory
-        (an unpruned model fit on a huge corpus)."""
+        docs keep their scores — both the BigramKN conventions.  A
+        model small enough to ship scores map-side through
+        :meth:`score_broadcast` instead."""
         n = self.order
-        hint = F.broadcast if broadcast_model else (lambda df: df)
         grams = doc_ngrams(docs, n, text_col, keep_cols=[id_col])
         j = grams
         # one left join per prob/λ table; at order k the evaluated
@@ -486,7 +476,7 @@ class NgramKN:
                 ],
                 F.col("p").alias(f"_p{k}"),
             )
-            j = j.join(hint(pk), [f"w{lo + i + 1}" for i in range(k)], "left")
+            j = j.join(pk, [f"w{lo + i + 1}" for i in range(k)], "left")
             lk = self.lams[k].select(
                 *[
                     F.col(f"w{i + 1}").alias(f"w{lo + i + 1}")
@@ -495,10 +485,10 @@ class NgramKN:
                 F.col("lam").alias(f"_lam{k}"),
             )
             j = j.join(
-                hint(lk), [f"w{lo + i + 1}" for i in range(k - 1)], "left"
+                lk, [f"w{lo + i + 1}" for i in range(k - 1)], "left"
             )
         j = j.join(
-            hint(self.p1.select(F.col("w1").alias(f"w{n}"), "p1")),
+            self.p1.select(F.col("w1").alias(f"w{n}"), "p1"),
             [f"w{n}"],
             "left",
         )

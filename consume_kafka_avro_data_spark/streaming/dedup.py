@@ -44,6 +44,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from consume_kafka_avro_data_spark.functions.textops import exploded_word_grams
+from consume_kafka_avro_data_spark.operators.bloom import BroadcastBloom
 from consume_kafka_avro_data_spark.operators.dedup import (
     MAX_BUCKET_SIZE,
     _minhash_agg_components,
@@ -51,6 +53,12 @@ from consume_kafka_avro_data_spark.operators.dedup import (
     resolve_banding,
 )
 from consume_kafka_avro_data_spark.operators.store import ManifestTable
+from consume_kafka_avro_data_spark.operators.text import (
+    GOPHER_REP_THRESHOLDS,
+    c4_clean,
+    gopher_repetition,
+    quality_score,
+)
 from consume_kafka_avro_data_spark.streaming.lifecycle import BoundedReplayMixin
 
 
@@ -67,33 +75,34 @@ class DedupMetrics:
     rejected_docs: int = 0
     contaminated_docs: int = 0
     dup_pairs_by_batch: dict[int, int] = field(default_factory=dict)
-    #: round 10 — per-micro-batch per-gate rows in pipeline order,
-    #: ``{"gate", "docs_in", "docs_rejected", "sec"}`` (the "dedup"
-    #: row's docs_rejected counts ROUTED duplicates); keyed by batch id
-    #: like dup_pairs_by_batch (replays keep the original), trimmed at
-    #: the same horizon.  ``StreamingDedupIngest.gate_census()``
-    #: aggregates it per gate — the observability a deployment tunes
-    #: its gate order and executor count against (the reference's
-    #: error counter, src/main.cpp:243-251, at pipeline scale).
+    #: round 10 — per-micro-batch per-gate rows in funnel order,
+    #: ``{"gate", "docs_in", "docs_rejected"}``, closed by the "dedup"
+    #: row, which also carries ``sec`` and ``sub`` (its docs_rejected
+    #: counts ROUTED duplicates); keyed by batch id like
+    #: dup_pairs_by_batch (replays keep the original), trimmed at the
+    #: same horizon.  ``StreamingDedupIngest.gate_census()`` aggregates
+    #: it per gate — the observability a deployment tunes its gate
+    #: cuts and executor count against (the reference's error counter,
+    #: src/main.cpp:243-251, at pipeline scale).
     gate_census_by_batch: dict[int, list] = field(default_factory=dict)
-
-
-@dataclass
-class _BatchRun:
-    """One micro-batch's walk through the gates: the surviving rows,
-    the per-gate census rows so far ``(gate, docs_rejected, sec)`` in
-    pipeline order, the frames checkpointed along the way (released
-    when the batch ends), and the clock of the current stage."""
-
-    batch: DataFrame
-    batch_id: int
-    census: list = field(default_factory=list)
-    held: list = field(default_factory=list)
-    t: float = field(default_factory=time.perf_counter)
+    #: wall seconds of each batch's ONE gate verdict pass (every gate
+    #: shares it, so no gate row carries a ``sec`` of its own)
+    gate_pass_sec_by_batch: dict[int, float] = field(default_factory=dict)
 
 
 class StreamingDedupIngest(BoundedReplayMixin):
-    """readStream(docs) → sign → LSH vs store → route → merge novel."""
+    """readStream(docs) → gate → sign → LSH vs store → route → merge novel.
+
+    The pre-dedup gates (C4, heuristic quality, learned quality, Gopher
+    repetition, DSIR, LM perplexity, decontamination) each compute a
+    per-document verdict from a fixed model or eval set, so a batch
+    runs them as ONE verdict pass: every enabled gate's scoring chained
+    onto the batch, the first failing gate in funnel order (the order
+    above) recorded per doc, one checkpoint, one grouped count for the
+    census, and each gate's audit rows written from that checkpoint.
+    Funnel order is attribution order: a doc failing several gates is
+    counted and audited at the first of them only, exactly as a
+    sequential funnel would remove it there."""
 
     _checkpoint_subdir = "dedup"
 
@@ -166,8 +175,8 @@ class StreamingDedupIngest(BoundedReplayMixin):
         ``model_rejects_dir`` (its own directory — the heuristic gate's
         rejects carry a different schema).  Scoring is map-only JVM
         (tokenize → hash → LR transform; no Python workers), so this
-        gate too adds no shuffle.  Gate order: heuristic first (cheaper
-        expressions), model second, decontamination last.
+        gate too adds no shuffle.  Funnel order: heuristic first, model
+        second, decontamination last.
 
         ``dsir_model`` (+ required ``dsir_threshold``) enables the
         DISTRIBUTION-MATCHING gate at ingest — the streaming adaptation
@@ -182,9 +191,8 @@ class StreamingDedupIngest(BoundedReplayMixin):
         at ingest a deterministic weight cut replaces the sample so the
         audit trail is replay-stable — calibrate τ from the weight
         distribution of a held-out slice (e.g. its median for a
-        keep-half policy).  Runs after the classifier gate (both are
-        map-only; this one crosses into Python workers, so it goes
-        second) and before the LM gate (which shuffles).
+        keep-half policy).  Funnel order: after the classifier and
+        Gopher gates, before the LM gate.
 
         ``lm_model`` (+ required ``lm_threshold``) enables the
         PERPLEXITY gate at ingest — the CCNet deployment shape (Wenzek
@@ -197,10 +205,10 @@ class StreamingDedupIngest(BoundedReplayMixin):
         their scores to ``lm_rejects_dir`` (same replay contract).
         Docs too short for the model's order (``n_ngrams=0``, NULL
         score) PASS — no evidence is not evidence of junk; pair with
-        the heuristic gate's length features to cut shorts.  Unlike
-        the two quality gates this one shuffles (the score is a
-        per-doc aggregate over joined n-grams), so it runs after
-        them, on their survivors only.
+        the heuristic gate's length features to cut shorts.  The
+        score is a per-id aggregate over the doc's n-grams, joined
+        back to the batch NULL-safely; a doc failing an earlier gate
+        in the funnel is attributed there, not here.
 
         The LM gate picks its scorer from the model's size, once, at
         construction.  A model with ``score_broadcast`` (NgramKN) whose
@@ -219,13 +227,13 @@ class StreamingDedupIngest(BoundedReplayMixin):
         ``c4=True`` enables the C4 LINE-LEVEL cleaning stage (Raffel
         et al. 2020 §2.2; ``operators/text.c4_clean``) as the FIRST
         gate — the published pipeline runs line cleaning BELOW the
-        doc-level gates, and it is pure map-only JVM expressions, so
-        it is also the cheapest.  Each batch's text is line-cleaned
-        IN PLACE (downstream gates, signatures, and the store all see
-        the cleaned text — a doc deduped on boilerplate-stripped
-        content, which is the C4 intent), docs flagged unkept
-        (``c4_keep`` false: lorem ipsum, code braces, too few
-        sentences after cleaning) are rejected before any other gate,
+        doc-level gates; it is pure map-only JVM expressions.  Each
+        batch's text is line-cleaned IN PLACE (every later gate,
+        signatures, and the store all see the cleaned text — a doc
+        deduped on boilerplate-stripped content, which is the C4
+        intent), docs flagged unkept (``c4_keep`` false: lorem ipsum,
+        code braces, too few sentences after cleaning) are rejected
+        and attributed to C4 whatever the other gates say,
         counted into ``rejected_docs``, and optionally persisted with
         their line counts to ``c4_rejects_dir`` (same
         partition-by-batch dynamic-overwrite replay contract).
@@ -240,9 +248,8 @@ class StreamingDedupIngest(BoundedReplayMixin):
         rejected before signing, counted into ``rejected_docs``, and
         optionally persisted WITH their 13 metrics to
         ``gopher_rep_rejects_dir`` (same replay contract).  One
-        Arrow-batched map-only pass; runs after the JVM gates
-        (heuristic + classifier) and before DSIR — cheapest-first
-        among the Python-worker gates.  ``gopher_rep_thresholds``
+        Arrow-batched map-only pass; funnel order: after the heuristic
+        and classifier gates, before DSIR.  ``gopher_rep_thresholds``
         overrides individual bounds.
 
         ``eval_docs`` enables DECONTAMINATION AT INGEST (the streaming
@@ -258,9 +265,11 @@ class StreamingDedupIngest(BoundedReplayMixin):
         grams are dropped before signing (never enter the store, never
         witness a duplicate) and optionally persisted with their hit
         counts to ``contam_dir`` (same replay contract as
-        ``rejects_dir``).  Gate order: quality first (map-only, no
-        shuffle) so the gram explode only runs on quality survivors.
-        Eval sets are bounded by construction — the bloom's
+        ``rejects_dir``).  Last in the funnel: a doc that also fails a
+        quality gate is attributed there, so ``contaminated_docs``
+        counts docs that pass every other gate.  The hit count is a
+        per-id aggregate joined back NULL-safely.  Eval sets are
+        bounded by construction — the bloom's
         ``MAX_BITS`` guard and the broadcast verify both refuse builds
         past plan-shippable size.
 
@@ -353,10 +362,6 @@ class StreamingDedupIngest(BoundedReplayMixin):
         self.c4_min_sentences = c4_min_sentences
         self.c4_rejects_dir = c4_rejects_dir
         if gopher_rep_thresholds is not None:
-            from consume_kafka_avro_data_spark.operators.text import (
-                GOPHER_REP_THRESHOLDS,
-            )
-
             unknown = set(gopher_rep_thresholds) - set(
                 GOPHER_REP_THRESHOLDS
             )
@@ -391,13 +396,6 @@ class StreamingDedupIngest(BoundedReplayMixin):
         self._eval_grams: DataFrame | None = None
         self._bloom = None
         if eval_docs is not None:
-            from consume_kafka_avro_data_spark.functions.textops import (
-                exploded_word_grams,
-            )
-            from consume_kafka_avro_data_spark.operators.bloom import (
-                BroadcastBloom,
-            )
-
             # one-time: distinct eval grams, checkpointed (probed every
             # batch — recomputing the explode per batch would rescan the
             # eval corpus), then the bloom compiled from them.  Bounded:
@@ -471,35 +469,34 @@ class StreamingDedupIngest(BoundedReplayMixin):
 
     def gate_census(self) -> dict:
         """Aggregated per-gate census over the retained batches, in
-        pipeline order: ``{gate: {docs_in, docs_rejected, sec,
-        batches}}`` — what a deployment tuning the gate family reads:
-        which stage rejects what share of its input, and which stage
-        is the wall-clock floor (the ``sec`` column is where the
-        executor count gets sized).  Sums the replay-consistent
-        per-batch rows (``DedupMetrics.gate_census_by_batch``), so it
-        is exact over the retained horizon; disabled gates simply
-        never appear.  The ``dedup`` row additionally carries ``sub``
-        — summed sig/probe/merge splits (signature computation, store
-        band-join probe + dup-map build, novel merge write) — so the
-        stage the census names as the floor points at its own
-        dominant component (round 11)."""
+        funnel order: ``{gate: {docs_in, docs_rejected, batches}}`` —
+        what a deployment tuning the gate family reads: which gate
+        rejects what share of its input.  The gates share one verdict
+        pass, so its wall time is reported once, as the leading
+        ``gate_pass`` entry ``{sec, batches}``; the ``dedup`` row
+        carries its own ``sec`` plus ``sub`` — summed sig/probe/merge
+        splits (signature computation, store band-join probe + dup-map
+        build, novel merge write) — so the census names the wall-clock
+        floor and its dominant component.  Sums the replay-consistent
+        per-batch records (``DedupMetrics``), so it is exact over the
+        retained horizon; disabled gates simply never appear."""
+        m = self.metrics
         out: dict = {}
-        for rows in self.metrics.gate_census_by_batch.values():
+        if m.gate_pass_sec_by_batch:
+            out["gate_pass"] = {
+                "sec": round(sum(m.gate_pass_sec_by_batch.values()), 4),
+                "batches": len(m.gate_pass_sec_by_batch),
+            }
+        for rows in m.gate_census_by_batch.values():
             for e in rows:
                 g = out.setdefault(
-                    e["gate"],
-                    {
-                        "docs_in": 0,
-                        "docs_rejected": 0,
-                        "sec": 0.0,
-                        "batches": 0,
-                    },
+                    e["gate"], {"docs_in": 0, "docs_rejected": 0, "batches": 0}
                 )
                 g["docs_in"] += e["docs_in"]
                 g["docs_rejected"] += e["docs_rejected"]
-                g["sec"] = round(g["sec"] + e["sec"], 4)
                 g["batches"] += 1
-                if "sub" in e:  # dedup sub-stage splits (round 11)
+                if "sec" in e:  # the dedup stage (round 11 splits)
+                    g["sec"] = round(g.get("sec", 0.0) + e["sec"], 4)
                     sub = g.setdefault("sub", {})
                     for k, v in e["sub"].items():
                         sub[k] = round(sub.get(k, 0.0) + v, 4)
@@ -507,19 +504,17 @@ class StreamingDedupIngest(BoundedReplayMixin):
 
     # -- building blocks -----------------------------------------------------
 
-    def _anti_by_id(self, batch: DataFrame, flagged: DataFrame) -> DataFrame:
-        """NULL-SAFE anti-join on the id column — merge_new's NULLS NOT
-        DISTINCT policy, applied at the gates: a NULL-id document that
-        fails a gate must actually LEAVE the batch (plain EqualTo never
-        matches NULL, so the rejected doc would be signed, merged, and
-        double-counted in metrics.docs, breaking the
-        rejected+contaminated+dup+novel == docs invariant)."""
-        f = flagged.select(F.col(self.id_col).alias("_gate_id"))
-        return batch.join(
-            f,
-            on=F.col(self.id_col).eqNullSafe(F.col("_gate_id")),
-            how="left_anti",
-        )
+    def _by_id(self, docs: DataFrame, scores: DataFrame) -> DataFrame:
+        """``docs`` with a per-id score frame's columns attached by a
+        NULL-SAFE left join on the id column — merge_new's NULLS NOT
+        DISTINCT policy, applied at the gates: a NULL-id document must
+        get its group's score (plain EqualTo never matches NULL, so a
+        contaminated NULL-id doc would pass, be signed and merged).  A
+        doc with no score row gets NULL scores, which no gate rejects."""
+        s = scores.withColumnRenamed(self.id_col, "_score_id")
+        return docs.join(
+            s, F.col(self.id_col).eqNullSafe(F.col("_score_id")), "left"
+        ).drop("_score_id")
 
     def _banded(self, sigs: DataFrame) -> DataFrame:
         """(_id, _sim, _block) — band keys recomputed from signatures
@@ -625,62 +620,137 @@ class StreamingDedupIngest(BoundedReplayMixin):
             docs, text_col=self.text_col, id_col=self.id_col
         )
 
-    @staticmethod
-    def _write_audit(df: DataFrame, out_dir: str | None, batch_id: int) -> None:
-        """Write ``df`` as batch ``batch_id``'s partition of ``out_dir``
-        (nothing without a dir).  Partition by batch id + dynamic
-        overwrite: a replayed batch REPLACES its own rows, so every
-        audit trail (gate rejects, contamination, dupes) is
-        replay-stable — the same contract as the ingest DLQ."""
-        if out_dir:
-            (
-                df.withColumn("batch_id", F.lit(batch_id))
-                .write.partitionBy("batch_id")
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(out_dir)
+    def _verdicts(self, batch: DataFrame) -> tuple[DataFrame | None, list]:
+        """The batch's ONE verdict frame — the stream's columns (with
+        C4's text), every enabled gate's audit columns, and ``_gate``,
+        the FIRST failing gate in funnel order (NULL: the doc passes
+        every gate) — plus the gates in funnel order as ``(name, audit
+        columns, rejects dir)``; ``(None, [])`` with every gate off.
+        Each verdict is a per-document function of the C4-cleaned text
+        given a fixed model or eval set, so the first failing gate over
+        all docs is exactly the gate a sequential funnel would have
+        removed the doc at.
+
+        C4 rewrites ``text_col`` for every later gate (and for the
+        signatures); the row gates append their scores in place; the
+        LM and decontamination scores are per-id aggregates, joined
+        back NULL-safely.  Those two branch from the C4-cleaned frame,
+        not from the scored one: a branch below the Arrow passes
+        (Gopher, DSIR) would run them a second time."""
+        idc, txt = self.id_col, self.text_col
+        stream_cols = batch.columns
+        gates: list = []  # (name, reject, audit columns, rejects dir)
+        if self.c4:
+            clash = {"n_lines", "n_lines_kept", "c4_keep"} & set(batch.columns)
+            if clash:
+                # c4_clean appends these columns; duplicated names
+                # would make every later reference ambiguous
+                raise ValueError(
+                    f"c4 gate needs columns {sorted(clash)} free, but "
+                    "the stream already carries them"
+                )
+            batch = c4_clean(
+                batch,
+                text_col=txt,
+                min_line_words=self.c4_min_line_words,
+                min_sentences=self.c4_min_sentences,
+            )
+            gates.append(
+                ("c4", ~F.col("c4_keep"), ["n_lines", "n_lines_kept"],
+                 self.c4_rejects_dir)
+            )
+        cleaned, scored = batch, batch
+        if self.quality_threshold is not None:
+            scored = quality_score(scored, txt).select(*scored.columns, "quality")
+            gates.append(
+                ("quality", F.col("quality") < self.quality_threshold,
+                 ["quality"], self.rejects_dir)
+            )
+        if self.quality_model is not None:
+            from consume_kafka_avro_data_spark.operators.quality import (
+                quality_probability,
             )
 
-    def _gate(
-        self,
-        run: _BatchRun,
-        gate: str,
-        scored: DataFrame,
-        reject: Column,
-        audit: list,
-        out_dir: str | None,
-        rewrites: bool = False,
-    ) -> None:
-        """One pre-dedup gate: the rows of ``scored`` matching
-        ``reject``, projected to their ``audit`` columns, are
-        checkpointed (three consumers: audit write, count, anti-join —
-        the cut also keeps the scoring expressions from re-running per
-        consumer), written to ``out_dir``, counted, and removed from
-        the batch NULL-safely; the gate's census row closes the step.
-
-        ``rewrites`` marks a gate whose scored frame IS the new batch
-        (C4 replaces the text for every later gate): the whole scored
-        frame is checkpointed instead, and its kept rows, minus the
-        scorer's helper columns, replace the batch — no anti-join."""
-        if rewrites:
-            scored = scored.localCheckpoint(eager=True)
-            run.held.append(scored)
-            flagged = scored.where(reject).select(*audit)
-        else:
-            flagged = scored.where(reject).select(*audit).localCheckpoint(
-                eager=True
+            scored = quality_probability(self.quality_model, scored, txt)
+            gates.append(
+                ("quality_model",
+                 F.col("quality_prob") < self.quality_model_threshold,
+                 ["quality_prob"], self.model_rejects_dir)
             )
-            run.held.append(flagged)
-        self._write_audit(flagged, out_dir, run.batch_id)
-        n = flagged.count()
-        if rewrites:
-            helpers = set(scored.columns) - set(run.batch.columns)
-            run.batch = scored.where(~reject).drop(*helpers)
-        elif n:
-            run.batch = self._anti_by_id(run.batch, flagged)
-        now = time.perf_counter()
-        run.census.append((gate, n, now - run.t))
-        run.t = now
+        if self.gopher_rep:
+            scored = gopher_repetition(
+                scored, text_col=txt, thresholds=self.gopher_rep_thresholds
+            )
+            # audit rows carry every metric: a rejection explains itself
+            gates.append(
+                ("gopher_rep", ~F.col("gopher_rep_keep"),
+                 list(GOPHER_REP_THRESHOLDS), self.gopher_rep_rejects_dir)
+            )
+        if self.dsir_model is not None:
+            from consume_kafka_avro_data_spark.operators.dsir import (
+                dsir_log_weights,
+            )
+
+            scored = dsir_log_weights(self.dsir_model, scored, txt)
+            gates.append(
+                ("dsir", F.col("dsir_logw") < self.dsir_threshold,
+                 ["dsir_logw"], self.dsir_rejects_dir)
+            )
+        if self.lm_model is not None:
+            lm = self._lm_scored(cleaned)
+            # evidence-count column name differs per model generation
+            # (NgramKN: n_ngrams; BigramKN: n_bigrams) — normalize so
+            # the audit trail has ONE schema either way
+            count_col = "n_ngrams" if "n_ngrams" in lm.columns else "n_bigrams"
+            scored = self._by_id(
+                scored, lm.select(idc, F.col(count_col).alias("n_ngrams"), "avg_nll")
+            )
+            # avg_nll NULL (doc shorter than the model order) never
+            # exceeds the threshold, so shorts pass
+            gates.append(
+                ("lm", F.col("avg_nll") > self.lm_threshold,
+                 ["n_ngrams", "avg_nll"], self.lm_rejects_dir)
+            )
+        if self._eval_grams is not None:
+            grams = exploded_word_grams(
+                cleaned.select(idc, F.col(txt).alias("text")),
+                idc,
+                n=self.contam_gram_n,
+            )
+            # bloom prefilter = pure-JVM bit tests in the scan stage
+            # (prunes ~all clean grams); the exact broadcast verify join
+            # makes the decision FP-free, same two-phase shape as
+            # q_decontaminate_bloom.  prefilter (not bare might_contain):
+            # ``g`` is a derived column, and the fence keeps the probe
+            # predicate's 4k gram references from each re-building it
+            # (operators/bloom r11)
+            hits = (
+                self._bloom.prefilter(grams, "g")
+                # broadcast justified: bounded eval gram set (see
+                # __init__ — MAX_BITS-guarded, checkpointed once)
+                .join(F.broadcast(self._eval_grams), "g")
+                .groupBy(idc)
+                .agg(F.count_distinct("g").alias("eval_gram_hits"))
+            )
+            scored = self._by_id(scored, hits)
+            gates.append(
+                ("decontaminate", F.col("eval_gram_hits") >= self.contam_min_hits,
+                 ["eval_gram_hits"], self.contam_dir)
+            )
+        if not gates:
+            return None, []
+        audit = list(dict.fromkeys(c for _, _, cols, _ in gates for c in cols))
+        clash = ({"_gate", *audit} - {idc}) & set(stream_cols)
+        if clash:
+            raise ValueError(
+                f"the gates need columns {sorted(clash)} free, but the "
+                "stream already carries them"
+            )
+        first_failing = F.coalesce(*[F.when(r, F.lit(g)) for g, r, _, _ in gates])
+        return (
+            scored.select(*stream_cols, *audit, first_failing.alias("_gate")),
+            [(g, cols, out_dir) for g, _, cols, out_dir in gates],
+        )
 
     # -- per-micro-batch body ------------------------------------------------
 
@@ -700,165 +770,40 @@ class StreamingDedupIngest(BoundedReplayMixin):
         if self.sketch_monitor is not None:
             # same raw-batch / replace-on-replay contract
             self.sketch_monitor.process_batch(batch, batch_id)
-        run = _BatchRun(batch, batch_id)
-        idc, txt = self.id_col, self.text_col
+        idc = self.id_col
+        held: list[DataFrame] = []  # checkpoints, released when the batch ends
         try:
-            # gates in pipeline order, cheapest first: map-only JVM
-            # expressions, then the Arrow (Python-worker) passes, then
-            # the LM gate and decontamination, which shuffle
-            if self.c4:
-                from consume_kafka_avro_data_spark.operators.text import c4_clean
-
-                clash = {"n_lines", "n_lines_kept", "c4_keep"} & set(
-                    batch.columns
-                )
-                if clash:
-                    # c4_clean appends these columns; duplicated names
-                    # would make the downstream drop ambiguous
-                    raise ValueError(
-                        f"c4 gate needs columns {sorted(clash)} free, but "
-                        "the stream already carries them"
+            t0 = time.perf_counter()
+            verdicts, gates = self._verdicts(batch)
+            counts: dict = {}
+            if verdicts is not None:
+                # ONE checkpoint and ONE grouped count per batch; every
+                # audit trail and the survivors read the checkpoint
+                verdicts = verdicts.localCheckpoint(eager=True)
+                held.append(verdicts)
+                counts = {
+                    r["_gate"]: r["count"]
+                    for r in verdicts.groupBy("_gate").count().collect()
+                }
+                for g, cols, out_dir in gates:
+                    self._write_audit(
+                        verdicts.where(F.col("_gate") == g).select(idc, *cols),
+                        out_dir,
+                        batch_id,
                     )
-                # line-clean FIRST (the published C4 order: line rules
-                # below the doc gates); the cleaned text replaces
-                # text_col for the later gates, signatures and store
-                self._gate(
-                    run,
-                    "c4",
-                    c4_clean(
-                        batch,
-                        text_col=txt,
-                        min_line_words=self.c4_min_line_words,
-                        min_sentences=self.c4_min_sentences,
-                    ),
-                    ~F.col("c4_keep"),
-                    [idc, "n_lines", "n_lines_kept"],
-                    self.c4_rejects_dir,
-                    rewrites=True,
+                batch = verdicts.where(F.col("_gate").isNull()).select(
+                    *batch.columns
                 )
-            if self.quality_threshold is not None:
-                from consume_kafka_avro_data_spark.operators.text import (
-                    quality_score,
-                )
-
-                self._gate(
-                    run,
-                    "quality",
-                    quality_score(run.batch.select(idc, txt), txt),
-                    F.col("quality") < self.quality_threshold,
-                    [idc, "quality"],
-                    self.rejects_dir,
-                )
-            if self.quality_model is not None:
-                from consume_kafka_avro_data_spark.operators.quality import (
-                    quality_probability,
-                )
-
-                self._gate(
-                    run,
-                    "quality_model",
-                    quality_probability(
-                        self.quality_model, run.batch.select(idc, txt), txt
-                    ),
-                    F.col("quality_prob") < self.quality_model_threshold,
-                    [idc, "quality_prob"],
-                    self.model_rejects_dir,
-                )
-            if self.gopher_rep:
-                from consume_kafka_avro_data_spark.operators.text import (
-                    GOPHER_REP_THRESHOLDS,
-                    gopher_repetition,
-                )
-
-                # audit rows carry every metric: a rejection explains itself
-                self._gate(
-                    run,
-                    "gopher_rep",
-                    gopher_repetition(
-                        run.batch.select(idc, txt),
-                        text_col=txt,
-                        thresholds=self.gopher_rep_thresholds,
-                    ),
-                    ~F.col("gopher_rep_keep"),
-                    [idc, *GOPHER_REP_THRESHOLDS],
-                    self.gopher_rep_rejects_dir,
-                )
-            if self.dsir_model is not None:
-                from consume_kafka_avro_data_spark.operators.dsir import (
-                    dsir_log_weights,
-                )
-
-                self._gate(
-                    run,
-                    "dsir",
-                    dsir_log_weights(
-                        self.dsir_model, run.batch.select(idc, txt), txt
-                    ),
-                    F.col("dsir_logw") < self.dsir_threshold,
-                    [idc, "dsir_logw"],
-                    self.dsir_rejects_dir,
-                )
-            if self.lm_model is not None:
-                # avg_nll NULL (doc shorter than the model order) never
-                # exceeds the threshold, so shorts pass
-                scored_lm = self._lm_scored(run.batch)
-                # evidence-count column name differs per model generation
-                # (NgramKN: n_ngrams; BigramKN: n_bigrams) — normalize so
-                # the audit trail has ONE schema either way
-                count_col = (
-                    "n_ngrams" if "n_ngrams" in scored_lm.columns else "n_bigrams"
-                )
-                self._gate(
-                    run,
-                    "lm",
-                    scored_lm,
-                    F.col("avg_nll") > self.lm_threshold,
-                    [idc, F.col(count_col).alias("n_ngrams"), "avg_nll"],
-                    self.lm_rejects_dir,
-                )
-            if self._eval_grams is not None:
-                from consume_kafka_avro_data_spark.functions.textops import (
-                    exploded_word_grams,
-                )
-
-                grams = exploded_word_grams(
-                    run.batch.select(idc, F.col(txt).alias("text")),
-                    idc,
-                    n=self.contam_gram_n,
-                )
-                # bloom prefilter = pure-JVM bit tests in the scan stage
-                # (prunes ~all clean grams); the exact broadcast verify
-                # join makes the decision FP-free, same two-phase shape as
-                # q_decontaminate_bloom
-                # prefilter (not bare might_contain): ``g`` is a derived
-                # column, and the fence keeps the probe predicate's 4k gram
-                # references from each re-building it (operators/bloom r11)
-                hits = (
-                    self._bloom.prefilter(grams, "g")
-                    # broadcast justified: bounded eval gram set (see
-                    # __init__ — MAX_BITS-guarded, checkpointed once)
-                    .join(F.broadcast(self._eval_grams), "g")
-                    .groupBy(idc)
-                    .agg(F.count_distinct("g").alias("eval_gram_hits"))
-                )
-                self._gate(
-                    run,
-                    "decontaminate",
-                    hits,
-                    F.col("eval_gram_hits") >= self.contam_min_hits,
-                    [idc, "eval_gram_hits"],
-                    self.contam_dir,
-                )
+            gated = [(g, counts.get(g, 0)) for g, _, _ in gates]
             # decontamination counts into contaminated_docs, every other
             # gate into rejected_docs
-            n_contam = sum(n for g, n, _ in run.census if g == "decontaminate")
-            n_rejected = sum(n for _, n, _ in run.census) - n_contam
-            batch = run.batch
+            n_contam = counts.get("decontaminate", 0)
+            n_rejected = sum(n for _, n in gated) - n_contam
+            t_pass = time.perf_counter()
             # sub-stage timers (round 11): the census showed the dedup
             # stage is ~48% of six-gate wall time — these split it into
             # signature computation / store band-join probe / merge_new
             # write so the next optimization aims at the real component
-            _t_sub = time.perf_counter()
             sigs = minhash_sig_table(
                 batch,
                 self.id_col,
@@ -868,9 +813,8 @@ class StreamingDedupIngest(BoundedReplayMixin):
                 self.rows,
                 self.hash_fn,
             ).localCheckpoint(eager=True)  # signed once; used by 3 consumers
-            run.held.append(sigs)
-            _sub_sig = time.perf_counter() - _t_sub
-            _t_sub = time.perf_counter()
+            held.append(sigs)
+            t_sig = time.perf_counter()
             banded = self._banded(sigs)
             # REPLAY DETERMINISM: probe the store MINUS this batch's own
             # ids.  After a post-merge crash the store already holds the
@@ -975,12 +919,11 @@ class StreamingDedupIngest(BoundedReplayMixin):
                 )
                 .localCheckpoint(eager=True)
             )
-            run.held.append(dup_map)
+            held.append(dup_map)
             # the dup routing stays queryable state
             self._write_audit(dup_map, self.dupes_dir, batch_id)
             n_dupes = dup_map.count()
-            _sub_probe = time.perf_counter() - _t_sub
-            _t_sub = time.perf_counter()
+            t_probe = time.perf_counter()
             # NULL-SAFE novel split: a USING-column left_anti never
             # matches NULL, so a NULL-id doc routed dup would stay in
             # `novel` and merge anyway — the one id comparison on this
@@ -991,86 +934,58 @@ class StreamingDedupIngest(BoundedReplayMixin):
                 how="left_anti",
             )
             self.store.merge_new(novel)
-            _sub_merge = time.perf_counter() - _t_sub
-            run.census.append(
-                (
-                    "dedup",
-                    n_dupes,
-                    time.perf_counter() - run.t,
-                    {
-                        "sig": round(_sub_sig, 4),
-                        "probe": round(_sub_probe, 4),
-                        "merge": round(_sub_merge, 4),
-                    },
-                )
-            )
+            t_merge = time.perf_counter()
+            m = self.metrics
             if not replayed:
-                self.metrics.batches += 1
-                self.metrics.docs += n_docs + n_rejected + n_contam
-                self.metrics.dup_docs += n_dupes
-                self.metrics.novel_docs += n_docs - n_dupes
-                self.metrics.rejected_docs += n_rejected
-                self.metrics.contaminated_docs += n_contam
-                self.metrics.dup_pairs_by_batch[batch_id] = n_dupes
-                # per-gate census, docs_in reconstructed BACKWARDS from
-                # the survivor count: each gate's input is its
-                # successor's input plus what it rejected — exact
-                # because every reject/dup row is removed before the
-                # next stage, and free because every count above
-                # already existed
+                m.batches += 1
+                m.docs += n_docs + n_rejected + n_contam
+                m.dup_docs += n_dupes
+                m.novel_docs += n_docs - n_dupes
+                m.rejected_docs += n_rejected
+                m.contaminated_docs += n_contam
+                m.dup_pairs_by_batch[batch_id] = n_dupes
+                # per-gate census, docs_in chained down the funnel: a
+                # gate's input is its predecessor's input minus what
+                # the predecessor rejected (every doc a gate removes is
+                # attributed to its FIRST failing gate), so the dedup
+                # stage's input is the gate survivors
                 rows: list[dict] = []
-                docs_in = n_docs  # dedup stage input = gate survivors
-                for gate, n_rej, sec, *extra in reversed(run.census):
-                    # a reject gate's input includes what it rejected;
-                    # dupes are ROUTED at the dedup stage, not removed
-                    # from its input
-                    if gate != "dedup":
-                        docs_in += n_rej
-                    row = {
-                        "gate": gate,
-                        "docs_in": docs_in,
-                        "docs_rejected": n_rej,
-                        "sec": round(sec, 4),
+                docs_in = n_docs + n_rejected + n_contam
+                for g, n in gated:
+                    rows.append({"gate": g, "docs_in": docs_in, "docs_rejected": n})
+                    docs_in -= n
+                rows.append(
+                    {
+                        "gate": "dedup",
+                        "docs_in": n_docs,
+                        "docs_rejected": n_dupes,
+                        "sec": round(t_merge - t_pass, 4),
+                        "sub": {
+                            "sig": round(t_sig - t_pass, 4),
+                            "probe": round(t_probe - t_sig, 4),
+                            "merge": round(t_merge - t_probe, 4),
+                        },
                     }
-                    if extra:  # dedup carries sig/probe/merge splits
-                        row["sub"] = extra[0]
-                    rows.append(row)
-                rows.reverse()
-                self.metrics.gate_census_by_batch[batch_id] = rows
+                )
+                m.gate_census_by_batch[batch_id] = rows
+                if gates:
+                    m.gate_pass_sec_by_batch[batch_id] = round(t_pass - t0, 4)
             # bounded replay guard (mixin-shared trim); the per-batch
-            # dupe map prunes to the same horizon
+            # maps prune to the same horizon
             cutoff = self._mark_batch(batch_id)
             if cutoff is not None:
-                for bid in [
-                    b
-                    for b in self.metrics.dup_pairs_by_batch
-                    if b <= cutoff
-                ]:
-                    del self.metrics.dup_pairs_by_batch[bid]
-                for bid in [
-                    b
-                    for b in self.metrics.gate_census_by_batch
-                    if b <= cutoff
-                ]:
-                    del self.metrics.gate_census_by_batch[bid]
-            # append-per-batch grows the store's file count linearly
-            # (the small-file problem); periodic compaction is safe at
-            # any point — it rewrites the same rows behind an atomic
-            # manifest swap, so a crash or replay never observes a
-            # partial store
-            # gate on `not replayed`: batches does not advance on a
-            # replay, so a batch retried while the modulus sits at 0
-            # would otherwise rewrite the whole store once per retry
-            if (
-                not replayed
-                and self.compact_every
-                and self.metrics.batches % self.compact_every == 0
-            ):
-                self.store.compact()
+                for per_batch in (
+                    m.dup_pairs_by_batch,
+                    m.gate_census_by_batch,
+                    m.gate_pass_sec_by_batch,
+                ):
+                    for bid in [b for b in per_batch if b <= cutoff]:
+                        del per_batch[bid]
+            self._compact_if_due(replayed)
         finally:
             # localCheckpoint blocks are freed with the DataFrame; make
             # the lineage cuts explicit about their lifetimes anyway —
             # a long-running processingTime stream must not accumulate
             # superseded batches' blocks until driver GC gets around to it
-            for df in run.held:
+            for df in held:
                 df.unpersist()

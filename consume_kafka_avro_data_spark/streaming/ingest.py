@@ -131,25 +131,16 @@ class StreamingGraphIngest(BoundedReplayMixin):
             }
             n_valid = by_reason.pop(None, 0)
             n_err = sum(by_reason.values())
-            if n_err and self.dlq_dir:
-                # partition by batch id + overwrite: a replayed batch
-                # REPLACES its own DLQ rows instead of appending
-                # duplicates (dynamic overwrite touches only this
-                # batch's partition).  The RAW undecoded frame rides
-                # along so dead letters can be re-decoded after a
-                # schema fix — an error string alone is unreplayable.
-                (
-                    decoded.where(F.col("_error").isNotNull())
-                    .select(
-                        "key",
-                        F.col("_raw_value").alias("value"),
-                        "_error",
-                        F.lit(batch_id).alias("batch_id"),
-                    )
-                    .write.partitionBy("batch_id")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .mode("overwrite")
-                    .parquet(self.dlq_dir)
+            if n_err:
+                # the RAW undecoded frame rides along so dead letters
+                # can be re-decoded after a schema fix — an error
+                # string alone is unreplayable
+                self._write_audit(
+                    decoded.where(F.col("_error").isNotNull()).select(
+                        "key", F.col("_raw_value").alias("value"), "_error"
+                    ),
+                    self.dlq_dir,
+                    batch_id,
                 )
             names = [
                 self.schema_config.field_name(c) for c in self.schema_config.columns
@@ -170,19 +161,7 @@ class StreamingGraphIngest(BoundedReplayMixin):
             # success: only now does a replay of this id skip counters
             # (mixin-shared bounded trim — see BoundedReplayMixin)
             self._mark_batch(batch_id)
-            # periodic store compaction: safe at any point — the
-            # ManifestTables rewrite the same rows behind an atomic
-            # manifest swap, and the graph merge is content-idempotent,
-            # so a crash or replay across the boundary never observes a
-            # partial store.  Gated on `not replayed` (the dedup
-            # ingest's rationale: batches does not advance on a replay,
-            # so a retry at modulus 0 would recompact per attempt).
-            if (
-                not replayed
-                and self.compact_every
-                and self.metrics.batches % self.compact_every == 0
-            ):
-                self.store.compact()
+            self._compact_if_due(replayed)
         finally:
             decoded.unpersist()
 

@@ -14,14 +14,16 @@ reprocess).
 
 Subclass contract: ``process_batch(df, batch_id)``, ``checkpoint_dir``,
 ``metrics``, ``_seen_batches`` (the intra-run foreachBatch-retry guard),
-``_new_metrics()`` and ``_checkpoint_subdir``.
+``_new_metrics()`` and ``_checkpoint_subdir``; ingests that compact a
+store through ``_compact_if_due`` also carry ``store``,
+``compact_every`` and ``metrics.batches``.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 
@@ -55,6 +57,38 @@ class BoundedReplayMixin:
             }
             return cutoff
         return None
+
+    @staticmethod
+    def _write_audit(df: DataFrame, out_dir: str | None, batch_id: int) -> None:
+        """Write ``df`` as batch ``batch_id``'s partition of ``out_dir``
+        (nothing without a dir).  Partition by batch id + dynamic
+        overwrite: a replayed batch REPLACES its own rows instead of
+        appending duplicates, so every side output (DLQ, gate rejects,
+        contamination, dupes) is replay-stable."""
+        if out_dir:
+            (
+                df.withColumn("batch_id", F.lit(batch_id))
+                .write.partitionBy("batch_id")
+                .option("partitionOverwriteMode", "dynamic")
+                .mode("overwrite")
+                .parquet(out_dir)
+            )
+
+    def _compact_if_due(self, replayed: bool) -> None:
+        """Compact ``self.store`` every ``compact_every`` counted
+        batches (None = manual only): append-per-batch grows a store's
+        file count linearly (the small-file problem).  Safe at any
+        point — the store rewrites the same rows behind an atomic
+        manifest swap, so a crash or replay never observes a partial
+        store.  Gated on ``not replayed``: ``metrics.batches`` does not
+        advance on a replay, so a batch retried while the modulus sits
+        at 0 would otherwise rewrite the whole store once per retry."""
+        if (
+            not replayed
+            and self.compact_every
+            and self.metrics.batches % self.compact_every == 0
+        ):
+            self.store.compact()
 
     def _reset(self) -> None:
         """Fresh metrics + replay-guard state.  Ingests that CARRY

@@ -457,35 +457,6 @@ def texts_lower(texts):
     return [t.lower().split() for t in texts]
 
 
-def test_broadcast_model_scoring_is_mapside_and_identical(
-    spark, tri, tmp_path
-):
-    """score(broadcast_model=True) must produce the identical frame
-    with every model join a broadcast-hash join, so the corpus-sized
-    gram table never shuffles before the final per-doc aggregate — the
-    map-only petabyte-sweep shape.  Asserted on the DEPLOYED form (a
-    save/load-ed model: its tables are parquet scans) — a freshly-fit
-    model's tables re-derive their fit lineage in-plan, whose internal
-    vocab-bounded joins may legitimately sort-merge."""
-    docs = spark.createDataFrame(
-        [(1, "the cat sat on the mat"), (2, "zzz qqq xxx"), (3, "hi")],
-        "doc_id long, text string",
-    )
-    want = {r.doc_id: (r.n_ngrams, r.avg_nll) for r in tri.score(docs).collect()}
-    tri.save(str(tmp_path / "m"))
-    loaded = NgramKN.load(spark, str(tmp_path / "m"))
-    fast = loaded.score(docs, broadcast_model=True)
-    got = {r.doc_id: (r.n_ngrams, r.avg_nll) for r in fast.collect()}
-    assert got == want
-    plan = fast._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        fast._jdf.queryExecution(), "simple"
-    )
-    # all 2n−1 = 5 model joins broadcast; the only sort-merge allowed
-    # is the final doc-sized id-restore join (both sides doc-keyed)
-    assert plan.count("BroadcastHashJoin") >= 5, plan
-    assert plan.count("SortMergeJoin") <= 1, plan
-
-
 def test_order5_matches_reference(spark):
     """CCNet's published filter order.  Fit a 5-gram on a corpus with
     enough length-5 windows and pin the top-order probs + the score of

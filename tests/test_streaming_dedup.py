@@ -1233,23 +1233,27 @@ def test_all_gates_compose_on_one_stream(spark, tmp_path):
         m.rejected_docs + m.contaminated_docs + m.dup_docs + m.novel_docs
         == m.docs
     )
-    # round-10 per-gate census: rows in pipeline order, the rejected
+    # round-10 per-gate census: rows in funnel order, the rejected
     # column sums to each gate's audit dir, docs_in chains (each
     # gate's input = predecessor's input minus its rejects), the
-    # first gate's summed input is the stream, and per-batch secs are
-    # recorded
+    # first gate's summed input is the stream.  The gates share one
+    # verdict pass, whose wall time is reported once per batch as
+    # ``gate_pass``; only the dedup stage has its own ``sec``
     census = ing_a.gate_census()
     assert list(census) == [
-        "c4", "quality", "quality_model", "gopher_rep", "dsir", "lm",
-        "decontaminate", "dedup",
+        "gate_pass", "c4", "quality", "quality_model", "gopher_rep",
+        "dsir", "lm", "decontaminate", "dedup",
     ]
+    assert census["gate_pass"]["batches"] == 2
+    assert census["gate_pass"]["sec"] > 0
     for gate, want_rej in [
         ("c4", 1), ("quality", 1), ("quality_model", 1), ("gopher_rep", 1),
         ("dsir", 1), ("lm", 1), ("decontaminate", 1), ("dedup", 1),
     ]:
         assert census[gate]["docs_rejected"] == want_rej, gate
         assert census[gate]["batches"] == 2
-        assert census[gate]["sec"] > 0
+        assert ("sec" in census[gate]) == (gate == "dedup"), gate
+    assert census["dedup"]["sec"] > 0
     assert census["c4"]["docs_in"] == m.docs
     per_batch = m.gate_census_by_batch
     assert sorted(per_batch) == [0, 1]
@@ -1397,9 +1401,183 @@ def test_c4_and_heuristic_quality_counts_both_rejects(spark, tmp_path):
     assert set(sub) == {"sig", "probe", "merge"}
     assert all(v >= 0 for v in sub.values())
     assert sum(sub.values()) <= census["dedup"]["sec"] + 0.05
-    # reject gates carry no sub splits
+    # reject gates carry no sub splits and no sec of their own: they
+    # share one verdict pass, timed once per batch
     assert "sub" not in census["c4"] and "sub" not in census["quality"]
+    assert "sec" not in census["c4"] and "sec" not in census["quality"]
+    assert census["gate_pass"]["batches"] == 1
+    assert census["gate_pass"]["sec"] > 0
     assert [r.doc_id for r in
             spark.read.parquet(str(tmp_path / "c4_rejects")).collect()] == [3]
     assert [r.doc_id for r in
             spark.read.parquet(str(tmp_path / "rejects")).collect()] == [2]
+
+
+@pytest.fixture(scope="module")
+def seven_gates(spark):
+    """A builder for an ingest with all seven pre-dedup gates on.  The
+    three model gates run permissive cuts (they score every doc but
+    reject none), so each designed victim below belongs to exactly one
+    model-free gate; eval set = ``EVAL``."""
+    from consume_kafka_avro_data_spark.operators.dsir import dsir_fit
+    from consume_kafka_avro_data_spark.operators.lm import NgramKN
+    from consume_kafka_avro_data_spark.operators.quality import (
+        quality_training_frame,
+        train_quality_classifier,
+    )
+
+    mk = lambda ts: spark.createDataFrame([(t,) for t in ts], "text string")
+    trusted = mk([BASE, FAR, ALSO_FAR] * 4)
+    raw = mk(["zzz buy click winn free xxx qqq promo now"] * 12)
+    clf = train_quality_classifier(
+        quality_training_frame(trusted, raw), n_features=1 << 10, max_iter=5
+    )
+    dsir = dsir_fit(trusted, raw, buckets=64)
+    lm = NgramKN.fit(trusted, order=2)
+
+    def build(tmp_path):
+        return StreamingDedupIngest(
+            spark,
+            store_dir=str(tmp_path / "store"),
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            dupes_dir=str(tmp_path / "dupes"),
+            c4=True,
+            c4_min_sentences=1,
+            c4_rejects_dir=str(tmp_path / "c4"),
+            quality_threshold=0.5,
+            rejects_dir=str(tmp_path / "quality"),
+            quality_model=clf,
+            quality_model_threshold=0.0,
+            model_rejects_dir=str(tmp_path / "quality_model"),
+            gopher_rep=True,
+            gopher_rep_rejects_dir=str(tmp_path / "gopher_rep"),
+            dsir_model=dsir,
+            dsir_threshold=-1e9,
+            dsir_rejects_dir=str(tmp_path / "dsir"),
+            lm_model=lm,
+            lm_threshold=1e9,
+            lm_rejects_dir=str(tmp_path / "lm"),
+            eval_docs=mk([EVAL]),
+            contam_dir=str(tmp_path / "contam"),
+        )
+
+    yield build
+    lm.unpersist()
+
+
+EVAL = (
+    "fresh prose about manifest tables and replay safe commit "
+    "protocols in streaming systems."
+)
+_DOCS = "doc_id long, text string"
+
+
+def test_degenerate_inputs_land_exactly_once_through_all_gates(
+    spark, tmp_path, seven_gates
+):
+    """NULL and duplicate ids plus an empty micro-batch through all
+    seven gates: every document row lands in exactly one audit dir,
+    the dupes dir or the store, and rejected + contaminated + dup +
+    novel == docs.  The decontamination score is a per-id aggregate
+    joined back NULL-safely, so the NULL-id doc with eval text is
+    caught, and BOTH copies of a duplicated id with one contaminated
+    copy are audited as contaminated (one row each)."""
+    P = lambda t: t + "."
+    junk = P(" ".join(["aaa"] * 14))
+    loop = P(" ".join(["the quick brown fox jumps over"] * 5))
+    code = (
+        "the snippet function f() { return one; } ships inside this "
+        "long and properly terminated line."
+    )
+    ingest = seven_gates(tmp_path)
+    batches = [
+        [
+            (None, EVAL),  # NULL id, contaminated
+            (1, P(BASE)),  # novel
+            (2, EVAL),  # duplicate id: one copy contaminated ...
+            (2, P(FAR)),  # ... one clean
+            (3, junk),  # heuristic quality (also repetitive)
+            (4, loop),  # Gopher repetition
+            (5, code),  # C4 (brace)
+            (6, P(BASE)),  # dupe of 1
+        ],
+        [],  # empty micro-batch
+        [(None, P(FAR)), (7, P(ALSO_FAR))],  # NULL id, novel
+    ]
+    for b, rows in enumerate(batches):
+        ingest.process_batch(spark.createDataFrame(rows, _DOCS), b)
+
+    def ids(d, col="doc_id"):
+        p = tmp_path / d
+        if not any(p.rglob("*.parquet")):
+            return []
+        return sorted(
+            (r[0] for r in spark.read.parquet(str(p)).select(col).collect()),
+            key=lambda i: (i is not None, i),
+        )
+
+    landed = {
+        d: ids(d)
+        for d in ["c4", "quality", "quality_model", "gopher_rep", "dsir",
+                  "lm", "contam"]
+    }
+    landed["dupes"] = ids("dupes", "dup_id")
+    landed["store"] = sorted(
+        (r["_id"] for r in ingest.store.read().collect()),
+        key=lambda i: (i is not None, i),
+    )
+    assert landed == {
+        "c4": [5],
+        "quality": [3],
+        "quality_model": [],
+        "gopher_rep": [4],
+        "dsir": [],
+        "lm": [],
+        "contam": [None, 2, 2],
+        "dupes": [6],
+        "store": [None, 1, 7],
+    }
+    assert sum(len(v) for v in landed.values()) == sum(map(len, batches))
+    m = ingest.metrics
+    assert m.batches == 3
+    assert (m.rejected_docs, m.contaminated_docs, m.dup_docs, m.novel_docs) == (
+        3, 3, 1, 3,
+    )
+    assert m.docs == 10
+    assert (
+        m.rejected_docs + m.contaminated_docs + m.dup_docs + m.novel_docs
+        == m.docs
+    )
+    # the empty batch still closes its census: zero in, zero out
+    assert [r["docs_in"] for r in m.gate_census_by_batch[1]] == [0] * 8
+
+
+def test_gates_run_one_checkpoint_per_batch(
+    spark, tmp_path, seven_gates, monkeypatch
+):
+    """All seven gates share ONE verdict pass: exactly one
+    localCheckpoint runs before the signature step of each batch (a
+    sequential funnel pays one per gate)."""
+    import consume_kafka_avro_data_spark.streaming.dedup as sd
+
+    ingest = seven_gates(tmp_path)
+    calls, before_sign = [], []
+    frame = type(spark.range(1))  # the session's concrete DataFrame class
+    ckpt, sign = frame.localCheckpoint, sd.minhash_sig_table
+
+    def counted(self, *a, **k):
+        calls.append(1)
+        return ckpt(self, *a, **k)
+
+    def signed(*a, **k):
+        before_sign.append(len(calls))
+        return sign(*a, **k)
+
+    monkeypatch.setattr(frame, "localCheckpoint", counted)
+    monkeypatch.setattr(sd, "minhash_sig_table", signed)
+    rows = [(1, BASE + "."), (2, EVAL), (3, FAR + ".")]
+    for b in range(2):
+        calls.clear()
+        ingest.process_batch(spark.createDataFrame(rows, _DOCS), b)
+    assert before_sign == [1, 1]
+    assert ingest.metrics.contaminated_docs == 2
