@@ -19,6 +19,20 @@ cluster:
   (Spark merges it with its own and the inherited one): pandas UDFs
   unpickle package functions there, and a worker only finds the package
   by accident when the driver was started from the repository root.
+* Generated code that outlives its micro-batch.  A foreachBatch ingest
+  plans the same queries every trigger, and Spark keys each compiled
+  class by its Java source, so a batch reuses the last batch's classes
+  only if the cache holds them all and the source is unchanged.
+  ``spark.sql.codegen.cache.maxEntries`` (static; default 100) is set to
+  4096: a dedup micro-batch of the curation benchmark needs more than
+  100 classes, so the cache thrashed at 115-132 compiles per batch.
+  ``spark.sql.codegen.useIdInClassName`` off keeps the whole-stage
+  codegen id out of class names: AQE numbers stages in the order it
+  creates them, which changes between runs of one plan.  Steady-state
+  batches now compile nothing (``tests/test_steady_state_compiles.py``).
+  Both act JVM-wide, and only for sessions built here: the verify
+  driver's own session never goes through :func:`get_session` and keeps
+  Spark's defaults.
 """
 
 from __future__ import annotations
@@ -99,6 +113,9 @@ def get_session(
             driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # generated-code reuse across micro-batches (see above)
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # PySpark's per-API-call call-site capture walks the Python stack
         # on EVERY DataFrame/Column call (~5 ms each) purely to decorate
         # error messages; wide plan builders (32-component MinHash

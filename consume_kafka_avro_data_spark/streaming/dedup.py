@@ -162,8 +162,8 @@ class StreamingDedupIngest(BoundedReplayMixin):
         stage-1 gate AT INGEST (operators/text.quality_score < τ →
         rejected before signing): gated docs never enter the signature
         store, never witness a duplicate, and are optionally persisted
-        to ``rejects_dir`` (same partition-by-batch dynamic-overwrite
-        replay contract as ``dupes_dir``).  The gate is map-only JVM
+        to ``rejects_dir`` (same ``batch_id=<n>`` replace-on-replay
+        contract as ``dupes_dir``).  The gate is map-only JVM
         expressions — it adds no shuffle to the per-batch plan.
 
         ``quality_model`` (a fitted ``operators/quality`` PipelineModel)
@@ -236,7 +236,7 @@ class StreamingDedupIngest(BoundedReplayMixin):
         and attributed to C4 whatever the other gates say,
         counted into ``rejected_docs``, and optionally persisted with
         their line counts to ``c4_rejects_dir`` (same
-        partition-by-batch dynamic-overwrite replay contract).
+        ``batch_id=<n>`` replace-on-replay contract).
         ``c4_min_line_words`` / ``c4_min_sentences`` pass through to
         the operator.
 
@@ -786,11 +786,12 @@ class StreamingDedupIngest(BoundedReplayMixin):
                     for r in verdicts.groupBy("_gate").count().collect()
                 }
                 for g, cols, out_dir in gates:
-                    self._write_audit(
-                        verdicts.where(F.col("_gate") == g).select(idc, *cols),
-                        out_dir,
-                        batch_id,
-                    )
+                    if counts.get(g):  # no write job for an empty trail
+                        self._write_audit(
+                            verdicts.where(F.col("_gate") == g).select(idc, *cols),
+                            out_dir,
+                            batch_id,
+                        )
                 batch = verdicts.where(F.col("_gate").isNull()).select(
                     *batch.columns
                 )
@@ -920,9 +921,9 @@ class StreamingDedupIngest(BoundedReplayMixin):
                 .localCheckpoint(eager=True)
             )
             held.append(dup_map)
-            # the dup routing stays queryable state
-            self._write_audit(dup_map, self.dupes_dir, batch_id)
             n_dupes = dup_map.count()
+            if n_dupes:  # the dup routing stays queryable state
+                self._write_audit(dup_map, self.dupes_dir, batch_id)
             t_probe = time.perf_counter()
             # NULL-SAFE novel split: a USING-column left_anti never
             # matches NULL, so a NULL-id doc routed dup would stay in

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 
@@ -61,17 +61,21 @@ class BoundedReplayMixin:
     @staticmethod
     def _write_audit(df: DataFrame, out_dir: str | None, batch_id: int) -> None:
         """Write ``df`` as batch ``batch_id``'s partition of ``out_dir``
-        (nothing without a dir).  Partition by batch id + dynamic
-        overwrite: a replayed batch REPLACES its own rows instead of
-        appending duplicates, so every side output (DLQ, gate rejects,
-        contamination, dupes) is replay-stable."""
+        (nothing without a dir): the directory ``out_dir/batch_id=<n>``,
+        overwritten whole, so a replayed batch REPLACES its own rows
+        instead of appending duplicates and every side output (DLQ,
+        gate rejects, contamination, dupes) is replay-stable.  Reading
+        ``out_dir`` discovers ``batch_id`` as a partition column.
+
+        The batch id lives in the path, never in the plan: Spark inlines
+        a literal into generated code, so a ``lit(batch_id)`` column
+        would compile fresh classes on every micro-batch.  Callers skip
+        the write for a batch that routed no rows here, so an audit dir
+        holds only the batches that routed rows to it (and does not
+        exist until one has)."""
         if out_dir:
-            (
-                df.withColumn("batch_id", F.lit(batch_id))
-                .write.partitionBy("batch_id")
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(out_dir)
+            df.write.mode("overwrite").parquet(
+                os.path.join(out_dir, f"batch_id={batch_id}")
             )
 
     def _compact_if_due(self, replayed: bool) -> None:

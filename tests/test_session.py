@@ -42,3 +42,13 @@ def test_package_udfs_run_outside_the_repo_root(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-4000:]
     assert "KEPT [1]" in out.stdout, out.stdout
+
+
+def test_generated_code_is_kept_across_micro_batches(spark):
+    """The JVM-wide generated-code cache holds more than one dedup
+    micro-batch's classes (Spark's default is 100), and class names
+    carry no codegen stage id, which AQE numbers differently from one
+    run of the same plan to the next (tests/test_steady_state_compiles.py
+    pins the effect)."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "4096"
+    assert spark.conf.get("spark.sql.codegen.useIdInClassName") == "false"

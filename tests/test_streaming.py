@@ -770,3 +770,44 @@ def test_graph_compaction_not_rerun_on_replayed_batch(spark, tmp_path):
     v = store._tables[store.objects_path].version()
     ing.process_batch(batch, 0)  # replay
     assert store._tables[store.objects_path].version() == v
+
+
+def test_audit_write_replaces_its_batch_partition(spark, tmp_path):
+    """The side-output contract every ingest relies on (DLQ, gate
+    rejects, dupes): batch ``n`` lands under ``batch_id=<n>``, a
+    replayed batch replaces its own rows rather than appending, the
+    other batches stay untouched, and the whole dir reads back with
+    ``batch_id`` as an int partition column after the stream's own."""
+    from pyspark.sql.types import IntegerType
+
+    from consume_kafka_avro_data_spark.sources.kafka import KAFKA_SHAPE
+
+    def dead_letters(*values):
+        return spark.createDataFrame(
+            [(b"k", v, "spo", 0, i) for i, v in enumerate(values)], KAFKA_SHAPE
+        )
+
+    ing = StreamingGraphIngest(
+        spark,
+        GraphStore(spark, str(tmp_path / "graph")),
+        parse_config(SPO_DOC).schema_for("spo"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        dlq_dir=str(tmp_path / "dlq"),
+        expected_schema_id=2,
+    )
+    b1 = dead_letters(b'{"s": 2}')
+    ing.process_batch(dead_letters(b'{"s": 0}', b'{"s": 1}'), 0)
+    ing.process_batch(b1, 1)
+    ing.process_batch(b1, 1)  # foreachBatch replay of batch 1
+
+    dlq_dir = tmp_path / "dlq"
+    assert sorted(p.name for p in dlq_dir.iterdir()) == ["batch_id=0", "batch_id=1"]
+    dlq = spark.read.parquet(str(dlq_dir))
+    assert dlq.columns == ["key", "value", "_error", "batch_id"]
+    assert dlq.schema["batch_id"].dataType == IntegerType()
+    assert sorted((r.batch_id, bytes(r.value)) for r in dlq.collect()) == [
+        (0, b'{"s": 0}'),
+        (0, b'{"s": 1}'),
+        (1, b'{"s": 2}'),
+    ]
+    assert ing.metrics.error_rows == 3
