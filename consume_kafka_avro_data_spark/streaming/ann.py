@@ -36,12 +36,15 @@ from __future__ import annotations
 
 import json
 import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
 from consume_kafka_avro_data_spark.operators.ann_index import AnnIndex
-from consume_kafka_avro_data_spark.streaming.lifecycle import BoundedReplayMixin
+from consume_kafka_avro_data_spark.streaming.lifecycle import (
+    BatchLedger,
+    BoundedReplayMixin,
+    total_of,
+)
 
 #: index-side sidecar holding the tiered schedule's fold-level map —
 #: written next to the index meta so a restarted ingest resumes the
@@ -50,95 +53,28 @@ FOLD_SIDECAR = "_ann_fold_levels.json"
 
 
 class AnnIngestMetrics:
-    """Replay-consistent ANN ingest counters, DriftMetrics-shaped:
-    per-batch maps key by batch id so a replay REPLACES its
-    contribution (the shard generation it re-commits does the same),
-    the cell totals are maintained INCREMENTALLY so a
-    ``drift_ratio``/``needs_rebuild`` poll is O(cells) — never a
-    re-fold over the whole batch history — and maps beyond
-    ``compact_horizon`` are dropped (their mass stays in the totals)
-    so week-long continuous streams don't grow driver state per
-    trigger.  Readers and the writer share one lock: polls run on the
-    driver concurrently with the stream-execution thread in continuous
-    mode."""
+    """Replay-consistent ANN ingest counters: one
+    ``lifecycle.BatchLedger`` record per batch (``{"vectors": n,
+    "cells": {cell: n}}``), so a replay REPLACES its contribution (the
+    shard generation it re-commits does the same), the cell totals are
+    kept incrementally so a ``drift_ratio``/``needs_rebuild`` poll is
+    O(cells), records beyond ``compact_horizon`` fold, and the ledger's
+    lock serves the polls that run concurrently with the
+    stream-execution thread in continuous mode."""
+
+    batches = property(lambda self: self.ledger.batches)
+    vectors = total_of("vectors")
 
     def __init__(self, compact_horizon: int = 1024):
-        self._lock = threading.Lock()
-        self.compact_horizon = compact_horizon
-        self.vectors_by_batch: dict[int, int] = {}
-        self.cells_by_batch: dict[int, dict[int, int]] = {}
-        self._cell_totals: dict[int, int] = {}
-        self._vectors = 0
-        self._compacted_batches = 0
-        self._compacted_max: int | None = None
-
-    @property
-    def batches(self) -> int:
-        with self._lock:
-            return self._compacted_batches + len(self.cells_by_batch)
-
-    @property
-    def vectors(self) -> int:
-        with self._lock:
-            return self._vectors
+        self.ledger = BatchLedger(compact_horizon)
 
     def cell_totals(self) -> dict[int, int]:
-        with self._lock:
-            return dict(self._cell_totals)
-
-    def _reject_ancient_locked(self, batch_id: int) -> None:
-        if (
-            self._compacted_max is not None
-            and batch_id <= self._compacted_max
-        ):
-            # same contract as DriftMetrics: a replay this far back
-            # cannot be deduplicated once its map is compacted —
-            # refuse loudly rather than silently double-count
-            raise RuntimeError(
-                f"batch {batch_id} was already compacted (horizon "
-                f"{self.compact_horizon}); raise compact_horizon or "
-                "reset the ingest"
-            )
-
-    def reject_ancient(self, batch_id: int) -> None:
-        """Public pre-write guard: process_batch calls this BEFORE
-        add_shard so an ancient replay fails before touching the index
-        — once the INDEX has compacted past its own shard-id memory,
-        an ancient add_shard would silently double-count, so the
-        refusal must precede the write, not follow it."""
-        with self._lock:
-            self._reject_ancient_locked(batch_id)
+        return dict(self.ledger.total().get("cells", {}))
 
     def record(
         self, batch_id: int, n: int, cells: dict[int, int]
     ) -> None:
-        with self._lock:
-            self._reject_ancient_locked(batch_id)
-            old = self.cells_by_batch.get(batch_id)
-            if old is not None:  # replay: subtract the replaced batch
-                for c, k in old.items():
-                    left = self._cell_totals[c] - k
-                    if left:
-                        self._cell_totals[c] = left
-                    else:
-                        del self._cell_totals[c]
-                self._vectors -= self.vectors_by_batch[batch_id]
-            self.cells_by_batch[batch_id] = dict(cells)
-            self.vectors_by_batch[batch_id] = n
-            for c, k in cells.items():
-                self._cell_totals[c] = self._cell_totals.get(c, 0) + k
-            self._vectors += n
-            if len(self.cells_by_batch) > self.compact_horizon:
-                cutoff = max(self.cells_by_batch) - self.compact_horizon
-                for bid in [b for b in self.cells_by_batch if b <= cutoff]:
-                    del self.cells_by_batch[bid]
-                    del self.vectors_by_batch[bid]
-                    self._compacted_batches += 1
-                    if (
-                        self._compacted_max is None
-                        or bid > self._compacted_max
-                    ):
-                        self._compacted_max = bid
+        self.ledger.record(batch_id, {"vectors": n, "cells": dict(cells)})
 
 
 class StreamingAnnIngest(BoundedReplayMixin):
@@ -178,11 +114,9 @@ class StreamingAnnIngest(BoundedReplayMixin):
         self.index = index
         self.checkpoint_dir = checkpoint_dir
         # constructor-reachable (the ancient-replay error says 'raise
-        # compact_horizon', and _reset()/run_to_completion rebuild
-        # metrics via _new_metrics(), discarding a hand-installed one);
-        # the mixin replay guard trims at the same horizon
+        # the horizon', and _reset()/run_to_completion rebuild metrics
+        # via _new_metrics(), discarding a hand-installed one)
         self.compact_horizon = compact_horizon
-        self.replay_guard_horizon = compact_horizon
         #: merge generation directories (None = manual only) — one dir
         #: per committed batch is the small-file problem on every probe
         #: scan; the A/B cost is in bench.py's ann_ingest row, same
@@ -235,21 +169,18 @@ class StreamingAnnIngest(BoundedReplayMixin):
         #: the whole corpus per trigger; tiered folds only the tiers)
         self.compact_rows_written: int = 0
         self.metrics = self._new_metrics()
-        self._seen_batches: set[int] = set()
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         # ancient-replay refusal BEFORE the index write: once the index
         # has compacted past its shard-id memory, an ancient add_shard
         # is indistinguishable from a new shard (silent double-count) —
-        # so the guard must run first, not inside the later record()
-        self.metrics.reject_ancient(batch_id)
-        replayed = batch_id in self._seen_batches
+        # so the ledger is consulted first, not only in the later record
+        replayed = self.metrics.ledger.admit(batch_id)
         if f"b{batch_id}" in self.index.compacted_shards:
             # replay of a batch already FOLDED into a merged generation:
             # the index would no-op the add_shard, and recording its
             # 0-row result would REPLACE the batch's original metrics
             # contribution — keep both exactly as committed
-            self._mark_batch(batch_id)
             return
         # isEmpty is a cheap limit-1 probe; the real row count comes
         # from the written generation's parquet footers (driver-side
@@ -262,9 +193,8 @@ class StreamingAnnIngest(BoundedReplayMixin):
             n = self.index.last_shard_rows
             cells = self.index.last_shard_cell_counts
         # keyed by batch id, so a replay REPLACES (never double-counts);
-        # AnnIngestMetrics locks internally against concurrent polls
+        # the ledger locks against concurrent polls
         self.metrics.record(batch_id, n, cells)
-        self._mark_batch(batch_id)  # mixin contract; bounded trim
         # periodic generation merge — gated on `not replayed` exactly
         # like StreamingDedupIngest's store compaction: `batches` does
         # not advance on a replay, so a batch retried while the modulus

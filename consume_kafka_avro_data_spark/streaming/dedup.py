@@ -19,7 +19,8 @@ the signature):
   store merge anti-joins on doc_id (a replayed batch re-appends
   nothing), self-matches are excluded by id (a doc whose signature
   already landed before a crash does not count as its own duplicate on
-  replay), and side counters are marked per batch only after success.
+  replay), and the counters are recorded by batch id only after
+  success, so a replay replaces them (``lifecycle.BatchLedger``).
 
 The reference never had this operator; it is the LLM-pipeline charter
 applied to the reference's consume→transform→idempotent-sink loop
@@ -32,7 +33,6 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
@@ -59,35 +59,32 @@ from consume_kafka_avro_data_spark.operators.text import (
     gopher_repetition,
     quality_score,
 )
-from consume_kafka_avro_data_spark.streaming.lifecycle import BoundedReplayMixin
+from consume_kafka_avro_data_spark.streaming.lifecycle import (
+    BatchLedger,
+    BoundedReplayMixin,
+    total_of,
+)
 
 
-@dataclass
 class DedupMetrics:
     """Per-run counters: every batch doc is rejected (quality gate),
     contaminated (decontamination gate), a dupe, or novel — the four
-    always sum to docs (gates that are off contribute zero)."""
+    always sum to docs (gates that are off contribute zero).
 
-    batches: int = 0
-    docs: int = 0
-    novel_docs: int = 0
-    dup_docs: int = 0
-    rejected_docs: int = 0
-    contaminated_docs: int = 0
-    dup_pairs_by_batch: dict[int, int] = field(default_factory=dict)
-    #: round 10 — per-micro-batch per-gate rows in funnel order,
-    #: ``{"gate", "docs_in", "docs_rejected"}``, closed by the "dedup"
-    #: row, which also carries ``sec`` and ``sub`` (its docs_rejected
-    #: counts ROUTED duplicates); keyed by batch id like
-    #: dup_pairs_by_batch (replays keep the original), trimmed at the
-    #: same horizon.  ``StreamingDedupIngest.gate_census()`` aggregates
-    #: it per gate — the observability a deployment tunes its gate
-    #: cuts and executor count against (the reference's error counter,
-    #: src/main.cpp:243-251, at pipeline scale).
-    gate_census_by_batch: dict[int, list] = field(default_factory=dict)
-    #: wall seconds of each batch's ONE gate verdict pass (every gate
-    #: shares it, so no gate row carries a ``sec`` of its own)
-    gate_pass_sec_by_batch: dict[int, float] = field(default_factory=dict)
+    Each batch's record in ``ledger`` holds those five counts plus its
+    per-gate census (``StreamingDedupIngest.gate_census()``); a replay
+    REPLACES its batch's record, with the same numbers, because the
+    gates and the store probe are deterministic per batch."""
+
+    batches = property(lambda self: self.ledger.batches)
+    docs = total_of("docs")
+    novel_docs = total_of("novel_docs")
+    dup_docs = total_of("dup_docs")
+    rejected_docs = total_of("rejected_docs")
+    contaminated_docs = total_of("contaminated_docs")
+
+    def __init__(self) -> None:
+        self.ledger = BatchLedger()
 
 
 class StreamingDedupIngest(BoundedReplayMixin):
@@ -453,7 +450,6 @@ class StreamingDedupIngest(BoundedReplayMixin):
             io.write_bytes(pf + ".tmp", json.dumps(params).encode())
             io.rename_overwrite(pf + ".tmp", pf)
         self.metrics = self._new_metrics()
-        self._seen_batches: set[int] = set()
         self.drift_monitor = drift_monitor
         self.sketch_monitor = sketch_monitor
 
@@ -468,39 +464,21 @@ class StreamingDedupIngest(BoundedReplayMixin):
             self.sketch_monitor._reset()
 
     def gate_census(self) -> dict:
-        """Aggregated per-gate census over the retained batches, in
-        funnel order: ``{gate: {docs_in, docs_rejected, batches}}`` —
-        what a deployment tuning the gate family reads: which gate
-        rejects what share of its input.  The gates share one verdict
-        pass, so its wall time is reported once, as the leading
-        ``gate_pass`` entry ``{sec, batches}``; the ``dedup`` row
-        carries its own ``sec`` plus ``sub`` — summed sig/probe/merge
-        splits (signature computation, store band-join probe + dup-map
-        build, novel merge write) — so the census names the wall-clock
-        floor and its dominant component.  Sums the replay-consistent
-        per-batch records (``DedupMetrics``), so it is exact over the
-        retained horizon; disabled gates simply never appear."""
-        m = self.metrics
-        out: dict = {}
-        if m.gate_pass_sec_by_batch:
-            out["gate_pass"] = {
-                "sec": round(sum(m.gate_pass_sec_by_batch.values()), 4),
-                "batches": len(m.gate_pass_sec_by_batch),
-            }
-        for rows in m.gate_census_by_batch.values():
-            for e in rows:
-                g = out.setdefault(
-                    e["gate"], {"docs_in": 0, "docs_rejected": 0, "batches": 0}
-                )
-                g["docs_in"] += e["docs_in"]
-                g["docs_rejected"] += e["docs_rejected"]
-                g["batches"] += 1
-                if "sec" in e:  # the dedup stage (round 11 splits)
-                    g["sec"] = round(g.get("sec", 0.0) + e["sec"], 4)
-                    sub = g.setdefault("sub", {})
-                    for k, v in e["sub"].items():
-                        sub[k] = round(sub.get(k, 0.0) + v, 4)
-        return out
+        """Aggregated per-gate census, in funnel order: ``{gate:
+        {docs_in, docs_rejected, batches}}`` — what a deployment tuning
+        the gate family reads: which gate rejects what share of its
+        input.  The gates share one verdict pass, so its wall time is
+        reported once, as the leading ``gate_pass`` entry ``{sec,
+        batches}``; the ``dedup`` row carries its own ``sec`` plus
+        ``sub`` — summed sig/probe/merge splits (signature computation,
+        store band-join probe + dup-map build, novel merge write) — so
+        the census names the wall-clock floor and its dominant
+        component.  Sums the replay-consistent per-batch records
+        (``DedupMetrics``); disabled gates simply never appear."""
+        total = self.metrics.ledger.total()
+        out = {"gate_pass": total["gate_pass"]} if "gate_pass" in total else {}
+        out.update(total.get("census", {}))
+        return _rounded(out)
 
     # -- building blocks -----------------------------------------------------
 
@@ -762,7 +740,7 @@ class StreamingDedupIngest(BoundedReplayMixin):
                 f"store was declared {self.id_type.simpleString()}; pass "
                 "id_type= so the persisted schema matches the stream"
             )
-        replayed = batch_id in self._seen_batches
+        replayed = self.metrics.ledger.admit(batch_id)
         if self.drift_monitor is not None:
             # RAW batch, before any gate: drift is about what's
             # arriving; the monitor replaces its own counts on replay
@@ -936,52 +914,38 @@ class StreamingDedupIngest(BoundedReplayMixin):
             )
             self.store.merge_new(novel)
             t_merge = time.perf_counter()
-            m = self.metrics
-            if not replayed:
-                m.batches += 1
-                m.docs += n_docs + n_rejected + n_contam
-                m.dup_docs += n_dupes
-                m.novel_docs += n_docs - n_dupes
-                m.rejected_docs += n_rejected
-                m.contaminated_docs += n_contam
-                m.dup_pairs_by_batch[batch_id] = n_dupes
-                # per-gate census, docs_in chained down the funnel: a
-                # gate's input is its predecessor's input minus what
-                # the predecessor rejected (every doc a gate removes is
-                # attributed to its FIRST failing gate), so the dedup
-                # stage's input is the gate survivors
-                rows: list[dict] = []
-                docs_in = n_docs + n_rejected + n_contam
-                for g, n in gated:
-                    rows.append({"gate": g, "docs_in": docs_in, "docs_rejected": n})
-                    docs_in -= n
-                rows.append(
-                    {
-                        "gate": "dedup",
-                        "docs_in": n_docs,
-                        "docs_rejected": n_dupes,
-                        "sec": round(t_merge - t_pass, 4),
-                        "sub": {
-                            "sig": round(t_sig - t_pass, 4),
-                            "probe": round(t_probe - t_sig, 4),
-                            "merge": round(t_merge - t_probe, 4),
-                        },
-                    }
-                )
-                m.gate_census_by_batch[batch_id] = rows
-                if gates:
-                    m.gate_pass_sec_by_batch[batch_id] = round(t_pass - t0, 4)
-            # bounded replay guard (mixin-shared trim); the per-batch
-            # maps prune to the same horizon
-            cutoff = self._mark_batch(batch_id)
-            if cutoff is not None:
-                for per_batch in (
-                    m.dup_pairs_by_batch,
-                    m.gate_census_by_batch,
-                    m.gate_pass_sec_by_batch,
-                ):
-                    for bid in [b for b in per_batch if b <= cutoff]:
-                        del per_batch[bid]
+            # per-gate census, docs_in chained down the funnel: a gate's
+            # input is its predecessor's input minus what the
+            # predecessor rejected (every doc a gate removes is
+            # attributed to its FIRST failing gate), so the dedup
+            # stage's input is the gate survivors
+            census: dict = {}
+            docs_in = n_docs + n_rejected + n_contam
+            for g, n in gated:
+                census[g] = {"docs_in": docs_in, "docs_rejected": n, "batches": 1}
+                docs_in -= n
+            census["dedup"] = {
+                "docs_in": n_docs,
+                "docs_rejected": n_dupes,
+                "batches": 1,
+                "sec": round(t_merge - t_pass, 4),
+                "sub": {
+                    "sig": round(t_sig - t_pass, 4),
+                    "probe": round(t_probe - t_sig, 4),
+                    "merge": round(t_merge - t_probe, 4),
+                },
+            }
+            rec = {
+                "docs": n_docs + n_rejected + n_contam,
+                "novel_docs": n_docs - n_dupes,
+                "dup_docs": n_dupes,
+                "rejected_docs": n_rejected,
+                "contaminated_docs": n_contam,
+                "census": census,
+            }
+            if gates:
+                rec["gate_pass"] = {"sec": round(t_pass - t0, 4), "batches": 1}
+            self.metrics.ledger.record(batch_id, rec)
             self._compact_if_due(replayed)
         finally:
             # localCheckpoint blocks are freed with the DataFrame; make
@@ -990,3 +954,11 @@ class StreamingDedupIngest(BoundedReplayMixin):
             # superseded batches' blocks until driver GC gets around to it
             for df in held:
                 df.unpersist()
+
+
+def _rounded(d: dict) -> dict:
+    """``d`` with every number rounded to 4 places, nested dicts too."""
+    return {
+        k: _rounded(v) if isinstance(v, dict) else round(v, 4)
+        for k, v in d.items()
+    }

@@ -30,19 +30,18 @@ Design, mirroring the batch census's parity/scale choices:
   collect is ≤ (head_k + 1) rows per language regardless of batch
   size — per-batch cost is head-bounded exactly like the ANN ingest's
   parquet-footer reads.
-* Counts accumulate keyed BY BATCH ID and the scalar tallies are
-  DERIVED from those maps, so a foreachBatch replay after a crash
-  REPLACES its own contribution consistently (counts and doc tallies
-  can never disagree) — batch ids are Structured Streaming's replay
-  key, unique within one checkpoint lineage.  Accumulating across
-  runs (``reset_metrics=False``) is therefore sound only for replays
-  of the SAME stream (crash recovery); a genuinely NEW stream restarts
-  batch ids at 0 and must go through a reset or a fresh monitor.
+* Counts are recorded BY BATCH ID in a ``lifecycle.BatchLedger``, so
+  a foreachBatch replay after a crash REPLACES its own contribution
+  (counts and doc tallies can never disagree) — batch ids are
+  Structured Streaming's replay key, unique within one checkpoint
+  lineage.  Accumulating across runs (``reset_metrics=False``) is
+  therefore sound only for replays of the SAME stream (crash
+  recovery); a genuinely NEW stream restarts batch ids at 0 and must
+  go through a reset or a fresh monitor.
 * Metric reads (``drift_tvd`` / ``needs_retune`` / the SQL views) may
-  race the stream-execution thread in continuous (T1) mode, so ALL of
-  ``DriftMetrics``' readers and its writer share one lock, totals are
-  maintained incrementally (polls never re-fold the batch history),
-  and per-batch maps beyond ``compact_horizon`` are dropped so driver
+  race the stream-execution thread in continuous (T1) mode; the
+  ledger's lock and incremental totals keep polls atomic and
+  O(totals), and records beyond ``compact_horizon`` fold so driver
   memory stays bounded on week-long streams.  The SQL views read one
   atomic ``snapshot()``.
 * ``drift_tvd()`` is the coarsened total-variation distance over the
@@ -64,12 +63,14 @@ The OOV bucket uses a key that cannot collide with a real token
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from consume_kafka_avro_data_spark.functions.textops import census_token_stream
-from consume_kafka_avro_data_spark.streaming.lifecycle import BoundedReplayMixin
+from consume_kafka_avro_data_spark.streaming.lifecycle import (
+    BatchLedger,
+    BoundedReplayMixin,
+    total_of,
+)
 
 #: bucket key for arrival mass outside the reference head — contains a
 #: space, which no space-split token can
@@ -77,56 +78,32 @@ OOV = "<oov tail>"
 
 
 class DriftMetrics:
-    """Thread-safe, replay-consistent drift counters.
+    """Replay-consistent drift counters: one ledger record per batch
+    (``{"docs": n, "terms": {(lang, term): n}}``), so a replayed batch
+    REPLACES its contribution and the doc tally can never disagree with
+    the term counts.  ``lifecycle.BatchLedger`` keeps the totals
+    incrementally (a poll is O(current totals)), locks them against the
+    stream-execution thread, folds records older than
+    ``compact_horizon`` batch ids, and refuses a replay of a folded
+    batch rather than silently double-counting it.
 
-    Per-batch maps key by batch id so a replayed batch REPLACES its
-    contribution; the running totals are maintained INCREMENTALLY on
-    record (subtract the replaced batch, add the new one), so a poll
-    is O(current totals) — never a re-fold over every batch — and the
-    scalar tallies can never disagree with the maps.  Every reader and
-    the writer share one lock: in continuous (T1) mode the driver
-    polls while the stream-execution thread records.
-
-    ``compact_horizon`` bounds driver memory on long-running streams:
-    per-batch maps older than the horizon below the newest batch id
-    are dropped (their mass stays in the running totals).  Structured
-    Streaming replays only the most recent uncommitted batch after a
-    crash, so a horizon in the hundreds is conservatively safe; a
-    record() for an already-compacted batch id raises loudly rather
-    than silently double-counting.
-
-    That raise is also the boundary of the fresh-checkpoint recovery
+    That refusal is also the boundary of the fresh-checkpoint recovery
     pattern (``run_to_completion(reset_metrics=False)`` with a new
     checkpoint dir): batch ids restart at 0 there, so replace-by-id
     keeps the numbers unchanged only while the first run stayed within
     ``compact_horizon`` batches.  Beyond it the monitor refuses (batch
-    0 is already folded into the compacted totals and cannot be
-    replaced) — reset the monitor, or construct it with a horizon
-    sized to the stream."""
+    0 is already folded and cannot be replaced) — reset the monitor,
+    or construct it with a horizon sized to the stream."""
+
+    batches = property(lambda self: self.ledger.batches)
+    compact_horizon = property(lambda self: self.ledger.horizon)
+    docs = total_of("docs")
 
     def __init__(self, compact_horizon: int = 1024):
-        self._lock = threading.Lock()
-        self.compact_horizon = compact_horizon
-        self.docs_by_batch: dict[int, int] = {}
-        self.counts_by_batch: dict[int, dict[tuple[str, str], int]] = {}
-        self._totals: dict[tuple[str, str], int] = {}
-        self._total_docs = 0
-        self._compacted_batches = 0
-        self._compacted_max: int | None = None
-
-    @property
-    def batches(self) -> int:
-        with self._lock:
-            return self._compacted_batches + len(self.docs_by_batch)
-
-    @property
-    def docs(self) -> int:
-        with self._lock:
-            return self._total_docs
+        self.ledger = BatchLedger(compact_horizon)
 
     def term_totals(self) -> dict[tuple[str, str], int]:
-        with self._lock:
-            return dict(self._totals)
+        return dict(self.ledger.total().get("terms", {}))
 
     def record(
         self,
@@ -134,39 +111,7 @@ class DriftMetrics:
         n_docs: int,
         counts: dict[tuple[str, str], int],
     ) -> None:
-        with self._lock:
-            if (
-                self._compacted_max is not None
-                and batch_id <= self._compacted_max
-            ):
-                raise RuntimeError(
-                    f"batch {batch_id} was already compacted (horizon "
-                    f"{self.compact_horizon}); a replay this far back "
-                    "cannot be deduplicated — raise compact_horizon or "
-                    "reset the monitor"
-                )
-            old = self.counts_by_batch.get(batch_id)
-            if old is not None:
-                for key, n in old.items():
-                    left = self._totals[key] - n
-                    if left:
-                        self._totals[key] = left
-                    else:
-                        del self._totals[key]
-                self._total_docs -= self.docs_by_batch[batch_id]
-            self.docs_by_batch[batch_id] = n_docs
-            self.counts_by_batch[batch_id] = dict(counts)
-            for key, n in counts.items():
-                self._totals[key] = self._totals.get(key, 0) + n
-            self._total_docs += n_docs
-            if len(self.counts_by_batch) > self.compact_horizon:
-                cutoff = max(self.counts_by_batch) - self.compact_horizon
-                for bid in [b for b in self.counts_by_batch if b <= cutoff]:
-                    del self.counts_by_batch[bid]
-                    del self.docs_by_batch[bid]
-                    self._compacted_batches += 1
-                    if self._compacted_max is None or bid > self._compacted_max:
-                        self._compacted_max = bid
+        self.ledger.record(batch_id, {"docs": n_docs, "terms": dict(counts)})
 
 
 class StreamingDriftMonitor(BoundedReplayMixin):
@@ -190,17 +135,13 @@ class StreamingDriftMonitor(BoundedReplayMixin):
         self.checkpoint_dir = checkpoint_dir
         self.head_k = head_k
         #: per-batch map retention (see DriftMetrics) — configurable
-        #: here because the ancient-replay error's remedy ("raise
-        #: compact_horizon") must be reachable through the public API,
+        #: here because the ancient-replay error's remedy ("raise the
+        #: horizon") must be reachable through the public API,
         #: and _reset()/run_to_completion rebuild metrics via
         #: _new_metrics(), which would silently discard a horizon set
         #: only on a hand-installed DriftMetrics
         self.compact_horizon = compact_horizon
-        # the mixin replay guard trims at the same horizon the metrics
-        # maps compact at — one knob for all per-batch driver state
-        self.replay_guard_horizon = compact_horizon
         self.metrics = self._new_metrics()
-        self._seen_batches: set[int] = set()
 
         # reference head: top head_k terms per lang by count
         # (deterministic cnt-then-term rank, as the batch census), plus
@@ -261,6 +202,7 @@ class StreamingDriftMonitor(BoundedReplayMixin):
     # -- foreachBatch ---------------------------------------------------------
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
+        self.metrics.ledger.admit(batch_id)  # refuse a folded replay first
         counts: dict[tuple[str, str], int] = {}
         # unlike the ANN ingest (which reads row counts from the shard
         # it writes anyway), this monitor HAS no write to piggyback on:
@@ -300,9 +242,8 @@ class StreamingDriftMonitor(BoundedReplayMixin):
             )
             counts = {(r.lang, r.term): r.cnt for r in rows}
         # keyed by batch id: a replay overwrites (never double-counts);
-        # DriftMetrics locks internally against concurrent T1 readers
+        # the ledger locks against concurrent T1 readers
         self.metrics.record(batch_id, n_docs, counts)
-        self._mark_batch(batch_id)  # mixin contract; bounded trim
 
     # -- drift metric ---------------------------------------------------------
 

@@ -26,39 +26,40 @@ Spark lift, same semantics batch-amortized:
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from consume_kafka_avro_data_spark.config import SchemaConfig
-from consume_kafka_avro_data_spark.streaming.lifecycle import BoundedReplayMixin
+from consume_kafka_avro_data_spark.streaming.lifecycle import (
+    BatchLedger,
+    BoundedReplayMixin,
+    total_of,
+)
 from consume_kafka_avro_data_spark.operators.graph import GraphStore, triples_from
 from consume_kafka_avro_data_spark.sources.avro_codec import from_confluent_avro
 
 
-@dataclass
 class IngestMetrics:
-    """Per-run counters (the reference's `errors` counter, plus writes)."""
+    """Per-run counters (the reference's `errors` counter, plus writes).
 
-    batches: int = 0
-    valid_rows: int = 0
-    error_rows: int = 0
-    new_vertices: int = 0
-    new_edges: int = 0
-    errors_by_reason: dict[str, int] = field(default_factory=dict)
+    ``valid_rows``, ``error_rows`` and ``errors_by_reason`` sum the
+    per-batch records of ``ledger`` (a replay replaces its batch's).
+    ``new_vertices``/``new_edges`` add outside it: a replay merges
+    nothing new, so replacing would zero the original batch's counts."""
 
+    batches = property(lambda self: self.ledger.batches)
+    valid_rows = total_of("valid_rows")
+    error_rows = total_of("error_rows")
 
-def decode_stream(
-    stream: DataFrame,
-    schema_config: SchemaConfig,
-    expected_schema_id: int | None = None,
-    keep_raw: bool = False,
-) -> DataFrame:
-    """Wire frames → decoded fields + ``_error`` (null ⇒ valid)."""
-    return from_confluent_avro(
-        stream, schema_config, expected_schema_id, keep_raw=keep_raw
-    )
+    def __init__(self) -> None:
+        self.ledger = BatchLedger()
+        self.new_vertices = 0
+        self.new_edges = 0
+
+    @property
+    def errors_by_reason(self) -> dict[str, int]:
+        return dict(self.ledger.total().get("errors_by_reason", {}))
 
 
 class StreamingGraphIngest(BoundedReplayMixin):
@@ -104,19 +105,18 @@ class StreamingGraphIngest(BoundedReplayMixin):
         #: StreamingDedupIngest.compact_every; A/B in bench.py
         self.compact_every = compact_every
         self.metrics = IngestMetrics()
-        self._seen_batches: set[int] = set()
 
     # -- the per-micro-batch body (the reference's hot loop, set-oriented) --
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         # foreachBatch is at-least-once: the same batch_id re-runs after
         # a mid-batch failure/restart.  The graph merge is idempotent by
-        # construction; the side counters are made idempotent by marking
-        # a batch as seen only AFTER it fully succeeds — marking first
-        # would make a failed-then-retried batch skip its counters
-        # forever (counted nowhere), the inverse bug of double-counting
-        replayed = batch_id in self._seen_batches
-        decoded = decode_stream(
+        # construction; the counters are recorded by batch id only AFTER
+        # the batch fully succeeds, so a replay replaces them and a
+        # failed-then-retried batch is counted once.  A replay older
+        # than the ledger's window is refused before anything is written.
+        replayed = self.metrics.ledger.admit(batch_id)
+        decoded = from_confluent_avro(
             batch, self.schema_config, self.expected_schema_id, keep_raw=True
         ).cache()
         try:
@@ -150,17 +150,14 @@ class StreamingGraphIngest(BoundedReplayMixin):
             nv, ne = self.store.ingest_triples(triples, created_at=self.created_at)
             self.metrics.new_vertices += nv
             self.metrics.new_edges += ne
-            if not replayed:
-                self.metrics.batches += 1
-                self.metrics.valid_rows += n_valid
-                self.metrics.error_rows += n_err
-                for reason, cnt in by_reason.items():
-                    self.metrics.errors_by_reason[reason] = (
-                        self.metrics.errors_by_reason.get(reason, 0) + cnt
-                    )
-            # success: only now does a replay of this id skip counters
-            # (mixin-shared bounded trim — see BoundedReplayMixin)
-            self._mark_batch(batch_id)
+            self.metrics.ledger.record(
+                batch_id,
+                {
+                    "valid_rows": n_valid,
+                    "error_rows": n_err,
+                    "errors_by_reason": by_reason,
+                },
+            )
             self._compact_if_due(replayed)
         finally:
             decoded.unpersist()

@@ -1,19 +1,31 @@
-"""Shared micro-batch ingest lifecycle (T1/T2 mechanics).
+"""Shared micro-batch lifecycle: the replay ledger and the trigger
+wiring of the engine's foreachBatch streams.
 
-The engine's three foreachBatch ingests — graph
-(:class:`~consume_kafka_avro_data_spark.streaming.ingest.StreamingGraphIngest`),
-dedup signatures
-(:class:`~consume_kafka_avro_data_spark.streaming.dedup.StreamingDedupIngest`)
-and ANN generations
-(:class:`~consume_kafka_avro_data_spark.streaming.ann.StreamingAnnIngest`) —
-share the same trigger wiring and bounded-replay contract; this mixin is
-their single implementation so the copies cannot drift (a drift exactly
-of this kind shipped once: one copy reset per-run metrics without
-resetting the replay-guard batch set, under-counting a from-scratch
-reprocess).
+Structured Streaming's ``foreachBatch`` delivers at least once: after a
+failure or restart the most recent uncommitted batch id runs again.
+Every stream here makes that harmless through ONE contract, implemented
+once by :class:`BatchLedger`:
 
+* driver-side state is recorded per batch id, and a replayed id
+  REPLACES its batch's record (never adds a second one);
+* the newest ``horizon`` batch ids stay live; older records fold into a
+  running part, so a week-long stream holds bounded driver state;
+* a replay older than the window is REFUSED before the stream writes
+  anything — its record is folded and can no longer be replaced;
+* one lock serializes the stream thread's records against polling
+  readers.
+
+The graph, dedup and ANN ingests, the drift and sketch monitors and the
+producer's delivery guard all keep their batch-id-keyed state in a
+ledger.  For the graph and dedup counters, replacing gives the same
+numbers as skipping the replay would: their replays are deterministic
+by design (the sinks merge by id and the dedup probe excludes the
+batch's own ids).  Data-side idempotence never depends on the ledger —
+the sinks anti-join or replace by id.
+
+:class:`BoundedReplayMixin` is the trigger wiring the ingests share.
 Subclass contract: ``process_batch(df, batch_id)``, ``checkpoint_dir``,
-``metrics``, ``_seen_batches`` (the intra-run foreachBatch-retry guard),
+``metrics`` (holding its ledger as ``metrics.ledger``),
 ``_new_metrics()`` and ``_checkpoint_subdir``; ingests that compact a
 store through ``_compact_if_due`` also carry ``store``,
 ``compact_every`` and ``metrics.batches``.
@@ -22,41 +34,127 @@ store through ``_compact_if_due`` also carry ``store``,
 from __future__ import annotations
 
 import os
+import threading
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
+
+#: live batch ids a ledger keeps by default — far above the only replay
+#: distance Structured Streaming produces within a run (the most recent
+#: uncommitted batch), small enough that week-long 1 s-trigger streams
+#: don't grow driver state one record per trigger forever
+REPLAY_WINDOW = 1024
+
+
+def add_counts(a: Any, b: Any) -> Any:
+    """The counter records' fold: numbers add, dicts add key by key
+    (recursively, keeping first-seen key order).  Pure — neither input
+    is modified, so a ledger's folded part and running total may share
+    structure with the records."""
+    if not isinstance(a, dict):
+        return a + b
+    out = dict(a)
+    for k, v in b.items():
+        out[k] = add_counts(out[k], v) if k in out else v
+    return out
+
+
+class BatchLedger:
+    """Driver state keyed by batch id, under the replace-by-id contract
+    (see the module docstring).
+
+    ``fold(acc, record)`` combines records; records of ids that leave
+    the window fold into ``folded`` in arrival order.  ``total()`` is
+    the fold of everything recorded, built on the first read and kept
+    incrementally after it: a new id folds into it, and only replacing
+    a live id (rare — a replay) rebuilds it from the folded part and
+    the window, so a poll is O(total) however long the stream.
+    ``lock`` is reentrant, so an owner may hold it around a record to
+    keep a cache of its own in step."""
+
+    def __init__(
+        self,
+        horizon: int = REPLAY_WINDOW,
+        fold: Callable[[Any, Any], Any] = add_counts,
+        empty: Any = None,
+    ):
+        self.horizon = horizon
+        self.lock = threading.RLock()
+        self._fold = fold
+        self._window: dict[int, Any] = {}
+        self.folded = {} if empty is None else empty
+        self._folded_batches = 0
+        self._folded_max: int | None = None
+        self._total: Any = None  # built on the first read
+
+    def admit(self, batch_id: int) -> bool:
+        """Refuse ``batch_id`` if its record is already folded (a replay
+        older than the window cannot be replaced, only double-counted);
+        otherwise say whether it is a replay of a live batch.  Streams
+        call this before their first write."""
+        with self.lock:
+            if self._folded_max is not None and batch_id <= self._folded_max:
+                raise RuntimeError(
+                    f"batch {batch_id} was already compacted (horizon "
+                    f"{self.horizon}); a replay this far back cannot be "
+                    "deduplicated — raise the horizon or reset the stream"
+                )
+            return batch_id in self._window
+
+    def record(self, batch_id: int, rec: Any) -> None:
+        """Record (or, for a live id, replace) ``batch_id``'s record,
+        then fold the ids that fell out of the window."""
+        with self.lock:
+            replaced = self.admit(batch_id)
+            self._window[batch_id] = rec
+            if replaced:
+                self._total = None
+            elif self._total is not None:
+                self._total = self._fold(self._total, rec)
+            if len(self._window) > self.horizon:
+                cutoff = max(self._window) - self.horizon
+                for bid in [b for b in self._window if b <= cutoff]:
+                    self.folded = self._fold(self.folded, self._window.pop(bid))
+                    self._folded_batches += 1
+                    if self._folded_max is None or bid > self._folded_max:
+                        self._folded_max = bid
+
+    @property
+    def batches(self) -> int:
+        """Distinct batch ids recorded, folded ones included."""
+        with self.lock:
+            return self._folded_batches + len(self._window)
+
+    def records(self) -> dict[int, Any]:
+        """The live window, ``{batch_id: record}`` in arrival order."""
+        with self.lock:
+            return dict(self._window)
+
+    def total(self) -> Any:
+        """Fold of every record (read-only: callers must not mutate)."""
+        with self.lock:
+            if self._total is None:
+                total = self.folded
+                for rec in self._window.values():
+                    total = self._fold(total, rec)
+                self._total = total
+            return self._total
+
+
+def total_of(key: str):
+    """A read-only counter attribute: ``key`` of the owner's
+    ``ledger.total()``, 0 before any batch."""
+    return property(lambda self: self.ledger.total().get(key, 0))
 
 
 class BoundedReplayMixin:
     """``start`` / ``run_to_completion`` for foreachBatch ingests."""
 
     _checkpoint_subdir: str = "ingest"
-    #: bound on the intra-run replay-guard set — far above the only
-    #: replay distance Structured Streaming produces within a run (the
-    #: most recent uncommitted batch), small enough that week-long
-    #: 1s-trigger streams don't grow driver state one entry per trigger
-    #: forever.  ONE definition here so the four ingests cannot drift.
-    replay_guard_horizon: int = 1024
 
     def _new_metrics(self):  # pragma: no cover - abstract
         raise NotImplementedError
-
-    def _mark_batch(self, batch_id: int) -> int | None:
-        """Record ``batch_id`` in the replay guard and trim entries a
-        horizon behind the head (they can never be consulted again
-        within this run).  Returns the trim cutoff when one applied, so
-        subclasses can prune their own per-batch maps to the same
-        horizon.  Ingests whose idempotence is entirely data-side
-        (replace-by-batch-id sinks) never read the set — they still
-        call this so the mixin contract's attribute stays bounded."""
-        self._seen_batches.add(batch_id)
-        if len(self._seen_batches) > self.replay_guard_horizon:
-            cutoff = max(self._seen_batches) - self.replay_guard_horizon
-            self._seen_batches = {
-                b for b in self._seen_batches if b > cutoff
-            }
-            return cutoff
-        return None
 
     @staticmethod
     def _write_audit(df: DataFrame, out_dir: str | None, batch_id: int) -> None:
@@ -95,13 +193,12 @@ class BoundedReplayMixin:
             self.store.compact()
 
     def _reset(self) -> None:
-        """Fresh metrics + replay-guard state.  Ingests that CARRY
-        other stateful components (e.g. an attached drift monitor)
+        """Fresh metrics, and with them a fresh ledger.  Ingests that
+        CARRY other stateful components (e.g. an attached drift monitor)
         override this to reset them in the same breath — a composed
         component left holding the previous run's batch-id-keyed
         state would silently blend two streams' numbers."""
         self.metrics = self._new_metrics()
-        self._seen_batches = set()
 
     def start(
         self,
@@ -134,14 +231,12 @@ class BoundedReplayMixin:
         """Bounded replay convenience: start availableNow, await, return
         metrics — the reference's run-to-partition-EOF mode.
 
-        Metrics are per-RUN (reset on entry by default; pass
-        ``reset_metrics=False`` to accumulate across runs).  The replay-
-        guard batch set resets WITH the metrics: it exists to keep
-        intra-run foreachBatch retries from double-counting, and
-        carrying it across runs would silently zero the counters of a
-        from-scratch reprocess whose batch ids restart.  (The data-side
-        idempotence never depends on it — the sinks anti-join / replace
-        by id.)  A replay that cannot finish within ``timeout`` raises
+        Metrics are per-RUN (reset on entry by default, ledger
+        included).  With ``reset_metrics=False`` a run whose batch ids
+        restart (a fresh checkpoint over the same stream — crash
+        recovery) REPLACES the earlier run's records id by id, so the
+        numbers stay those of one pass; a genuinely new stream must
+        reset.  A replay that cannot finish within ``timeout`` raises
         TimeoutError after stopping the query — silently returning
         partial counters as if final would understate every metric."""
         if reset_metrics:

@@ -39,6 +39,7 @@ from consume_kafka_avro_data_spark.sources.kafka import (
     FileStreamStandIn,
     kafka_source_available,
 )
+from consume_kafka_avro_data_spark.streaming.lifecycle import BatchLedger
 
 
 @dataclass
@@ -120,13 +121,13 @@ class AvroProducer:
         # state, so concurrent queries off one producer need the lock
         # (metrics.py locks the same producer/consumer boundary)
         self._lock = threading.Lock()
-        #: replay guards keyed BY CHECKPOINT DIR: batch ids are unique
-        #: only within one checkpoint lineage, so a producer-wide set
+        #: one replay ledger PER CHECKPOINT DIR: batch ids are unique
+        #: only within one checkpoint lineage, so a producer-wide one
         #: would silently skip the early batches of a SECOND stream
         #: (fresh checkpoint, ids restarting at 0) — at-most-once data
         #: loss.  Same-process restarts of the SAME checkpoint reuse
-        #: their set, preserving effectively-once delivery.
-        self._seen_by_ckpt: dict[str, set[int]] = {}
+        #: their ledger, preserving effectively-once delivery.
+        self._ledgers: dict[str, BatchLedger] = {}
         if stand_in is None and not bootstrap_servers:
             # same eager contract as kafka_reader_options: fail at
             # construction with the config-layer error, not mid-job
@@ -217,43 +218,23 @@ class AvroProducer:
         into the topic — strictly stronger than the reference's
         fire-and-log callback and than a non-transactional Kafka
         producer, and it keeps the stand-in's dense-offset replayable-
-        topic invariant intact.  The guard is scoped PER CHECKPOINT
-        (batch ids are only unique within one checkpoint lineage): a
-        second stream through the same producer with a fresh checkpoint
-        restarts at batch 0 and must not be skipped as 'seen'."""
-        seen = self._seen_by_ckpt.setdefault(checkpoint_dir, set())
+        topic invariant intact.  A replay older than the ledger's
+        window is refused before delivering, like every ingest's.  The
+        ledger is scoped PER CHECKPOINT (batch ids are only unique
+        within one checkpoint lineage): a second stream through the
+        same producer with a fresh checkpoint restarts at batch 0 and
+        must not be skipped as 'seen'."""
+        ledger = self._ledgers.setdefault(
+            checkpoint_dir, BatchLedger(self.report.compact_horizon, empty=0)
+        )
 
         def _deliver(batch: DataFrame, batch_id: int) -> None:
-            # Membership check WITHOUT inserting: the id is marked seen
-            # only after successful delivery (below, next to report.record).
-            # Inserting first would turn a failed write + checkpoint
+            # the id is recorded only after a successful delivery:
+            # recording first would turn a failed write + checkpoint
             # replay into silent at-most-once loss — the replayed batch
-            # would be skipped though it was never delivered (the exact
-            # inverse-ordering bug ingest.py process_batch fixed).
-            with self._lock:
-                if batch_id in seen:
-                    return
-            n = batch.count()  # input pre-count; see produce_batch
-            framed = self.frame(batch)
-            if self.stand_in is not None:
-                self._deliver_stand_in(framed, n)
-            else:
-                framed.select(
-                    F.col("key").cast("binary").alias("key"), "value"
-                ).write.format("kafka").option(
-                    "kafka.bootstrap.servers", self.bootstrap_servers or ""
-                ).option("topic", self.topic).save()
-            with self._lock:
-                seen.add(batch_id)
-                if len(seen) > self.report.compact_horizon:
-                    # same bound as the ingest replay guards: intra-run
-                    # retries only ever target the most recent
-                    # uncommitted batch
-                    cutoff = max(seen) - self.report.compact_horizon
-                    seen.difference_update(
-                        [b for b in seen if b <= cutoff]
-                    )
-                self.report.record(batch_id, n)
+            # would be skipped though it was never delivered
+            if not ledger.admit(batch_id):
+                ledger.record(batch_id, self.produce_batch(batch, batch_id))
 
         writer = stream.writeStream.foreachBatch(_deliver)
         writer = writer.option(

@@ -23,17 +23,16 @@ state per batch:
   the common case at k ≫ per-batch distinct keys);
 * beyond ``compact_horizon`` old batches fold into one compacted
   sketch pair (associativity makes the fold lossless for the merged
-  view); a replay older than the horizon raises, the drift monitor's
-  ancient-replay contract.
+  view); a replay older than the horizon raises — the replay contract
+  of ``lifecycle.BatchLedger``, which holds the per-batch state.
 
 Reads (`distinct_estimate` / `duplication_factor` / `heavy_hitters`)
 may race the stream-execution thread in continuous mode, so all
-readers and the writer share one lock and read one atomic merge.
+readers and the writer share the ledger's lock and read one atomic
+merge.
 """
 
 from __future__ import annotations
-
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -45,101 +44,76 @@ from consume_kafka_avro_data_spark.operators.sketches import (
     kmv_union,
     mg_merge,
 )
-from consume_kafka_avro_data_spark.streaming.lifecycle import BoundedReplayMixin
+from consume_kafka_avro_data_spark.streaming.lifecycle import (
+    BatchLedger,
+    BoundedReplayMixin,
+)
 
 
 class SketchMetrics:
-    """Thread-safe, replay-consistent sketch state: per-batch
-    (hashes, mg, n) maps within the horizon + one folded pair for
-    compacted history."""
+    """Replay-consistent sketch state: one ``lifecycle.BatchLedger``
+    record per batch, ``(hashes, mg, n)``; records older than
+    ``compact_horizon`` batch ids fold pairwise into one sketch pair.
+    The merged view is a merge-on-read over that pair and the live
+    records — one multi-way Misra–Gries merge, which a pairwise running
+    total would not equal — cached until the next record, under the
+    ledger's lock: dashboard reads (three public getters per tick) must
+    not each rebuild an O(batches · k) merge."""
+
+    batches = property(lambda self: self.ledger.batches)
 
     def __init__(self, k_kmv: int, k_hh: int, compact_horizon: int = 1024):
-        self._lock = threading.Lock()
         self.k_kmv = k_kmv
         self.k_hh = k_hh
-        self.compact_horizon = compact_horizon
-        self._by_batch: dict[int, tuple[tuple[int, ...], dict, int]] = {}
-        self._folded_sketch = KmvSketch(hashes=(), k=k_kmv)
-        self._folded_mg: dict = {}
-        self._folded_n = 0
-        self._compacted_batches = 0
-        self._compacted_max: int | None = None
-        #: merged-view cache, invalidated by record(): dashboard reads
-        #: (three public getters per tick) must not each rebuild an
-        #: O(batches · k) merge while holding the writer's lock
-        self._merged_cache: tuple[KmvSketch, HeavyHitters] | None = None
-
-    @property
-    def batches(self) -> int:
-        with self._lock:
-            return self._compacted_batches + len(self._by_batch)
+        self.ledger = BatchLedger(
+            compact_horizon, fold=self._fold, empty=((), {}, 0)
+        )
+        self._merged: tuple[KmvSketch, HeavyHitters] | None = None
 
     @property
     def rows(self) -> int:
-        with self._lock:
-            return self._folded_n + sum(
-                n for _, _, n in self._by_batch.values()
-            )
+        return self.merged()[1].n
+
+    def _fold(self, a: tuple, b: tuple) -> tuple:
+        return (
+            kmv_union(
+                KmvSketch(hashes=a[0], k=self.k_kmv),
+                KmvSketch(hashes=b[0], k=self.k_kmv),
+            ).hashes,
+            mg_merge([a[1], b[1]], self.k_hh),
+            a[2] + b[2],
+        )
 
     def record(
         self, batch_id: int, hashes: tuple, mg: dict, n_rows: int
     ) -> None:
-        with self._lock:
-            if (
-                self._compacted_max is not None
-                and batch_id <= self._compacted_max
-            ):
-                raise RuntimeError(
-                    f"batch {batch_id} was already compacted (horizon "
-                    f"{self.compact_horizon}); a replay this far back "
-                    "cannot be deduplicated — raise compact_horizon or "
-                    "reset the monitor"
-                )
-            self._by_batch[batch_id] = (hashes, mg, n_rows)
-            self._merged_cache = None
-            if len(self._by_batch) > self.compact_horizon:
-                cutoff = max(self._by_batch) - self.compact_horizon
-                for bid in [b for b in self._by_batch if b <= cutoff]:
-                    h, m, n = self._by_batch.pop(bid)
-                    self._folded_sketch = kmv_union(
-                        self._folded_sketch,
-                        KmvSketch(hashes=h, k=self.k_kmv),
-                    )
-                    self._folded_mg = mg_merge(
-                        [self._folded_mg, m], self.k_hh
-                    )
-                    self._folded_n += n
-                    self._compacted_batches += 1
-                    if (
-                        self._compacted_max is None
-                        or bid > self._compacted_max
-                    ):
-                        self._compacted_max = bid
+        with self.ledger.lock:
+            self.ledger.record(batch_id, (hashes, mg, n_rows))
+            self._merged = None
 
     def merged(self) -> tuple[KmvSketch, HeavyHitters]:
-        with self._lock:
-            if self._merged_cache is not None:
-                return self._merged_cache
-            # one set-union + one sort over all live hashes (not a
-            # pairwise re-sorting fold), then one MG multi-merge
-            all_hashes = set(self._folded_sketch.hashes)
-            summaries = [self._folded_mg]
-            n = self._folded_n
-            for h, m, nb in self._by_batch.values():
-                all_hashes.update(h)
-                summaries.append(m)
-                n += nb
-            sk = KmvSketch(
-                hashes=tuple(sorted(all_hashes)[: self.k_kmv]),
-                k=self.k_kmv,
-            )
-            self._merged_cache = (
-                sk,
-                HeavyHitters(
-                    items=mg_merge(summaries, self.k_hh), n=n, k=self.k_hh
-                ),
-            )
-            return self._merged_cache
+        with self.ledger.lock:
+            if self._merged is None:
+                # one set-union + one sort over all live hashes (not a
+                # pairwise re-sorting fold), then one MG multi-merge
+                hashes, mg, n = self.ledger.folded
+                all_hashes = set(hashes)
+                summaries = [mg]
+                for h, m, nb in self.ledger.records().values():
+                    all_hashes.update(h)
+                    summaries.append(m)
+                    n += nb
+                sk = KmvSketch(
+                    hashes=tuple(sorted(all_hashes)[: self.k_kmv]),
+                    k=self.k_kmv,
+                )
+                self._merged = (
+                    sk,
+                    HeavyHitters(
+                        items=mg_merge(summaries, self.k_hh), n=n, k=self.k_hh
+                    ),
+                )
+            return self._merged
 
 
 class StreamingSketchMonitor(BoundedReplayMixin):
@@ -165,9 +139,7 @@ class StreamingSketchMonitor(BoundedReplayMixin):
         self.k_kmv = k_kmv
         self.k_hh = k_hh
         self.compact_horizon = compact_horizon
-        self.replay_guard_horizon = compact_horizon
         self.metrics = self._new_metrics()
-        self._seen_batches: set[int] = set()
 
     def _new_metrics(self) -> SketchMetrics:
         return SketchMetrics(
@@ -179,6 +151,7 @@ class StreamingSketchMonitor(BoundedReplayMixin):
     # -- foreachBatch ---------------------------------------------------------
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
+        self.metrics.ledger.admit(batch_id)  # refuse a folded replay first
         # materialize the (key-column) batch ONCE — the two sketch
         # jobs would otherwise each rescan the micro-batch's source
         b = batch.select(self.col).localCheckpoint(eager=True)
@@ -188,7 +161,6 @@ class StreamingSketchMonitor(BoundedReplayMixin):
         finally:
             b.unpersist()
         self.metrics.record(batch_id, sk.hashes, hh.items, hh.n)
-        self._mark_batch(batch_id)
 
     # -- reads ----------------------------------------------------------------
 

@@ -120,7 +120,7 @@ def test_checkpoint_resume_processes_only_new_data(spark, tmp_path):
     ).select("key", "value", "topic", "partition", "offset")
     topic.write_batch(framed2)
 
-    ing.metrics.valid_rows = 0  # reset counter; reuse checkpoint 'a'
+    ing._reset()  # fresh per-run counters; reuse checkpoint 'a'
     q = ing.start(topic.read_stream(), available_now=True)
     q.awaitTermination(120)
     assert ing.metrics.valid_rows == 1  # only the new message
@@ -768,8 +768,126 @@ def test_graph_compaction_not_rerun_on_replayed_batch(spark, tmp_path):
     batch = spark.read.parquet(str(tmp_path / "topic"))
     ing.process_batch(batch, 0)
     v = store._tables[store.objects_path].version()
+
+    def counters():
+        m = ing.metrics
+        return (m.batches, m.valid_rows, m.error_rows, m.new_vertices, m.new_edges)
+
+    first = counters()
+    assert first == (1, 4, 0, 6, 4)
     ing.process_batch(batch, 0)  # replay
     assert store._tables[store.objects_path].version() == v
+    # the replay replaces batch 0's record with the same numbers, and
+    # merges nothing new
+    assert counters() == first
+
+
+@pytest.mark.parametrize("kind", ["graph", "dedup"])
+def test_replay_behind_the_window_is_refused_before_writing(spark, tmp_path, kind):
+    """One replay contract on both benchmarked ingests: with a window
+    of 2, a replay of batch 0 after five batches is refused — its
+    record is folded, so it can be neither replaced nor told apart from
+    new work — and it changes no counter and no stored row."""
+    from consume_kafka_avro_data_spark.streaming.dedup import StreamingDedupIngest
+
+    ckpt = str(tmp_path / "ckpt")
+    if kind == "graph":
+        sc = parse_config(SPO_DOC).schema_for("spo")
+        store = GraphStore(spark, str(tmp_path / "graph"))
+        ing = StreamingGraphIngest(spark, store, sc, ckpt, expected_schema_id=2)
+        batches = [
+            to_confluent_avro(
+                spark.createDataFrame([(f"S{b}", "P", f"O{b}")], ["S", "P", "O"]),
+                sc,
+                schema_id=2,
+            ).select(F.col("key").cast("binary"), "value")
+            for b in range(5)
+        ]
+
+        def state():
+            m = ing.metrics
+            return (
+                m.batches, m.valid_rows, m.error_rows, m.new_vertices,
+                m.new_edges, store.objects().count(), store.relationships().count(),
+            )
+
+        want = (5, 5, 0, 10, 5, 10, 5)
+    else:
+        ing = StreamingDedupIngest(spark, str(tmp_path / "store"), ckpt)
+        batches = [
+            spark.createDataFrame(
+                [(b, " ".join(f"w{b}x{i}" for i in range(40)))],
+                "doc_id long, text string",
+            )
+            for b in range(5)
+        ]
+
+        def state():
+            m = ing.metrics
+            return (m.batches, m.docs, m.novel_docs, m.dup_docs, ing.store.read().count())
+
+        want = (5, 5, 5, 0, 5)
+    ing.metrics.ledger.horizon = 2
+    for b, batch in enumerate(batches):
+        ing.process_batch(batch, b)
+    assert state() == want
+    with pytest.raises(RuntimeError, match="compacted"):
+        ing.process_batch(batches[0], 0)
+    assert state() == want
+
+
+def test_batch_ledger_loses_no_record_under_concurrent_writers_and_readers():
+    """The ledger's one lock serializes records against polls: with
+    more writer threads than cores, a fast thread switch and readers
+    polling throughout, every admitted record is counted exactly once
+    in the total, the batch count and the folded part plus the window
+    (a lost update would break the sums)."""
+    import itertools
+    import sys
+    import threading
+
+    from consume_kafka_avro_data_spark.streaming.lifecycle import BatchLedger
+
+    ledger = BatchLedger(horizon=32)
+    ids = itertools.count()
+    admitted = []  # list.append is atomic
+    stop = threading.Event()
+
+    def write():
+        for _ in range(300):
+            b = next(ids)
+            try:
+                ledger.record(b, {"rows": 1, "by": {b % 3: 1}})
+                admitted.append(b)
+            except RuntimeError:  # drew an id, then fell behind the window
+                pass
+
+    def poll():
+        while not stop.is_set():
+            total = ledger.total()
+            assert total.get("rows", 0) == sum(total.get("by", {}).values())
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        readers = [threading.Thread(target=poll) for _ in range(2)]
+        writers = [threading.Thread(target=write) for _ in range(8)]
+        for t in readers + writers:
+            t.start()
+        for t in writers:
+            t.join(60)
+        stop.set()
+        for t in readers:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in readers + writers)
+    n = len(admitted)
+    assert n > 0
+    assert ledger.batches == n
+    assert ledger.total()["rows"] == n
+    live = sum(r["rows"] for r in ledger.records().values())
+    assert ledger.folded.get("rows", 0) + live == n
 
 
 def test_audit_write_replaces_its_batch_partition(spark, tmp_path):

@@ -145,7 +145,7 @@ def test_ann_ingest_metrics_incremental_and_bounded():
     """AnnIngestMetrics must replace a replayed batch's contribution
     (totals never double-count), answer cell_totals incrementally, and
     compact per-batch maps beyond the horizon while keeping their mass
-    — the DriftMetrics contract applied to the ANN ingest."""
+    — the BatchLedger contract every stream shares."""
     from consume_kafka_avro_data_spark.streaming.ann import AnnIngestMetrics
 
     m = AnnIngestMetrics(compact_horizon=3)
@@ -153,7 +153,7 @@ def test_ann_ingest_metrics_incremental_and_bounded():
         m.record(b, 10, {0: 10})
     assert m.batches == 6 and m.vectors == 60
     assert m.cell_totals() == {0: 60}  # compacted mass survives
-    assert len(m.cells_by_batch) <= 4
+    assert len(m.ledger.records()) <= 4
     # a LIVE batch replay replaces, never adds
     m.record(5, 4, {1: 4})
     assert m.vectors == 54

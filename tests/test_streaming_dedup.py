@@ -319,26 +319,25 @@ def test_drift_monitor_rides_the_dedup_ingest(spark, tmp_path):
     # crash-recovery replay: fresh checkpoints, metrics not reset —
     # batch-id keying must leave both sides' numbers unchanged
     ingest.checkpoint_dir = str(tmp_path / "ckpt2")
-    mon_docs_before = dict(mon.metrics.docs_by_batch)
+    mon_before = mon.metrics.ledger.records()
     ingest.run_to_completion(reader(), reset_metrics=False)
-    assert dict(mon.metrics.docs_by_batch) == mon_docs_before
+    assert mon.metrics.ledger.records() == mon_before
     assert mon.drift_tvd() == tvd1
 
 
 def test_dedup_replay_guard_is_bounded(spark, tmp_path, ingest):
-    """The intra-run replay-guard set and the per-batch dupe map must
-    not grow one entry per trigger forever: entries beyond
-    replay_guard_horizon are pruned (Structured Streaming only retries
-    the most recent uncommitted batch within a run, so distant entries
-    can never be consulted again)."""
-    ingest.replay_guard_horizon = 2
+    """The per-batch records must not grow one entry per trigger
+    forever: records beyond the ledger's horizon fold into its running
+    part (Structured Streaming only retries the most recent uncommitted
+    batch within a run, so distant records can never be replaced)."""
+    ingest.metrics.ledger.horizon = 2
     batches = [[(10 * b + 1, f"unique text {b} " + BASE)] for b in range(5)]
     stream = _doc_stream(spark, tmp_path, batches)
-    m = ingest.run_to_completion(stream)
+    m = ingest.run_to_completion(stream, reset_metrics=False)
     assert m.batches == 5 and m.docs == 5
-    assert len(ingest._seen_batches) <= 3
-    assert max(ingest._seen_batches) == 4  # newest kept
-    assert len(m.dup_pairs_by_batch) <= 3
+    live = m.ledger.records()
+    assert len(live) <= 3
+    assert max(live) == 4  # newest kept
 
 
 def test_null_id_docs_are_gated_null_safely(spark, tmp_path):
@@ -1255,13 +1254,14 @@ def test_all_gates_compose_on_one_stream(spark, tmp_path):
         assert ("sec" in census[gate]) == (gate == "dedup"), gate
     assert census["dedup"]["sec"] > 0
     assert census["c4"]["docs_in"] == m.docs
-    per_batch = m.gate_census_by_batch
+    per_batch = {b: rec["census"] for b, rec in m.ledger.records().items()}
     assert sorted(per_batch) == [0, 1]
-    for rows in per_batch.values():
-        for prev, nxt in zip(rows, rows[1:]):
+    for census_b in per_batch.values():
+        rows = list(census_b.items())
+        for (gate, prev), (_, nxt) in zip(rows, rows[1:]):
             assert (
                 nxt["docs_in"] == prev["docs_in"] - prev["docs_rejected"]
-                if prev["gate"] != "dedup"
+                if gate != "dedup"
                 else True
             )
     # census rejected-sums match the audit dirs exactly, and the
@@ -1549,7 +1549,8 @@ def test_degenerate_inputs_land_exactly_once_through_all_gates(
         == m.docs
     )
     # the empty batch still closes its census: zero in, zero out
-    assert [r["docs_in"] for r in m.gate_census_by_batch[1]] == [0] * 8
+    census_1 = m.ledger.records()[1]["census"]
+    assert [r["docs_in"] for r in census_1.values()] == [0] * 8
 
 
 def test_gates_run_one_checkpoint_per_batch(

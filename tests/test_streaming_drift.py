@@ -114,7 +114,7 @@ def test_replay_replaces_batch_counts(spark, tmp_path, docs):
     mon.run_to_completion(reader())
     first = (
         mon.metrics.docs,
-        dict(mon.metrics.docs_by_batch),
+        mon.metrics.ledger.records(),
         mon.metrics.term_totals(),
         mon.drift_tvd(),
     )
@@ -125,7 +125,7 @@ def test_replay_replaces_batch_counts(spark, tmp_path, docs):
     mon.run_to_completion(reader(), reset_metrics=False)
     second = (
         mon.metrics.docs,
-        dict(mon.metrics.docs_by_batch),
+        mon.metrics.ledger.records(),
         mon.metrics.term_totals(),
         mon.drift_tvd(),
     )
@@ -249,7 +249,7 @@ def test_metrics_compaction_bounds_memory_and_refuses_ancient_replay():
         m.record(b, 2, {("en", f"t{b}"): 5})
     assert m.batches == 8 and m.docs == 16
     assert sum(m.term_totals().values()) == 40  # mass survives compaction
-    assert len(m.counts_by_batch) <= 4  # maps beyond the horizon dropped
+    assert len(m.ledger.records()) <= 4  # records beyond the horizon folded
     # a LIVE batch still replaces
     m.record(7, 1, {("en", "t7"): 2})
     assert m.docs == 15 and m.term_totals()[("en", "t7")] == 2
@@ -345,9 +345,9 @@ def test_monitor_horizon_is_configurable_and_survives_reset(
 
 
 def test_monitor_replay_guard_is_bounded(spark, tmp_path, docs):
-    """The intra-run replay-guard set must not grow one entry per
-    trigger forever on a continuous stream: entries beyond the
-    compaction horizon are pruned (record() refuses them anyway)."""
+    """The per-batch records must not grow one entry per trigger
+    forever on a continuous stream: records beyond the compaction
+    horizon are folded (a replay of them is refused)."""
     ref = docs.where(F.col("doc_id") % 2 == 0).limit(20)
     mon = StreamingDriftMonitor(
         spark, ref, str(tmp_path / "ckg"), compact_horizon=3
@@ -357,8 +357,9 @@ def test_monitor_replay_guard_is_bounded(spark, tmp_path, docs):
     )
     for b in range(12):
         mon.process_batch(empty, b)
-    assert len(mon._seen_batches) <= 4
-    assert max(mon._seen_batches) == 11  # newest entries kept
+    live = mon.metrics.ledger.records()
+    assert len(live) <= 4
+    assert max(live) == 11  # newest entries kept
 
 
 def test_composed_dedup_ingest_retune_loop_flips_midstream(

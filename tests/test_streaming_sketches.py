@@ -77,7 +77,7 @@ def test_replay_is_idempotent(spark, tmp_path):
     mon2.run_to_completion(_stream(spark, tmp_path, []))
     assert mon2.metrics.merged() == first
     # and an in-place re-record of one batch replaces, not adds
-    h, m, n = mon.metrics._by_batch[0]
+    h, m, n = mon.metrics.ledger.records()[0]
     mon.metrics.record(0, h, m, n)
     assert mon.metrics.merged() == first
 
@@ -97,7 +97,7 @@ def test_horizon_folding_is_lossless_and_refuses_ancient(spark):
     for bid, h, m, n in fake:
         wide.record(bid, h, m, n)
         tight.record(bid, h, m, n)
-    assert tight._compacted_batches > 0
+    assert tight.batches > len(tight.ledger.records())  # some folded
     ws, wh = wide.merged()
     ts, th = tight.merged()
     assert ws == ts and wh == th
