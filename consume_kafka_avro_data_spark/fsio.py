@@ -11,7 +11,7 @@ their DATA through Spark (cluster-capable on any
 driver-side file operations.  Routed
 through ``os``/``shutil``/``pyarrow`` they silently require the store
 directory to be driver-local — a hard blocker on a real cluster.  This
-module expresses the same nine primitives over
+module expresses the same primitives over
 ``org.apache.hadoop.fs.FileSystem`` (reached via the live JVM, no new
 dependency), so the store URI decides the transport:
 
@@ -31,19 +31,19 @@ directory on HDFS/EFS or front it with a coordination layer (the same
 constraint Delta Lake documents for its transaction log; S3A's
 committers solve task output, not metadata swaps).
 
-Parquet footers: row counts come from the file FOOTER (driver-side
-metadata, never a Spark scan).  The Hadoop path reads only the trailing
-``footer_len + 8`` bytes via a seek and rebuilds a minimal in-memory
-parquet file (magic + footer + trailer) for ``pyarrow.parquet`` to
-parse — num_rows lives in the thrift footer, so data pages are never
-touched.
+Seekable reads: ``open_read`` hands back a read-only, seekable binary
+file object on either backend, which ``pyarrow.parquet`` reads like a
+local file — the footer by a seek to the tail, then only the column
+chunks it is asked for.  Row counts come from the FOOTER alone
+(driver-side metadata, never a Spark scan), and ``ManifestTable.lookup``
+reads single row groups the same way.
 """
 
 from __future__ import annotations
 
+import io
 import os
 import shutil
-import struct
 from urllib.parse import urlparse
 
 
@@ -66,7 +66,17 @@ def fs_for(spark, path: str) -> "LocalIO | HadoopIO":
     return HadoopIO(spark, path)
 
 
-class LocalIO:
+class _ParquetFooters:
+    """Footer reads shared by both backends, through ``open_read``."""
+
+    def parquet_num_rows(self, p: str) -> int:
+        import pyarrow.parquet as pq
+
+        with self.open_read(p) as f:
+            return pq.read_metadata(f).num_rows
+
+
+class LocalIO(_ParquetFooters):
     """POSIX metadata IO — the schemeless-path degenerate case."""
 
     def exists(self, p: str) -> bool:
@@ -112,14 +122,12 @@ class LocalIO:
         with open(p, "rb") as f:
             return f.read()
 
+    def open_read(self, p: str):
+        return open(p, "rb")
+
     def write_bytes(self, p: str, data: bytes) -> None:
         with open(p, "wb") as f:
             f.write(data)
-
-    def parquet_num_rows(self, p: str) -> int:
-        import pyarrow.parquet as pq
-
-        return pq.ParquetFile(p).metadata.num_rows
 
     def walk_parquet(self, d: str) -> list[str]:
         out = []
@@ -130,7 +138,7 @@ class LocalIO:
         return sorted(out)
 
 
-class HadoopIO:
+class HadoopIO(_ParquetFooters):
     """Hadoop FileSystem metadata IO, reached through the live JVM.
 
     One instance per store (the FileSystem handle is resolved once from
@@ -212,16 +220,11 @@ class HadoopIO:
         finally:
             stream.close()
 
-    def _read_tail(self, p: str, n: int) -> bytes:
-        length = int(self._fs.getFileStatus(self._P(p)).getLen())
-        stream = self._fs.open(self._P(p))
-        try:
-            stream.seek(max(0, length - n))
-            return bytes(
-                self._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-            )
-        finally:
-            stream.close()
+    def open_read(self, p: str) -> "_HadoopReader":
+        jp = self._P(p)
+        return _HadoopReader(
+            self._jvm, self._fs.open(jp), int(self._fs.getFileStatus(jp).getLen())
+        )
 
     def write_bytes(self, p: str, data: bytes) -> None:
         out = self._fs.create(self._P(p), True)
@@ -229,23 +232,6 @@ class HadoopIO:
             out.write(bytearray(data))
         finally:
             out.close()
-
-    # -- parquet footers -----------------------------------------------------
-
-    def parquet_num_rows(self, p: str) -> int:
-        """num_rows from the footer alone: read the 8-byte trailer for
-        the footer length, seek-read the footer, and hand pyarrow a
-        reconstructed minimal file (PAR1 + footer + trailer)."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        trailer = self._read_tail(p, 8)
-        if len(trailer) < 8 or trailer[4:] != b"PAR1":
-            raise ValueError(f"not a parquet file: {p}")
-        flen = struct.unpack("<I", trailer[:4])[0]
-        tail = self._read_tail(p, flen + 8)
-        fake = b"PAR1" + tail[:flen] + trailer
-        return pq.read_metadata(pa.BufferReader(fake)).num_rows
 
     def walk_parquet(self, d: str) -> list[str]:
         jp = self._P(d)
@@ -258,3 +244,43 @@ class HadoopIO:
             if s.endswith(".parquet"):
                 out.append(s)
         return sorted(out)
+
+
+class _HadoopReader(io.RawIOBase):
+    """A Hadoop ``FSDataInputStream`` as a seekable Python binary file:
+    each ``read`` is one positioned py4j call for exactly the bytes
+    asked for (clamped at end of file)."""
+
+    def __init__(self, jvm, stream, size: int):
+        self._stream = stream
+        self._size = size
+        self._pos = 0
+        self._to_bytes = jvm.org.apache.commons.io.IOUtils.toByteArray
+
+    def readable(self) -> bool:
+        return True
+
+    def seekable(self) -> bool:
+        return True
+
+    def tell(self) -> int:
+        return self._pos
+
+    def seek(self, offset: int, whence: int = io.SEEK_SET) -> int:
+        # whence is SEEK_SET (0), SEEK_CUR (1) or SEEK_END (2)
+        self._pos = offset + (0, self._pos, self._size)[whence]
+        return self._pos
+
+    def read(self, n: int = -1) -> bytes:
+        left = max(0, self._size - self._pos)
+        n = left if n is None or n < 0 else min(n, left)
+        if not n:
+            return b""
+        self._stream.seek(self._pos)
+        self._pos += n
+        return bytes(self._to_bytes(self._stream, n))
+
+    def close(self) -> None:
+        if not self.closed:
+            self._stream.close()
+        super().close()

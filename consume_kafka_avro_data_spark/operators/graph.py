@@ -984,18 +984,13 @@ class GraphStore:
     def relationships(self) -> DataFrame:
         return self._tables[self.relationships_path].read()
 
-    def get_object_id(self, name: str) -> int | None:
+    def get_object_id(self, name: str | None) -> int | None:
         """Keyed lookup (J1; Database.cpp:26-39).  With content-hash ids
         this is a pure computation for present vertices; we still verify
-        membership like the reference does."""
-        row = (
-            self.objects()
-            .where(F.col("object_name") == F.lit(name))
-            .select("id")
-            .limit(1)
-            .collect()
-        )
-        return row[0]["id"] if row else None
+        membership like the reference does — on the driver, through the
+        objects table's footer-pruned point read, with no Spark job."""
+        rows = self._tables[self.objects_path].lookup("object_name", name)
+        return rows[0]["id"] if rows else None
 
     # -- idempotent writes ---------------------------------------------------
 

@@ -148,12 +148,10 @@ class ManifestTable:
         vf = os.path.join(self.path, f"_manifest.v{doc['version']}.json")
         self._io.rename_overwrite(tmp + ".v", vf)
 
-    def stage(self, df: DataFrame, n_files: int | None = None) -> list[str]:
+    def stage(self, df: DataFrame) -> list[str]:
         """Write df's parquet files into the table dir WITHOUT
         publishing them; returns the new (unique, uuid-named) files."""
         stage = os.path.join(self.path, "_stage")
-        if n_files:
-            df = df.repartition(n_files)
         df.write.mode("overwrite").parquet(stage)
         self._io.mkdirs(self.path)
         moved = []
@@ -178,6 +176,40 @@ class ManifestTable:
         return self.spark.read.schema(self.schema).parquet(
             *[os.path.join(self.path, f) for f in files]
         )
+
+    def lookup(self, column: str, value) -> list[dict]:
+        """The current snapshot's rows whose ``column`` equals ``value``
+        (SQL ``=``: a ``None`` value matches nothing), read on the
+        driver with no Spark job — the reference's indexed point
+        SELECT (``Database.cpp:26-39``).
+
+        Each file's footer is read through ``fsio.open_read``; a row
+        group is read only if its min/max statistics for ``column`` can
+        hold ``value``, then filtered exactly.  On a compacted table
+        (key-range-partitioned, key-sorted files) that is one row group
+        of one file."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        if value is None:
+            return []
+        out: list[dict] = []
+        for name in self.files():
+            with self._io.open_read(os.path.join(self.path, name)) as f:
+                pf = pq.ParquetFile(f)
+                meta = pf.metadata
+                col = [
+                    meta.schema.column(i).path for i in range(meta.num_columns)
+                ].index(column)
+                groups = [
+                    g
+                    for g in range(pf.num_row_groups)
+                    if _may_hold(meta.row_group(g).column(col).statistics, value)
+                ]
+                if groups:
+                    t = pf.read_row_groups(groups)
+                    out.extend(t.filter(pc.equal(t[column], value)).to_pylist())
+        return out
 
     # -- idempotent writes ---------------------------------------------------
 
@@ -231,9 +263,11 @@ class ManifestTable:
         Append-per-micro-batch writers grow file counts linearly — the
         classic small-file problem that degrades 100 TB scans (footer/
         open overhead per file, under-filled scan partitions).  Read,
-        repartition to a size target, atomically swap via the manifest
-        publish, then GC the superseded files — readers never observe a
-        mixed state.
+        range-partition by the keys to a size target and sort each file
+        by them, atomically swap via the manifest publish, then GC the
+        superseded files — readers never observe a mixed state.  Files
+        and their row groups then cover disjoint key ranges, so
+        :meth:`lookup` prunes to one row group by footer statistics.
         """
         old_files = self.files()
         if not old_files:
@@ -251,7 +285,11 @@ class ManifestTable:
             for f in old_files
         )
         n_files = max(1, -(-n_rows // target_rows_per_file))  # ceil
-        staged = self.stage(df, n_files=n_files)
+        staged = self.stage(
+            df.repartitionByRange(n_files, *self.keys).sortWithinPartitions(
+                *self.keys
+            )
+        )
         self.publish(staged)
         # prune time-travel history: the data files every older snapshot
         # references are deleted just below, so keeping their manifests
@@ -281,3 +319,12 @@ class ManifestTable:
         for name in self._io.list_names(self.path):
             if name.endswith(".parquet") and name not in keep:
                 self._io.delete(os.path.join(self.path, name))
+
+
+def _may_hold(stats, value) -> bool:
+    """Whether a row group whose column statistics are ``stats`` can
+    hold ``value`` (no statistics: it can).  Parquet orders strings by
+    unsigned UTF-8 bytes, which is Python's code-point order."""
+    if stats is None or not stats.has_min_max:
+        return True
+    return stats.min <= value <= stats.max

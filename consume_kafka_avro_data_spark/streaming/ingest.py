@@ -25,7 +25,7 @@ Spark lift, same semantics batch-amortized:
 
 from __future__ import annotations
 
-import os
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -120,17 +120,19 @@ class StreamingGraphIngest(BoundedReplayMixin):
             batch, self.schema_config, self.expected_schema_id, keep_raw=True
         ).cache()
         try:
-            # ONE aggregation pass yields every counter (valid count,
-            # error count, per-reason counts) — the result is
-            # reasons-sized, so the collect is driver-safe by
-            # construction; separate count() actions per counter would
-            # re-scan the cached batch three times
-            by_reason = {
-                r["_error"]: r["count"]
-                for r in decoded.groupBy("_error").count().collect()
-            }
-            n_valid = by_reason.pop(None, 0)
+            # ONE shuffle-free job fills the cache the writes below read
+            # and yields every counter: one string per dead letter (never
+            # per valid row), plus a named observe() of the valid count,
+            # read from the job's own plan.  Not an Observation object:
+            # one sets the session's non-transient observationManager,
+            # and any closure that captures the session (an ML model's
+            # training summary) then fails to serialize.
+            dead = decoded.observe("valid", F.count_if(F.col("_error").isNull()))
+            dead = dead.where(F.col("_error").isNotNull()).select("_error")
+            by_reason = dict(Counter(r[0] for r in dead.collect()))
             n_err = sum(by_reason.values())
+            observed = dead._jdf.queryExecution().observedMetrics()
+            n_valid = observed.apply("valid").getLong(0)
             if n_err:
                 # the RAW undecoded frame rides along so dead letters
                 # can be re-decoded after a schema fix — an error
@@ -142,11 +144,9 @@ class StreamingGraphIngest(BoundedReplayMixin):
                     self.dlq_dir,
                     batch_id,
                 )
-            names = [
-                self.schema_config.field_name(c) for c in self.schema_config.columns
-            ]
+            sc = self.schema_config  # exactly 3 columns, checked at construction
             valid = decoded.where(F.col("_error").isNull())
-            triples = triples_from(valid, *names[:3])
+            triples = triples_from(valid, *map(sc.field_name, sc.columns))
             nv, ne = self.store.ingest_triples(triples, created_at=self.created_at)
             self.metrics.new_vertices += nv
             self.metrics.new_edges += ne

@@ -112,6 +112,104 @@ def test_keyed_lookup(spark, triples, tmp_path):
     assert don == expected.h
 
 
+def test_keyed_lookup_none_absent_and_non_ascii_names(spark, tmp_path):
+    """None matches nothing (SQL ``=``, as the filter it replaces); an
+    absent name, including one inside a file's key range, is None;
+    non-ASCII names resolve before and after compaction, whose files
+    are pruned by footer min/max in UTF-8 byte order."""
+    from pyspark.sql import functions as F
+
+    names = ["Zoë", "zoe", "Ärger", "東京", "naïve café", "emoji 🙂", "Alpha", "Ωmega"]
+    store = GraphStore(spark, str(tmp_path / "graph"))
+    for i in range(0, len(names), 2):
+        store.ingest_triples(
+            triples_from(
+                spark.createDataFrame([(names[i], "knows", names[i + 1])], ["s", "p", "o"]),
+                "s", "p", "o",
+            )
+        )
+    want = {
+        r.n: r.h
+        for r in spark.createDataFrame([(n,) for n in names], ["n"])
+        .select("n", F.xxhash64("n").alias("h"))
+        .collect()
+    }
+    absent = [None, "Zoe", "東", "Alpha ", "", "\U0010ffff"]
+    for _ in range(2):
+        assert {n: store.get_object_id(n) for n in names} == want
+        assert [store.get_object_id(n) for n in absent] == [None] * len(absent)
+        store.compact(target_rows_per_file=2)
+    assert len(store._manifest_files(store.objects_path)) >= 3
+
+
+def test_lookup_on_compacted_table_reads_one_file(spark, tmp_path):
+    """compact() writes key-range-partitioned, key-sorted files, so a
+    point lookup reads row-group data from one file only: every other
+    file is skipped on its footer's min/max.  Reads are counted through
+    the seekable-read primitive; a read that stops short of the end of
+    the file is row-group data (footer reads end at the end)."""
+    import io
+    import os
+
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from consume_kafka_avro_data_spark.operators.store import ManifestTable
+
+    schema = StructType(
+        [StructField("k", StringType(), False), StructField("v", LongType(), True)]
+    )
+    t = ManifestTable(spark, str(tmp_path / "t"), schema, keys=["k"])
+    for b in range(4):  # batches interleave the key space
+        t.merge_new(
+            spark.createDataFrame([(f"key{i:03d}", i) for i in range(b, 200, 4)], schema)
+        )
+    assert t.compact(target_rows_per_file=50) >= 4
+    files = t.files()
+    assert len(files) >= 4
+
+    reads: list[tuple[str, int, int]] = []
+    opened = t._io.open_read
+
+    class Counted(io.RawIOBase):
+        def __init__(self, path):
+            self.f, self.name = opened(path), os.path.basename(path)
+            self.size = os.path.getsize(path)
+
+        def readable(self):
+            return True
+
+        def seekable(self):
+            return True
+
+        def seek(self, off, whence=io.SEEK_SET):
+            return self.f.seek(off, whence)
+
+        def tell(self):
+            return self.f.tell()
+
+        def read(self, n=-1):
+            pos, data = self.f.tell(), self.f.read(n)
+            reads.append((self.name, pos + len(data), self.size))
+            return data
+
+        def close(self):
+            self.f.close()
+            super().close()
+
+    t._io.open_read = Counted
+
+    def data_files():
+        return {name for name, end, size in reads if end < size}
+
+    assert t.lookup("k", "key123") == [{"k": "key123", "v": 123}]
+    assert len(data_files()) == 1
+    assert {name for name, _, _ in reads} == set(files)  # footers only elsewhere
+    reads.clear()
+    assert t.lookup("k", "key999") == [] and data_files() == set()
+    reads.clear()
+    assert t.lookup("k", "key050x") == [] and len(data_files()) <= 1
+
+
 def test_connected_components_chain_and_clique(spark):
     from consume_kafka_avro_data_spark.operators.graph import connected_components
 

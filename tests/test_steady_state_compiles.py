@@ -53,18 +53,29 @@ def _compiles(spark) -> int:
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
-def _compiles_per_batch(spark, ingest, batches) -> list[int]:
-    out = []
+def _jobs(spark) -> int:
+    """The id the DAG scheduler gives its next job: every job submitted,
+    broadcast jobs included, advances it."""
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _compiles_per_batch(spark, ingest, batches) -> tuple[list[int], list[int]]:
+    """Compiles and jobs per batch."""
+    compiles, jobs = [], []
     for b, batch in enumerate(batches):
-        c0 = _compiles(spark)
+        c0, j0 = _compiles(spark), _jobs(spark)
         ingest.process_batch(batch, b)
-        out.append(_compiles(spark) - c0)
-    return out
+        compiles.append(_compiles(spark) - c0)
+        jobs.append(_jobs(spark) - j0)
+    return compiles, jobs
 
 
 def test_graph_ingest_steady_batch_compiles_nothing(spark, tmp_path):
     """Four same-shape SPO batches, each with one dead letter: the last
-    batch's decode, DLQ write and graph merge reuse cached classes."""
+    batch's decode, DLQ write and graph merge reuse cached classes.  It
+    runs at most 8 jobs (one observed pass for the counters and the
+    cache, the DLQ write, 3 per table merge), and a keyed lookup, of a
+    present or an absent name, runs none."""
     n = 4
     sc = parse_config(SPO_DOC).schema_for("spo")
     batches = []
@@ -96,10 +107,16 @@ def test_graph_ingest_steady_batch_compiles_nothing(spark, tmp_path):
         expected_schema_id=2,
         created_at="2024-01-01",
     )
-    compiles = _compiles_per_batch(spark, ingest, batches)
+    store = ingest.store
+    compiles, jobs = _compiles_per_batch(spark, ingest, batches)
     assert ingest.metrics.error_rows == n
     assert ingest.metrics.valid_rows == 4 * n
     assert compiles[-1] == 0, compiles
+    assert jobs[-1] <= 8, jobs
+    j0 = _jobs(spark)
+    assert store.get_object_id(f"s{n - 1}_0") is not None
+    assert store.get_object_id("nobody") is None
+    assert _jobs(spark) == j0
 
 
 def test_dedup_ingest_steady_batch_compiles_nothing(spark, tmp_path):
@@ -136,7 +153,7 @@ def test_dedup_ingest_steady_batch_compiles_nothing(spark, tmp_path):
         ),
         contam_dir=str(tmp_path / "contam"),
     )
-    compiles = _compiles_per_batch(spark, ingest, batches)
+    compiles, _ = _compiles_per_batch(spark, ingest, batches)
     m = ingest.metrics
     assert m.rejected_docs == n and m.contaminated_docs == 0
     assert m.dup_docs == n - 1 and m.novel_docs == n + 1

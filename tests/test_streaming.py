@@ -929,3 +929,50 @@ def test_audit_write_replaces_its_batch_partition(spark, tmp_path):
         (1, b'{"s": 2}'),
     ]
     assert ing.metrics.error_rows == 3
+
+
+@pytest.mark.parametrize("with_dlq", [True, False], ids=["dlq", "no_dlq"])
+def test_counters_are_exact_and_clean_batches_write_no_dlq(spark, tmp_path, with_dlq):
+    """The counters come from one observed pass: a batch that mixes two
+    dead-letter reasons counts each exactly, a clean batch and an empty
+    batch add no dead letters and create no ``dlq/`` dir, and running
+    without a DLQ gives the same counters.  The pass leaves the session
+    serializable, as closures that capture it (an ML model's training
+    summary) need."""
+    from consume_kafka_avro_data_spark.sources.kafka import KAFKA_SHAPE
+
+    topic, sc = _framed_topic(spark, tmp_path, with_corrupt=False)
+    valid = topic.read_batch()
+    dead = spark.createDataFrame(
+        [(b"k", b'{"s": 0}', "spo", 0, 100), (b"k", b'{"s": 1}', "spo", 0, 101),
+         (b"k", b"\x00\x01", "spo", 0, 102)],
+        KAFKA_SHAPE,
+    )
+    dlq_dir = tmp_path / "dlq"
+    ing = StreamingGraphIngest(
+        spark,
+        GraphStore(spark, str(tmp_path / "graph")),
+        sc,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        dlq_dir=str(dlq_dir) if with_dlq else None,
+        expected_schema_id=2,
+    )
+    ing.process_batch(valid, 0)
+    ing.process_batch(spark.createDataFrame([], KAFKA_SHAPE), 1)
+    m = ing.metrics
+    assert (m.batches, m.valid_rows, m.error_rows, m.errors_by_reason) == (2, 4, 0, {})
+    assert not dlq_dir.exists()
+
+    ing.process_batch(valid.unionByName(dead), 2)
+    assert (m.batches, m.valid_rows, m.error_rows) == (3, 8, 3)
+    assert m.errors_by_reason == {
+        "Invalid CP1 magic byte 123, expected 0": 2,
+        "frame too short (2 bytes)": 1,
+    }
+    assert (m.new_vertices, m.new_edges) == (6, 4)
+    if with_dlq:
+        assert sorted(p.name for p in dlq_dir.iterdir()) == ["batch_id=2"]
+        assert spark.read.parquet(str(dlq_dir)).count() == 3
+    else:
+        assert not dlq_dir.exists()
+    spark._jvm.org.apache.spark.util.Utils.serialize(spark._jsparkSession)
