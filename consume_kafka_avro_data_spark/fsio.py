@@ -34,9 +34,10 @@ committers solve task output, not metadata swaps).
 Seekable reads: ``open_read`` hands back a read-only, seekable binary
 file object on either backend, which ``pyarrow.parquet`` reads like a
 local file — the footer by a seek to the tail, then only the column
-chunks it is asked for.  Row counts come from the FOOTER alone
-(driver-side metadata, never a Spark scan), and ``ManifestTable.lookup``
-reads single row groups the same way.
+chunks it is asked for (on ``HadoopIO`` through a driver-local spill
+file, not py4j's slow byte-array marshalling).  Row counts come from
+the FOOTER alone (driver-side metadata, never a Spark scan), and
+``ManifestTable.lookup`` reads single row groups the same way.
 """
 
 from __future__ import annotations
@@ -44,6 +45,7 @@ from __future__ import annotations
 import io
 import os
 import shutil
+import tempfile
 from urllib.parse import urlparse
 
 
@@ -247,15 +249,22 @@ class HadoopIO(_ParquetFooters):
 
 
 class _HadoopReader(io.RawIOBase):
-    """A Hadoop ``FSDataInputStream`` as a seekable Python binary file:
-    each ``read`` is one positioned py4j call for exactly the bytes
-    asked for (clamped at end of file)."""
+    """A Hadoop ``FSDataInputStream`` as a seekable Python binary file.
+
+    Each ``read`` has the JVM copy exactly the bytes asked for (clamped
+    at end of file) into a driver-local spill file that Python then
+    reads: py4j marshals a returned byte array at ~10 MB/s (29 ms for
+    the 64 KB tail pyarrow reads to find a parquet footer), while the
+    spill file moves it at page-cache speed in three py4j calls."""
 
     def __init__(self, jvm, stream, size: int):
         self._stream = stream
         self._size = size
         self._pos = 0
-        self._to_bytes = jvm.org.apache.commons.io.IOUtils.toByteArray
+        self._out = jvm.java.io.FileOutputStream
+        self._copy = jvm.org.apache.commons.io.IOUtils.copyLarge
+        fd, self._spill = tempfile.mkstemp(suffix=".hadoop-read")
+        os.close(fd)
 
     def readable(self) -> bool:
         return True
@@ -276,11 +285,19 @@ class _HadoopReader(io.RawIOBase):
         n = left if n is None or n < 0 else min(n, left)
         if not n:
             return b""
-        self._stream.seek(self._pos)
-        self._pos += n
-        return bytes(self._to_bytes(self._stream, n))
+        out = self._out(self._spill)
+        try:
+            self._stream.seek(self._pos)
+            self._copy(self._stream, out, 0, n)
+        finally:
+            out.close()
+        with open(self._spill, "rb") as f:
+            data = f.read()
+        self._pos += len(data)
+        return data
 
     def close(self) -> None:
         if not self.closed:
             self._stream.close()
+            os.remove(self._spill)
         super().close()

@@ -989,7 +989,7 @@ class GraphStore:
         this is a pure computation for present vertices; we still verify
         membership like the reference does — on the driver, through the
         objects table's footer-pruned point read, with no Spark job."""
-        rows = self._tables[self.objects_path].lookup("object_name", name)
+        rows = self._tables[self.objects_path].lookup(name, "id")
         return rows[0]["id"] if rows else None
 
     # -- idempotent writes ---------------------------------------------------

@@ -177,22 +177,24 @@ class ManifestTable:
             *[os.path.join(self.path, f) for f in files]
         )
 
-    def lookup(self, column: str, value) -> list[dict]:
-        """The current snapshot's rows whose ``column`` equals ``value``
-        (SQL ``=``: a ``None`` value matches nothing), read on the
-        driver with no Spark job — the reference's indexed point
-        SELECT (``Database.cpp:26-39``).
+    def lookup(self, value, *columns: str) -> list[dict]:
+        """``columns`` of the current snapshot's rows whose leading key
+        equals ``value`` (SQL ``=``: a ``None`` value matches nothing),
+        read on the driver with no Spark job — the reference's indexed
+        point SELECT (``Database.cpp:26-39``).
 
         Each file's footer is read through ``fsio.open_read``; a row
-        group is read only if its min/max statistics for ``column`` can
-        hold ``value``, then filtered exactly.  On a compacted table
-        (key-range-partitioned, key-sorted files) that is one row group
-        of one file."""
+        group is read only if its min/max statistics for the key can
+        hold ``value``, and then only the key and ``columns``, filtered
+        exactly.  On a compacted table (key-range-partitioned files)
+        that is one file; on an uncompacted one, every file whose key
+        range spans ``value`` (see SCALING.md)."""
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         if value is None:
             return []
+        key = self.keys[0]
         out: list[dict] = []
         for name in self.files():
             with self._io.open_read(os.path.join(self.path, name)) as f:
@@ -200,15 +202,17 @@ class ManifestTable:
                 meta = pf.metadata
                 col = [
                     meta.schema.column(i).path for i in range(meta.num_columns)
-                ].index(column)
+                ].index(key)
                 groups = [
                     g
                     for g in range(pf.num_row_groups)
                     if _may_hold(meta.row_group(g).column(col).statistics, value)
                 ]
                 if groups:
-                    t = pf.read_row_groups(groups)
-                    out.extend(t.filter(pc.equal(t[column], value)).to_pylist())
+                    want = list(dict.fromkeys((key, *columns)))
+                    t = pf.read_row_groups(groups, columns=want)
+                    t = t.filter(pc.equal(t[key], value)).select(list(columns))
+                    out.extend(t.to_pylist())
         return out
 
     # -- idempotent writes ---------------------------------------------------
@@ -263,11 +267,10 @@ class ManifestTable:
         Append-per-micro-batch writers grow file counts linearly — the
         classic small-file problem that degrades 100 TB scans (footer/
         open overhead per file, under-filled scan partitions).  Read,
-        range-partition by the keys to a size target and sort each file
-        by them, atomically swap via the manifest publish, then GC the
-        superseded files — readers never observe a mixed state.  Files
-        and their row groups then cover disjoint key ranges, so
-        :meth:`lookup` prunes to one row group by footer statistics.
+        range-partition by the keys to a size target, atomically swap
+        via the manifest publish, then GC the superseded files — readers
+        never observe a mixed state.  The files then cover disjoint key
+        ranges, so :meth:`lookup` prunes to one file by footer statistics.
         """
         old_files = self.files()
         if not old_files:
@@ -285,11 +288,7 @@ class ManifestTable:
             for f in old_files
         )
         n_files = max(1, -(-n_rows // target_rows_per_file))  # ceil
-        staged = self.stage(
-            df.repartitionByRange(n_files, *self.keys).sortWithinPartitions(
-                *self.keys
-            )
-        )
+        staged = self.stage(df.repartitionByRange(n_files, *self.keys))
         self.publish(staged)
         # prune time-travel history: the data files every older snapshot
         # references are deleted just below, so keeping their manifests

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from collections import Counter
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -38,6 +39,13 @@ from consume_kafka_avro_data_spark.streaming.lifecycle import (
 )
 from consume_kafka_avro_data_spark.operators.graph import GraphStore, triples_from
 from consume_kafka_avro_data_spark.sources.avro_codec import from_confluent_avro
+
+
+def _count_reasons(batches):
+    """One partition's dead-letter reasons as Arrow (reason, count) rows."""
+    n = Counter(r for b in batches for r in b.column(0).to_pylist())
+    if n:
+        yield pa.RecordBatch.from_pydict({"_error": list(n), "n": list(n.values())})
 
 
 class IngestMetrics:
@@ -82,10 +90,8 @@ class StreamingGraphIngest(BoundedReplayMixin):
         compact_every: int | None = None,
     ):
         if len(schema_config.columns) != 3:
-            # fail at construction, not at the first micro-batch: the
-            # SPO graph sink consumes exactly (subject, predicate,
-            # object); a 2-column config would TypeError mid-stream and
-            # a 4-column one would silently drop the fourth field
+            # fail at construction, not mid-stream: the SPO sink takes
+            # exactly (subject, predicate, object); a 4th field would drop
             raise ValueError(
                 "StreamingGraphIngest needs exactly 3 configured columns "
                 f"(subject, predicate, object); got {schema_config.columns}"
@@ -98,52 +104,43 @@ class StreamingGraphIngest(BoundedReplayMixin):
         self.expected_schema_id = expected_schema_id
         self.created_at = created_at
         #: compact the graph store every N batches (None = manual only):
-        #: the per-batch merge appends files to both vertex and edge
-        #: ManifestTables, and file counts grow linearly with stream
-        #: length (the small-file problem the dedup ingest measured at
-        #: 17× scan cost for 32 vs 1 files) — same knob as
-        #: StreamingDedupIngest.compact_every; A/B in bench.py
+        #: each merge appends files to both tables, so file counts grow
+        #: with stream length — StreamingDedupIngest's knob; A/B in bench.py
         self.compact_every = compact_every
         self.metrics = IngestMetrics()
 
     # -- the per-micro-batch body (the reference's hot loop, set-oriented) --
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        # foreachBatch is at-least-once: the same batch_id re-runs after
-        # a mid-batch failure/restart.  The graph merge is idempotent by
-        # construction; the counters are recorded by batch id only AFTER
-        # the batch fully succeeds, so a replay replaces them and a
-        # failed-then-retried batch is counted once.  A replay older
-        # than the ledger's window is refused before anything is written.
+        # foreachBatch is at-least-once.  The graph merge is idempotent;
+        # the counters are recorded by batch id only AFTER the batch
+        # succeeds, so a replay replaces them.  A replay older than the
+        # ledger's window is refused before anything is written.
         replayed = self.metrics.ledger.admit(batch_id)
         decoded = from_confluent_avro(
             batch, self.schema_config, self.expected_schema_id, keep_raw=True
         ).cache()
         try:
             # ONE shuffle-free job fills the cache the writes below read
-            # and yields every counter: one string per dead letter (never
-            # per valid row), plus a named observe() of the valid count,
-            # read from the job's own plan.  Not an Observation object:
-            # one sets the session's non-transient observationManager,
-            # and any closure that captures the session (an ML model's
-            # training summary) then fails to serialize.
+            # and yields every counter: each partition's (reason, count)
+            # pairs (reasons x partitions rows, never one per frame) and a
+            # named observe() of the valid count, read from the job's own
+            # plan.  No Observation object: it makes the session unpicklable.
             dead = decoded.observe("valid", F.count_if(F.col("_error").isNull()))
             dead = dead.where(F.col("_error").isNotNull()).select("_error")
-            by_reason = dict(Counter(r[0] for r in dead.collect()))
+            counted = dead.mapInArrow(_count_reasons, "_error string, n long")
+            by_reason: Counter = Counter()
+            for reason, n in counted.collect():
+                by_reason[reason] += n
             n_err = sum(by_reason.values())
-            observed = dead._jdf.queryExecution().observedMetrics()
+            observed = counted._jdf.queryExecution().observedMetrics()
             n_valid = observed.apply("valid").getLong(0)
             if n_err:
-                # the RAW undecoded frame rides along so dead letters
-                # can be re-decoded after a schema fix — an error
-                # string alone is unreplayable
-                self._write_audit(
-                    decoded.where(F.col("_error").isNotNull()).select(
-                        "key", F.col("_raw_value").alias("value"), "_error"
-                    ),
-                    self.dlq_dir,
-                    batch_id,
-                )
+                # the RAW undecoded frame rides along so dead letters can
+                # be re-decoded after a schema fix (an error string cannot)
+                dlq = decoded.where(F.col("_error").isNotNull())
+                dlq = dlq.select("key", F.col("_raw_value").alias("value"), "_error")
+                self._write_audit(dlq, self.dlq_dir, batch_id)
             sc = self.schema_config  # exactly 3 columns, checked at construction
             valid = decoded.where(F.col("_error").isNull())
             triples = triples_from(valid, *map(sc.field_name, sc.columns))
@@ -155,7 +152,7 @@ class StreamingGraphIngest(BoundedReplayMixin):
                 {
                     "valid_rows": n_valid,
                     "error_rows": n_err,
-                    "errors_by_reason": by_reason,
+                    "errors_by_reason": dict(by_reason),
                 },
             )
             self._compact_if_due(replayed)

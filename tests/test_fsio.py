@@ -100,17 +100,15 @@ def test_manifest_table_full_lifecycle_over_hadoop_uri(spark, tmp_path):
     assert t.version() == 3
 
     # point lookups: footers and row groups seek-read through HadoopIO
-    assert t.lookup("k", 2) == [{"k": 2, "v": "b"}]
-    assert t.lookup("k", 9) == [] and t.lookup("k", None) == []
+    assert t.lookup(2, "k", "v") == [{"k": 2, "v": "b"}]
+    assert t.lookup(9, "v") == [] and t.lookup(None, "v") == []
 
     t.compact()
     assert keys() == [1, 2, 3]
     assert t.versions() == [t.version()]
     with pytest.raises(FileNotFoundError, match="pruned|not available"):
         t.read(1)
-    assert [t.lookup("k", k) for k in (1, 3, 9)] == [
-        [{"k": 1, "v": "a"}], [{"k": 3, "v": "c"}], []
-    ]
+    assert [t.lookup(k, "v") for k in (1, 3, 9)] == [[{"v": "a"}], [{"v": "c"}], []]
 
 
 def test_publish_backfills_snapshot_lost_in_crash_window(spark, tmp_path):

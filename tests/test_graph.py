@@ -143,8 +143,8 @@ def test_keyed_lookup_none_absent_and_non_ascii_names(spark, tmp_path):
 
 
 def test_lookup_on_compacted_table_reads_one_file(spark, tmp_path):
-    """compact() writes key-range-partitioned, key-sorted files, so a
-    point lookup reads row-group data from one file only: every other
+    """compact() writes key-range-partitioned files, so a point lookup
+    reads row-group data from one file only: every other
     file is skipped on its footer's min/max.  Reads are counted through
     the seekable-read primitive; a read that stops short of the end of
     the file is row-group data (footer reads end at the end)."""
@@ -201,13 +201,13 @@ def test_lookup_on_compacted_table_reads_one_file(spark, tmp_path):
     def data_files():
         return {name for name, end, size in reads if end < size}
 
-    assert t.lookup("k", "key123") == [{"k": "key123", "v": 123}]
+    assert t.lookup("key123", "k", "v") == [{"k": "key123", "v": 123}]
     assert len(data_files()) == 1
     assert {name for name, _, _ in reads} == set(files)  # footers only elsewhere
     reads.clear()
-    assert t.lookup("k", "key999") == [] and data_files() == set()
+    assert t.lookup("key999", "v") == [] and data_files() == set()
     reads.clear()
-    assert t.lookup("k", "key050x") == [] and len(data_files()) <= 1
+    assert t.lookup("key050x", "v") == [] and len(data_files()) <= 1
 
 
 def test_connected_components_chain_and_clique(spark):

@@ -931,6 +931,20 @@ def test_audit_write_replaces_its_batch_partition(spark, tmp_path):
     assert ing.metrics.error_rows == 3
 
 
+def test_dead_letter_reasons_reach_the_driver_as_one_row_per_reason():
+    """A partition hands the driver one (reason, count) row per distinct
+    reason, however many frames it dead-letters, and nothing when it
+    has none."""
+    import pyarrow as pa
+
+    from consume_kafka_avro_data_spark.streaming.ingest import _count_reasons
+
+    b = pa.RecordBatch.from_pydict({"_error": ["bad magic"] * 5000 + ["short"]})
+    out = [o.to_pydict() for o in _count_reasons(iter([b, b]))]
+    assert out == [{"_error": ["bad magic", "short"], "n": [10000, 2]}]
+    assert list(_count_reasons(iter([]))) == []
+
+
 @pytest.mark.parametrize("with_dlq", [True, False], ids=["dlq", "no_dlq"])
 def test_counters_are_exact_and_clean_batches_write_no_dlq(spark, tmp_path, with_dlq):
     """The counters come from one observed pass: a batch that mixes two
