@@ -704,8 +704,7 @@ def learned_ops_bench(spark, sf_dir: str) -> dict:
     # round 7 (continued): the unigram-LM tokenizer family (Kudo 2018)
     # — train a small vocab over the corpus (per-round cost is one
     # distributed E-step pass over the word-type table), then the
-    # Viterbi encode pass's docs/sec (the deployed steady-state cost,
-    # like bpe_segment's)
+    # Viterbi encode pass's docs/sec (the deployed steady-state cost)
     from consume_kafka_avro_data_spark.operators.unigram import (
         unigram_segment,
         unigram_train,

@@ -1,58 +1,10 @@
-"""Bucketed-table layout: pre-shuffled storage for shuffle-free joins.
-
-The single biggest shuffle eliminator at 100 TB: write both sides of a
-recurring join bucketed (and sorted) by the join key —
-``write.bucketBy(n, key).sortBy(key).saveAsTable(...)`` — and every
-subsequent join/aggregation on that key reads co-located partitions
-and skips the exchange entirely.  This is Spark's native analogue of
-the reference's Postgres unique-index lookup (``src/Database.h:23-31``):
-pay the organization cost once at write time, then every read is cheap.
-
-Rules that make it work (and that ``write_bucketed`` encodes):
-
-* both sides must have the SAME bucket count (or an integer multiple
-  with ``spark.sql.bucketing.coalesceBucketsInJoin.enabled``);
-* the join key must equal the bucket key exactly;
-* ``sortBy`` the same key so sort-merge join also skips its sort;
-* one file per bucket per writing task — repartition on the bucket key
-  first so each bucket is written by exactly one task (otherwise
-  buckets fragment into tasks×buckets files).
-
-Bucket count sizing at scale: aim for ~128-512 MB per bucket of the
-big table; at 100 TB that's O(10⁵) buckets — far above any per-table
-limit, and AQE cannot coalesce bucketed scans, so size deliberately.
-"""
+"""Data layout for pruning: Z-order clustering of several columns into
+one sort key, so per-file min/max statistics stay tight on every
+clustered column (see the section comment below)."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_key: str,
-    n_buckets: int,
-    sort: bool = True,
-    mode: str = "overwrite",
-) -> None:
-    """Persist ``df`` as a bucketed (+sorted) managed table."""
-    writer = (
-        df.repartition(n_buckets, bucket_key)
-        .write.mode(mode)
-        .bucketBy(n_buckets, bucket_key)
-    )
-    if sort:
-        writer = writer.sortBy(bucket_key)
-    writer.saveAsTable(table)
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: str, how: str = "inner"
-) -> DataFrame:
-    """Join two same-bucketed tables on their bucket key — verified
-    shuffle-free in tests/test_scale.py."""
-    return spark.table(left_table).join(spark.table(right_table), on, how)
+from pyspark.sql import Column, DataFrame, functions as F
 
 
 # ---------------------------------------------------------------------------

@@ -17,9 +17,9 @@ Scale design (learned the hard way — see the *_table functions):
   expensive signature subtree, and AQE materializes both sides as
   concurrent stages — the signature pass would run (and shuffle) twice.
   Quadratic only in bucket size, which the banding scheme bounds.
-* The Column-returning HOF variants (minhash_signature[_md5], simhash64,
-  simhash_hex) are kept as the compositional API — value-identical,
-  unit-tested against the table forms — but they are NOT the hot path.
+* The Column-returning HOF variants (band_hashes[_md5], simhash_hex)
+  are kept as the compositional API — value-identical, unit-tested
+  against the table forms — but they are NOT the hot path.
 
 Exact dedup is ``dropDuplicates`` / fingerprint group-by (see
 queries/text.py q_doc_fingerprint); this module covers the near-dup
@@ -99,9 +99,9 @@ def ensure_min_splits(df: DataFrame) -> DataFrame:
 def tokens_col(text: str | Column = "text") -> Column:
     """Whitespace tokens of lowercased text.
 
-    NULL text is canonicalized to '' here — BOTH the HOF Column forms
-    (simhash_hex/simhash64/minhash_signature) and the explode+aggregate
-    table forms consume this, so NULL and '' documents get the identical
+    NULL text is canonicalized to '' here — BOTH the HOF Column form
+    (simhash_hex) and the explode+aggregate table forms consume this,
+    so NULL and '' documents get the identical
     single-empty-token signature (md5('') prefix d41d8cd98f00b204 for the
     portable family).  Oracles mirror it with lower(coalesce(text, ''));
     ``string_split_regex('', '\\s+')`` is ``['']`` in DuckDB exactly as
@@ -122,27 +122,6 @@ def shingles(tokens: Column, k: int = 3) -> Column:
     )
 
 
-def _seeded_xxhash(i: int):
-    """Arity-1 lambda factory.  NEVER write ``lambda s, i=i:`` inside
-    F.transform: PySpark sniffs the lambda's parameter count and a
-    2-parameter lambda is called with (element, index) — the index
-    column silently clobbers the bound seed and every signature
-    component collapses onto the same (position-seeded) hash."""
-    return lambda s: F.xxhash64(F.lit(i), s)
-
-
-def minhash_signature(sh: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature: per seed, the min of seeded xxhash64 over the
-    shingle set.  Seeds are baked into the plan as literals, so the whole
-    signature is one codegen'd projection."""
-    return F.array(
-        *[
-            F.array_min(F.transform(sh, _seeded_xxhash(i)))
-            for i in range(num_hashes)
-        ]
-    )
-
-
 def band_hashes(signature: Column, bands: int, rows: int) -> Column:
     """LSH banding: hash each band (contiguous ``rows``-slice) of the
     signature; docs sharing any band hash become candidates."""
@@ -151,22 +130,6 @@ def band_hashes(signature: Column, bands: int, rows: int) -> Column:
             F.xxhash64(F.lit(b), F.array_join(F.slice(signature, b * rows + 1, rows), ","))
             for b in range(bands)
         ]
-    )
-
-
-def minhash_signature_md5(sh: Column, num_hashes: int = 32) -> Column:
-    """Portable MinHash: per seed, the lexicographic min of the first 16
-    md5 hex chars of ``"seed:shingle"``.  Fixed-width lowercase hex makes
-    string-min ≡ uint64-min, and md5 exists in every engine — this is the
-    cross-engine-verifiable twin of :func:`minhash_signature` (same
-    map-only codegen shape, ~2× the hash cost of xxhash64)."""
-    def seeded(i: int):
-        # arity-1 factory — see _seeded_xxhash for why `lambda s, i=i:`
-        # is a trap inside F.transform
-        return lambda s: F.substring(F.md5(F.concat(F.lit(f"{i}:"), s)), 1, 16)
-
-    return F.array(
-        *[F.array_min(F.transform(sh, seeded(i))) for i in range(num_hashes)]
     )
 
 
@@ -186,48 +149,6 @@ def band_hashes_md5(signature: Column, bands: int, rows: int) -> Column:
     )
 
 
-def simhash64(tokens: Column) -> Column:
-    """64-bit SimHash via aggregate/zip_with: fold each token's hash into
-    64 signed bit-counters, then take the sign bit-majority.
-
-    Entirely JVM expressions — the accumulator is an array<long> of 64
-    counters; no UDF, no shuffle, one pass over the token array.
-    """
-    counters = F.aggregate(
-        F.transform(tokens, lambda t: F.xxhash64(t)),
-        F.array_repeat(F.lit(0).cast("long"), 64),
-        lambda acc, h: F.zip_with(
-            acc,
-            # shift amounts must be Python ints (shiftright takes no
-            # column), so build the 64-bit vote array positionally
-            F.array(
-                *[
-                    F.when(
-                        F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, F.lit(1)
-                    ).otherwise(F.lit(-1))
-                    for b in range(64)
-                ]
-            ),
-            lambda a, x: a + x.cast("long"),
-        ),
-    )
-    # assemble the 64-bit word: OR of 2^b over positive counters
-    word = F.lit(0).cast("long")
-    for b in range(64):
-        word = word.bitwiseOR(
-            F.when(
-                F.element_at(counters, b + 1) > 0,
-                F.lit(1 << b if b < 63 else -(1 << 63)).cast("long"),
-            ).otherwise(F.lit(0).cast("long"))
-        )
-    return word
-
-
-def hamming64(a: Column, b: Column) -> Column:
-    """Hamming distance between two 64-bit signatures (bit_count of XOR)."""
-    return F.bit_count(a.bitwiseXOR(b))
-
-
 _HEX = "0123456789abcdef"
 
 
@@ -239,10 +160,10 @@ def _hex_digit(col: Column, p: int) -> Column:
 def simhash_hex(tokens: Column) -> Column:
     """Portable 64-bit SimHash as a 16-char lowercase hex string.
 
-    Same fold as :func:`simhash64` (64 signed bit-counters, sign
-    majority) but every bit vote comes from an md5 hex digit instead of
-    xxhash64, and the signature is emitted as hex — so any engine with
-    md5 + substring can reproduce it digit-for-digit (DuckDB twin in
+    A fold into 64 signed bit-counters with a sign majority, where
+    every bit vote comes from an md5 hex digit and the signature is
+    emitted as hex — so any engine with md5 + substring can reproduce
+    it digit-for-digit (DuckDB twin in
     queries/similarity.py).  Bit layout: hex char p (1-based, MSB first)
     carries counters (p-1)*4+k for k in 0..3, where k is the bit index
     inside the digit.
@@ -323,38 +244,6 @@ def simhash_hex_table(
             ).otherwise(F.lit(0))
         digits.append(F.element_at(chars, val + 1))
     return counters.select("_id", F.concat(*digits).alias("_sim"))
-
-
-def simhash64_table(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Per-document 64-bit SimHash as a table: (_id, _sim long) — the
-    xxhash64 twin of :func:`simhash_hex_table`, same explode + native
-    sum() design (see there for why this beats the interpreted array
-    fold of :func:`simhash64`)."""
-    df = ensure_min_splits(df)
-    ex = _explode_keepall(df, id_col, tokens_col(text_col), "_t")
-    hashed = ex.select("_id", F.xxhash64(F.col("_t")).alias("_h"))
-    aggs = [
-        F.sum(
-            F.when(
-                F.shiftright(F.col("_h"), b).bitwiseAND(F.lit(1)) == 1, F.lit(1)
-            )
-            .otherwise(F.lit(-1))
-            .cast("long")
-        ).alias(f"_c{b}")
-        for b in range(64)
-    ]
-    counters = hashed.groupBy("_id").agg(*aggs)
-    word = F.lit(0).cast("long")
-    for b in range(64):
-        word = word.bitwiseOR(
-            F.when(
-                F.col(f"_c{b}") > 0,
-                F.lit(1 << b if b < 63 else -(1 << 63)).cast("long"),
-            ).otherwise(F.lit(0).cast("long"))
-        )
-    return counters.select("_id", word.alias("_sim"))
 
 
 def hamming_hex(a: Column, b: Column) -> Column:
@@ -705,21 +594,6 @@ def minhash_lsh_pairs(
     )
 
 
-def oversized_buckets(
-    blocked: DataFrame, max_bucket_size: int = MAX_BUCKET_SIZE
-) -> DataFrame:
-    """(_block, n_members) for buckets the candidate expansion will skip
-    — the observability hook for the MAX_BUCKET_SIZE guard.  A non-empty
-    result means the corpus still contains un-collapsed exact duplicates
-    (they agree on every band) or a degenerate band; run exact dedup
-    first, or raise the cap deliberately."""
-    return (
-        blocked.groupBy("_block")
-        .agg(F.count(F.lit(1)).alias("n_members"))
-        .where(F.col("n_members") > max_bucket_size)
-    )
-
-
 def _bucket_candidate_pairs(
     blocked: DataFrame, max_bucket_size: int = MAX_BUCKET_SIZE
 ) -> DataFrame:
@@ -741,14 +615,14 @@ def _bucket_candidate_pairs(
     — banding bounds K only probabilistically, and EXACT duplicates
     agree on every band.  Run exact dedup (fingerprint group-by /
     dropDuplicates) before near-dup detection to collapse those buckets
-    to singletons; :func:`oversized_buckets` reports what this guard
-    would skip.
+    to singletons; the ``_block`` groups of ``blocked`` whose count
+    exceeds ``max_bucket_size`` are exactly what this guard skips.
 
     Oracle note: the DuckDB twins model NO cap, so oracle parity holds
     exactly while every bucket stays under ``max_bucket_size`` (true for
     the driver testdata by orders of magnitude — the guard exists for
-    pathological corpora).  If :func:`oversized_buckets` is non-empty,
-    either pre-collapse exact duplicates or raise the cap via the
+    pathological corpora).  If any bucket is over the cap, either
+    pre-collapse exact duplicates or raise the cap via the
     ``max_bucket_size`` parameter every public operator forwards."""
     buckets = blocked.groupBy("_block").agg(
         F.sort_array(F.collect_list(F.struct("_id", "_sim"))).alias("_members")
@@ -841,55 +715,6 @@ def _bucket_candidate_id_pairs(
     )
 
 
-def simhash_neardup_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    block_bits: int = 16,
-    max_bucket_size: int = MAX_BUCKET_SIZE,
-) -> DataFrame:
-    """SimHash near-dup pairs: candidates share at least one of the
-    64/block_bits signature blocks (pigeonhole: any pair within
-    ``max_hamming`` ≤ blocks-1 bit flips must agree on some block),
-    verified by exact Hamming distance."""
-    n_blocks = 64 // block_bits
-    if max_hamming >= n_blocks:
-        # a hard error, not an assert: under python -O an assert vanishes
-        # and the blocking would silently MISS near-dup pairs
-        raise ValueError(
-            f"pigeonhole needs max_hamming ({max_hamming}) < n_blocks ({n_blocks})"
-        )
-    base = simhash64_table(df, id_col, text_col)
-    mask = (1 << block_bits) - 1
-    blocked = base.select(
-        "_id",
-        "_sim",
-        F.explode(
-            F.array(
-                *[
-                    F.concat(
-                        F.lit(f"{blk}:"),
-                        F.shiftrightunsigned(F.col("_sim"), blk * block_bits)
-                        .bitwiseAND(F.lit(mask))
-                        .cast("string"),
-                    )
-                    for blk in range(n_blocks)
-                ]
-            )
-        ).alias("_block"),
-    )
-    return (
-        _bucket_candidate_pairs(blocked, max_bucket_size)
-        .select(
-            "id_a",
-            "id_b",
-            hamming64(F.col("_sa"), F.col("_sb")).alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-    )
-
-
 def minhash_estimate_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -956,10 +781,9 @@ def simhash_hex_neardup_pairs(
 ) -> DataFrame:
     """Portable-SimHash near-dup pairs over hex signatures: candidates
     share one of the 16/block_chars hex blocks (pigeonhole over 4·block
-    bits), verified by exact per-digit Hamming distance.  Same plan
-    shape as :func:`simhash_neardup_pairs` (aggregated signature table,
-    block bucket-and-expand); every expression has a 1:1 DuckDB
-    translation."""
+    bits), verified by exact per-digit Hamming distance.  One
+    aggregated signature table, then block bucket-and-expand; every
+    expression has a 1:1 DuckDB translation."""
     n_blocks = 16 // block_chars
     if max_hamming >= n_blocks:
         # a hard error, not an assert: under python -O an assert vanishes

@@ -508,38 +508,6 @@ def gumbel_key_expr(
     return F.col(logw_col) - F.log(-F.log(u))
 
 
-def dsir_ess(
-    model: DsirModel,
-    df: DataFrame,
-    text_col: str = "text",
-    engine: str = "pandas",
-) -> dict[str, float]:
-    """Importance-sampling health check: effective sample size
-    ESS = (Σw)²/Σw² over the candidate pool (Kong 1992's classic
-    diagnostic — public).  ESS ≈ n means target and raw are close
-    (weights nearly flat); ESS ≪ k being requested means the sample
-    will concentrate on a few documents and the deployment should
-    narrow the gap (bigger target corpus, more smoothing) before
-    trusting the selection.  One map-only weigh pass + one bounded
-    aggregate; weights are exponentiated around their max for
-    overflow-safe Σw and Σw² (the standard log-sum-exp shift —
-    RELATIVE weights are all ESS needs)."""
-    w = dsir_log_weights(model, df, text_col, engine=engine)
-    mx = w.agg(F.max("dsir_logw").alias("m")).collect()[0]["m"]
-    if mx is None:
-        return {"ess": 0.0, "n": 0, "ess_fraction": 0.0}
-    sums = w.select(
-        F.exp(F.col("dsir_logw") - F.lit(mx)).alias("w1"),
-    ).agg(
-        F.sum("w1").alias("s1"),
-        F.sum(F.col("w1") * F.col("w1")).alias("s2"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    ess = float(sums["s1"]) ** 2 / float(sums["s2"])
-    n = int(sums["n"])
-    return {"ess": ess, "n": n, "ess_fraction": ess / n if n else 0.0}
-
-
 def dsir_resample(
     model: DsirModel,
     df: DataFrame,

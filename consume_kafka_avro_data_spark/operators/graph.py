@@ -39,10 +39,9 @@ from __future__ import annotations
 import os
 
 from consume_kafka_avro_data_spark.operators.store import ManifestTable
-from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     DateType,
-    DoubleType,
     IntegerType,
     LongType,
     StringType,
@@ -349,8 +348,7 @@ def label_propagation(
                 break
         # the CHECKPOINTED frame itself is returned (a re-aliased
         # projection would make the caller's unpersist a no-op against
-        # the checkpoint blocks); caller owns the final unpersist —
-        # the pack_sequences contract
+        # the checkpoint blocks); the caller owns the final unpersist
         return labels_ck
     finally:
         e.unpersist()
@@ -436,509 +434,10 @@ def shortest_paths(
         # the CHECKPOINTED frame itself is returned (internal frames
         # above are freed; a re-aliased projection would make the
         # caller's unpersist a no-op against the checkpoint blocks);
-        # the caller owns the final unpersist — the pack_sequences
-        # contract
+        # the caller owns the final unpersist
         return settled_ck
     finally:
         if frontier_ck is not None:
-            frontier_ck.unpersist()
-        e.unpersist()
-
-
-def personalized_pagerank(
-    edges: DataFrame,
-    sources: list,
-    damping: float = 0.85,
-    iters: int = 10,
-    src: str = "source_id",
-    dst: str = "target_id",
-    tol: float | None = None,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Personalized PageRank (Page et al. 1999 §6; the random surfer
-    restarts at the SOURCE set instead of uniformly): the standard
-    "entities related to X" ranking over the SPO graph the reference
-    materializes.  Power iteration with the textbook conventions:
-    rank' = (1−d)·p + d·(Aᵀ D⁻¹ rank + dangling_mass·p), where p is
-    uniform over ``sources`` and dangling (out-degree-0) mass restarts
-    through p — so Σ rank = 1 holds at every round (pinned as an
-    invariant alongside the pure-Python model).  Directed edges, up to
-    ``iters`` rounds (power iteration converges geometrically at rate
-    d; 10 rounds ≈ 1e-1·d¹⁰ residual — callers wanting tighter
-    tolerances raise it).
-
-    ``tol`` (round 8) enables TOLERANCE-BASED EARLY STOP: each round's
-    rank vector carries the previous round's alongside it, and the L1
-    residual Σ|rank − prev| is folded into the SAME single-row driver
-    aggregate that already fetches the dangling mass — no extra job,
-    no extra collect — so the loop exits as soon as the residual meets
-    ``tol`` instead of running the full budget.  The returned vector
-    is bit-identical to the fixed-``iters`` run of however many rounds
-    actually executed (the early stop changes WHEN the loop exits,
-    never what a round computes).  ``stats`` (optional dict, the
-    ``bpe_train`` convention) reports ``rounds`` executed and the
-    ``final_residual`` observed at the last driver touch.  The
-    residual is measured at the TOP of each round (it describes the
-    previous round's update), so on an early stop it is the value
-    that met ``tol``; when the budget exhausts instead, the final
-    round's own update is not re-measured (inf if no round ran).
-
-    Scale shape per round: one join keyed on the rank node + one
-    dst-keyed sum + one broadcast-sized restart merge; dangling mass
-    AND the stop residual are ONE single-row scalar aggregate;
-    ``localCheckpoint`` per round cuts plan growth (the
-    iterative-graph discipline).  Result is checkpoint-free (final
-    select), node set = every vertex incident to an edge plus the
-    sources."""
-    if not sources:
-        raise ValueError("sources must be non-empty")
-    if not 0.0 < damping < 1.0:
-        raise ValueError("damping must be in (0, 1)")
-    if tol is not None and tol <= 0.0:
-        raise ValueError("tol must be positive (or None for fixed iters)")
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).distinct()
-    e = e.localCheckpoint(eager=True)
-
-    spark = edges.sparkSession
-    node_type = e.schema["a"].dataType
-    uniq_sources = list(dict.fromkeys(sources))
-    p_each = 1.0 / len(uniq_sources)
-    restart = spark.createDataFrame(
-        [(s, p_each) for s in uniq_sources],
-        StructType(
-            [StructField("node", node_type), StructField("p", DoubleType())]
-        ),
-    ).localCheckpoint(eager=True)
-
-    nodes = (
-        e.select(F.col("a").alias("node"))
-        .unionAll(e.select(F.col("b").alias("node")))
-        .unionAll(restart.select("node"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    outdeg = (
-        e.groupBy(F.col("a").alias("node"))
-        .agg(F.count(F.lit(1)).cast("double").alias("deg"))
-        .localCheckpoint(eager=True)
-    )
-
-    # node-COMPLETE initial vector (zeros off the source set, _prev=0):
-    # identical flows to the sources-only form — zero-rank nodes
-    # contribute zero everywhere — but it lets each round read the
-    # previous vector for the residual without any extra join
-    rank_ck = (
-        nodes.join(
-            restart.select(F.col("node").alias("_p"), "p"),
-            on=F.col("node").eqNullSafe(F.col("_p")),
-            how="left",
-        )
-        .select(
-            "node",
-            F.coalesce(F.col("p"), F.lit(0.0)).alias("rank"),
-            F.lit(0.0).alias("_prev"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    rounds = 0
-    residual = float("inf")
-    try:
-        for _ in range(iters):
-            with_deg = rank_ck.join(
-                outdeg.select(F.col("node").alias("_n"), "deg"),
-                on=F.col("node").eqNullSafe(F.col("_n")),
-                how="left",
-            )
-            # ONE single-row driver touch per round: dangling mass
-            # (rank sitting on out-degree-0 nodes) + the L1 residual of
-            # the PREVIOUS round's update (the early-stop signal)
-            row = with_deg.agg(
-                F.sum(
-                    F.when(F.col("deg").isNull(), F.col("rank")).otherwise(
-                        F.lit(0.0)
-                    )
-                ).alias("s"),
-                F.sum(F.abs(F.col("rank") - F.col("_prev"))).alias("r"),
-            ).collect()[0]
-            dangling = row["s"] or 0.0
-            residual = row["r"] if row["r"] is not None else float("inf")
-            if tol is not None and rounds > 0 and residual <= tol:
-                break
-            contrib = (
-                e.join(
-                    with_deg.where(F.col("deg").isNotNull()).select(
-                        F.col("node").alias("_r"),
-                        (F.col("rank") / F.col("deg")).alias("c"),
-                    ),
-                    on=F.col("a").eqNullSafe(F.col("_r")),
-                )
-                .groupBy(F.col("b").alias("node"))
-                .agg(F.sum("c").alias("flow"))
-            )
-            new_rank = (
-                rank_ck.select("node", F.col("rank").alias("_prev"))
-                .join(contrib, "node", "left")
-                .join(
-                    restart.select(F.col("node").alias("_p"), "p"),
-                    on=F.col("node").eqNullSafe(F.col("_p")),
-                    how="left",
-                )
-                .select(
-                    "node",
-                    (
-                        F.lit(damping)
-                        * (
-                            F.coalesce(F.col("flow"), F.lit(0.0))
-                            + F.lit(dangling) * F.coalesce(F.col("p"), F.lit(0.0))
-                        )
-                        + F.lit(1.0 - damping) * F.coalesce(F.col("p"), F.lit(0.0))
-                    ).alias("rank"),
-                    "_prev",
-                )
-            )
-            new_ck = new_rank.localCheckpoint(eager=True)
-            rank_ck.unpersist()
-            rank_ck = new_ck
-            rounds += 1
-        # re-checkpoint under the public schema so the RETURNED frame
-        # owns its blocks (a bare select over the loop checkpoint would
-        # make the caller's unpersist a no-op against it — the
-        # core_numbers contract, mirrored here per the r08 advisor)
-        out = rank_ck.select("node", "rank").localCheckpoint(eager=True)
-        return out
-    finally:
-        if stats is not None:
-            stats["rounds"] = rounds
-            stats["final_residual"] = residual
-        rank_ck.unpersist()
-        e.unpersist()
-        restart.unpersist()
-        nodes.unpersist()
-        outdeg.unpersist()
-
-
-def k_core(
-    edges: DataFrame,
-    k: int,
-    src: str = "source_id",
-    dst: str = "target_id",
-    stats: dict | None = None,
-) -> DataFrame:
-    """The k-core of the UNDIRECTED simple graph (Seidman 1983,
-    "Network structure and minimum degree" — public): the MAXIMAL
-    subgraph in which every node has degree ≥ k — the standard
-    dense-region extractor for the SPO graph the reference
-    materializes (spam rings, co-engagement clusters, hub cleanup
-    before community detection).  Directed input is symmetrized and
-    self-loops dropped, like ``label_propagation``.
-
-    Iterative peeling: drop every node of degree < k, recompute
-    degrees on the surviving subgraph, repeat to the fixed point —
-    each round removes at least one node, so rounds are bounded by the
-    peeling depth (≪ |V| on real graphs).  Returns (node, degree)
-    with degrees measured WITHIN the core; an empty frame when the
-    core is empty.  ``stats`` (optional dict) reports ``rounds``.
-
-    Scale shape per round: one degree aggregate keyed by node + two
-    node-keyed semi-joins to shrink the edge set (both sides shrink
-    monotonically; the join key is the same node id every round so
-    AQE reuses partitioning), ``localCheckpoint`` per round cuts plan
-    growth.  The returned frame is checkpointed — caller owns the
-    final unpersist (the ``label_propagation`` contract)."""
-    if k < 1:
-        raise ValueError("k must be >= 1")
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    e = e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    e = e.where(F.col("a") != F.col("b")).distinct()
-    e = e.localCheckpoint(eager=True)
-    rounds = 0
-    try:
-        while True:
-            deg = e.groupBy(F.col("a").alias("node")).agg(
-                F.count(F.lit(1)).alias("degree")
-            )
-            n_low = deg.where(F.col("degree") < k).count()
-            if n_low == 0:
-                out = deg.localCheckpoint(eager=True)
-                return out
-            rounds += 1
-            keep = deg.where(F.col("degree") >= k).select("node")
-            survivors = (
-                e.join(
-                    keep.select(F.col("node").alias("_ka")),
-                    on=F.col("a") == F.col("_ka"),
-                    how="left_semi",
-                )
-                .join(
-                    keep.select(F.col("node").alias("_kb")),
-                    on=F.col("b") == F.col("_kb"),
-                    how="left_semi",
-                )
-            )
-            new_e = survivors.localCheckpoint(eager=True)
-            e.unpersist()
-            e = new_e
-    finally:
-        if stats is not None:
-            stats["rounds"] = rounds
-        e.unpersist()
-
-
-def core_numbers(
-    edges: DataFrame,
-    src: str = "source_id",
-    dst: str = "target_id",
-    max_iter: int | None = None,
-    stats: dict | None = None,
-) -> DataFrame:
-    """FULL core decomposition — every node's coreness (the largest k
-    for which it sits in the k-core) — via the distributed h-index
-    iteration (Montresor et al. 2011, "Distributed k-Core
-    Decomposition"; Lü et al. 2016 — public): start each node at its
-    degree, then repeatedly replace a node's value with the H-INDEX of
-    its neighbors' values (the largest h such that ≥ h neighbors hold
-    value ≥ h).  Values are non-increasing integers bounded below, so
-    the iteration converges — exactly to the coreness — and stops at
-    the first unchanged round.
-
-    Scale shape per round (WIDTH-FREE, round 9 — no per-node arrays):
-    the h-index of a node's neighbor values is rewritten as a pure
-    count identity, h = max over the DISTINCT neighbor values t of
-    min(t, N≥t) where N≥t = #{neighbors with value ≥ t} (take the
-    sorted-desc view a₁ ≥ a₂ ≥ …: for t = a_h the min is ≥ h, and any
-    t with min(t, N≥t) = m would put m neighbors at value ≥ m,
-    contradicting h's maximality for m > h).  Neighbor values are
-    first CAPPED at the node's own current value — sound because the
-    iteration is component-wise non-increasing from degrees (Montresor
-    et al. 2011), so h never exceeds the current value and counts
-    below it are unchanged; the cap bounds each node's distinct-value
-    domain by its shrinking current value.  Per round: one
-    neighbor-value join + one self join for the cap (both keyed by
-    node), one (node, value) count aggregate, one node-partitioned
-    running sum, one node-keyed max — every row narrow, no
-    ``collect_list``, so a 10⁵-degree hub costs rows, never row WIDTH.
-    ``localCheckpoint`` per round, caller owns the returned frame's
-    unpersist (the ``label_propagation`` contract).  ``stats`` reports
-    ``rounds``.
-
-    Composition law (pinned in tests): ``k_core(edges, k)``'s node set
-    == the nodes with ``coreness ≥ k``, for every k.  The width-free
-    kernel is pinned value-identical to both the legacy collect_list
-    form and the pure-Python peeling reference, including on a
-    power-law graph with an extreme hub (tests/test_k_core.py)."""
-    if max_iter is not None and max_iter < 1:
-        # 0 rounds would return raw degrees labeled 'coreness' with no
-        # signal that the iteration never ran (advisor finding, r08)
-        raise ValueError(
-            f"max_iter must be >= 1 (or None for run-to-convergence), "
-            f"got {max_iter}"
-        )
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    e = e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    e = e.where(F.col("a") != F.col("b")).distinct()
-    e = e.localCheckpoint(eager=True)
-    vals_ck = (
-        e.groupBy(F.col("a").alias("node"))
-        .agg(F.count(F.lit(1)).cast("int").alias("c"))
-        .localCheckpoint(eager=True)
-    )
-    rounds = 0
-    try:
-        while max_iter is None or rounds < max_iter:
-            # capped neighbor values: w = min(val(b), val(a))
-            capped = (
-                e.join(
-                    vals_ck.select(
-                        F.col("node").alias("_b"), F.col("c").alias("_nv")
-                    ),
-                    on=F.col("b") == F.col("_b"),
-                )
-                .join(
-                    vals_ck.select(
-                        F.col("node").alias("_a"), F.col("c").alias("_cur")
-                    ),
-                    on=F.col("a") == F.col("_a"),
-                )
-                .select(
-                    F.col("a").alias("node"),
-                    F.least(F.col("_nv"), F.col("_cur")).alias("w"),
-                )
-            )
-            # N≥t per (node, distinct value): histogram + desc running
-            # sum; h = max min(t, N≥t) — all narrow rows, node-keyed
-            hist = capped.groupBy("node", "w").agg(
-                F.count(F.lit(1)).alias("_n")
-            )
-            win = (
-                Window.partitionBy("node")
-                .orderBy(F.col("w").desc())
-                .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            )
-            new_vals = (
-                hist.select(
-                    "node", "w", F.sum("_n").over(win).alias("_ge")
-                )
-                .groupBy("node")
-                .agg(
-                    F.max(F.least(F.col("w").cast("long"), F.col("_ge")))
-                    .cast("int")
-                    .alias("c")
-                )
-            )
-            new_ck = new_vals.localCheckpoint(eager=True)
-            try:
-                changed = (
-                    new_ck.join(
-                        vals_ck.select(
-                            F.col("node").alias("_pn"),
-                            F.col("c").alias("_pc"),
-                        ),
-                        on=F.col("node") == F.col("_pn"),
-                    )
-                    .where(F.col("c") != F.col("_pc"))
-                    .count()
-                )
-            except Exception:
-                new_ck.unpersist()  # vals_ck is released by the finally
-                raise
-            vals_ck.unpersist()
-            vals_ck = new_ck
-            rounds += 1
-            if changed == 0:
-                break
-        # re-checkpoint under the public schema so the RETURNED frame
-        # owns its blocks (a bare select child would make the caller's
-        # unpersist a no-op against the loop checkpoint)
-        return vals_ck.select(
-            "node", F.col("c").alias("coreness")
-        ).localCheckpoint(eager=True)
-    finally:
-        if stats is not None:
-            stats["rounds"] = rounds
-        vals_ck.unpersist()  # loop state — released on EVERY exit path
-        e.unpersist()
-
-
-def shortest_paths_weighted(
-    edges: DataFrame,
-    sources: list,
-    weight: str,
-    src: str = "source_id",
-    dst: str = "target_id",
-    directed: bool = False,
-    max_iter: int = 50,
-) -> DataFrame:
-    """Multi-source shortest paths with NON-NEGATIVE edge weights:
-    (node, dist) with dist = minimum total weight from the nearest
-    source — frontier-based Bellman–Ford (the Pregel SSSP of Malewicz
-    et al. 2010): only nodes IMPROVED last round propagate, so rounds
-    track the shortest-path hop diameter, not |V|.  Unlike the
-    unit-weight ``shortest_paths``, a settled distance can improve
-    later (a longer-hop but lighter path), which is exactly what the
-    per-round min-merge handles.  Negative weights are rejected
-    eagerly (Bellman–Ford detects negative cycles only with |V|
-    rounds — out of scope for the SPO graph's cost semantics).
-
-    Scale shape per round (the iterative-graph discipline): one join
-    keyed by the frontier node + one min-aggregate + one full-outer
-    min-merge with the running table, all hash-partitioned by node id;
-    ``localCheckpoint`` per round, empty-frontier stop, checkpointed
-    result returned (caller owns the final unpersist)."""
-    e = edges.select(
-        F.col(src).alias("a"),
-        F.col(dst).alias("b"),
-        F.col(weight).cast("double").alias("w"),
-    )
-    if not directed:
-        e = e.unionAll(
-            e.select(F.col("b").alias("a"), F.col("a").alias("b"), "w")
-        )
-    # parallel edges: only the lightest matters
-    e = e.groupBy("a", "b").agg(F.min("w").alias("w"))
-    e = e.localCheckpoint(eager=True)
-    # NULL weights must fail the same eager gate as negatives — `< 0`
-    # is NULL for them, and a NULL admitted here would propagate
-    # through `_fd + w` and silently poison every downstream distance
-    bad = e.where((F.col("w") < 0) | F.col("w").isNull()).count()
-    if bad:
-        e.unpersist()
-        raise ValueError(
-            f"{bad} negative- or NULL-weight edges; "
-            "shortest_paths_weighted requires non-negative weights"
-        )
-
-    spark = edges.sparkSession
-    node_type = e.schema["a"].dataType
-    schema = StructType(
-        [StructField("node", node_type), StructField("dist", DoubleType())]
-    )
-    # dedupe sources: the initial table is row-per-source and no merge
-    # round runs when nothing improves, so a repeated source would
-    # otherwise emit duplicate (node, 0.0) result rows
-    dist_ck = spark.createDataFrame(
-        [(s, 0.0) for s in dict.fromkeys(sources)], schema
-    ).localCheckpoint(eager=True)
-    frontier_ck = dist_ck
-    try:
-        converged = False
-        for _ in range(max_iter):
-            cand = (
-                e.join(
-                    frontier_ck.select(
-                        F.col("node").alias("_f"), F.col("dist").alias("_fd")
-                    ),
-                    on=F.col("a").eqNullSafe(F.col("_f")),
-                )
-                .select(
-                    F.col("b").alias("node"),
-                    (F.col("_fd") + F.col("w")).alias("dist"),
-                )
-                .groupBy("node")
-                .agg(F.min("dist").alias("dist"))
-            )
-            # improved = candidates strictly better than the running
-            # table (or reaching a brand-new node)
-            improved = (
-                cand.join(
-                    dist_ck.select(
-                        F.col("node").alias("_n"), F.col("dist").alias("_d")
-                    ),
-                    on=F.col("node").eqNullSafe(F.col("_n")),
-                    how="left",
-                )
-                .where(F.col("_d").isNull() | (F.col("dist") < F.col("_d")))
-                .select("node", "dist")
-            )
-            new_frontier_ck = improved.localCheckpoint(eager=True)
-            if frontier_ck is not dist_ck:
-                frontier_ck.unpersist()
-            frontier_ck = new_frontier_ck
-            if frontier_ck.count() == 0:
-                converged = True
-                break
-            merged = (
-                dist_ck.select("node", "dist")
-                .unionAll(frontier_ck.select("node", "dist"))
-                .groupBy("node")
-                .agg(F.min("dist").alias("dist"))
-            )
-            new_dist_ck = merged.localCheckpoint(eager=True)
-            dist_ck.unpersist()
-            dist_ck = new_dist_ck
-        if not converged:
-            # unlike the unit-weight BFS (where max_hops truncation
-            # only makes far nodes ABSENT), stopping here with a live
-            # frontier would return PRESENT-BUT-WRONG distances —
-            # refuse instead of silently under-relaxing
-            dist_ck.unpersist()
-            raise ValueError(
-                f"did not converge within max_iter={max_iter} rounds "
-                "(frontier still improving); raise max_iter — rounds "
-                "track the shortest-path hop diameter"
-            )
-        return dist_ck
-    finally:
-        if frontier_ck is not dist_ck:
             frontier_ck.unpersist()
         e.unpersist()
 

@@ -873,59 +873,3 @@ class BigramKN:
             F.coalesce(F.col("n_bigrams"), F.lit(0)).alias("n_bigrams"),
             "avg_nll",
         )
-
-
-def perplexity_buckets(
-    scored: DataFrame,
-    score_col: str = "avg_nll",
-    group_cols: list[str] | None = None,
-    cuts: tuple[float, ...] = (1.0 / 3.0, 2.0 / 3.0),
-    labels: tuple[str, ...] = ("head", "middle", "tail"),
-    out_col: str = "ppl_bucket",
-) -> DataFrame:
-    """CCNet's corpus split (Wenzek et al. 2020 §4.4): bucket documents
-    into head/middle/tail by LM-score percentiles, per language — the
-    published way perplexity becomes a DATASET PARTITION rather than a
-    hard filter (train on head+middle, hold tail for ablation).
-
-    ``scored`` is a :meth:`NgramKN.score` /:meth:`BigramKN.score`
-    output joined back to its docs (or any frame with a score column);
-    ``group_cols`` (e.g. ``["lang"]``) computes cuts independently per
-    group, CCNet's per-language calibration — omit for global cuts.
-
-    Scale shape: ONE aggregate computes every group's exact percentile
-    cuts in a single pass (``percentile(score, array(cuts))`` — the
-    cut table is group-bounded, rows = |groups|), broadcast back, and
-    the labeling is a map-only ``when`` chain.  Lower score = better
-    (avg_nll), so ``head`` holds the most-fluent documents.  NULL
-    scores (docs with no n-gram evidence) get a NULL bucket — no
-    evidence is not head material, and not tail either.
-
-    Deterministic: exact percentiles over exact float scores; ties at
-    a cut land in the lower bucket (``<=`` boundaries)."""
-    if len(labels) != len(cuts) + 1:
-        raise ValueError(
-            f"need len(cuts)+1 labels: got {len(cuts)} cuts and "
-            f"{len(labels)} labels"
-        )
-    if list(cuts) != sorted(cuts) or not all(0.0 < c < 1.0 for c in cuts):
-        raise ValueError(f"cuts must be ascending in (0, 1), got {cuts}")
-    groups = list(group_cols or [])
-    pct = F.percentile(
-        F.col(score_col), F.array(*[F.lit(float(c)) for c in cuts])
-    ).alias("_cuts")
-    if groups:
-        cut_tbl = scored.groupBy(*groups).agg(pct)
-        labeled = scored.join(F.broadcast(cut_tbl), groups, "left")
-    else:
-        cut_tbl = scored.agg(pct)
-        labeled = scored.crossJoin(F.broadcast(cut_tbl))
-    expr = F.lit(labels[-1])
-    for i in range(len(cuts) - 1, -1, -1):
-        expr = F.when(
-            F.col(score_col) <= F.element_at("_cuts", i + 1), F.lit(labels[i])
-        ).otherwise(expr)
-    expr = F.when(F.col(score_col).isNull(), F.lit(None).cast("string")).otherwise(
-        expr
-    )
-    return labeled.select(*scored.columns, expr.alias(out_col))

@@ -10,9 +10,9 @@ Two codecs:
 
 * ``codec="real"`` — PURE-PYTHON decoders for the two container-friendly
   formats: WAV (RIFF/PCM-16, ``struct``-parsed) and PPM (P6 binary RGB,
-  numpy).  Real header parsing, real sample/pixel extraction, real
-  nearest-neighbor resize — no external media library needed, and the
-  byte→feature path is deterministic, so the WAV/PPM queries are fully
+  numpy).  Real header parsing and real sample/pixel extraction — no
+  external media library needed, and the byte→feature path is
+  deterministic, so the WAV/PPM queries are fully
   DuckDB-oracle-checked (the synthesized assets are closed-form
   functions of testdata columns).  JPEG/MP4-class formats still need a
   PIL/libav dependency; they raise ``ValueError`` at the same seam.
@@ -202,15 +202,6 @@ def decode_ppm(data: bytes) -> dict:
         "height": h,
         "pixels": np.frombuffer(raw, dtype=np.uint8).reshape(h, w, 3),
     }
-
-
-def resize_nearest(pixels: np.ndarray, width: int, height: int) -> np.ndarray:
-    """Nearest-neighbor resize of a (h, w, 3) array — pure numpy index
-    arithmetic (the same sample-grid mapping PIL uses for NEAREST)."""
-    h, w, _ = pixels.shape
-    rows = (np.arange(height) * h) // height
-    cols = (np.arange(width) * w) // width
-    return pixels[rows][:, cols]
 
 
 def _real_decode(data: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
@@ -420,20 +411,6 @@ def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
             yield pd.DataFrame({"asset_id": ids, "frame_no": nos, "frame": frames})
 
     return media.mapInPandas(gen, schema=_FRAMES_SCHEMA)
-
-
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize seam: records the requested geometry in meta; the pixel
-    work belongs at the NotImplementedError in decode_features."""
-    return media.withColumn(
-        "meta",
-        F.struct(
-            F.col("meta.mime").alias("mime"),
-            F.lit(width).alias("width"),
-            F.lit(height).alias("height"),
-            F.col("meta.duration_ms").alias("duration_ms"),
-        ),
-    )
 
 
 self_contained(__name__)

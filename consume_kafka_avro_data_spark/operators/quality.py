@@ -24,7 +24,7 @@ Determinism: featurization is hash-based (no RNG); LBFGS from a fixed
 zero init is deterministic up to float aggregation order — runs are
 reproducible on a fixed layout, and tests pin classification QUALITY
 (separability on held-out docs) rather than bit-exact coefficients,
-the same convention as ``kmeans_distributed``.
+which would pin an aggregation order the engine does not promise.
 """
 
 from __future__ import annotations

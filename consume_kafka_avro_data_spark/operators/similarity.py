@@ -923,117 +923,6 @@ def semantic_dedup(
     )
 
 
-def cell_centroids(
-    assigned: DataFrame,
-    cell_col: str = "_ivf_cell",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-cell mean unit vector via a GROUPED_AGG pandas UDF — the
-    UDAF surface (SURVEY §2.7 U2).  Each cell's vectors arrive as one
-    Arrow batch; note grouped-agg UDFs ship the WHOLE group to one
-    reducer (no partial combine), so this is right when cells fit a
-    task.  For the partial-aggregating scale path use
-    ``cell_centroids_jvm``, which this is tested equal to."""
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, DoubleType
-
-    # GROUPED_AGG selected by REAL __annotations__ objects (a
-    # Series → scalar signature; `list` is the array-scalar return) —
-    # inline hints are PEP 563 strings here and the PandasUDFType enum
-    # is deprecated
-    def mean_vec(vecs):
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in vecs]).mean(axis=0)
-        return (m / max(float(np.linalg.norm(m)), 1e-12)).tolist()
-
-    mean_vec.__annotations__ = {"vecs": pd.Series, "return": list}
-    mean_vec = F.pandas_udf(mean_vec, ArrayType(DoubleType()))
-
-    # pandas aggregates cannot mix with JVM aggregates in one agg(),
-    # so the member count is a pandas aggregate too
-    def n_vec(vecs):
-        return len(vecs)
-
-    n_vec.__annotations__ = {"vecs": pd.Series, "return": int}
-    n_vec = F.pandas_udf(n_vec, "long")
-
-    return assigned.groupBy(cell_col).agg(
-        mean_vec(F.col(vec_col)).alias("centroid"),
-        n_vec(F.col(vec_col)).alias("n_members"),
-    )
-
-
-def cell_centroids_jvm(
-    assigned: DataFrame,
-    cell_col: str = "_ivf_cell",
-    vec_col: str = "embedding",
-    dim: int = 64,
-) -> DataFrame:
-    """Partial-agg centroid refresh, no Python: per-component avg over
-    the vector column (one ``avg(vec[i])`` per dimension), normalized.
-    Tungsten computes map-side partials, so the shuffle carries only
-    |cells| × dim running sums per partition — the M-step shape a
-    100 TB distributed k-means needs (the E-step is ``ivf_assign``)."""
-    comps = [
-        F.avg(F.element_at(F.col(vec_col), i + 1).cast("double")).alias(f"_m{i}")
-        for i in range(dim)
-    ]
-    agged = assigned.groupBy(cell_col).agg(*comps, F.count(F.lit(1)).alias("n_members"))
-    mean = F.array(*[F.col(f"_m{i}") for i in range(dim)])
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform(mean, lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-        )
-    )
-    return agged.select(
-        cell_col,
-        F.transform(mean, lambda x: x / F.greatest(norm, F.lit(1e-12))).alias(
-            "centroid"
-        ),
-        "n_members",
-    )
-
-
-def kmeans_distributed(
-    corpus: DataFrame,
-    k: int = 16,
-    iters: int = 5,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
-    """Full-corpus Lloyd's k-means for the IVF quantizer, distributed:
-    E-step = ``ivf_assign`` (pure JVM map-only projection over every
-    row), M-step = ``cell_centroids_jvm`` (per-component averages with
-    map-side partials).  Only the k×dim centroid matrix round-trips
-    through the driver per iteration — the scale-correct shape when the
-    corpus outgrows ``kmeans_centroids``'s driver-side sample.
-
-    Determinism note: init (first k rows by id), iteration order, and
-    empty-cell handling are all fixed, but the M-step's ``avg()`` over
-    doubles accumulates in shuffle-merge order — across DIFFERENT
-    partitionings/cluster layouts a centroid component can move by an
-    ulp, which the quantized E-step argmax can then amplify.  Runs are
-    reproducible on a fixed layout; bit-exact cross-engine reproduction
-    is what the driver-sampled :func:`kmeans_centroids` path (used by
-    every oracle-checked query) provides instead.
-    """
-    seed_rows = corpus.select(id_col, vec_col).orderBy(id_col).limit(k).collect()
-    cent = np.array([r[vec_col] for r in seed_rows], dtype=np.float64)
-    cent /= np.maximum(np.linalg.norm(cent, axis=1, keepdims=True), 1e-12)
-    for _ in range(iters):
-        assigned = ivf_assign(corpus, cent, vec_col)
-        got = {
-            r["_ivf_cell"]: r["centroid"]
-            for r in cell_centroids_jvm(
-                assigned, vec_col=vec_col, dim=dim
-            ).collect()
-        }
-        cent = np.array(
-            [got.get(c + 1, cent[c]) for c in range(len(cent))], dtype=np.float64
-        )
-    return cent
-
-
 def embedding_neardup_pairs(
     corpus: DataFrame,
     cosine_threshold: float = 0.95,

@@ -1,14 +1,14 @@
-"""Skew mitigation: salted joins and two-phase salted aggregation.
+"""Skew mitigation: salted joins.
 
 Skewed keys are the classic 100 TB failure mode: one hot key (a null
 FK, a bot user, an empty-string subject in the SPO stream) lands an
 entire shuffle partition on one task and the stage runs at straggler
 speed.  AQE's skew-join splitting (enabled in session.py) handles the
 sort-merge case automatically; the operators here are the explicit,
-deterministic fallback for when AQE can't help — aggregation skew, and
-joins where the skewed side must stay a hash join.
+deterministic fallback for when AQE can't help — joins where the
+skewed side must stay a hash join.
 
-Both use a *deterministic* salt — ``pmod(xxhash64(entire row), S)`` —
+The salt is *deterministic* — ``pmod(xxhash64(entire row), S)`` —
 never ``rand()``: results and partition placement are then reproducible
 across retries and re-runs, which matters for exactly-once sinks (a
 retried task re-produces identical salted keys, so downstream dedup
@@ -16,10 +16,7 @@ still holds).
 
 Salted join: the small side is replicated S× (explode over the salt
 range) — cost S·|small|, the standard space-for-balance trade; the
-skewed side scatters its hot keys over S tasks.  Salted aggregation:
-partial aggregate on (key, salt) — S-way fan-out of each hot key —
-then final aggregate on key; correct for any decomposable aggregate
-(sum/count/min/max, and avg as sum+count).
+skewed side scatters its hot keys over S tasks.
 """
 
 from __future__ import annotations
@@ -70,40 +67,3 @@ def salted_join(
         SALT, F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)]))
     )
     return lhs.join(rhs, keys + [SALT], how).drop(SALT)
-
-
-def salted_sum_count(
-    df: DataFrame,
-    keys: str | list[str],
-    value_cols: str | list[str],
-    salt_buckets: int = 64,
-) -> DataFrame:
-    """Two-phase skew-safe aggregation: per-key sum and count of each
-    value column.
-
-    Phase 1 shuffles on (keys, salt) — a hot key fans out over
-    ``salt_buckets`` reducers instead of melting one — and pre-sums;
-    phase 2 shuffles only the tiny partial table on keys.  Decimal
-    partials stay exact, so the result is identical to a direct
-    ``groupBy(keys).agg(sum, count)`` (Spark's own map-side partial
-    aggregation gives the same effect per-partition; explicit salting
-    also balances the *reduce* side, which partials cannot).
-    """
-    keys = [keys] if isinstance(keys, str) else list(keys)
-    vals = [value_cols] if isinstance(value_cols, str) else list(value_cols)
-
-    partial = (
-        df.withColumn(SALT, _row_salt(df, salt_buckets))
-        .groupBy(*keys, SALT)
-        .agg(
-            *[F.sum(F.col(v).cast("decimal(18,4)")).alias(f"_s_{v}") for v in vals],
-            F.count(F.lit(1)).alias("_n"),
-        )
-    )
-    return partial.groupBy(*keys).agg(
-        *[
-            F.sum(f"_s_{v}").cast("double").alias(f"sum_{v}")
-            for v in vals
-        ],
-        F.sum("_n").alias("n_rows"),
-    )

@@ -230,34 +230,6 @@ def winnow_fingerprint_counts(
     )
 
 
-def make_chunk_udtf():
-    """A literal Python UDTF (SURVEY §2.7 U3, Spark 3.5+ ``@udtf``):
-    one document row → many overlapping token-window chunk rows.
-
-    The PRODUCTION chunking path is queries/text.py::q_doc_chunks —
-    pure codegen (sequence/transform/posexplode), which this UDTF is
-    unit-tested equal to.  The UDTF form exists because the lateral-
-    function surface is part of the engine's API: it composes in SQL
-    (``SELECT ... FROM docs, chunks(text, 32, 24)``) where an ad-hoc
-    fan-out doesn't justify hand-building the expression tree.  Python
-    UDTFs run row-at-a-time — keep them off the 100 TB hot path.
-
-    Built lazily (a factory) because ``@udtf`` objects don't pickle for
-    reuse across sessions.
-    """
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="chunk_no int, chunk string, n_chunk_tokens int")
-    class ChunkUDTF:
-        def eval(self, text: str, size: int, stride: int):  # noqa: D102
-            toks = (text or "").lower().split()
-            for no, s in enumerate(range(0, max(len(toks), 1), stride)):
-                window = toks[s : s + size]
-                yield no, " ".join(window), len(window)
-
-    return ChunkUDTF
-
-
 # ---------------------------------------------------------------------------
 # tf-idf + sentiment lexicon (SURVEY §2.7 U7)
 # ---------------------------------------------------------------------------
@@ -464,7 +436,8 @@ def bpe_train(
     """Learn a BPE merge table from a corpus (Sennrich 2016).  Returns
     the merges in training order — the driver-sized artifact
     (``n_merges`` string pairs) a deployment persists next to its
-    tokenizer config; apply with :func:`bpe_segment`.
+    tokenizer config; an encoder applies it by merging each word's
+    lowest-rank adjacent pair until none is in the table.
 
     Deterministic: pair argmax tie-breaks on (count desc, a asc, b asc),
     so equal-frequency corpora train identical tables on any cluster
@@ -630,94 +603,6 @@ def c4_clean(
         F.size(kept).cast("int").alias("n_lines_kept"),
         doc_ok.alias("c4_keep"),
     )
-
-
-def bpe_save(spark, merges: list[tuple[str, str]], path: str) -> None:
-    """Persist a trained merge table as ONE JSON file (n_merges string
-    pairs — driver-sized by construction), tmp-then-rename atomic
-    commit via fsio: the train-once/encode-many artifact, matching the
-    unigram/DSIR persistence contract."""
-    import json
-
-    from consume_kafka_avro_data_spark.fsio import fs_for
-
-    io = fs_for(spark, path)
-    payload = {"version": 1, "merges": [[a, b] for a, b in merges]}
-    tmp = path + ".tmp"
-    io.write_bytes(tmp, json.dumps(payload).encode())
-    io.rename_overwrite(tmp, path)
-
-
-def bpe_load(spark, path: str) -> list[tuple[str, str]]:
-    """Reopen a saved merge table — see ``bpe_save``."""
-    import json
-
-    from consume_kafka_avro_data_spark.fsio import fs_for
-
-    io = fs_for(spark, path)
-    payload = json.loads(io.read_bytes(path))
-    return [(a, b) for a, b in payload["merges"]]
-
-
-def bpe_segment(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    out_col: str = "bpe_pieces",
-) -> DataFrame:
-    """Encode text with a learned merge table: pre-tokenize with the
-    shared splitter, then per word repeatedly merge the LOWEST-RANK
-    adjacent pair (the canonical BPE encode order).  Arrow-batched
-    pandas UDF — the per-word merge loop is inherently sequential
-    per row, and n_merges rank lookups per pair beat any SQL encoding
-    of an m-step fold; the merge table broadcasts as a closure (it is
-    n_merges pairs, driver-sized)."""
-    import re
-
-    import pandas as pd
-
-    ranks = {pair: i for i, pair in enumerate(merges)}
-    pretoken = re.compile(BPE_PRETOKEN_RE)
-
-    def encode_word(word: str) -> list[str]:
-        syms = list(word[:-1]) + [word[-1] + BPE_EOW]
-        while len(syms) > 1:
-            best_i, best_r = -1, len(ranks)
-            for i in range(len(syms) - 1):
-                r = ranks.get((syms[i], syms[i + 1]), len(ranks))
-                if r < best_r:
-                    best_i, best_r = i, r
-            if best_i < 0:
-                break
-            syms[best_i : best_i + 2] = [syms[best_i] + syms[best_i + 1]]
-        return syms
-
-    # Iterator-of-series form (amortizes the closure/rank-table setup
-    # once per partition, not per Arrow batch).  The eval type comes
-    # from type hints — but this module uses PEP 563 string annotations
-    # and pandas is a local import, so inline hints would not resolve;
-    # assigning REAL type objects to __annotations__ sidesteps both
-    # (typing.get_type_hints returns non-string annotations verbatim)
-    # without the deprecated PandasUDFType enum.
-    from typing import Iterator
-
-    def seg(batches):
-        for texts in batches:
-            out = []
-            for t in texts:
-                pieces: list[str] = []
-                for w in pretoken.findall(t or ""):
-                    pieces.extend(encode_word(w))
-                out.append(pieces)
-            yield pd.Series(out)
-
-    seg.__annotations__ = {
-        "batches": Iterator[pd.Series],
-        "return": Iterator[pd.Series],
-    }
-    seg_udf = F.pandas_udf(seg, returnType="array<string>")
-
-    return df.withColumn(out_col, seg_udf(F.col(text_col)))
 
 
 #: The published Gopher REPETITION-removal thresholds (Rae et al. 2021,

@@ -488,8 +488,8 @@ def unigram_segment(
 ) -> DataFrame:
     """Encode text with a trained unigram model: pre-tokenize with the
     shared splitter, segment each word, concatenate.  Arrow-batched
-    pandas UDF (iterator-of-series form, the ``bpe_segment``
-    convention) with a per-partition word→pieces memo — natural text
+    pandas UDF (iterator-of-series form, so the closure is set up once
+    per partition) with a per-partition word→pieces memo — natural text
     repeats word types heavily, so most rows hit the cache.  The model
     broadcasts as a closure (vocab-bounded, driver-sized).
 
@@ -564,37 +564,6 @@ def unigram_segment(
     }
     seg_udf = F.pandas_udf(seg, returnType="array<string>")
     return df.withColumn(out_col, seg_udf(F.col(text_col)))
-
-
-def segmentation_stats(
-    df: DataFrame, pieces_col: str, text_col: str = "text"
-) -> DataFrame:
-    """Tokenizer evaluation over an encoded frame (works on
-    ``unigram_segment`` and ``bpe_segment`` output alike): fertility
-    (pieces per pre-token word — the number tokenizer papers compare;
-    Kudo 2018 §5, Rust et al. 2021) and compression (characters per
-    piece).  ONE bounded aggregate, all JVM expressions; returns a
-    single row (n_docs, total_words, total_pieces, fertility,
-    chars_per_piece) so two tokenizers can be compared by two cheap
-    scans instead of materializing either encoding."""
-    from .text import bpe_ish_tokens
-
-    words = bpe_ish_tokens(text_col)
-    n_words = F.size(words)
-    n_chars = F.aggregate(
-        words, F.lit(0), lambda acc, w: acc + F.length(w)
-    )
-    return df.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(n_words).cast("long").alias("total_words"),
-        F.sum(F.size(F.col(pieces_col))).cast("long").alias("total_pieces"),
-        (
-            F.sum(F.size(F.col(pieces_col))) / F.sum(n_words)
-        ).alias("fertility"),
-        (F.sum(n_chars) / F.sum(F.size(F.col(pieces_col)))).alias(
-            "chars_per_piece"
-        ),
-    )
 
 
 def corpus_nll(

@@ -55,7 +55,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     produces the session table itself (start/end/volume) — the input to
     retention and funnel work.  One shuffle on user_id serves the lag,
     the running sum, and the final aggregate (same partition key); the
-    batch twin of ``F.session_window`` (streaming/windows.py).
+    batch twin of a streaming ``F.session_window(ts, '30 minutes')``.
     """
     e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("event_id")

@@ -17,7 +17,6 @@ F.aggregate ≡ DuckDB list(ORDER BY) + list_reduce) are bit-identical;
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
-from pyspark.sql.types import LongType, StructField, StructType
 
 from consume_kafka_avro_data_spark.functions.textops import (
     census_token_stream,
@@ -1270,128 +1269,10 @@ def token_budget_fill(d: DataFrame, budget: int) -> DataFrame:
     )
 
 
-def temperature_quotas(
-    counts: dict[str, int], alpha: float, budget: int
-) -> dict[str, int]:
-    """Per-group document quotas ∝ n_g^α summing EXACTLY to ``budget``
-    (largest-remainder apportionment over the group-bounded counts —
-    pure driver math), with quotas capped at group size and the excess
-    re-apportioned among uncapped groups until stable.  α < 1 is the
-    published temperature-sampling upweighting of small groups
-    (Conneau & Lample 2019, XLM; Xue et al. 2021, mT5); α = 1 is
-    proportional, α = 0 uniform."""
-    if not 0.0 <= alpha <= 1.0:
-        raise ValueError("alpha must be in [0, 1]")
-    if budget < 0:
-        raise ValueError("budget must be non-negative")
-    if budget > sum(counts.values()):
-        raise ValueError(
-            f"budget {budget} exceeds the corpus ({sum(counts.values())} docs)"
-        )
-    quotas = {g: 0 for g in counts}
-    open_groups = {g for g, n in counts.items() if n > 0}
-    remaining = budget
-    while remaining and open_groups:
-        mass = {g: counts[g] ** alpha for g in open_groups}
-        total = sum(mass.values())
-        shares = {g: remaining * mass[g] / total for g in open_groups}
-        floors = {g: int(shares[g]) for g in open_groups}
-        leftover = remaining - sum(floors.values())
-        # largest remainder, ties by group name — deterministic
-        order = sorted(
-            open_groups, key=lambda g: (-(shares[g] - floors[g]), g)
-        )
-        alloc = {
-            g: floors[g] + (1 if i < leftover else 0)
-            for i, g in enumerate(order)
-        }
-        # Σ alloc == remaining by construction (floors + exactly
-        # `leftover` largest-remainder +1s), so every iteration either
-        # exhausts the budget or caps (and closes) at least one group
-        # — termination without any fallback branch
-        for g in list(open_groups):
-            room = counts[g] - quotas[g]
-            take = min(alloc[g], room)
-            quotas[g] += take
-            remaining -= take
-            if quotas[g] == counts[g]:
-                open_groups.discard(g)
-    return quotas
-
-
-def temperature_mix(
-    d: DataFrame, group_col: str, alpha: float, budget: int
-) -> DataFrame:
-    """Temperature-sampled training mix: select ``budget`` documents
-    with per-group quotas ∝ n_g^α (small groups upweighted at α < 1 —
-    the multilingual-pretraining recipe), filled deterministically in
-    content-addressed-hash order so the mix is stable under re-runs,
-    cluster layouts, and corpus appends (the ``token_budget_fill``
-    convention).  Requires a ``doc_id`` column — it is the hash input
-    and tie-break that makes the fill order content-addressed.  Plan:
-    one group-bounded count aggregate (quotas are driver math over
-    it), then one shuffle on the group key for the rank-and-cut;
-    output is budget-bounded, not corpus-bounded."""
-    if "doc_id" not in d.columns:
-        raise ValueError(
-            "temperature_mix needs a doc_id column (the deterministic "
-            "content-addressed fill key)"
-        )
-    # internal working columns must not collide with caller columns
-    # (a frame already carrying 'g' or 'quota' would make the join and
-    # the final drop ambiguous) — suffix-uniquify, the dsir_resample
-    # '_dsir_key' pattern
-    rk_c, g_c, q_c = "_rk", "_g", "_quota"
-    while rk_c in d.columns or g_c in d.columns or q_c in d.columns:
-        rk_c, g_c, q_c = rk_c + "_", g_c + "_", q_c + "_"
-    counts = {
-        r[g_c]: r["n"]
-        for r in d.groupBy(F.col(group_col).alias(g_c))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    quotas = temperature_quotas(counts, alpha, budget)
-    spark = d.sparkSession
-    qdf = spark.createDataFrame(
-        [(g, q) for g, q in quotas.items()],
-        StructType(
-            [
-                StructField(g_c, d.schema[group_col].dataType),
-                StructField(q_c, LongType()),
-            ]
-        ),
-    )
-    w = Window.partitionBy(group_col).orderBy(
-        F.md5(F.col("doc_id").cast("string")), "doc_id"
-    )
-    return (
-        d.withColumn(rk_c, F.row_number().over(w))
-        .join(
-            F.broadcast(qdf),  # group-bounded by construction
-            on=F.col(group_col).eqNullSafe(F.col(g_c)),
-        )
-        .where(F.col(rk_c) <= F.col(q_c))
-        .drop(rk_c, g_c, q_c)
-    )
-
-
-def corpus_drift_between(
-    snap_a: DataFrame, snap_b: DataFrame, head_k: int = 4096
-) -> DataFrame:
-    """``corpus_drift`` between two EXPLICIT document frames — the
-    production call shape ("yesterday's crawl vs today's"): tag, union,
-    and run the same census.  Both frames need (lang, text)."""
-    tagged = snap_a.select(
-        F.lit(0).alias("snap"), "lang", "text"
-    ).unionByName(snap_b.select(F.lit(1).alias("snap"), "lang", "text"))
-    return _corpus_drift_census(tagged, head_k)
-
-
 def corpus_drift(docs: DataFrame, head_k: int = 4096) -> DataFrame:
     """Per-language corpus drift between two snapshots (here doc_id
-    parity, the self-contained form the driver-checked query uses;
-    ``corpus_drift_between`` takes two explicit frames): head
-    total-variation distance between the snapshots' unigram
+    parity, the self-contained form the driver-checked query uses):
+    head total-variation distance between the snapshots' unigram
     distributions, plus vocab churn counts.
 
     Parity/scale design: per-term probabilities are exact double
@@ -1418,9 +1299,7 @@ def corpus_drift(docs: DataFrame, head_k: int = 4096) -> DataFrame:
 
 
 def _corpus_drift_census(tagged: DataFrame, head_k: int) -> DataFrame:
-    """The census over a (snap ∈ {0,1}, lang, text) frame — shared by
-    the parity form (``corpus_drift``) and the two-frame form
-    (``corpus_drift_between``)."""
+    """The census over a (snap ∈ {0,1}, lang, text) frame."""
     tk = census_token_stream(tagged, "lang", "snap")
     tc = tk.groupBy("lang", "tok").agg(
         F.sum(F.when(F.col("snap") == 0, 1).otherwise(0)).alias("cnt_a"),

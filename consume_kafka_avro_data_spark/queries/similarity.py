@@ -702,9 +702,7 @@ def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs (Hamming ≤ 3), fully oracle-checked via
     the portable md5-hex-vote signature: candidates come from pigeonhole
     blocks of the hex string and the Hamming verify is a per-digit XOR
-    popcount — both reproduced exactly by the DuckDB twin.  The xxhash64
-    simhash64/simhash_neardup_pairs pair stays the scale path (pinned by
-    tests/test_llm_ops.py)."""
+    popcount — both reproduced exactly by the DuckDB twin."""
     return simhash_hex_neardup_pairs(load_table(spark, sf_dir, "documents"))
 
 

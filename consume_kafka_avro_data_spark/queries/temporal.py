@@ -32,8 +32,8 @@ SESSION_GAP_US = 1_800_000_000
 )
 def q_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling-window aggregate (T6, batch analogue): 1-hour buckets ×
-    event type.  In streaming this is ``F.window(ts, '1 hour')`` +
-    watermark (streaming/windows.py); the bucket math is identical.
+    event type.  In streaming this is ``F.window(ts, '1 hour')`` after
+    ``withWatermark``; the bucket math is identical.
     """
     e = load_table(spark, sf_dir, "events")
     return e.groupBy(

@@ -65,7 +65,7 @@ def _row_is_rows_only_ok(row: dict) -> bool:
     return row.get("err") in (None, "no_oracle") and row.get("spark_rows") is not None
 
 
-def _scan_artifacts(repo_dir: str) -> tuple[dict[str, int], dict[str, int]]:
+def freshest_evidence(repo_dir: str) -> tuple[dict[str, int], dict[str, int]]:
     """One pass over every committed artifact: (hash-green rounds,
     rows-only-ok rounds), each query -> its highest such round.
     Unreadable/corrupt artifacts are skipped: a broken file must not
@@ -94,28 +94,6 @@ def _scan_artifacts(repo_dir: str) -> tuple[dict[str, int], dict[str, int]]:
                 if rnd > rows_only.get(name, 0):
                     rows_only[name] = rnd
     return green, rows_only
-
-
-def freshest_evidence(
-    repo_dir: str,
-) -> tuple[dict[str, int], dict[str, int]]:
-    """(hash-green rounds, rows-only-ok rounds) in ONE artifact scan —
-    the standard caller needs both, and two separate accessors would
-    re-open and re-parse every round's artifact twice per ordering."""
-    return _scan_artifacts(repo_dir)
-
-
-def freshest_green(repo_dir: str) -> dict[str, int]:
-    """Map query name -> highest round with a HASH-GREEN verdict.
-    Rows-only evidence deliberately does not count here — see the
-    module policy."""
-    return _scan_artifacts(repo_dir)[0]
-
-
-def freshest_rows_only(repo_dir: str) -> dict[str, int]:
-    """Map query name -> highest round with a rows-only-ok verdict
-    (the driver's weaker no-oracle check)."""
-    return _scan_artifacts(repo_dir)[1]
 
 
 def exposure_order(

@@ -1,3 +1,3 @@
 """Structured Streaming operators: the reference's stream lifecycle
-(poll loop, bounded replay, graceful shutdown, idempotent sink) plus the
-EXT windowed/stateful closure."""
+(poll loop, bounded replay, graceful shutdown, idempotent sink) and the
+curation ingests that ride it."""

@@ -146,7 +146,6 @@ class StreamingDedupIngest(BoundedReplayMixin):
         contam_min_hits: int = 1,
         contam_dir: str | None = None,
         drift_monitor=None,
-        sketch_monitor=None,
     ):
         """``id_type`` is the document-id column's Spark type (default
         LongType) — it shapes the persisted store schema, so a stream
@@ -278,14 +277,6 @@ class StreamingDedupIngest(BoundedReplayMixin):
         the stream must carry the monitor's expected columns
         (``lang`` + ``text``).  Replay stays consistent: the monitor
         keys by the same batch id this ingest's sinks key by.
-
-        ``sketch_monitor`` (a ``streaming/sketches.
-        StreamingSketchMonitor``) rides the same foreachBatch under
-        the same raw-batch / replay contract: it watches its
-        configured key column's cardinality, duplication factor, and
-        heavy hitters over what ARRIVES — so the pipeline can compare
-        "duplicates delivered" (sketch view) against "duplicates this
-        ingest actually removed" (dup_docs) from one stream scan.
 
         ``tune_for=(jaccard_threshold, num_hashes)`` (round 9) designs
         the banding scheme through ``operators/dedup.tune_lsh_params``
@@ -451,7 +442,6 @@ class StreamingDedupIngest(BoundedReplayMixin):
             io.rename_overwrite(pf + ".tmp", pf)
         self.metrics = self._new_metrics()
         self.drift_monitor = drift_monitor
-        self.sketch_monitor = sketch_monitor
 
     def _reset(self) -> None:
         # a monitor riding this ingest shares its run lifecycle: a new
@@ -460,8 +450,6 @@ class StreamingDedupIngest(BoundedReplayMixin):
         super()._reset()
         if self.drift_monitor is not None:
             self.drift_monitor._reset()
-        if self.sketch_monitor is not None:
-            self.sketch_monitor._reset()
 
     def gate_census(self) -> dict:
         """Aggregated per-gate census, in funnel order: ``{gate:
@@ -745,9 +733,6 @@ class StreamingDedupIngest(BoundedReplayMixin):
             # RAW batch, before any gate: drift is about what's
             # arriving; the monitor replaces its own counts on replay
             self.drift_monitor.process_batch(batch, batch_id)
-        if self.sketch_monitor is not None:
-            # same raw-batch / replace-on-replay contract
-            self.sketch_monitor.process_batch(batch, batch_id)
         idc = self.id_col
         held: list[DataFrame] = []  # checkpoints, released when the batch ends
         try:

@@ -78,15 +78,9 @@ SLOW_TESTS = {
     "test_graph.py::test_compact_preserves_rows_and_reduces_files",
     "test_graph.py::test_connected_components_long_path_converges_fast",
     "test_graph.py::test_engine_state_sql_views",
-    "test_k_core.py::test_core_numbers_model_reference_and_kcore_law",
-    "test_k_core.py::test_core_numbers_power_law_hub",
-    "test_k_core.py::test_core_numbers_width_free_matches_legacy_kernel",
-    "test_k_core.py::test_models_reference_on_any_graph",
     "test_label_propagation.py::test_lpa_models_reference_on_any_graph",
-    "test_llm_ops.py::test_kmeans_distributed_deterministic_and_improving",
     "test_llm_ops.py::test_signature_forms_agree_on_null_and_empty_text",
     "test_llm_ops.py::test_signature_tables_equal_hof_columns",
-    "test_llm_ops.py::test_simhash_identity_and_locality",
     "test_lsh_tuning.py::test_tune_for_parity_across_banding_consumers",
     "test_ngram_lm.py::test_flat_kernel_identical_to_relational",
     "test_ngram_lm.py::test_local_tables_guard_and_reuse",
@@ -94,9 +88,6 @@ SLOW_TESTS = {
     "test_ngram_lm.py::test_score_broadcast_at_orders_2_and_5",
     "test_ngram_lm.py::test_score_broadcast_exact_huge_and_null_ids",
     "test_ngram_lm.py::test_score_broadcast_property_random_corpora",
-    "test_personalized_pagerank.py::test_early_stop_never_fires_before_the_bound",
-    "test_personalized_pagerank.py::test_models_reference_on_any_graph",
-    "test_personalized_pagerank.py::test_tol_early_stop_matches_fixed_iters",
     "test_pipeline_compose.py::test_end_to_end_pipeline",
     "test_properties.py::test_asof_join_fuzz_vs_pandas_merge_asof",
     "test_properties.py::test_corpus_drift_matches_python_model",
@@ -107,23 +98,17 @@ SLOW_TESTS = {
     "test_properties.py::test_keep_one_spares_exactly_the_canonical_occurrence",
     "test_properties.py::test_kn_per_context_mass_is_one",
     "test_properties.py::test_minhash_estimator_vs_exact_jaccard_model",
-    "test_properties.py::test_pack_sequences_models_driver_prefix_sum",
     "test_properties.py::test_temperature_resample_targets_exact",
     "test_properties.py::test_unigram_model_is_distribution_with_full_coverage",
     "test_properties.py::test_union_except_intersect_model_multiset_algebra",
     "test_properties.py::test_zorder_key_interleave_roundtrip",
     "test_shortest_paths.py::test_bfs_models_reference_on_any_graph",
-    "test_shortest_paths.py::test_weighted_models_dijkstra_on_any_graph",
     "test_sketches.py::test_heavy_hitters_guarantee_law",
     "test_streaming.py::test_checkpoint_resume_processes_only_new_data",
-    "test_streaming.py::test_custom_stateful_running_stats",
     "test_streaming.py::test_dlq_json_recovery_feeds_back_into_graph",
     "test_streaming.py::test_graph_ingest_auto_compaction_replay_safe",
     "test_streaming.py::test_stream_ingest_end_to_end",
     "test_streaming.py::test_stream_replay_is_idempotent",
-    "test_streaming.py::test_stream_stream_join_attribution",
-    "test_streaming.py::test_stream_stream_join_shared_column_names",
-    "test_streaming.py::test_watermark_drops_late_data_across_restarts",
     "test_streaming_ann.py::test_index_compact_merges_generations_and_noops_folded_replays",
     "test_streaming_ann.py::test_index_compact_subset_folds_only_named_dirs",
     "test_streaming_ann.py::test_streaming_ann_auto_compaction_replay_safe",
@@ -152,10 +137,6 @@ SLOW_TESTS = {
     "test_streaming_drift.py::test_ingest_reset_resets_attached_monitor",
     "test_streaming_drift.py::test_null_lang_stream_matches_null_lang_reference",
     "test_streaming_drift.py::test_replay_replaces_batch_counts",
-    "test_streaming_sketches.py::test_column_choice_and_empty_state",
-    "test_streaming_sketches.py::test_merged_view_equals_batch_computation",
-    "test_streaming_sketches.py::test_replay_is_idempotent",
-    "test_streaming_sketches.py::test_sketch_monitor_rides_the_dedup_ingest",
     "test_unigram.py::test_character_coverage_and_vocab_size",
     "test_unigram.py::test_em_improves_likelihood",
     "test_unigram.py::test_layout_independence",
@@ -163,7 +144,6 @@ SLOW_TESTS = {
     "test_unigram.py::test_sampling_is_deterministic_and_diverse",
     "test_unigram.py::test_save_load_bit_identical",
     "test_unigram.py::test_segment_round_trip_and_memo",
-    "test_unigram.py::test_segmentation_stats_compare_tokenizers",
     "test_unigram.py::test_trainer_matches_reference_implementation",
 }
 

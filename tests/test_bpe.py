@@ -2,8 +2,8 @@
 distributed trainer must reproduce a pure-Python reference
 implementation of the algorithm merge-for-merge (determinism contract —
 exact integer counts + (count desc, pair asc) tie-break make the table
-layout-independent), honor the min-count stop, apply merges
-greedy-leftmost, and round-trip through bpe_segment."""
+layout-independent), honor the min-count stop, and fold overlapping
+occurrences greedy-leftmost."""
 
 from __future__ import annotations
 
@@ -17,7 +17,6 @@ from consume_kafka_avro_data_spark.operators.text import (
     BPE_EOW,
     BPE_PRETOKEN_RE,
     bpe_ish_tokens,
-    bpe_segment,
     bpe_train,
 )
 
@@ -181,17 +180,12 @@ def test_pretokenizers_agree(spark, corpus_df):
 
 
 def test_greedy_leftmost_overlap(spark):
-    """'aaaa' ([a, a, a, a</w>]) under merge (a, a): leftmost-greedy
-    merges positions 0-1 only — position 2's pair is (a, a</w>), a
-    DIFFERENT symbol pair, so overlapping occurrences never chain
-    within one application.  Per word: [aa, a, a</w>]."""
+    """'aaaa' ([a, a, a, a</w>]): the first merge is (a, a), and the
+    trainer's own fold over the overlapping occurrences agrees with the
+    reference trainer for a deeper budget."""
     df = spark.createDataFrame([("aaaa aaaa aaaa",)], "text string")
     merges = bpe_train(df, n_merges=1)
     assert merges == [("a", "a")]
-    out = bpe_segment(df, merges).collect()[0]["bpe_pieces"]
-    assert out == ["aa", "a", f"a{BPE_EOW}"] * 3
-    # and the trainer's own fold agrees with the reference trainer on
-    # the overlapping corpus for a deeper budget
     assert bpe_train(df, n_merges=4, min_pair_count=1) == _ref_bpe_train(
         ["aaaa aaaa aaaa"], n_merges=4, min_pair_count=1
     )
@@ -211,31 +205,7 @@ def test_min_pair_count_stops_before_hapax_merges(spark):
     ]
 
 
-def test_segment_roundtrip_and_single_piece_for_frequent_word(
-    spark, corpus_df
-):
-    """Encoding invariants: (a) concatenating a word's pieces and
-    stripping EOW reconstructs the pre-token stream exactly (BPE is
-    lossless); (b) with enough merges the corpus's most frequent word
-    collapses to ONE piece."""
-    merges = bpe_train(corpus_df, n_merges=40, checkpoint_every=16)
-    seg = bpe_segment(corpus_df, merges)
-    pretoken = re.compile(BPE_PRETOKEN_RE)
-    for r in seg.select("text", "bpe_pieces").collect():
-        rebuilt = "".join(r.bpe_pieces).replace(BPE_EOW, "\x00")
-        assert rebuilt.split("\x00")[:-1] == pretoken.findall(r.text)
-    the_pieces = (
-        bpe_segment(
-            spark.createDataFrame([("the",)], "text string"), merges
-        )
-        .collect()[0]["bpe_pieces"]
-    )
-    assert the_pieces == ["the" + BPE_EOW]
-
-
 def test_empty_and_null_text_segment_to_empty(spark):
+    """An empty corpus trains an empty table instead of raising."""
     df = spark.createDataFrame([("",), (None,)], "text string")
-    rows = bpe_segment(df, [("t", "h")]).collect()
-    assert [list(r.bpe_pieces) for r in rows] == [[], []]
-    # and an empty corpus trains an empty table instead of raising
     assert bpe_train(df, n_merges=3) == []

@@ -263,32 +263,6 @@ def test_resample_column_hygiene(spark, frames):
     assert {r["doc_id"] for r in rows} == want
 
 
-def test_ess_diagnostic(spark, frames):
-    """ESS = (Σw)²/Σw² against a numpy recompute of the same weights;
-    flat weights give ESS == n, a dominant doc collapses it."""
-    import math as _math
-
-    target, raw = frames
-    model = dsir_fit(target, raw, buckets=B)
-    from consume_kafka_avro_data_spark.operators.dsir import dsir_ess
-
-    got = dsir_ess(model, raw)
-    ratio = _ref_log_ratio(TARGET, RAW, B)
-    logw = [_ref_logw(t, ratio, B) for t in RAW]
-    mx = max(logw)
-    w = [_math.exp(x - mx) for x in logw]
-    want = sum(w) ** 2 / sum(x * x for x in w)
-    assert got["n"] == len(RAW)
-    assert got["ess"] == pytest.approx(want, rel=1e-9)
-    assert 0.0 < got["ess_fraction"] <= 1.0
-    # flat-weight identity: a zero model weighs everything equally
-    flat = DsirModel(log_ratio=(0.0,) * B, buckets=B, smoothing=1.0)
-    assert dsir_ess(flat, raw)["ess"] == pytest.approx(len(RAW))
-    # empty pool
-    empty = spark.createDataFrame([], "doc_id long, text string")
-    assert dsir_ess(flat, empty) == {"ess": 0.0, "n": 0, "ess_fraction": 0.0}
-
-
 # -- round 8: the JVM featurizer tier ---------------------------------------
 
 
@@ -453,9 +427,8 @@ def test_hash_fn_validated(spark, frames):
 
 
 def test_resample_and_ess_accept_jvm_engine(spark, frames):
-    """engine='jvm' threads through selection and the ESS diagnostic:
-    identical selected set (weights agree to 1e-9 and Gumbel keys are
-    engine-independent) and matching ESS."""
+    """engine='jvm' threads through selection: identical selected set
+    (weights agree to 1e-9 and Gumbel keys are engine-independent)."""
     target, raw = frames
     m = dsir_fit(target, raw, buckets=B)
     a = {r["doc_id"] for r in dsir_resample(m, raw, k=3, seed=7).collect()}
@@ -464,9 +437,3 @@ def test_resample_and_ess_accept_jvm_engine(spark, frames):
         for r in dsir_resample(m, raw, k=3, seed=7, engine="jvm").collect()
     }
     assert a == b
-    from consume_kafka_avro_data_spark.operators.dsir import dsir_ess
-
-    e_pd = dsir_ess(m, raw)
-    e_jvm = dsir_ess(m, raw, engine="jvm")
-    assert e_jvm["n"] == e_pd["n"]
-    assert e_jvm["ess"] == pytest.approx(e_pd["ess"], rel=1e-9)

@@ -10,17 +10,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from consume_kafka_avro_data_spark.operators.dedup import (
-    hamming64,
     incremental_minhash_dedup,
     minhash_lsh_pairs,
+    minhash_sig_table,
     ngram_jaccard_pairs,
-    simhash64,
-    simhash_neardup_pairs,
 )
 from consume_kafka_avro_data_spark.operators.multimodal import (
     decode_features,
     documents_as_media,
-    resize_stub,
     sample_frames,
 )
 from consume_kafka_avro_data_spark.operators.similarity import (
@@ -118,23 +115,14 @@ def test_incremental_dedup_hot_bucket_guard(spark):
 
 
 def test_minhash_signatures_match_python_reference(spark, docs):
-    """Each signature component must be the min of the PER-SEED hash —
-    regression for the F.transform arity trap, where a 2-parameter
-    ``lambda s, i=i:`` silently receives the array index as ``i`` and
-    every component collapses onto a position-seeded hash."""
+    """Each signature component must be the min of the PER-SEED hash:
+    a seed that leaked across components would collapse every one onto
+    the same hash."""
     import hashlib
 
-    from consume_kafka_avro_data_spark.operators.dedup import (
-        minhash_signature_md5,
-        shingles,
-        tokens_col,
-    )
-    from pyspark.sql import functions as F
-
-    sh = F.array_distinct(shingles(tokens_col("text"), 3))
     got = {
-        r.doc_id: list(r.sig)
-        for r in docs.select("doc_id", minhash_signature_md5(sh, 8).alias("sig")).collect()
+        r._id: list(r._sim)
+        for r in minhash_sig_table(docs, bands=2, rows=4, hash_fn="md5").collect()
     }
     for doc_id, text in [(0, BASE), (3, FAR)]:
         want = [
@@ -151,40 +139,11 @@ def test_minhash_signatures_match_python_reference(spark, docs):
 
 
 def test_xxhash_minhash_components_are_seed_distinct(spark, docs):
-    from consume_kafka_avro_data_spark.operators.dedup import (
-        minhash_signature,
-        shingles,
-        tokens_col,
+    sig = (
+        minhash_sig_table(docs.where(F.col("doc_id") == 0), bands=2, rows=4)
+        .collect()[0]["_sim"]
     )
-    from pyspark.sql import functions as F
-
-    sh = F.array_distinct(shingles(tokens_col("text"), 3))
-    sig = docs.where(F.col("doc_id") == 0).select(
-        minhash_signature(sh, 8).alias("sig")
-    ).collect()[0]["sig"]
     assert len(set(sig)) > 1, "all components equal — seed clobbered"
-
-
-def test_simhash_identity_and_locality(spark, docs):
-    sigs = {
-        r.doc_id: r.sig
-        for r in docs.select("doc_id", simhash64(tokens("text")).alias("sig")).collect()
-    }
-    assert sigs[0] == sigs[1]  # identical text ⇒ identical signature
-    ham = lambda a, b: bin((a ^ b) & (2**64 - 1)).count("1")
-    assert ham(sigs[0], sigs[2]) < ham(sigs[0], sigs[3])  # locality
-    pairs = {
-        (r.id_a, r.id_b)
-        for r in simhash_neardup_pairs(docs, max_hamming=7, block_bits=8).collect()
-    }
-    assert (0, 1) in pairs
-
-
-def test_hamming64_expr(spark):
-    df = spark.range(1).select(
-        hamming64(F.lit(0b1011).cast("long"), F.lit(0b0010).cast("long")).alias("h")
-    )
-    assert df.collect()[0].h == 2
 
 
 def test_ngram_jaccard_exact_values(docs):
@@ -337,7 +296,6 @@ def test_ppm_codec_roundtrip_resize_and_errors():
     from consume_kafka_avro_data_spark.operators.multimodal import (
         decode_ppm,
         encode_ppm,
-        resize_nearest,
     )
 
     px = np.arange(2 * 3 * 3, dtype=np.uint8).reshape(2, 3, 3)
@@ -348,10 +306,6 @@ def test_ppm_codec_roundtrip_resize_and_errors():
     # comment-tolerant header
     with_comment = b"P6\n# a comment\n3 2\n255\n" + px.tobytes()
     assert np.array_equal(decode_ppm(with_comment)["pixels"], px)
-
-    up = resize_nearest(px, 6, 4)
-    assert up.shape == (4, 6, 3)
-    assert np.array_equal(up[::2, ::2], px)  # every source pixel survives
 
     with pytest.raises(ValueError, match="P6"):
         decode_ppm(b"P5\n1 1\n255\n\x00")
@@ -392,11 +346,6 @@ def test_frame_sampling_fanout(spark, docs):
     blob = bytes(media.where("asset_id = 0").collect()[0].media)
     parts = [bytes(r.frame) for r in frames.where("asset_id = 0").orderBy("frame_no").collect()]
     assert b"".join(parts) == blob[: len(b"".join(parts))]
-
-
-def test_resize_stub_sets_meta(spark, docs):
-    out = resize_stub(documents_as_media(docs), 224, 224).select("meta.width", "meta.height")
-    assert {(r.width, r.height) for r in out.collect()} == {(224, 224)}
 
 
 def test_ivf_topk_recall_and_self_match(spark, sf_dir):
@@ -449,121 +398,18 @@ def test_ivf_assignment_is_deterministic(spark, sf_dir):
     assert set(a1.values()) <= set(range(1, 9))
 
 
-def test_cell_centroids_udaf_matches_jvm_variant(spark, sf_dir):
-    """U2 UDAF surface: the grouped-agg pandas centroid must equal the
-    partial-aggregating JVM formulation (same mean, same normalization)
-    and both must be unit vectors."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from consume_kafka_avro_data_spark.operators.similarity import (
-        cell_centroids,
-        cell_centroids_jvm,
-        ivf_assign,
-        kmeans_centroids,
-    )
-    from consume_kafka_avro_data_spark.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cent = kmeans_centroids(emb, k=4)
-    assigned = ivf_assign(emb, cent)
-
-    a = {r["_ivf_cell"]: (r["centroid"], r["n_members"])
-         for r in cell_centroids(assigned).collect()}
-    b = {r["_ivf_cell"]: (r["centroid"], r["n_members"])
-         for r in cell_centroids_jvm(assigned).collect()}
-    assert a.keys() == b.keys()
-    for cell in a:
-        va, na = a[cell]
-        vb, nb = b[cell]
-        assert na == nb
-        assert np.allclose(va, vb, atol=1e-9)
-        assert abs(np.linalg.norm(va) - 1.0) < 1e-9
-
-
-def test_kmeans_distributed_deterministic_and_improving(spark, sf_dir):
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from consume_kafka_avro_data_spark.operators.similarity import (
-        ivf_assign,
-        kmeans_distributed,
-    )
-    from consume_kafka_avro_data_spark.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-
-    def objective(cent):
-        """Mean max-cosine of each row to its nearest centroid."""
-        assigned = ivf_assign(emb, cent)
-        scores = F.array_max(
-            F.array(
-                *[
-                    F.aggregate(
-                        F.zip_with(
-                            F.col("embedding"),
-                            F.array(*[F.lit(float(x)) for x in c]),
-                            lambda a, b: a.cast("double") * b,
-                        ),
-                        F.lit(0.0),
-                        lambda a, x: a + x,
-                    )
-                    for c in cent
-                ]
-            )
-        )
-        return assigned.select(F.avg(scores).alias("o")).collect()[0]["o"]
-
-    c1 = kmeans_distributed(emb, k=4, iters=1)
-    c3 = kmeans_distributed(emb, k=4, iters=3)
-    c3b = kmeans_distributed(emb, k=4, iters=3)
-
-    assert np.allclose(c3, c3b)  # deterministic
-    assert np.allclose(np.linalg.norm(c3, axis=1), 1.0)
-    assert objective(c3) >= objective(c1) - 1e-9  # Lloyd's never regresses
-
-
-def test_chunk_udtf_matches_codegen_chunking(spark, sf_dir):
-    """U3: the Python UDTF fan-out must agree row-for-row with the
-    production codegen chunking (q_doc_chunks) on the same corpus."""
-    from consume_kafka_avro_data_spark.operators.text import make_chunk_udtf
-    from consume_kafka_avro_data_spark.registry import all_queries
-    from consume_kafka_avro_data_spark.tables import load_table
-
-    spark.udtf.register("chunks_udtf", make_chunk_udtf())
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("docs_v")
-    via_udtf = spark.sql(
-        "SELECT d.doc_id, c.chunk_no, c.chunk, c.n_chunk_tokens "
-        "FROM docs_v d, LATERAL chunks_udtf(d.text, 32, 24) c"
-    )
-    via_expr = all_queries()["q_doc_chunks"].fn(spark, sf_dir)
-    a = sorted(map(tuple, via_udtf.collect()))
-    b = sorted(map(tuple, via_expr.collect()))
-    assert a == b
-
-
 def test_signature_tables_equal_hof_columns(docs):
     """The aggregated (codegen) signature tables must be value-identical
     to the compositional HOF Column forms they replaced on the hot path."""
     from consume_kafka_avro_data_spark.operators.dedup import (
         simhash_hex,
         simhash_hex_table,
-        simhash64_table,
         tokens_col,
     )
     from consume_kafka_avro_data_spark.operators.text import (
         winnow_fingerprint_counts,
         winnow_fingerprints_md5,
     )
-
-    hof64 = {
-        r.doc_id: r.sig
-        for r in docs.select(
-            "doc_id", simhash64(tokens_col("text")).alias("sig")
-        ).collect()
-    }
-    tab64 = {r._id: r._sim for r in simhash64_table(docs).collect()}
-    assert hof64 == tab64
 
     hofhex = {
         r.doc_id: r.sig
@@ -589,12 +435,10 @@ def test_signature_tables_equal_hof_columns(docs):
 
 def test_hot_bucket_guard_drops_oversized_buckets(spark):
     """The MAX_BUCKET_SIZE guard must drop (not OOM on) buckets bigger
-    than the cap, and oversized_buckets must report exactly those —
-    the enforcement the round-1 advisor asked for (previously the
-    mitigation lived only in a docstring)."""
+    than the cap — the enforcement the round-1 advisor asked for
+    (previously the mitigation lived only in a docstring)."""
     from consume_kafka_avro_data_spark.operators.dedup import (
         _bucket_candidate_pairs,
-        oversized_buckets,
     )
 
     rows = [(i, f"m{i}", "hot") for i in range(40)] + [
@@ -606,9 +450,6 @@ def test_hot_bucket_guard_drops_oversized_buckets(spark):
     capped = _bucket_candidate_pairs(blocked, max_bucket_size=16)
     pairs = {(r.id_a, r.id_b) for r in capped.collect()}
     assert pairs == {(100, 101)}  # hot bucket contributed nothing
-
-    over = {(r._block, r.n_members) for r in oversized_buckets(blocked, 16).collect()}
-    assert over == {("hot", 40)}
 
     # default cap admits both buckets
     full = _bucket_candidate_pairs(blocked)
@@ -768,8 +609,6 @@ def test_signature_forms_agree_on_null_and_empty_text(spark):
     from consume_kafka_avro_data_spark.operators.dedup import (
         simhash_hex,
         simhash_hex_table,
-        simhash64,
-        simhash64_table,
         tokens_col,
     )
 
@@ -781,21 +620,19 @@ def test_signature_forms_agree_on_null_and_empty_text(spark):
     )
 
     hof = {
-        r.doc_id: (r.s64, r.shex)
+        r.doc_id: r.shex
         for r in frame.select(
             "doc_id",
-            simhash64(tokens_col("text")).alias("s64"),
             simhash_hex(tokens_col("text")).alias("shex"),
         ).collect()
     }
-    tab64 = {r._id: r._sim for r in simhash64_table(frame).collect()}
     tabhex = {r._id: r._sim for r in simhash_hex_table(frame).collect()}
     for i in range(4):
-        assert hof[i] == (tab64[i], tabhex[i]), f"doc {i} diverged"
+        assert hof[i] == tabhex[i], f"doc {i} diverged"
     # NULL ≡ '' — one convention everywhere
     assert hof[0] == hof[1]
     # the empty-token signature is md5('')'s 16-hex prefix, not all-zero
-    assert hof[0][1] == "d41d8cd98f00b204"
+    assert hof[0] == "d41d8cd98f00b204"
 
 
 def test_signature_tables_keep_null_and_empty_text(spark):
@@ -804,7 +641,6 @@ def test_signature_tables_keep_null_and_empty_text(spark):
     would silently drop them from dedup entirely."""
     from consume_kafka_avro_data_spark.operators.dedup import (
         simhash_hex_table,
-        simhash64_table,
     )
     from consume_kafka_avro_data_spark.operators.text import (
         winnow_fingerprint_counts,
@@ -818,7 +654,6 @@ def test_signature_tables_keep_null_and_empty_text(spark):
         [(0, None), (1, ""), (2, "hello world hello")], schema
     )
     assert simhash_hex_table(docs).count() == 3
-    assert simhash64_table(docs).count() == 3
     assert winnow_fingerprint_counts(docs).count() == 3
 
 
@@ -1503,30 +1338,6 @@ def test_duplicate_token_spans_hash_gram_form_equivalent(spark, sf_dir):
     assert "xxhash64" in I.simple_plan(hashed_df).lower()
     with pytest.raises(ValueError, match="keep_first"):
         duplicate_token_spans(docs, 10, keep_first=True, hash_grams=True)
-
-
-def test_corpus_drift_between_matches_parity_form(spark, sf_dir):
-    """The two-frame census must equal the parity form when handed the
-    same split — and an identical-corpus comparison reports zero drift
-    with zero churn."""
-    from consume_kafka_avro_data_spark.queries.curation import (
-        corpus_drift,
-        corpus_drift_between,
-    )
-    from consume_kafka_avro_data_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    a = docs.where(F.col("doc_id") % 2 == 0)
-    b = docs.where(F.col("doc_id") % 2 == 1)
-    via_parity = {tuple(r) for r in corpus_drift(docs, head_k=50).collect()}
-    via_frames = {
-        tuple(r) for r in corpus_drift_between(a, b, head_k=50).collect()
-    }
-    assert via_frames == via_parity
-    self_cmp = corpus_drift_between(a, a, head_k=50).collect()
-    assert self_cmp, "identical corpora must still report every language"
-    for r in self_cmp:
-        assert (r.head_tvd, r.n_new, r.n_gone) == (0.0, 0, 0), r
 
 
 def test_stereo_wav_duration_counts_frames_not_samples(spark):

@@ -490,75 +490,6 @@ def test_order5_matches_reference(spark):
         m.unpersist()
 
 
-def test_perplexity_buckets_ccnet_split(spark):
-    """CCNet's head/middle/tail split: per-group exact-percentile cuts,
-    lower-score docs land in head, ties at a cut go to the lower
-    bucket, NULL scores get a NULL bucket, and groups calibrate
-    independently (a score that is head in one language can be tail in
-    another)."""
-    from consume_kafka_avro_data_spark.operators.lm import (
-        perplexity_buckets,
-    )
-
-    rows = [(i, "en", float(i)) for i in range(1, 10)]  # 1..9
-    rows += [(100 + i, "de", 100.0 + i) for i in range(1, 10)]
-    rows += [(999, "en", None)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string, avg_nll double")
-    out = perplexity_buckets(df, group_cols=["lang"])
-    got = {r.doc_id: r.ppl_bucket for r in out.collect()}
-    # en cuts at exact percentiles of 1..9: 1/3 -> 3.666, 2/3 -> 6.333
-    assert [got[i] for i in range(1, 10)] == (
-        ["head"] * 3 + ["middle"] * 3 + ["tail"] * 3
-    )
-    # de: same shape at its own scale — per-group calibration
-    assert [got[100 + i] for i in range(1, 10)] == (
-        ["head"] * 3 + ["middle"] * 3 + ["tail"] * 3
-    )
-    assert got[999] is None  # no evidence: neither head nor tail
-    assert out.columns == ["doc_id", "lang", "avg_nll", "ppl_bucket"]
-
-    # global cuts (no groups): one calibration across both languages —
-    # every en score now precedes every de score
-    g = {r.doc_id: r.ppl_bucket for r in perplexity_buckets(df).collect()}
-    assert all(g[i] == "head" for i in range(1, 7))
-    assert all(g[100 + i] == "tail" for i in range(4, 10))
-
-    # validation
-    with pytest.raises(ValueError, match="labels"):
-        perplexity_buckets(df, labels=("a", "b"))
-    with pytest.raises(ValueError, match="ascending"):
-        perplexity_buckets(df, cuts=(0.9, 0.1))
-
-
-def test_perplexity_buckets_end_to_end(spark, sf_dir, tri):
-    """The full CCNet shape on real data: score the documents table
-    with the fitted LM, bucket per language, and every scored doc gets
-    exactly one bucket with roughly balanced terciles."""
-    from consume_kafka_avro_data_spark.operators.lm import (
-        perplexity_buckets,
-    )
-    from consume_kafka_avro_data_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "text"
-    )
-    scored = tri.score(docs).join(docs.select("doc_id", "lang"), "doc_id")
-    out = perplexity_buckets(scored, group_cols=["lang"])
-    counts = {
-        (r.lang, r.ppl_bucket): r.n
-        for r in out.where(F.col("avg_nll").isNotNull())
-        .groupBy("lang", "ppl_bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    langs = {lang for lang, _ in counts}
-    for lang in langs:
-        tot = sum(n for (l, b), n in counts.items() if l == lang)
-        for b in ("head", "middle", "tail"):
-            share = counts.get((lang, b), 0) / tot
-            assert 0.15 <= share <= 0.55, (lang, b, share)
-
-
 # -- broadcast-dict Arrow scorer (round 9) -----------------------------------
 
 

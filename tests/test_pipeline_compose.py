@@ -1,10 +1,7 @@
-"""The round-6 operators compose into the full training-data pipeline:
-learned quality gate → LM-perplexity filter → BPE tokenization →
-sequence packing.  Each stage is pinned in isolation by its own test
-file; this proves the HANDOFFS — schemas line up, filters actually
-remove what they score, token counts flow from the tokenizer into the
-packer, and the final pack stream is gap-free over exactly the
-surviving documents."""
+"""The round-6 operators compose into a training-data pipeline:
+learned quality gate → LM-perplexity filter.  Each stage is pinned in
+isolation by its own test file; this proves the HANDOFF — schemas line
+up, and each filter removes exactly what it scores."""
 
 from __future__ import annotations
 
@@ -14,15 +11,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from consume_kafka_avro_data_spark.operators.lm import BigramKN
-from consume_kafka_avro_data_spark.operators.packing import pack_sequences
 from consume_kafka_avro_data_spark.operators.quality import (
     quality_probability,
     quality_training_frame,
     train_quality_classifier,
-)
-from consume_kafka_avro_data_spark.operators.text import (
-    bpe_segment,
-    bpe_train,
 )
 
 CLEAN_WORDS = (
@@ -76,24 +68,3 @@ def test_end_to_end_pipeline(spark, corpus):
     )
     assert survivors.count() == len(gated_ids)
     assert all(r.avg_nll > cap for r in spam_nll.collect())
-
-    # stage 3: tokenize with a table TRAINED ON THE SURVIVORS
-    merges = bpe_train(survivors.select("text"), n_merges=24)
-    assert merges
-    pieces = bpe_segment(survivors, merges).select(
-        "doc_id", F.size("bpe_pieces").alias("n_bpe")
-    )
-
-    # stage 4: pack the BPE token stream (counts from the tokenizer,
-    # not whitespace) into 256-token training sequences
-    packed = pack_sequences(
-        pieces, seq_len=256, n_tokens_col="n_bpe", text_col="n_bpe",
-        partitions=3,
-    )
-    rows = packed.collect()
-    assert {r.doc_id for r in rows} == gated_ids  # every survivor, once
-    total = sum(r.n_tokens for r in rows)
-    assert total == pieces.agg(F.sum("n_bpe")).collect()[0][0]
-    last = max(rows, key=lambda r: r.cum_before)
-    assert last.cum_before + last.n_tokens == total  # gap-free stream
-    assert max(r.pack_id for r in rows) == (total - last.n_tokens) // 256

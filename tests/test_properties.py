@@ -203,14 +203,12 @@ def test_wav_codec_roundtrip_property(samples, rate):
 @settings(max_examples=60, deadline=None)
 def test_ppm_codec_roundtrip_property(w, h, seed):
     """encode_ppm ∘ decode_ppm is the identity for any geometry and
-    pixel content; resize_nearest to the same geometry is also the
-    identity."""
+    pixel content."""
     import numpy as np
 
     from consume_kafka_avro_data_spark.operators.multimodal import (
         decode_ppm,
         encode_ppm,
-        resize_nearest,
     )
 
     rng = np.random.default_rng(seed)
@@ -218,7 +216,6 @@ def test_ppm_codec_roundtrip_property(w, h, seed):
     out = decode_ppm(encode_ppm(px))
     assert (out["width"], out["height"]) == (w, h)
     assert np.array_equal(out["pixels"], px)
-    assert np.array_equal(resize_nearest(px, w, h), px)
 
 
 @given(st.lists(st.integers(min_value=0, max_value=10_000), min_size=0, max_size=60))
@@ -576,46 +573,6 @@ def test_token_budget_mix_is_maximal_hash_prefix(spark, texts):
 
 
 # -- round-6 operators: packing and KN over generated corpora ----------------
-
-PACK_DOCS = st.lists(
-    st.integers(min_value=1, max_value=30),  # per-doc token counts
-    min_size=0,
-    max_size=24,
-)
-
-
-@given(toks=PACK_DOCS, seq_len=st.integers(min_value=1, max_value=40))
-@settings(
-    max_examples=10,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-def test_pack_sequences_models_driver_prefix_sum(spark, toks, seq_len):
-    """pack_sequences == the obvious driver loop, for ANY corpus and
-    seq_len, and independent of partition count (the distributed
-    prefix sum's defining laws)."""
-    from consume_kafka_avro_data_spark.operators.packing import (
-        pack_sequences,
-    )
-
-    rows = [(i, n) for i, n in enumerate(toks)]
-    df = spark.createDataFrame(rows or [(0, 1)], "doc_id long, toks long").limit(
-        len(rows)
-    )
-    want, cum = {}, 0
-    for i, n in rows:
-        want[i] = (n, cum, cum // seq_len, cum % seq_len)
-        cum += n
-    for parts in (1, 3):
-        got = {
-            r.doc_id: (r.n_tokens, r.cum_before, r.pack_id, r.pack_offset)
-            for r in pack_sequences(
-                df, seq_len, n_tokens_col="toks", text_col="toks",
-                partitions=parts,
-            ).collect()
-        }
-        assert got == want, (parts, seq_len)
-
 
 KN_DOCS = st.lists(
     st.lists(st.sampled_from("abcd"), min_size=0, max_size=8).map(" ".join),

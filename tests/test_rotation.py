@@ -15,8 +15,7 @@ import os
 
 from consume_kafka_avro_data_spark.rotation import (
     exposure_order,
-    freshest_green,
-    freshest_rows_only,
+    freshest_evidence,
 )
 
 REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -68,7 +67,7 @@ class TestFreshestGreen:
     def test_max_green_round_wins(self, tmp_path):
         _write(tmp_path, 1, {"a": _green_row(), "b": _green_row()})
         _write(tmp_path, 3, {"a": _green_row()})
-        fresh = freshest_green(str(tmp_path))
+        fresh = freshest_evidence(str(tmp_path))[0]
         assert fresh == {"a": 3, "b": 1}
 
     def test_failure_does_not_refresh(self, tmp_path):
@@ -76,11 +75,11 @@ class TestFreshestGreen:
         # query re-queues near the front of the next exposure order
         _write(tmp_path, 1, {"a": _green_row()})
         _write(tmp_path, 3, {"a": _failed_row()})
-        assert freshest_green(str(tmp_path)) == {"a": 1}
+        assert freshest_evidence(str(tmp_path))[0] == {"a": 1}
 
     def test_never_green_absent(self, tmp_path):
         _write(tmp_path, 2, {"a": _failed_row()})
-        assert freshest_green(str(tmp_path)) == {}
+        assert freshest_evidence(str(tmp_path))[0] == {}
 
     def test_rows_only_marker_is_not_hash_green(self, tmp_path):
         # err == 'no_oracle' with a recorded row count is the weaker
@@ -89,25 +88,25 @@ class TestFreshestGreen:
         # otherwise skip the never-certified block and its oracle
         # might never be driver-exercised
         _write(tmp_path, 2, {"a": _rows_only_row()})
-        assert freshest_green(str(tmp_path)) == {}
-        assert freshest_rows_only(str(tmp_path)) == {"a": 2}
+        assert freshest_evidence(str(tmp_path))[0] == {}
+        assert freshest_evidence(str(tmp_path))[1] == {"a": 2}
 
     def test_rows_only_with_error_does_not_count(self, tmp_path):
         row = _rows_only_row()
         row["spark_rows"] = None
         row["err"] = "boom"
         _write(tmp_path, 2, {"a": row})
-        assert freshest_green(str(tmp_path)) == {}
-        assert freshest_rows_only(str(tmp_path)) == {}
+        assert freshest_evidence(str(tmp_path))[0] == {}
+        assert freshest_evidence(str(tmp_path))[1] == {}
 
     def test_corrupt_artifact_skipped(self, tmp_path):
         (tmp_path / "CORRECTNESS_r01.json").write_text("{not json")
         _write(tmp_path, 2, {"a": _green_row()})
-        assert freshest_green(str(tmp_path)) == {"a": 2}
+        assert freshest_evidence(str(tmp_path))[0] == {"a": 2}
 
     def test_no_artifacts(self, tmp_path):
-        assert freshest_green(str(tmp_path)) == {}
-        assert freshest_rows_only(str(tmp_path)) == {}
+        assert freshest_evidence(str(tmp_path))[0] == {}
+        assert freshest_evidence(str(tmp_path))[1] == {}
 
 
 class TestExposureOrder:
@@ -138,8 +137,7 @@ class TestExposureOrder:
         # must sort in the never-certified block, ahead of every
         # hash-certified query
         _write(tmp_path, 1, {"upgraded": _rows_only_row(), "cert": _green_row()})
-        fresh = freshest_green(str(tmp_path))
-        ro = freshest_rows_only(str(tmp_path))
+        fresh, ro = freshest_evidence(str(tmp_path))
         names = ["cert", "upgraded"]
         provable = {"cert": True, "upgraded": True}  # oracle added since r01
         assert exposure_order(names, provable, fresh, ro) == ["upgraded", "cert"]
@@ -147,8 +145,7 @@ class TestExposureOrder:
     def test_rows_only_tail_staleness_ordered(self, tmp_path):
         _write(tmp_path, 1, {"ro_old": _rows_only_row()})
         _write(tmp_path, 3, {"ro_new": _rows_only_row()})
-        fresh = freshest_green(str(tmp_path))
-        ro = freshest_rows_only(str(tmp_path))
+        fresh, ro = freshest_evidence(str(tmp_path))
         names = ["ro_new", "ro_old", "p"]
         provable = {"ro_new": False, "ro_old": False, "p": True}
         assert exposure_order(names, provable, fresh, ro) == ["p", "ro_old", "ro_new"]
@@ -172,7 +169,7 @@ class TestRepoArtifacts:
         from consume_kafka_avro_data_spark.registry import all_queries
 
         entry = self._entry()
-        fresh = freshest_green(REPO_DIR)
+        fresh = freshest_evidence(REPO_DIR)[0]
         qs = all_queries()
         names = list(entry.queries())
         provable_rounds = [
@@ -205,7 +202,7 @@ class TestRepoArtifacts:
         from consume_kafka_avro_data_spark.registry import all_queries
 
         entry = self._entry()
-        fresh = freshest_green(REPO_DIR)
+        fresh = freshest_evidence(REPO_DIR)[0]
         qs = all_queries()
         names = list(entry.queries())
         never = [

@@ -1,9 +1,9 @@
-"""Scale-mechanics tests: skew salting and bucketed shuffle-free joins.
+"""Scale-mechanics tests: skew salting and pruning layouts.
 
 These pin the *mechanisms* a 100 TB deployment leans on — correctness
 of the salted rewrites (row-identical to the unsalted plan) and the
-plan shape of bucketed joins (zero shuffle exchanges) — at toy size,
-where they are cheap to verify exactly.
+plan shape of pruned scans — at toy size, where they are cheap to
+verify exactly.
 """
 
 from __future__ import annotations
@@ -11,8 +11,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from consume_kafka_avro_data_spark.operators.skew import salted_join, salted_sum_count
-from consume_kafka_avro_data_spark.plans.inspect import exchange_count
+from consume_kafka_avro_data_spark.operators.skew import salted_join
 
 
 @pytest.fixture()
@@ -53,55 +52,10 @@ def test_salted_left_join_matches_plain(spark, skewed):
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
 
 
-def test_salted_agg_matches_plain_agg(skewed):
-    plain = (
-        skewed.groupBy("key")
-        .agg(
-            F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("sum_value"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-        .collect()
-    )
-    salted = salted_sum_count(skewed, "key", "value").collect()
-    assert sorted(map(tuple, plain)) == sorted(map(tuple, salted))
-
-
 def test_salt_is_deterministic(skewed, dim):
     a = salted_join(skewed, dim, "key").collect()
     b = salted_join(skewed, dim, "key").collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    from consume_kafka_avro_data_spark.operators.bucketing import (
-        bucketed_join,
-        write_bucketed,
-    )
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force SMJ path
-    try:
-        left = spark.range(1_000).select(
-            F.col("id").alias("k"), (F.col("id") * 2).alias("a")
-        )
-        right = spark.range(500).select(
-            F.col("id").alias("k"), (F.col("id") * 3).alias("b")
-        )
-        write_bucketed(left, "t_bleft", "k", 4)
-        write_bucketed(right, "t_bright", "k", 4)
-
-        joined = bucketed_join(spark, "t_bleft", "t_bright", "k")
-        assert joined.count() == 500
-        # the whole point: bucketed layout ⇒ zero shuffle exchanges
-        assert exchange_count(joined) == 0
-
-        # same join on unbucketed frames shuffles both sides
-        plain = left.join(right, "k")
-        plain.count()
-        assert exchange_count(plain) > 0
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS t_bleft")
-        spark.sql("DROP TABLE IF EXISTS t_bright")
 
 
 def test_partitioned_layout_prunes_at_planning_time(spark, sf_dir, tmp_path):

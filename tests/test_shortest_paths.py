@@ -8,7 +8,6 @@ from __future__ import annotations
 
 from collections import deque
 
-import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 from consume_kafka_avro_data_spark.operators.graph import shortest_paths
@@ -82,6 +81,12 @@ def test_max_hops_truncates(spark):
     assert got == {0: 0, 1: 1, 2: 2, 3: 3}
 
 
+def test_duplicate_sources_collapse(spark):
+    """A source listed twice yields one (node, 0) row, not two."""
+    got = shortest_paths(_edges_df(spark, [(5, 6)]), [0, 0]).collect()
+    assert [(r["node"], r["dist"]) for r in got] == [(0, 0)]
+
+
 EDGES = st.lists(
     st.tuples(
         st.integers(min_value=0, max_value=9),
@@ -109,158 +114,11 @@ def test_bfs_models_reference_on_any_graph(spark, edges, directed):
     assert got == _ref_bfs(edges, [0], directed)
 
 
-def test_bpe_save_load_round_trip(spark, tmp_path):
-    """BPE merge tables persist like the other learned artifacts:
-    bit-identical reload, atomic overwrite."""
-    from consume_kafka_avro_data_spark.operators.text import (
-        bpe_load,
-        bpe_save,
-        bpe_train,
-    )
-
-    df = spark.createDataFrame(
-        [("low lower lowest low low",)] * 3, "text string"
-    )
-    merges = bpe_train(df, n_merges=6)
-    assert merges  # trained something
-    path = str(tmp_path / "bpe_merges.json")
-    bpe_save(spark, merges, path)
-    assert bpe_load(spark, path) == merges
-    bpe_save(spark, merges[:2], path)  # atomic overwrite
-    assert bpe_load(spark, path) == merges[:2]
-
-
-# --- weighted tier ---------------------------------------------------------
-
-import heapq
-
-from consume_kafka_avro_data_spark.operators.graph import (
-    shortest_paths_weighted,
-)
-
-
-def _ref_dijkstra(edges, sources, directed):
-    adj: dict = {}
-    for a, b, w in edges:
-        adj.setdefault(a, []).append((b, w))
-        if not directed:
-            adj.setdefault(b, []).append((a, w))
-    dist = {s: 0.0 for s in sources}
-    heap = [(0.0, s) for s in sources]
-    heapq.heapify(heap)
-    while heap:
-        d, u = heapq.heappop(heap)
-        if d > dist.get(u, float("inf")):
-            continue
-        for v, w in adj.get(u, ()):
-            nd = d + w
-            if nd < dist.get(v, float("inf")):
-                dist[v] = nd
-                heapq.heappush(heap, (nd, v))
-    return dist
-
-
-def _wedges_df(spark, edges):
-    return spark.createDataFrame(
-        edges or [(0, 0, 0.0)],
-        "source_id long, target_id long, w double",
-    ).limit(len(edges))
-
-
-def test_weighted_prefers_lighter_longer_path(spark):
-    """The case unit-weight BFS gets wrong: a 3-hop path of weight 3
-    beats the 1-hop weight-10 edge, and the running table must let a
-    settled distance improve."""
-    edges = [(0, 9, 10.0), (0, 1, 1.0), (1, 2, 1.0), (2, 9, 1.0)]
-    got = {
-        r["node"]: r["dist"]
-        for r in shortest_paths_weighted(
-            _wedges_df(spark, edges), [0], weight="w", directed=True
-        ).collect()
-    }
-    assert got == {0: 0.0, 1: 1.0, 2: 2.0, 9: 3.0}
-
-
-def test_weighted_parallel_edges_and_multi_source(spark):
-    edges = [(0, 1, 5.0), (0, 1, 2.0), (1, 2, 1.0), (3, 2, 1.5)]
-    got = {
-        r["node"]: r["dist"]
-        for r in shortest_paths_weighted(
-            _wedges_df(spark, edges), [0, 3], weight="w"
-        ).collect()
-    }
-    assert got == _ref_dijkstra(edges, [0, 3], directed=False)
-    assert got[2] == 1.5  # via source 3, not via 0
-
-
-def test_weighted_rejects_negative(spark):
-    with pytest.raises(ValueError, match="negative- or NULL-weight"):
-        shortest_paths_weighted(
-            _wedges_df(spark, [(0, 1, -1.0)]), [0], weight="w"
-        )
-
-
-WEDGES = st.lists(
-    st.tuples(
-        st.integers(min_value=0, max_value=7),
-        st.integers(min_value=0, max_value=7),
-        st.sampled_from([1.0, 2.0, 3.0, 5.0]),
-    ),
-    min_size=1,
-    max_size=14,
-)
-
-
-@given(edges=WEDGES, directed=st.booleans())
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-def test_weighted_models_dijkstra_on_any_graph(spark, edges, directed):
-    """For ANY small weighted graph (self-loops, parallel edges) the
-    distances equal a heap Dijkstra from source 0 — exact float
-    equality (weights sum identically on both sides)."""
-    got = {
-        r["node"]: r["dist"]
-        for r in shortest_paths_weighted(
-            _wedges_df(spark, edges), [0], weight="w", directed=directed
-        ).collect()
-    }
-    assert got == _ref_dijkstra(edges, [0], directed)
-
-
-def test_weighted_guards(spark):
-    """Review-finding guards: NULL weights rejected like negatives,
-    non-convergence at max_iter raises instead of returning
-    present-but-wrong distances, duplicate sources collapse."""
-    with pytest.raises(ValueError, match="NULL-weight"):
-        shortest_paths_weighted(
-            _wedges_df(spark, [(0, 1, None), (1, 2, 1.0)]), [0], weight="w"
-        )
-    chain = [(i, i + 1, 1.0) for i in range(6)] + [(0, 6, 100.0)]
-    with pytest.raises(ValueError, match="did not converge"):
-        shortest_paths_weighted(
-            _wedges_df(spark, chain), [0], weight="w", directed=True,
-            max_iter=3,
-        )
-    got = shortest_paths_weighted(
-        _wedges_df(spark, [(5, 6, 1.0)]), [0, 0], weight="w"
-    ).collect()
-    assert [(r["node"], r["dist"]) for r in got] == [(0, 0.0)]
-    # unit-weight twin: duplicate sources collapse there too
-    got2 = shortest_paths(
-        _edges_df(spark, [(5, 6)]), [0, 0]
-    ).collect()
-    assert [(r["node"], r["dist"]) for r in got2] == [(0, 0)]
-
-
 def test_graph_suite_over_spo_edges(spark, sf_dir):
     """Integration over the reference's own graph shape: build the SPO
     edge table the engine materializes (xxhash64 ids, the
-    Database.cpp:26-78 stand-in), then run BFS, weighted SSSP, LPA,
-    and CC over it — hop-0/1 sets must match the raw triples, BFS ≤
-    weighted distances with unit weights scaled, and every BFS-reached
+    Database.cpp:26-78 stand-in), then run BFS, LPA, and CC over it —
+    hop-0/1 sets must match the raw triples, and every BFS-reached
     node shares its source's connected component."""
     from pyspark.sql import functions as F
 
@@ -293,13 +151,6 @@ def test_graph_suite_over_spo_edges(spark, sf_dir):
             for r in e.where(F.col("target_id") == src).collect()
         }
         assert {n for n, d in dists.items() if d == 1} == nbrs - {src}
-        # unit weights: weighted distances == BFS hop counts exactly
-        w = shortest_paths_weighted(
-            e.withColumn("w", F.lit(2.0)), [src], weight="w"
-        )
-        wdists = {r["node"]: r["dist"] for r in w.collect()}
-        assert wdists == {n: 2.0 * d for n, d in dists.items()}
-        w.unpersist()
         # every reached node lives in the source's component
         comps = connected_components(e)
         comp_of = {r["node"]: r["comp"] for r in comps.collect()}

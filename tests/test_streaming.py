@@ -1,6 +1,6 @@
 """Streaming pipeline tests (SURVEY §5 streaming strategy): file-backed
 stand-in source + availableNow triggers — no broker needed, full
-decode→DLQ→graph-merge path exercised, plus the windowed closure."""
+decode→DLQ→graph-merge path exercised."""
 
 from __future__ import annotations
 
@@ -12,12 +12,6 @@ from consume_kafka_avro_data_spark.operators.graph import GraphStore
 from consume_kafka_avro_data_spark.sources.avro_codec import to_confluent_avro
 from consume_kafka_avro_data_spark.sources.kafka import FileStreamStandIn
 from consume_kafka_avro_data_spark.streaming.ingest import StreamingGraphIngest
-from consume_kafka_avro_data_spark.streaming.windows import (
-    session_window_agg,
-    stateful_dedup,
-    stream_static_enrich,
-    tumbling_window_agg,
-)
 
 SPO_DOC = {
     "kafka": {},
@@ -130,141 +124,17 @@ def test_checkpoint_resume_processes_only_new_data(spark, tmp_path):
 
 def _event_stream(spark, tmp_path):
     rows = [
-        # two users; user 1 has a >30min gap → 2 sessions
+        # two users; user 2's 00:05 view arrives twice
         Row(event_id=0, ts="2024-01-01 00:00:00", user_id=1, event_type="view", value=1.0),
         Row(event_id=1, ts="2024-01-01 00:10:00", user_id=1, event_type="view", value=2.0),
         Row(event_id=2, ts="2024-01-01 01:00:00", user_id=1, event_type="click", value=3.0),
         Row(event_id=3, ts="2024-01-01 00:05:00", user_id=2, event_type="view", value=4.0),
-        Row(event_id=4, ts="2024-01-01 00:05:00", user_id=2, event_type="view", value=4.0),  # dup
+        Row(event_id=4, ts="2024-01-01 00:05:00", user_id=2, event_type="view", value=4.0),
     ]
     path = str(tmp_path / "events_stream")
     df = spark.createDataFrame(rows).withColumn("ts", F.col("ts").cast("timestamp"))
     df.write.mode("overwrite").parquet(path)
     return spark.readStream.schema(df.schema).parquet(path)
-
-
-def _run_to_memory(spark, df, name, output_mode="append"):
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.sql(f"SELECT * FROM {name}")
-
-
-def test_tumbling_window_stream(spark, tmp_path):
-    out = _run_to_memory(
-        spark,
-        tumbling_window_agg(_event_stream(spark, tmp_path), window="1 hour", keys=["user_id"]),
-        "t_tumble",
-        # complete mode: emit every window even if the watermark hasn't
-        # closed it — append mode would hold back still-open windows at
-        # end-of-stream (correct streaming semantics, wrong for a test)
-        output_mode="complete",
-    )
-    got = {(str(r.bucket), r.user_id): (r.n_events, r.sum_value) for r in out.collect()}
-    assert got[("2024-01-01 00:00:00", 1)] == (2, 3.0)
-    assert got[("2024-01-01 01:00:00", 1)] == (1, 3.0)
-    assert got[("2024-01-01 00:00:00", 2)] == (2, 8.0)
-
-
-def test_session_window_stream(spark, tmp_path):
-    out = _run_to_memory(
-        spark,
-        session_window_agg(_event_stream(spark, tmp_path), gap="30 minutes", keys=["user_id"]),
-        "t_session",
-        output_mode="complete",
-    )
-    sessions = [(r.user_id, r.n_events) for r in out.collect()]
-    assert sorted(sessions) == [(1, 1), (1, 2), (2, 2)]  # user 1 split by the gap
-
-
-def test_stateful_dedup_stream(spark, tmp_path):
-    out = _run_to_memory(
-        spark,
-        stateful_dedup(
-            _event_stream(spark, tmp_path),
-            keys=["user_id", "ts"],
-            within_watermark=True,
-        ),
-        "t_dedup",
-    )
-    assert out.count() == 4  # the duplicated (user 2, 00:05) row collapsed
-
-
-def test_stream_static_enrich(spark, tmp_path):
-    dim = spark.createDataFrame([(1, "gold"), (2, "silver")], ["user_id", "tier"])
-    out = _run_to_memory(
-        spark,
-        stream_static_enrich(_event_stream(spark, tmp_path), dim, on=["user_id"]),
-        "t_enrich",
-    )
-    tiers = {r.user_id: r.tier for r in out.collect()}
-    assert tiers == {1: "gold", 2: "silver"}
-
-
-def test_custom_stateful_running_stats(spark, tmp_path):
-    """applyInPandasWithState: per-key running {count, sum, last-seen}
-    survives across micro-batches (maxFilesPerTrigger forces several)."""
-    from consume_kafka_avro_data_spark.streaming.stateful import running_stats
-
-    rows = [
-        Row(event_id=0, ts="2024-01-01 00:00:00", user_id=1, value=1.0),
-        Row(event_id=1, ts="2024-01-01 00:10:00", user_id=1, value=2.0),
-        Row(event_id=2, ts="2024-01-01 01:00:00", user_id=1, value=3.0),
-        Row(event_id=3, ts="2024-01-01 00:05:00", user_id=2, value=4.0),
-        Row(event_id=4, ts="2024-01-01 00:06:00", user_id=2, value=4.5),
-    ]
-    path = str(tmp_path / "stateful_events")
-    df = spark.createDataFrame(rows).withColumn("ts", F.col("ts").cast("timestamp"))
-    # several files -> several micro-batches under maxFilesPerTrigger=1
-    df.repartition(3).write.mode("overwrite").parquet(path)
-    stream = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
-    out = _run_to_memory(spark, running_stats(stream), "t_stateful", "update")
-    # update mode emits one row per key per batch; the LAST update per key
-    # must hold the full running totals
-    import pandas as pd
-
-    pdf = out.toPandas()
-    final = pdf.sort_values("n_events").groupby("user_id").last()
-    assert final.loc[1, "n_events"] == 3 and final.loc[1, "total_value"] == 6.0
-    assert final.loc[2, "n_events"] == 2 and final.loc[2, "total_value"] == 8.5
-    # last-seen is the max event ts per key, in epoch micros
-    assert final.loc[1, "last_micros"] == int(pd.Timestamp("2024-01-01 01:00:00").value // 1000)
-
-
-def test_sliding_window_stream(spark, tmp_path):
-    from consume_kafka_avro_data_spark.streaming.windows import sliding_window_agg
-
-    out = _run_to_memory(
-        spark,
-        sliding_window_agg(
-            _event_stream(spark, tmp_path),
-            window="1 hour",
-            slide="30 minutes",
-            keys=["user_id"],
-        ),
-        "t_slide",
-        output_mode="complete",
-    )
-    got = {
-        (str(r.bucket_start), r.user_id): (r.n_events, r.sum_value)
-        for r in out.collect()
-    }
-    # user 1's 00:00 and 00:10 events land in the [23:30,00:30) and
-    # [00:00,01:00) windows; the 01:00 click in [00:30,01:30) + [01:00,02:00)
-    assert got[("2023-12-31 23:30:00", 1)] == (2, 3.0)
-    assert got[("2024-01-01 00:00:00", 1)] == (2, 3.0)
-    assert got[("2024-01-01 00:30:00", 1)] == (1, 3.0)
-    assert got[("2024-01-01 01:00:00", 1)] == (1, 3.0)
-    assert got[("2024-01-01 00:00:00", 2)] == (2, 8.0)
 
 
 def test_running_count_update_mode(spark, tmp_path):
@@ -283,168 +153,6 @@ def test_running_count_update_mode(spark, tmp_path):
     q.awaitTermination(120)
     got = {r.event_type: r["count"] for r in spark.sql("SELECT * FROM t_running_count").collect()}
     assert got == {"view": 4, "click": 1}
-
-
-def test_watermark_drops_late_data_across_restarts(spark, tmp_path):
-    """T7: a row arriving after the watermark has passed its window's
-    end must be DROPPED from an append-mode windowed aggregate.  Run 1
-    advances the watermark (max ts 03:00 − 10 min delay = 02:50, past
-    the 00:00-01:00 window); run 2 (same checkpoint) delivers a late
-    00:30 row — it must not resurrect the closed window."""
-    from pyspark.sql.types import (
-        DoubleType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    from consume_kafka_avro_data_spark.streaming.windows import tumbling_window_agg
-
-    schema = StructType(
-        [StructField("ts", TimestampType()), StructField("value", DoubleType())]
-    )
-    src = str(tmp_path / "late_src")
-    ckpt = str(tmp_path / "late_ckpt")
-    out = str(tmp_path / "late_out")
-
-    def run_batch(rows, batch):
-        spark.createDataFrame(rows, schema).write.mode("append").parquet(
-            f"{src}/b{batch}"
-        )
-        stream = spark.readStream.schema(schema).option(
-            "pathGlobFilter", "*.parquet"
-        ).parquet(f"{src}/*")
-        q = (
-            tumbling_window_agg(stream, window="1 hour", watermark="10 minutes")
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    import datetime as dt
-
-    t = lambda s: dt.datetime.fromisoformat(f"2024-01-01 {s}")
-    run_batch([(t("00:15:00"), 1.0), (t("03:00:00"), 5.0)], 1)
-    run_batch([(t("00:30:00"), 100.0)], 2)  # late: watermark is 02:50
-    run_batch([(t("05:00:00"), 7.0)], 3)  # closes the 03:00 window
-
-    got = {
-        str(r.bucket): (r.n_events, r.sum_value)
-        for r in spark.read.parquet(out).collect()
-    }
-    # the 00:00 window emitted with ONLY the on-time row; late 00:30 dropped
-    assert got["2024-01-01 00:00:00"] == (1, 1.0)
-    assert got["2024-01-01 03:00:00"] == (1, 5.0)
-
-
-def test_stream_stream_join_attribution(spark, tmp_path):
-    """T10: clicks join impressions with the same ad within 1 hour —
-    the canonical two-stream correlation.  The 02:30 click is outside
-    the 00:00 impression's interval and must not match; the 03:00
-    impression has no click and (inner join) must not appear."""
-    from consume_kafka_avro_data_spark.streaming.windows import stream_stream_join
-
-    imps = [
-        Row(imp_id=10, ad_id=1, imp_ts="2024-01-01 00:00:00"),
-        Row(imp_id=11, ad_id=2, imp_ts="2024-01-01 00:10:00"),
-        Row(imp_id=12, ad_id=3, imp_ts="2024-01-01 03:00:00"),
-    ]
-    clicks = [
-        Row(click_id=20, click_ad=1, click_ts="2024-01-01 00:30:00"),
-        Row(click_id=21, click_ad=1, click_ts="2024-01-01 02:30:00"),
-        Row(click_id=22, click_ad=2, click_ts="2024-01-01 00:15:00"),
-    ]
-
-    def _stream(rows, ts_col, name):
-        path = str(tmp_path / name)
-        df = spark.createDataFrame(rows).withColumn(
-            ts_col, F.col(ts_col).cast("timestamp")
-        )
-        df.write.mode("overwrite").parquet(path)
-        return spark.readStream.schema(df.schema).parquet(path)
-
-    joined = stream_stream_join(
-        _stream(imps, "imp_ts", "imps"),
-        _stream(clicks, "click_ts", "clicks"),
-        left_key="ad_id",
-        right_key="click_ad",
-        left_ts="imp_ts",
-        right_ts="click_ts",
-        within="1 hour",
-    )
-    out = _run_to_memory(spark, joined, "t_ss_join")
-    got = sorted((r.imp_id, r.click_id) for r in out.collect())
-    assert got == [(10, 20), (11, 22)]
-
-
-def test_transform_with_state_matches_legacy_api(spark, tmp_path):
-    """The transformWithStateInPandas port of running_stats must land on
-    the same final per-key totals as the applyInPandasWithState original
-    under multi-batch replay (maxFilesPerTrigger=1) — the migration
-    guarantee for switching state APIs.
-
-    Spark 4 runs the TWS state-server protocol over protobuf; in
-    environments without google.protobuf the query cannot start (the
-    plan itself builds fine), so the end-to-end half is skipped there.
-    """
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas state server needs protobuf",
-    )
-    from consume_kafka_avro_data_spark.streaming.stateful import running_stats_tws
-
-    rows = [
-        Row(event_id=0, ts="2024-01-01 00:00:00", user_id=1, value=1.0),
-        Row(event_id=1, ts="2024-01-01 00:10:00", user_id=1, value=2.0),
-        Row(event_id=2, ts="2024-01-01 01:00:00", user_id=1, value=3.0),
-        Row(event_id=3, ts="2024-01-01 00:05:00", user_id=2, value=4.0),
-        Row(event_id=4, ts="2024-01-01 00:06:00", user_id=2, value=4.5),
-    ]
-    path = str(tmp_path / "tws_events")
-    df = spark.createDataFrame(rows).withColumn("ts", F.col("ts").cast("timestamp"))
-    df.repartition(3).write.mode("overwrite").parquet(path)
-    stream = (
-        spark.readStream.schema(df.schema).option("maxFilesPerTrigger", 1).parquet(path)
-    )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        out = _run_to_memory(spark, running_stats_tws(stream), "t_tws", "update")
-        pdf = out.toPandas()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    final = pdf.sort_values("n_events").groupby("user_id").last()
-    assert final.loc[1, "n_events"] == 3 and final.loc[1, "total_value"] == 6.0
-    assert final.loc[2, "n_events"] == 2 and final.loc[2, "total_value"] == 8.5
-
-
-def test_transform_with_state_plan_builds(spark, tmp_path):
-    """Environment-independent half of the TWS coverage: the operator
-    must analyze — keyed grouping, schema'd ValueState, Update mode —
-    so API misuse fails here even where protobuf is missing."""
-    from consume_kafka_avro_data_spark.streaming.stateful import running_stats_tws
-
-    rows = [Row(event_id=0, ts="2024-01-01 00:00:00", user_id=1, value=1.0)]
-    df = spark.createDataFrame(rows).withColumn("ts", F.col("ts").cast("timestamp"))
-    path = str(tmp_path / "tws_plan_events")
-    df.write.mode("overwrite").parquet(path)
-    stream = spark.readStream.schema(df.schema).parquet(path)
-    out = running_stats_tws(stream)
-    assert out.isStreaming
-    assert [f.name for f in out.schema.fields] == [
-        "user_id", "n_events", "total_value", "last_micros",
-    ]
-    assert "TransformWithStateInPySpark" in out._jdf.queryExecution().analyzed().toString()
 
 
 def test_counters_listener_tracks_progress(spark, tmp_path):
@@ -485,65 +193,6 @@ def test_counters_listener_tracks_progress(spark, tmp_path):
         assert snap.rows_by_query.get("counter_probe") == len(TRIPLES)
     finally:
         detach_counters(spark, listener)
-
-
-def test_stream_stream_join_shared_column_names(spark, tmp_path):
-    """Both streams carrying the DEFAULT ts column name (and the same
-    key name) must work — regression for bare-F.col() conditions that
-    were ambiguous or degenerated to tautologies."""
-    from consume_kafka_avro_data_spark.streaming.windows import stream_stream_join
-
-    imps = [Row(ad_id=1, ts="2024-01-01 10:00:00", imp=10)]
-    clicks = [
-        Row(ad_id=1, ts="2024-01-01 10:30:00", click=20),
-        Row(ad_id=2, ts="2024-01-01 10:30:00", click=99),  # no matching imp
-    ]
-
-    def _src(rows, name):
-        p = str(tmp_path / name)
-        df = spark.createDataFrame(rows).withColumn("ts", F.col("ts").cast("timestamp"))
-        df.write.mode("overwrite").parquet(p)
-        return spark.readStream.schema(df.schema).parquet(p)
-
-    left = _src(imps, "imps")
-    right = _src(clicks, "clicks").withColumnRenamed("ad_id", "ad_id2")
-    # same-name ts on both sides; different key names for output clarity
-    joined = stream_stream_join(left, right, "ad_id", "ad_id2")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("t_ssj_same")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = [(r.imp, r.click) for r in spark.sql("SELECT * FROM t_ssj_same").collect()]
-    assert got == [(10, 20)]
-
-
-def test_running_stats_all_null_ts_emits_null_last_seen(spark, tmp_path):
-    """A key whose rows carry only NULL timestamps must report
-    last_micros as NULL — not epoch 0, which a zero-initialized max()
-    fold would fabricate (and which a pre-1970 timestamp would also
-    silently lose to)."""
-    from consume_kafka_avro_data_spark.streaming.stateful import running_stats
-
-    rows = [
-        Row(event_id=0, ts=None, user_id=7, value=1.0),
-        Row(event_id=1, ts=None, user_id=7, value=2.0),
-    ]
-    path = str(tmp_path / "nullts_events")
-    df = spark.createDataFrame(
-        rows, "event_id LONG, ts TIMESTAMP, user_id LONG, value DOUBLE"
-    )
-    df.write.mode("overwrite").parquet(path)
-    stream = spark.readStream.schema(df.schema).parquet(path)
-    out = _run_to_memory(spark, running_stats(stream), "t_nullts", "update")
-    final = out.toPandas().sort_values("n_events").groupby("user_id").last()
-    assert final.loc[7, "n_events"] == 2
-    import pandas as pd
-
-    assert pd.isna(final.loc[7, "last_micros"])
 
 
 # ---------------------------------------------------------------------------

@@ -227,8 +227,7 @@ def test_viterbi_tie_break_prefers_longer_final_piece():
 
 
 def test_unigram_segment_null_and_empty(spark):
-    """NULL and empty text encode to empty piece arrays (the
-    bpe_segment convention), not errors."""
+    """NULL and empty text encode to empty piece arrays, not errors."""
     df = spark.createDataFrame([(None,), ("",), ("cat",)], "text string")
     model = [("a", -1.0), ("c", -1.0), ("t", -1.0)]
     rows = unigram_segment(df, model).collect()
@@ -419,50 +418,6 @@ def test_segment_is_map_only(spark, corpus_df):
             .toString()
         )
         assert "Exchange" not in plan
-
-
-def test_segmentation_stats_compare_tokenizers(spark, corpus_df):
-    """The evaluation utility: fertility == total pieces / total
-    pre-token words (checked against a driver recount), chars/piece
-    consistent, and a trained unigram model beats the character
-    fallback on fertility — the comparison the utility exists for.
-    Works identically over bpe_segment output."""
-    from consume_kafka_avro_data_spark.operators.text import (
-        bpe_segment,
-        bpe_train,
-    )
-    from consume_kafka_avro_data_spark.operators.unigram import (
-        segmentation_stats,
-    )
-
-    model = unigram_train(corpus_df, vocab_size=50, seed_size=120)
-    enc = unigram_segment(corpus_df, model)
-    row = segmentation_stats(enc, "unigram_pieces").collect()[0]
-    rows = enc.collect()
-    pretoken = re.compile(BPE_PRETOKEN_RE)
-    words = sum(len(pretoken.findall(r["text"])) for r in rows)
-    pieces = sum(len(r["unigram_pieces"]) for r in rows)
-    chars = sum(
-        sum(len(w) for w in pretoken.findall(r["text"])) for r in rows
-    )
-    assert row["n_docs"] == len(rows)
-    assert row["total_words"] == words
-    assert row["total_pieces"] == pieces
-    assert row["fertility"] == pytest.approx(pieces / words)
-    assert row["chars_per_piece"] == pytest.approx(chars / pieces)
-    # chars-only model = worst-case fertility; the trained model wins
-    chars_model = [(p, lp) for p, lp in model if len(p) == 1]
-    worst = segmentation_stats(
-        unigram_segment(corpus_df, chars_model), "unigram_pieces"
-    ).collect()[0]
-    assert row["fertility"] < worst["fertility"]
-    # BPE output plugs into the same utility
-    merges = bpe_train(corpus_df, n_merges=12)
-    bpe_row = segmentation_stats(
-        bpe_segment(corpus_df, merges), "bpe_pieces"
-    ).collect()[0]
-    assert bpe_row["total_words"] == words
-    assert bpe_row["fertility"] >= 1.0 or bpe_row["total_pieces"] <= words
 
 
 def test_min_word_count_prunes_exactly(spark, corpus_df):
