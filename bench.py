@@ -348,22 +348,20 @@ def streaming_dedup_bench(spark, sf_dir: str) -> dict:
 
 
 def ingest_compaction_ab_bench(spark, sf_dir: str) -> dict:
-    """Round-6 knob parity: ``compact_every`` now exists on all three
+    """Round-6 knob parity: ``compact_every`` exists on both
     file-growing ingests.  The dedup ingest's A/B lives in
-    streaming_dedup_bench; this measures the other two — graph and ANN —
-    with the same design: many 1-file micro-batches (the worst-case
-    small-file regime), compaction OFF vs ON, reporting end-of-stream
-    file/directory counts, head-vs-tail per-batch wall (does per-batch
-    cost grow as files accumulate?), and the POST-ingest read cost the
-    file growth actually taxes (a store scan / a full-probe query)."""
+    streaming_dedup_bench; this measures the graph ingest with the same
+    design: many 1-file micro-batches (the worst-case small-file
+    regime), compaction OFF vs ON, reporting end-of-stream file counts,
+    head-vs-tail per-batch wall (does per-batch cost grow as files
+    accumulate?), and the POST-ingest read cost the file growth
+    actually taxes (a store scan)."""
     from pyspark.sql import functions as F
 
     from consume_kafka_avro_data_spark.config import parse_config
-    from consume_kafka_avro_data_spark.operators.ann_index import AnnIndex
     from consume_kafka_avro_data_spark.operators.graph import GraphStore
     from consume_kafka_avro_data_spark.sources.avro_codec import to_confluent_avro
     from consume_kafka_avro_data_spark.sources.kafka import FileStreamStandIn
-    from consume_kafka_avro_data_spark.streaming.ann import StreamingAnnIngest
     from consume_kafka_avro_data_spark.streaming.ingest import StreamingGraphIngest
     from consume_kafka_avro_data_spark.tables import load_table
 
@@ -456,103 +454,26 @@ def ingest_compaction_ab_bench(spark, sf_dir: str) -> dict:
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
 
-    # -- ANN arm ---------------------------------------------------------
-    def ann_run(
-        compact_every: int | None, compact_policy: str = "eager"
-    ) -> dict:
-        tmp = tempfile.mkdtemp(prefix="ann_compact_ab_")
-        try:
-            emb = load_table(spark, sf_dir, "embeddings")
-            qv = emb.where(F.col("vec_id") == 1).collect()[0]["embedding"]
-            idx = AnnIndex.build(
-                spark, emb, os.path.join(tmp, "idx"), n_cells=16
-            )
-            arrivals = (
-                emb.select(
-                    (F.col("vec_id") + 10_000_000).alias("vec_id"),
-                    "embedding",
-                ).repartition(24)
-            )
-            topic = os.path.join(tmp, "vecs")
-            arrivals.write.parquet(topic)
-            ingest = StreamingAnnIngest(
-                spark,
-                idx,
-                os.path.join(tmp, "ckpt"),
-                compact_every=compact_every,
-                compact_policy=compact_policy,
-            )
-            secs = timed_batches(ingest)
-            stream = (
-                spark.readStream.schema(arrivals.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(topic)
-            )
-            t0 = time.perf_counter()
-            m = ingest.run_to_completion(stream)
-            dt = time.perf_counter() - t0
-            first8, last8 = head_tail(secs)
-            t0 = time.perf_counter()
-            idx.query_exact(qv, k=10, nprobe=16).collect()
-            q = time.perf_counter() - t0
-            return {
-                "compact_every": compact_every,
-                "compact_policy": compact_policy,
-                "vectors": m.vectors,
-                "batches": m.batches,
-                "sec": round(dt, 4),
-                "vectors_per_sec": round(m.vectors / dt, 1),
-                "first8_batch_sec": first8,
-                "last8_batch_sec": last8,
-                "generation_dirs": len(idx.vectors_dirs),
-                # the schedule-comparison number: at this corpus size
-                # merge JOBS are fixed-cost-bound (wall rates tie), but
-                # the re-written row volume is what each schedule costs
-                # at scale — eager re-reads the whole corpus per
-                # trigger, tiered folds only the tiers
-                "compact_rows_written": ingest.compact_rows_written,
-                "post_query_sec": round(q, 4),
-            }
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-
     # interleaved best-of-2 per arm (round 9): the single-shot arms
-    # made this row the noisiest cross-round comparison in the repo
-    # (ann swung 2× on untouched code) — see interleaved_best
+    # made this row the noisiest cross-round comparison in the repo —
+    # see interleaved_best
     return {
         "graph": interleaved_best(
             {"off": lambda: graph_run(None), "on": lambda: graph_run(8)},
             rate=lambda r: r["rows_per_sec"],
         ),
-        "ann": interleaved_best(
-            {
-                "off": lambda: ann_run(None),
-                "on": lambda: ann_run(8),
-                # round 10: size-tiered folds — per-batch generations
-                # merge into level dirs WITHOUT re-writing the seed
-                # base every trigger (the eager arm's O(corpus) cost);
-                # base folds only when the tiers outgrow it
-                "tiered": lambda: ann_run(8, compact_policy="tiered"),
-            },
-            rate=lambda r: r["vectors_per_sec"],
-        ),
     }
 
 
 def learned_ops_bench(spark, sf_dir: str) -> dict:
-    """Round-6 learned operators, measured: BPE merge training (16
-    rounds over the documents table — per-round cost is one
-    vocab-bounded pair aggregate + a map-only fold, so merges/sec is
-    the number to watch as the corpus grows) and the quality
-    classifier (train on the source weak-label split, then the
-    map-only scoring pass's docs/sec — the deployed filter's
-    steady-state cost)."""
+    """Round-6 learned operators, measured: the quality classifier
+    (train on the source weak-label split, then the map-only scoring
+    pass's docs/sec — the deployed filter's steady-state cost)."""
     from consume_kafka_avro_data_spark.operators.quality import (
         quality_probability,
         quality_training_frame,
         train_quality_classifier,
     )
-    from consume_kafka_avro_data_spark.operators.text import bpe_train
     from consume_kafka_avro_data_spark.tables import load_table
 
     from pyspark.sql import functions as F
@@ -572,24 +493,6 @@ def learned_ops_bench(spark, sf_dir: str) -> dict:
 
     docs = load_table(spark, sf_dir, "documents")
     n_docs = docs.count()
-    t0 = time.perf_counter()
-    merges = bpe_train(docs.select("text"), n_merges=16, checkpoint_every=8)
-    t_bpe = time.perf_counter() - t0
-    # round 7: batched merge rounds — same merge table (pinned by
-    # pytest), fewer driver round-trips (the vocab-size scale cap)
-    stats: dict = {}
-    t0 = time.perf_counter()
-    merges_b = bpe_train(
-        docs.select("text"),
-        n_merges=16,
-        checkpoint_every=8,
-        merges_per_round=8,
-        stats=stats,
-    )
-    t_bpe_batched = time.perf_counter() - t0
-    bpe_rounds_batched = stats.get("rounds", -1)
-    bpe_batched_identical = merges_b == merges
-
     labeled = quality_training_frame(
         docs.where(F.col("source") == "src0"),
         docs.where(F.col("source") != "src0"),
@@ -883,11 +786,6 @@ def learned_ops_bench(spark, sf_dir: str) -> dict:
 
     return {
         "six_gate_census": six_gate_census,
-        "bpe_merges": len(merges),
-        "bpe_train_sec": round(t_bpe, 4),
-        "bpe_train_batched_sec": round(t_bpe_batched, 4),
-        "bpe_batched_rounds": bpe_rounds_batched,
-        "bpe_batched_identical": bpe_batched_identical,
         "kn3_fit_sec": round(t_kn3_fit, 4),
         "kn3_score_sec": round(t_kn3, 4),
         "kn3_score_docs_per_sec": round(n_held / t_kn3, 1),
@@ -1054,60 +952,6 @@ def bloom_steady_state_bench(spark, sf_dir: str) -> dict:
     }
 
 
-def drift_monitor_bench(spark, sf_dir: str) -> dict:
-    """Corpus-drift monitoring overhead (streaming/drift.
-    StreamingDriftMonitor, round 5): reference head built from half the
-    corpus, the other half streamed in 4 micro-batches through the
-    head-bucketing aggregate.  Reported: one-time reference-build cost,
-    then monitored docs/s (best-of-2 — the per-batch cost is one
-    bounded aggregate + one count, so this is effectively the
-    micro-batch floor with a small LUT join on top)."""
-    from consume_kafka_avro_data_spark.streaming.drift import (
-        StreamingDriftMonitor,
-    )
-    from consume_kafka_avro_data_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang"
-    )
-    ref = docs.where("doc_id % 2 = 0")
-    arrivals = docs.where("doc_id % 2 = 1")
-    best: dict | None = None
-    for _ in range(2):
-        tmp = tempfile.mkdtemp(prefix="drift_bench_")
-        try:
-            topic = os.path.join(tmp, "docs")
-            arrivals.repartition(4).write.parquet(topic)
-            t_ref = time.perf_counter()
-            mon = StreamingDriftMonitor(
-                spark, ref, os.path.join(tmp, "ckpt")
-            )
-            ref_sec = time.perf_counter() - t_ref
-            stream = (
-                spark.readStream.schema(arrivals.schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(topic)
-            )
-            t0 = time.perf_counter()
-            m = mon.run_to_completion(stream)
-            dt = time.perf_counter() - t0
-            tvd = mon.drift_tvd()
-            row = {
-                "docs": m.docs,
-                "batches": m.batches,
-                "ref_build_sec": round(ref_sec, 4),
-                "sec": round(dt, 4),
-                "docs_per_sec": round(m.docs / dt, 1),
-                "langs": len(tvd),
-                "max_tvd": round(max(tvd.values()), 4) if tvd else 0.0,
-            }
-            if best is None or row["docs_per_sec"] > best["docs_per_sec"]:
-                best = row
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-    return best
-
-
 def cc_distributed_bench(spark, sf_dir: str) -> dict:
     """Force the DISTRIBUTED hash-min + pointer-jumping connected-
     components loop (small_graph_edges=0) over the same embedding
@@ -1161,367 +1005,6 @@ def cc_distributed_bench(spark, sf_dir: str) -> dict:
         "bfs_reached": n_reached,
         "lpa_sec": round(t_lpa, 4),
         "lpa_communities": n_communities,
-    }
-
-
-def ann_index_bench(spark, sf_dir: str) -> dict:
-    """Build-once / query-many: time the persisted IVF-PQ index build
-    (two map-only passes + partitioned write) and the two query paths —
-    exact rescore over probed cells vs ADC over codes only.  The query
-    numbers are what an application pays per lookup once the build is
-    amortized; both paths prune unprobed cells at planning time.
-
-    Recall accountability: nprobe is the latency/recall knob, so the
-    row also reports **recall@10 vs the brute-force answer** (mean over
-    several query vectors) at nprobe ∈ {1, 2, 4, 8} of 16 cells — the
-    measurement that turns "probe more cells for better recall" from
-    folklore into a number an operator can budget against."""
-    import tempfile as _tf
-
-    from consume_kafka_avro_data_spark.operators.ann_index import AnnIndex
-    from consume_kafka_avro_data_spark.operators.similarity import (
-        brute_force_topk,
-    )
-    from consume_kafka_avro_data_spark.tables import load_table
-
-    from pyspark.sql import functions as F
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q_ids = [1, 2, 3, 5, 8]
-    q_vecs = {
-        r["vec_id"]: r["embedding"]
-        for r in emb.where(F.col("vec_id").isin(q_ids)).collect()
-    }
-    qv = q_vecs[1]
-    tmp = _tf.mkdtemp(prefix="ann_bench_")
-    try:
-        t0 = time.perf_counter()
-        idx = AnnIndex.build(spark, emb, os.path.join(tmp, "idx"), n_cells=16)
-        t_build = time.perf_counter() - t0
-        # incremental path: index a same-sized "new arrivals" shard
-        # (ids shifted clear of the corpus) against the frozen
-        # quantizers — the between-rebuilds cost a sharded 100 TB
-        # corpus actually pays per increment
-        shard = emb.withColumn("vec_id", F.col("vec_id") + F.lit(10_000_000))
-        t0 = time.perf_counter()
-        idx.add_shard(shard)
-        t_shard = time.perf_counter() - t0
-        t_exact = t_adc = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            idx.query_exact(qv, k=10, nprobe=4).collect()
-            t_exact = min(t_exact, time.perf_counter() - t0)
-            t0 = time.perf_counter()
-            idx.query_adc(qv, k=10, nprobe=4).collect()
-            t_adc = min(t_adc, time.perf_counter() - t0)
-        # recall@10 vs brute force over the SAME corpus the index holds
-        # (corpus + shard), mean over the query set
-        full = emb.unionByName(shard)
-        truth = {
-            i: {r["vec_id"] for r in brute_force_topk(full, v, 10).collect()}
-            for i, v in q_vecs.items()
-        }
-        recall = {}
-        for nprobe in (1, 2, 4, 8):
-            hits = sum(
-                len(
-                    {
-                        r["vec_id"]
-                        for r in idx.query_exact(v, 10, nprobe).collect()
-                    }
-                    & truth[i]
-                )
-                for i, v in q_vecs.items()
-            )
-            recall[f"nprobe{nprobe}"] = round(hits / (10 * len(q_vecs)), 3)
-        # ADC recall at the widest probe: with cell loss mostly gone at
-        # nprobe=8, the gap below the exact path's number is the PQ
-        # quantization loss itself — the cost of never reading a float.
-        # The serving shape (query_adc_rerank: ADC shortlist → exact
-        # re-rank of `shortlist` floats) should close that gap while
-        # still reading ~shortlist vectors instead of every probed
-        # cell's — both measured so the trade is a number.
-        recall_adc = {}
-        for nprobe in (4, 8):
-            hits = sum(
-                len(
-                    {
-                        r["vec_id"]
-                        for r in idx.query_adc(v, 10, nprobe).collect()
-                    }
-                    & truth[i]
-                )
-                for i, v in q_vecs.items()
-            )
-            recall_adc[f"nprobe{nprobe}"] = round(
-                hits / (10 * len(q_vecs)), 3
-            )
-        # rerank at fixed nprobe=8: the SHORTLIST is the recall knob
-        # once probes saturate (each +1 of shortlist costs one more
-        # float-vector read, not another cell scan)
-        recall_rerank = {}
-        for sl in (50, 200):
-            hits_r = sum(
-                len(
-                    {
-                        r["vec_id"]
-                        for r in idx.query_adc_rerank(
-                            v, 10, nprobe=8, shortlist=sl
-                        ).collect()
-                    }
-                    & truth[i]
-                )
-                for i, v in q_vecs.items()
-            )
-            recall_rerank[f"sl{sl}"] = round(hits_r / (10 * len(q_vecs)), 3)
-
-        # --- recall-TUNED build: the round-6 knobs (replicas=4 multiple
-        # assignment, 8-bit PQ, more Lloyd iterations).  Kept as a
-        # separate row so the default build's numbers stay comparable
-        # across rounds; the honest cost — ×replicas index rows, so
-        # ×replicas scanned bytes at equal nprobe, and the build-time
-        # delta — is all recorded here.  (OPQ is available but off: on
-        # this isotropic synthetic corpus it is a measured no-op; the
-        # anisotropic win is pinned by pytest instead.)
-        # round 10: the tuned index carries a metadata column so the
-        # FILTERED serving paths get measured recall/latency (10%
-        # selectivity — en = every 10th id).  The tag rides every
-        # index row; assignment/codes are untouched, so the unfiltered
-        # tuned rows stay comparable to earlier rounds.
-        lang_tag = F.when(F.col("vec_id") % 10 == 0, F.lit("en")).otherwise(
-            F.lit("other")
-        )
-        tagged = emb.withColumn("lang", lang_tag)
-        tagged_shard = shard.withColumn("lang", lang_tag)
-        t0 = time.perf_counter()
-        tuned = AnnIndex.build(
-            spark,
-            tagged,
-            os.path.join(tmp, "idx_tuned"),
-            n_cells=16,
-            k_codes=256,
-            replicas=4,
-            quantizer_iters=15,
-            meta_cols=["lang"],
-        )
-        tuned.add_shard(tagged_shard)
-        t_build_tuned = time.perf_counter() - t0
-        t_exact_t = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            tuned.query_exact(qv, k=10, nprobe=4).collect()
-            t_exact_t = min(t_exact_t, time.perf_counter() - t0)
-        recall_t = {}
-        for nprobe in (1, 2, 4, 8):
-            hits = sum(
-                len(
-                    {
-                        r["vec_id"]
-                        for r in tuned.query_exact(v, 10, nprobe).collect()
-                    }
-                    & truth[i]
-                )
-                for i, v in q_vecs.items()
-            )
-            recall_t[f"nprobe{nprobe}"] = round(hits / (10 * len(q_vecs)), 3)
-        recall_t_adc = {}
-        for nprobe in (4, 8):
-            hits = sum(
-                len(
-                    {
-                        r["vec_id"]
-                        for r in tuned.query_adc(v, 10, nprobe).collect()
-                    }
-                    & truth[i]
-                )
-                for i, v in q_vecs.items()
-            )
-            recall_t_adc[f"nprobe{nprobe}"] = round(
-                hits / (10 * len(q_vecs)), 3
-            )
-        # batch search (round 6): 64 queries through the index-backed
-        # knn_join (equi-join on the cell partition column) vs the
-        # brute-force crossJoin — the many-queries serving shape; at
-        # nprobe=4 each query meets ~1/4 of the corpus instead of all
-        # of it, and the gap widens with corpus size
-        from consume_kafka_avro_data_spark.operators.similarity import (
-            knn_join as _bf_knn,
-        )
-
-        qbatch = (
-            emb.where(F.col("vec_id") < 64)
-            .select(
-                F.col("vec_id").alias("q_id"),
-                F.col("embedding").alias("q_vec"),
-            )
-            .localCheckpoint(eager=True)  # query prep outside the timers
-        )
-        t0 = time.perf_counter()
-        idx.knn_join(qbatch, k=10, nprobe=4).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        t_batch = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        _bf_knn(qbatch, emb.unionByName(shard), k=10).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        t_batch_bf = time.perf_counter() - t0
-        # round 7: the codes-only batch tiers — ADC scoring never reads
-        # the float column (the 100 TB IO trade: m bytes/candidate vs
-        # dim×4), and rerank=50 re-reads floats for 50 ids/query only
-        t0 = time.perf_counter()
-        idx.knn_join_adc(qbatch, k=10, nprobe=4).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        t_batch_adc = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        idx.knn_join_adc(qbatch, k=10, nprobe=4, rerank=50).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        t_batch_adc_rr = time.perf_counter() - t0
-        # round 8: the PROMOTED preset's serving story — codes-only
-        # batch ADC + exact re-rank on the TUNED index, with recall@10
-        # against the same 64-query brute-force truth the batch timing
-        # computes (what the preset actually serves, not folklore)
-        truth64: dict = {}
-        for r in _bf_knn(qbatch, emb.unionByName(shard), k=10).collect():
-            truth64.setdefault(r["q_id"], set()).add(r["vec_id"])
-        tuned_batch = {}
-        for rr in (50, 200):
-            t0 = time.perf_counter()
-            rows = tuned.knn_join_adc(
-                qbatch, k=10, nprobe=8, rerank=rr
-            ).collect()
-            dt = time.perf_counter() - t0
-            got: dict = {}
-            for r in rows:
-                got.setdefault(r["q_id"], set()).add(r["vec_id"])
-            hits = sum(
-                len(got.get(q, set()) & t) for q, t in truth64.items()
-            )
-            tuned_batch[f"rr{rr}"] = {
-                "sec": round(dt, 4),
-                "recall_at_10": round(hits / (10 * len(truth64)), 3),
-            }
-        # round 10: FILTERED serving accountability — the r09 paths
-        # are equality-pinned, this records their recall/latency on
-        # the tuned index under a selective (10%) predicate at
-        # nprobe 4/8, truth = brute force over the FILTERED corpus.
-        # Pytest enforces the nprobe-8 floor
-        # (tests/test_ann_recall_tuning.py filtered floor test); the
-        # measured finding is that at nprobe=4 selective filters fall
-        # under 0.8 (thinner per-cell survivor sets) — scale nprobe
-        # with 1/selectivity.
-        cond = F.col("lang") == "en"
-        truth_f: dict = {}
-        for r in _bf_knn(
-            qbatch, tagged.unionByName(tagged_shard).where(cond), k=10
-        ).collect():
-            truth_f.setdefault(r["q_id"], set()).add(r["vec_id"])
-        denom_f = sum(len(t) for t in truth_f.values())
-        filtered: dict = {}
-        for nprobe in (4, 8):
-            for pname, run in (
-                (
-                    "knn_join",
-                    lambda np=nprobe: tuned.knn_join(
-                        qbatch, k=10, nprobe=np, where=cond
-                    ),
-                ),
-                (
-                    "knn_join_adc_rr200",
-                    lambda np=nprobe: tuned.knn_join_adc(
-                        qbatch, k=10, nprobe=np, rerank=200, where=cond
-                    ),
-                ),
-            ):
-                secs, rows = [], None
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    rows = run().collect()
-                    secs.append(round(time.perf_counter() - t0, 4))
-                got_f: dict = {}
-                for r in rows:
-                    got_f.setdefault(r["q_id"], set()).add(r["vec_id"])
-                hits_f = sum(
-                    len(got_f.get(q, set()) & t) for q, t in truth_f.items()
-                )
-                filtered[f"{pname}_nprobe{nprobe}"] = {
-                    "sec": min(secs),
-                    "samples": secs,
-                    "recall_at_10": round(hits_f / denom_f, 3),
-                }
-        # round 11: the auto arm — caller passes the BASE nprobe=4
-        # (the width the r10 finding showed decaying under selective
-        # filters) and auto_nprobe measures selectivity and widens the
-        # probe list itself; recorded beside the fixed arms so the
-        # escalation's recall recovery and its latency price (one
-        # meta-column count + the wider probe) are both visible
-        resolved = tuned.resolve_nprobe(4, cond)
-        for pname, run in (
-            (
-                "knn_join",
-                lambda: tuned.knn_join(
-                    qbatch, k=10, nprobe=4, where=cond, auto_nprobe=True
-                ),
-            ),
-            (
-                "knn_join_adc_rr200",
-                lambda: tuned.knn_join_adc(
-                    qbatch, k=10, nprobe=4, rerank=200, where=cond,
-                    auto_nprobe=True,
-                ),
-            ),
-        ):
-            secs, rows = [], None
-            for _ in range(2):
-                t0 = time.perf_counter()
-                rows = run().collect()
-                secs.append(round(time.perf_counter() - t0, 4))
-            got_f = {}
-            for r in rows:
-                got_f.setdefault(r["q_id"], set()).add(r["vec_id"])
-            hits_f = sum(
-                len(got_f.get(q, set()) & t) for q, t in truth_f.items()
-            )
-            filtered[f"{pname}_auto"] = {
-                "sec": min(secs),
-                "samples": secs,
-                "recall_at_10": round(hits_f / denom_f, 3),
-                "resolved_nprobe": resolved,
-            }
-        qbatch.unpersist()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return {
-        "build_sec": round(t_build, 4),
-        "add_shard_sec": round(t_shard, 4),
-        "query_exact_sec": round(t_exact, 4),  # over corpus + shard
-        "query_adc_sec": round(t_adc, 4),
-        "recall_at_10": recall,
-        "recall_at_10_adc": recall_adc,
-        "recall_at_10_adc_rerank": recall_rerank,
-        "knn_join_64q_nprobe4_sec": round(t_batch, 4),
-        "knn_join_64q_bruteforce_sec": round(t_batch_bf, 4),
-        "knn_join_adc_64q_sec": round(t_batch_adc, 4),
-        "knn_join_adc_rerank50_64q_sec": round(t_batch_adc_rr, 4),
-        "tuned": {
-            "params": {
-                "replicas": 4,
-                "k_codes": 256,
-                "quantizer_iters": 15,
-            },
-            "build_sec": round(t_build_tuned, 4),  # build + shard
-            "query_exact_sec": round(t_exact_t, 4),
-            "recall_at_10": recall_t,
-            "recall_at_10_adc": recall_t_adc,
-            # 64-query knn_join_adc at nprobe=8 with exact re-rank —
-            # the serving shape on the promoted preset
-            "knn_join_adc_rerank": tuned_batch,
-            # round-10 filtered serving: recall@10 + latency under a
-            # 10%-selective where= at nprobe 4/8, both batch paths
-            "filtered": filtered,
-        },
     }
 
 
@@ -1772,13 +1255,11 @@ def main() -> None:
     sdedup = streaming_dedup_bench(spark, sf_dir)
     cc = cc_distributed_bench(spark, sf_dir)
     skew = skew_stress_bench(spark, sf_dir)
-    ann = ann_index_bench(spark, sf_dir)
     compaction = ingest_compaction_ab_bench(spark, sf_dir)
     bloom_x = bloom_crossover_bench(spark, sf_dir)
     bloom_ss = bloom_steady_state_bench(spark, sf_dir)
     learned = learned_ops_bench(spark, sf_dir)
     sketches = sketches_bench(spark, sf_dir)
-    drift = drift_monitor_bench(spark, sf_dir)
 
     total = round(sum(timings.values()), 4)
     payload = json.dumps(
@@ -1794,13 +1275,11 @@ def main() -> None:
             "streaming_dedup": sdedup,
             "cc_distributed": cc,
             "skew_stress": skew,
-            "ann_index": ann,
             "ingest_compaction_ab": compaction,
             "bloom_crossover": bloom_x,
             "bloom_steady_state": bloom_ss,
             "learned_ops": learned,
             "sketches": sketches,
-            "drift_monitor": drift,
             "baseline_reference_msgs_per_sec": 770,
         },
         separators=(",", ":"),
@@ -1829,44 +1308,11 @@ def main() -> None:
             "dedup_docs_per_sec": sdedup["docs_per_sec"],
             "cc_sec": cc["sec"],
             "skew_speedup": skew["speedup"],
-            "ann_recall_at_10": ann["recall_at_10"],
-            "ann_recall_at_10_adc": ann["recall_at_10_adc"],
-            "ann_recall_at_10_adc_rerank": ann["recall_at_10_adc_rerank"],
-            # round-6 recall-tuned build (replicas=4, 8-bit PQ) at
-            # nprobe 1/2/4/8 as a LIST — the compact line is budgeted
-            # (assert below) and the dict form + build cost live in
-            # BENCH_local.json
-            "ann_recall_tuned": [
-                ann["tuned"]["recall_at_10"][f"nprobe{p}"]
-                for p in (1, 2, 4, 8)
-            ],
-            # tuned-index batch ADC recall@10 at [rerank50, rerank200]
-            "ann_tuned_adc_rr_recall": [
-                ann["tuned"]["knn_join_adc_rerank"]["rr50"]["recall_at_10"],
-                ann["tuned"]["knn_join_adc_rerank"]["rr200"]["recall_at_10"],
-            ],
-            # filtered (10%-selective where=) recall@10 at nprobe [4, 8]
-            "ann_filtered_recall": [
-                ann["tuned"]["filtered"]["knn_join_nprobe4"]["recall_at_10"],
-                ann["tuned"]["filtered"]["knn_join_nprobe8"]["recall_at_10"],
-            ],
-            # round-11 auto arm: [recall@10, resolved nprobe] with the
-            # caller passing the decayed base nprobe=4
-            "ann_filtered_auto": [
-                ann["tuned"]["filtered"]["knn_join_auto"]["recall_at_10"],
-                ann["tuned"]["filtered"]["knn_join_auto"]["resolved_nprobe"],
-            ],
             "bloom_crossover_mult": bloom_x["crossover_mult"],
             # build-once/probe-many split: [one-time build, steady probe]
             "bloom_build_probe_sec": [
                 bloom_ss["build_sec"],
                 bloom_ss["probe_sec"],
-            ],
-            "bpe_train16_sec": learned["bpe_train_sec"],
-            # [sequential, batched merges_per_round=8] — same table
-            "bpe_batched_sec": [
-                learned["bpe_train_sec"],
-                learned["bpe_train_batched_sec"],
             ],
             "quality_docs_per_sec": learned["quality_score_docs_per_sec"],
             "kn3_docs_per_sec": learned["kn3_score_docs_per_sec"],
@@ -1880,12 +1326,6 @@ def main() -> None:
             "lm_gate_docs_per_sec": learned["lm_gate"]["docs_per_sec"],
             # round-9 gate kernel rate (merged-interval coverage)
             "gopher_rep_docs_per_sec": learned["gopher_rep_docs_per_sec"],
-            # batch ANN [exact knn_join, codes-only ADC, ADC+rerank50]
-            "knn_batch_sec": [
-                ann["knn_join_64q_nprobe4_sec"],
-                ann["knn_join_adc_64q_sec"],
-                ann["knn_join_adc_rerank50_64q_sec"],
-            ],
             # compact_every A/B, post-ingest read cost [off, on] — the
             # tax the small-file growth levies; full arms in
             # BENCH_local.json ingest_compaction_ab
@@ -1894,12 +1334,7 @@ def main() -> None:
                     compaction["graph"]["off"]["post_scan_sec"],
                     compaction["graph"]["on"]["post_scan_sec"],
                 ],
-                "ann": [
-                    compaction["ann"]["off"]["post_query_sec"],
-                    compaction["ann"]["on"]["post_query_sec"],
-                ],
             },
-            "drift_docs_per_sec": drift["docs_per_sec"],
             "baseline_reference_msgs_per_sec": 770,
         },
         separators=(",", ":"),
@@ -1914,21 +1349,13 @@ def main() -> None:
     # lives in BENCH_local.json) so each round's NEW evidence survives
     # the ~2 KB stdout budget
     droppable = [
-        "bpe_batched_sec",
         "bloom_build_probe_sec",
         "compact_read_sec",
-        "knn_batch_sec",
-        "ann_recall_at_10_adc",
-        "bpe_train16_sec",
         "kn3_docs_per_sec",
         "quality_docs_per_sec",
         "dsir_docs_per_sec",
         "lm_gate_docs_per_sec",
         "kn5_docs_per_sec",
-        "ann_tuned_adc_rr_recall",
-        "ann_filtered_recall",
-        "ann_recall_tuned",
-        "ann_recall_at_10_adc_rerank",
     ]
     doc = json.loads(compact)
     while len(compact) >= 1900 and droppable:

@@ -5,8 +5,8 @@ store path carries a URI scheme, plain POSIX for schemeless local paths
 Why this exists: the reference's sink was a NETWORK database (libpq
 connection, ``/root/reference/src/Database.cpp:5`` — nothing about its
 persistence assumed a local disk), so this engine's stores must not
-silently require one either.  ``ManifestTable`` and ``AnnIndex`` write
-their DATA through Spark (cluster-capable on any
+silently require one either.  ``ManifestTable`` and the saved models
+write their DATA through Spark (cluster-capable on any
 ``hdfs://``/``s3a://`` path), but their manifest/meta commits are
 driver-side file operations.  Routed
 through ``os``/``shutil``/``pyarrow`` they silently require the store
@@ -23,7 +23,8 @@ dependency), so the store URI decides the transport:
   the classpath) → a clear :class:`UnsupportedFsError` at construction
   time, not a confusing failure mid-commit.
 
-Atomicity: the commit points (``rename_overwrite``) go through
+Atomicity: the commit points (``write_atomic``, a temp-file write then
+``rename_overwrite``) go through
 ``FileContext.rename(..., Options.Rename.OVERWRITE)``, which is atomic
 on local filesystems and HDFS.  **S3 caveat**: object stores implement
 rename as copy+delete — non-atomic.  On S3, run the manifest/meta
@@ -68,8 +69,14 @@ def fs_for(spark, path: str) -> "LocalIO | HadoopIO":
     return HadoopIO(spark, path)
 
 
-class _ParquetFooters:
-    """Footer reads shared by both backends, through ``open_read``."""
+class _SharedIO:
+    """Operations both backends build from their primitives."""
+
+    def write_atomic(self, p: str, data: bytes) -> None:
+        """Replace ``p``'s content with ``data`` in one step: readers
+        see the old bytes or the new, never a partial write."""
+        self.write_bytes(p + ".tmp", data)
+        self.rename_overwrite(p + ".tmp", p)
 
     def parquet_num_rows(self, p: str) -> int:
         import pyarrow.parquet as pq
@@ -78,7 +85,7 @@ class _ParquetFooters:
             return pq.read_metadata(f).num_rows
 
 
-class LocalIO(_ParquetFooters):
+class LocalIO(_SharedIO):
     """POSIX metadata IO — the schemeless-path degenerate case."""
 
     def exists(self, p: str) -> bool:
@@ -140,7 +147,7 @@ class LocalIO(_ParquetFooters):
         return sorted(out)
 
 
-class HadoopIO(_ParquetFooters):
+class HadoopIO(_SharedIO):
     """Hadoop FileSystem metadata IO, reached through the live JVM.
 
     One instance per store (the FileSystem handle is resolved once from

@@ -1,11 +1,10 @@
 """The census tokenizer — ONE definition of "lowercase, split on
 single spaces, drop empties", shared by every operator whose parity
 contract depends on tokenizing identically: the corpus statistics
-queries (perplexity, vocab, tf-idf), the substring span dedup, the
-corpus-drift census, and the streaming drift monitor (whose reference
-head must be byte-identical to the batch census's).  A tokenizer tweak
-made here changes all of them together; made anywhere else it silently
-desynchronizes a monitor from the census it claims to mirror.
+queries (perplexity, vocab, tf-idf), the substring span dedup and the
+corpus-drift census.  A tokenizer tweak made here changes all of them
+together; made anywhere else it silently desynchronizes one census
+from another.
 
 (The near-dup shingle tokenizer in ``operators/dedup.py`` is
 DELIBERATELY different — whitespace-run splitting with null coalesce —

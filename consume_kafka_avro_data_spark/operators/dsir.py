@@ -337,9 +337,7 @@ class DsirModel:
             "hash_fn": self.hash_fn,
             "log_ratio": list(self.log_ratio),
         }
-        tmp = path + ".tmp"
-        io.write_bytes(tmp, json.dumps(payload).encode())
-        io.rename_overwrite(tmp, path)
+        io.write_atomic(path, json.dumps(payload).encode())
 
     @classmethod
     def load(cls, spark, path: str) -> "DsirModel":

@@ -378,7 +378,7 @@ class NgramKN:
 
     # -- persistence -------------------------------------------------------
 
-    #: model sidecar name (fsio-addressed, like AnnIndex's)
+    #: model sidecar name (fsio-addressed)
     META = "_kn_meta.json"
 
     def save(self, path: str) -> None:
@@ -397,9 +397,9 @@ class NgramKN:
         anything is deleted; an in-place overwrite would instead refuse
         with 'cannot overwrite a path being read from').  Handles
         loaded BEFORE the re-save go stale once the old generation is
-        swept — single-writer, reopen-after-commit, the AnnIndex
-        contract without its grace window (LM models swap rarely; add
-        one if a deployment re-saves under long concurrent scans)."""
+        swept — single-writer, reopen-after-commit, with no grace window
+        (LM models swap rarely; add one if a deployment re-saves under
+        long concurrent scans)."""
         import uuid
 
         from consume_kafka_avro_data_spark.fsio import fs_for
@@ -413,9 +413,7 @@ class NgramKN:
             self.lams[k].write.parquet(os.path.join(base, f"lams_{k}"))
         self.p1.write.parquet(os.path.join(base, "p1"))
         meta = {"order": self.order, "discount": self.discount, "dir": gen}
-        tmp = os.path.join(path, self.META + ".tmp")
-        io.write_bytes(tmp, json.dumps(meta).encode())
-        io.rename_overwrite(tmp, os.path.join(path, self.META))
+        io.write_atomic(os.path.join(path, self.META), json.dumps(meta).encode())
         # sweep superseded generations + crash leftovers (uncommitted
         # writes from a save that died before its sidecar replace)
         for name in io.list_names(path):

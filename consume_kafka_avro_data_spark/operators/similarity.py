@@ -318,9 +318,9 @@ def blocked_allpairs_cosine(
     ).select(id_col, vec_col, "_blk", *gcols, "_bp.ba", "_bp.bb")
 
     # pair ids inherit the source id type — the family is id-generic
-    # (brute_force_topk, knn_join, AnnIndex rerank all accept string
-    # ids), so a hardcoded long here would make Arrow choke on the
-    # default string doc-id shape of operators/dedup
+    # (brute_force_topk and knn_join accept string ids), so a hardcoded
+    # long here would make Arrow choke on the default string doc-id
+    # shape of operators/dedup
     id_type = corpus.schema[id_col].dataType
     out_schema = StructType(
         [
@@ -437,10 +437,9 @@ def auto_n_centroids(
     corpus (with k fixed, cells grow 100× and the within-cell sweep is
     quadratic again).  Capped so the k·dim float64 centroid matrix —
     the only driver-resident state — stays under ``max_centroid_bytes``
-    (default 64 MB; at dim=1024 that still allows k=8192 ≈ √(67M), and
-    beyond that corpus size a persisted AnnIndex layout is the right
-    tool anyway).  Pure integer math (``isqrt``) so the DuckDB oracle
-    re-derives the identical k from the identical count."""
+    (default 64 MB; at dim=1024 that still allows k=8192 ≈ √(67M)).
+    Pure integer math (``isqrt``) so the DuckDB oracle re-derives the
+    identical k from the identical count."""
     import math
 
     k = max(1, math.isqrt(max(n_rows, 1)))
@@ -506,12 +505,10 @@ def sample_with_query_row(
 def kmeans_centroids(
     corpus: DataFrame,
     k: int = 16,
-    iters: int = 5,
     sample: int = 4096,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    init: str = "random",
 ) -> np.ndarray:
     """Deterministic coarse quantizer: Lloyd's k-means on a driver-side
     sample (:func:`kmeans_sample`), unit-normalized so
@@ -521,71 +518,27 @@ def kmeans_centroids(
     into the plan as literals); the expensive part — assigning every
     corpus row — runs as a pure JVM expression, one map-only pass that a
     real deployment computes once and persists as a partition column.
-
-    ``init``/``iters`` are quality knobs for index builds (see
-    :func:`lloyd_unit_kmeans`); oracle-checked queries call with the
-    defaults so their re-derived centroid literals never move.
     """
     x = kmeans_sample(corpus, sample, id_col, vec_col)
-    return lloyd_unit_kmeans(x, k=k, iters=iters, seed=seed, init=init)
+    return lloyd_unit_kmeans(x, k=k, seed=seed)
 
 
-def _kmeanspp_init(x: np.ndarray, k: int, rng) -> np.ndarray:
-    """Deterministic (seeded-rng) k-means++ seeding over UNIT vectors:
-    first center drawn uniformly, each next center D²-weighted with
-    D² = 2 − 2·cos (the squared L2 distance between unit vectors).
-    Arthur & Vassilvitskii 2007 — public algorithm.  Opt-in: the
-    oracle-checked queries stay on the default seeded-uniform init so
-    their re-derived centroid literals never move."""
-    n = len(x)
-    k = min(k, n)
-    if k == 0:  # empty sample: mirror the random path's empty result
-        return np.empty((0, x.shape[1] if x.ndim == 2 else 0))
-    cent = np.empty((k, x.shape[1]), dtype=np.float64)
-    cent[0] = x[int(rng.integers(n))]
-    d2 = np.full(n, np.inf)
-    for i in range(1, k):
-        d2 = np.minimum(d2, np.maximum(2.0 - 2.0 * (x @ cent[i - 1]), 0.0))
-        tot = d2.sum()
-        if tot <= 0.0:  # all points coincide with chosen centers
-            cent[i:] = cent[0]
-            break
-        cent[i] = x[int(rng.choice(n, p=d2 / tot))]
-    return cent
-
-
-def lloyd_unit_kmeans(
-    x: np.ndarray,
-    k: int = 16,
-    iters: int = 5,
-    seed: int = 42,
-    init: str = "random",
-) -> np.ndarray:
+def lloyd_unit_kmeans(x: np.ndarray, k: int = 16, seed: int = 42) -> np.ndarray:
     """Pure-numpy Lloyd's iteration over unit-normalized vectors —
     shared by the Spark path (sample collected via DataFrame) and the
     DuckDB oracle (same sample loaded straight from parquet), so both
     derive bit-identical centroids and the IVF query is fully
-    oracle-checkable despite k-means being iterative.
-
-    ``init``: ``"random"`` (default — seeded uniform choice, the
-    oracle-pinned path) or ``"kmeanspp"`` (D²-weighted seeding, still
-    deterministic under the seed; an AnnIndex.build quality option that
-    must NOT become the default while oracles re-derive literals from
-    the default path)."""
+    oracle-checkable despite k-means being iterative.  Seeded uniform
+    initial centers and five Lloyd rounds: the oracles re-derive their
+    centroid literals from exactly this path."""
     if len(x) == 0 or k <= 0:
         # empty sample / degenerate k: empty centroid matrix instead of
-        # an argmax-of-empty ValueError inside the Lloyd loop (both
-        # init paths previously raised here)
+        # an argmax-of-empty ValueError inside the Lloyd loop
         return np.empty((0, x.shape[1] if x.ndim == 2 else 0))
     x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
     rng = np.random.default_rng(seed)
-    if init == "kmeanspp":
-        cent = _kmeanspp_init(x, k, rng)
-    elif init == "random":
-        cent = x[rng.choice(len(x), size=min(k, len(x)), replace=False)]
-    else:
-        raise ValueError(f"unknown k-means init {init!r}")
-    for _ in range(iters):
+    cent = x[rng.choice(len(x), size=min(k, len(x)), replace=False)]
+    for _ in range(5):
         sim = x @ cent.T
         assign = sim.argmax(axis=1)
         for c in range(len(cent)):
@@ -624,59 +577,6 @@ def ivf_assign(
             proj = x @ qcent.T  # exact integer-valued float64
             out = {c: pdf[c] for c in cols}
             out["_ivf_cell"] = (proj.argmax(axis=1) + 1).astype(np.int32)
-            yield pd.DataFrame(out)
-
-    return corpus.mapInPandas(gen, schema=out_schema)
-
-
-def multi_ivf_assign(
-    corpus: DataFrame,
-    centroids: np.ndarray,
-    replicas: int = 2,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF **multiple assignment**: each vector is indexed under its
-    ``replicas`` nearest cells (one output row per cell), the public
-    recall lever for low-nprobe probing (used by IVFADC variants and,
-    with a residual-aware second assignment, ScaNN's SOAR).
-
-    Why this and not a better quantizer: on this corpus the single-
-    assignment quantizer already probes the best-possible cell at
-    nprobe=1 — the TRUTH is split across cells, so the ceiling itself
-    is the problem.  R-way assignment puts each vector in R cells,
-    multiplying the chance a probed cell contains it; the honest cost
-    is ×R index rows (storage + scanned bytes per probe), which the
-    bench records.  Map-only like :func:`ivf_assign`; at 100 TB the
-    write amplification is the standard multi-assignment trade.
-
-    Determinism: per-row cell ranking uses the same q20 integer dots as
-    ``ivf_assign`` with a stable argsort, so rank 0 ≡ ``ivf_assign``'s
-    first-max cell exactly (``replicas=1`` output == ``ivf_assign``).
-    """
-    import pandas as pd
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    if replicas < 1:
-        raise ValueError(f"replicas must be >= 1, got {replicas}")
-    r = min(replicas, len(centroids))
-    qcent = quantize_np(centroids)
-    out_schema = StructType(
-        corpus.schema.fields + [StructField("_ivf_cell", IntegerType(), False)]
-    )
-    cols = corpus.columns
-
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = quantize_np(np.stack(pdf[vec_col].map(np.asarray)))
-            proj = x @ qcent.T  # exact integer-valued float64
-            # stable sort: ties keep the lower cell id, matching
-            # ivf_assign's argmax (first max) at rank 0
-            top = np.argsort(-proj, axis=1, kind="stable")[:, :r]
-            idx = np.repeat(np.arange(len(pdf)), r)
-            out = {c: pdf[c].iloc[idx].reset_index(drop=True) for c in cols}
-            out["_ivf_cell"] = (top.reshape(-1) + 1).astype(np.int32)
             yield pd.DataFrame(out)
 
     return corpus.mapInPandas(gen, schema=out_schema)
@@ -1156,77 +1056,11 @@ def pq_codebooks_from_sample(
     )
 
 
-def opq_train(
-    x: np.ndarray,
-    m: int = 8,
-    k: int = 16,
-    sweeps: int = 8,
-    iters: int = 5,
-    seed: int = 42,
-) -> tuple[np.ndarray, np.ndarray]:
-    """OPQ (Ge et al., *Optimized Product Quantization*, CVPR 2013):
-    learn an orthogonal rotation R that aligns the data with the PQ
-    subspace grid before coding, by alternating (a) PQ codebooks in the
-    rotated space and (b) the Procrustes-optimal R for the current
-    reconstruction — min ‖xR − recon‖ over orthogonal R, solved by SVD
-    of xᵀ·recon.  Returns ``(rotation dim×dim, codebooks m×k×sub)``.
-
-    Deterministic (seeded Lloyd's per subspace, fixed sweep count) and
-    driver-sized: trains on the same ≤4096-row sample as
-    :func:`pq_codebooks`, so only dim² + dim·k floats live anywhere.
-    The win is data-dependent — it cuts ADC quantization loss when
-    variance is unevenly spread across subspaces and is a measured
-    no-op on isotropic corpora (the synthetic test embeddings), which
-    the pytest demonstrates on an anisotropic sample instead."""
-    x = np.asarray(x, dtype=np.float64)
-    dim = x.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
-    sub = dim // m
-
-    def _train(xr: np.ndarray) -> np.ndarray:
-        return np.stack(
-            [
-                lloyd_l2_kmeans(
-                    xr[:, i * sub : (i + 1) * sub], k=k, iters=iters, seed=seed + i
-                )
-                for i in range(m)
-            ]
-        )
-
-    def _codes(xr: np.ndarray, cb: np.ndarray) -> np.ndarray:
-        out = np.empty((len(xr), m), dtype=np.int64)
-        for i in range(m):
-            sv = xr[:, i * sub : (i + 1) * sub]
-            d2 = (
-                (sv * sv).sum(axis=1, keepdims=True)
-                - 2.0 * (sv @ cb[i].T)
-                + (cb[i] * cb[i]).sum(axis=1)
-            )
-            out[:, i] = d2.argmin(axis=1)
-        return out
-
-    rot = np.eye(dim)
-    cb = _train(x)
-    for _ in range(max(sweeps, 0)):
-        xr = x @ rot
-        cb = _train(xr)
-        codes = _codes(xr, cb)
-        recon = np.concatenate(
-            [cb[i][codes[:, i]] for i in range(m)], axis=1
-        )
-        u, _s, vt = np.linalg.svd(x.T @ recon)
-        rot = u @ vt
-    return rot, _train(x @ rot)
-
-
 def pq_encode(
     corpus: DataFrame,
     codebooks: np.ndarray,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    keep_cols: list[str] | None = None,
-    rotation: np.ndarray | None = None,
 ) -> DataFrame:
     """(id, vec) → (id, ``pq_codes`` array<int>, 1-based codes): one
     Arrow pass, one m-way batched matmul per subspace against q20-
@@ -1234,30 +1068,22 @@ def pq_encode(
     DuckDB ``list_indexof(d, list_min(d))`` over the same literals.
     Map-only: at 100 TB this runs once and the packed codes column (m
     small ints ≈ m bytes dictionary-encoded in parquet) replaces the
-    dim×4-byte float array in the resident index.
-
-    ``rotation`` (optional, from :func:`opq_train`): applied to each
-    vector BEFORE q20 quantization, so codes live in the rotated space;
-    :func:`pq_adc_lut` must receive the same rotation."""
+    dim×4-byte float array in the resident index."""
     import pandas as pd
     from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
     m, _k, sub = codebooks.shape
     qcb = [quantize_np(codebooks[i]) for i in range(m)]
-    rot = None if rotation is None else np.asarray(rotation, dtype=np.float64)
-    keep = list(keep_cols or [])  # extra columns to carry through
     out_schema = StructType(
         [corpus.schema[id_col]]
-        + [corpus.schema[c] for c in keep]
         + [StructField("pq_codes", ArrayType(IntegerType(), False), False)]
     )
 
     def gen(batches):
         for pdf in batches:
-            raw = np.stack(pdf[vec_col].map(np.asarray)).astype(np.float64)
-            if rot is not None:
-                raw = raw @ rot
-            x = quantize_np(raw)
+            x = quantize_np(
+                np.stack(pdf[vec_col].map(np.asarray)).astype(np.float64)
+            )
             codes = np.empty((len(x), m), dtype=np.int32)
             for i in range(m):
                 sv = x[:, i * sub : (i + 1) * sub]
@@ -1268,31 +1094,19 @@ def pq_encode(
                     + (qc * qc).sum(axis=1)
                 )  # exact: integer-valued float64 throughout
                 codes[:, i] = d2.argmin(axis=1) + 1  # 1-based (list_indexof)
-            out = {id_col: pdf[id_col]}
-            out.update({c: pdf[c] for c in keep})
-            out["pq_codes"] = list(codes)
-            yield pd.DataFrame(out)
+            yield pd.DataFrame({id_col: pdf[id_col], "pq_codes": list(codes)})
 
-    tail = [] if vec_col in keep else [vec_col]  # keep may retain the vector
-    return corpus.select(id_col, *keep, *tail).mapInPandas(
-        gen, schema=out_schema
-    )
+    return corpus.select(id_col, vec_col).mapInPandas(gen, schema=out_schema)
 
 
-def pq_adc_lut(
-    query_vec, codebooks: np.ndarray, rotation: np.ndarray | None = None
-) -> list[tuple[int, int, float]]:
+def pq_adc_lut(query_vec, codebooks: np.ndarray) -> list[tuple[int, int, float]]:
     """Per-query ADC lookup table: rows (sub 1-based, code 1-based,
     partial) where partial = ||q_sub − centroid||² on the q20 grid —
     exact integer-valued doubles, so the m-term sums that score each
     candidate are order-independent and engine-portable.  m·k rows:
-    driver-sized by construction, broadcast into the scoring join.
-    ``rotation`` must match the one the codes were encoded under."""
+    driver-sized by construction, broadcast into the scoring join."""
     m, k, sub = codebooks.shape
-    q = np.asarray(query_vec, dtype=np.float64)
-    if rotation is not None:
-        q = q @ np.asarray(rotation, dtype=np.float64)
-    q = quantize_np(q)
+    q = quantize_np(np.asarray(query_vec, dtype=np.float64))
     rows = []
     for i in range(m):
         sv = q[i * sub : (i + 1) * sub]

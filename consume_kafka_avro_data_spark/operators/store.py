@@ -129,12 +129,9 @@ class ManifestTable:
         if cur_v:
             cur_vf = os.path.join(self.path, f"_manifest.v{cur_v}.json")
             if not self._io.is_file(cur_vf):
-                tmp_bf = cur_vf + ".tmp"
-                self._io.write_bytes(tmp_bf, json.dumps(current).encode())
-                self._io.rename_overwrite(tmp_bf, cur_vf)
+                self._io.write_atomic(cur_vf, json.dumps(current).encode())
         doc = {"files": sorted(files), "version": cur_v + 1}
         payload = json.dumps(doc).encode()
-        tmp = os.path.join(self.path, self.MANIFEST + ".tmp")
         # POINTER FIRST, snapshot second — both via write-temp + rename.
         # Pointer-first means a crash between the two renames leaves a
         # committed current version whose snapshot file is missing
@@ -142,11 +139,9 @@ class ManifestTable:
         # backfilled by the NEXT publish above) rather than a snapshot
         # file advertising an UNCOMMITTED version whose identity a
         # post-restart retry would silently overwrite.
-        self._io.write_bytes(tmp, payload)
-        self._io.write_bytes(tmp + ".v", payload)
-        self._io.rename_overwrite(tmp, os.path.join(self.path, self.MANIFEST))
+        self._io.write_atomic(os.path.join(self.path, self.MANIFEST), payload)
         vf = os.path.join(self.path, f"_manifest.v{doc['version']}.json")
-        self._io.rename_overwrite(tmp + ".v", vf)
+        self._io.write_atomic(vf, payload)
 
     def stage(self, df: DataFrame) -> list[str]:
         """Write df's parquet files into the table dir WITHOUT
@@ -304,7 +299,7 @@ class ManifestTable:
         # crash orphans (staged by a merge_new that died before its
         # publish — the replayed batch re-stages fresh uuid-named files,
         # so without this sweep every crash-retry leaks a batch of
-        # invisible parquet forever; AnnIndex sweeps the same way)
+        # invisible parquet forever)
         self._gc_orphans(keep=set(staged))
         return len(staged)
 

@@ -299,227 +299,10 @@ def tf_idf(
     )
 
 
-# ---------------------------------------------------------------------------
-# BPE merge training (Sennrich, Haddow & Birch 2016, "Neural Machine
-# Translation of Rare Words with Subword Units" — public algorithm).
-# q_bpe_tokens applies the fixed GPT-2-style PRE-tokenization; this is
-# the other half of the tokenizer story: LEARNING the merge table from
-# a corpus, as a bounded iterative Spark operator.
-#
-# Scale shape (the connected_components loop discipline):
-#   1. ONE corpus-sized pass aggregates pre-tokens to (word_type, count)
-#      — from here on, every round works on the WORD-TYPE table, which
-#      is vocabulary-bounded (≪ corpus; Sennrich trains on exactly this
-#      dictionary for the same reason).
-#   2. Per merge round: adjacent-pair counts (explode + groupBy over the
-#      word-type table — a vocab-bounded shuffle), ONE driver row for
-#      the argmax (the merge table is n_merges entries, driver-sized by
-#      construction), then a map-only greedy-leftmost fold applies the
-#      merge to the symbol arrays inside whole-stage codegen (the
-#      F.aggregate fold — no Python in the loop).
-#   3. localCheckpoint every few rounds cuts the growing plan, exactly
-#      like the iterative graph operators.
-# ---------------------------------------------------------------------------
-
-#: Sennrich's end-of-word marker, appended to a word's final character
-#: so merges can't cross word boundaries and word-final units stay
-#: distinct from word-internal ones.
-BPE_EOW = "</w>"
-
-#: the GPT-2-style pre-token splitter shared by training (JVM regex,
-#: bpe_ish_tokens) and encoding (Python re) — one pattern, two engines,
-#: pinned equal by pytest
+#: the GPT-2-style pre-token splitter of :func:`bpe_ish_tokens` for
+#: Python callers (the unigram encoder's ``re``) — one pattern, two
+#: engines, pinned equal by pytest
 BPE_PRETOKEN_RE = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]"
-
-
-def _bpe_word_types(corpus: DataFrame, text_col: str) -> DataFrame:
-    """(word, cnt, syms) — the word-type dictionary with each word as
-    its initial symbol sequence (characters, EOW glued to the last)."""
-    word = F.explode(bpe_ish_tokens(text_col)).alias("word")
-    types = (
-        corpus.select(word)
-        .where(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    chars = F.split(F.col("word"), "")
-    n = F.size(chars)
-    syms = F.transform(
-        chars,
-        lambda c, i: F.when(i == n - 1, F.concat(c, F.lit(BPE_EOW))).otherwise(c),
-    )
-    return types.select("word", "cnt", syms.alias("syms"))
-
-
-def _merge_pair_expr(syms: Column, a: str, b: str) -> Column:
-    """Greedy-leftmost replacement of adjacent (a, b) with a+b inside a
-    symbol array, as ONE codegen'd left fold (accumulator = emitted
-    prefix + one pending symbol): 'aaa' under (a,a) → [aa, a], the
-    reference behavior.  No UDF — the merge loop stays JVM-side."""
-    merged = a + b
-    return F.aggregate(
-        syms,
-        F.struct(
-            F.array().cast("array<string>").alias("out"),
-            F.lit(None).cast("string").alias("pend"),
-        ),
-        lambda acc, x: F.when(
-            acc["pend"].isNull(),
-            F.struct(acc["out"].alias("out"), x.alias("pend")),
-        )
-        .when(
-            (acc["pend"] == F.lit(a)) & (x == F.lit(b)),
-            F.struct(acc["out"].alias("out"), F.lit(merged).alias("pend")),
-        )
-        .otherwise(
-            F.struct(
-                F.concat(acc["out"], F.array(acc["pend"])).alias("out"),
-                x.alias("pend"),
-            )
-        ),
-        lambda acc: F.when(acc["pend"].isNull(), acc["out"]).otherwise(
-            F.concat(acc["out"], F.array(acc["pend"]))
-        ),
-    )
-
-
-def _safe_merge_batch(
-    rows, limit: int, min_pair_count: int
-) -> list[tuple[str, str]]:
-    """From the round's ranked pair counts (desc count, asc a, asc b),
-    pick the longest PREFIX that provably trains identically to
-    sequential one-merge rounds, so callers can apply the whole batch
-    between recounts:
-
-    * prefix, not skip-and-continue: a skipped pair's count CHANGES
-      once an earlier overlapping merge applies, so everything ranked
-      after it must be re-ranked by a fresh count;
-    * symbol-disjoint: merging (a,b) only perturbs counts of pairs
-      touching a, b, or the created symbol a+b — a later batch member
-      whose symbols avoid every earlier member's {a, b, a+b} keeps its
-      exact count through the earlier applications;
-    * strict-drop trim: pairs the prefix EXCLUDED (and any new pairs
-      merges create, whose counts are bounded by an excluded parent's)
-      compete at ≤ the first excluded count — batch members at that
-      same count could lose the lexicographic tie-break sequentially,
-      so trim them and let the next recount decide.
-
-    The argmax itself (rows[0]) is always exact.  Returns [] when the
-    round should stop (no pairs / argmax under min_pair_count)."""
-    batch: list[tuple[str, str]] = []
-    used: set[str] = set()
-    for r in rows:
-        if len(batch) == limit or r["n"] < min_pair_count:
-            break
-        a, b = r["a"], r["b"]
-        if a in used or b in used:
-            break
-        batch.append((a, b))
-        used.update((a, b, a + b))
-    c_stop = rows[len(batch)]["n"] if len(batch) < len(rows) else None
-    if c_stop is not None:
-        counts = {(r["a"], r["b"]): r["n"] for r in rows}
-        while len(batch) > 1 and counts[batch[-1]] <= c_stop:
-            batch.pop()
-    return batch
-
-
-def bpe_train(
-    corpus: DataFrame,
-    text_col: str = "text",
-    n_merges: int = 50,
-    min_pair_count: int = 2,
-    checkpoint_every: int = 8,
-    merges_per_round: int = 1,
-    stats: dict | None = None,
-) -> list[tuple[str, str]]:
-    """Learn a BPE merge table from a corpus (Sennrich 2016).  Returns
-    the merges in training order — the driver-sized artifact
-    (``n_merges`` string pairs) a deployment persists next to its
-    tokenizer config; an encoder applies it by merging each word's
-    lowest-rank adjacent pair until none is in the table.
-
-    Deterministic: pair argmax tie-breaks on (count desc, a asc, b asc),
-    so equal-frequency corpora train identical tables on any cluster
-    layout (counts are exact integers).  Stops early when the best
-    pair's count drops below ``min_pair_count`` (merging hapax pairs
-    memorizes the corpus instead of learning units).
-
-    ``merges_per_round`` batches Spark jobs, not semantics: each round
-    recounts once, then applies up to that many merges — restricted by
-    :func:`_safe_merge_batch` to the provably-sequential-identical
-    prefix — as chained fold expressions in ONE map pass.  The output
-    is pinned equal to ``merges_per_round=1`` (pytest); the win is the
-    driver round-trip count, the practical cap on vocab size (a 32k
-    production table at one job per merge ≈ 32k driver jobs).
-
-    ``stats``, when passed, receives ``{"rounds": <recount rounds>}``
-    so benchmarks can report the job-count saving directly."""
-    if merges_per_round < 1:
-        raise ValueError(
-            f"merges_per_round must be >= 1, got {merges_per_round}"
-        )
-    types = _bpe_word_types(corpus, text_col).localCheckpoint(eager=True)
-    # the ROOT holding checkpoint blocks: intermediate (non-checkpoint)
-    # rounds derive from it lazily, so unpersisting the immediate
-    # predecessor would release nothing — track and release the root
-    # each time a new checkpoint supersedes it
-    ck_root = types
-    merges: list[tuple[str, str]] = []
-    folds_since_ck = 0
-    rounds = 0
-    try:
-        while len(merges) < n_merges:
-            rounds += 1
-            want = min(merges_per_round, n_merges - len(merges))
-            s = F.col("syms")
-            rows = (
-                types.where(F.size(s) > 1)
-                .select(
-                    "cnt",
-                    F.explode(
-                        F.zip_with(
-                            F.slice(s, 1, F.size(s) - 1),
-                            F.slice(s, 2, F.size(s) - 1),
-                            lambda x, y: F.struct(x.alias("a"), y.alias("b")),
-                        )
-                    ).alias("p"),
-                )
-                .groupBy("p.a", "p.b")
-                .agg(F.sum("cnt").alias("n"))
-                # vocab-bounded argmax (+ the tie-guard row): a few
-                # driver rows per ROUND, not per merge
-                .orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
-                .limit(want + 1)
-                .collect()
-            )
-            batch = (
-                _safe_merge_batch(rows, want, min_pair_count) if rows else []
-            )
-            if not batch:
-                break
-            merges.extend(batch)
-            expr = s
-            for a, b in batch:  # chained folds: one map pass, rank order
-                expr = _merge_pair_expr(expr, a, b)
-            nxt = types.select("word", "cnt", expr.alias("syms"))
-            # cut the fold-upon-fold plan periodically (iterative-
-            # operator discipline; per-round checkpoints would pay an
-            # eager materialization per merge for nothing).  Cadence
-            # counts FOLDS, not rounds — plan depth is what grows
-            folds_since_ck += len(batch)
-            if folds_since_ck >= checkpoint_every:
-                types = nxt.localCheckpoint(eager=True)
-                ck_root.unpersist()
-                ck_root = types
-                folds_since_ck = 0
-            else:
-                types = nxt
-        return merges
-    finally:
-        if stats is not None:
-            stats["rounds"] = rounds
-        ck_root.unpersist()
 
 
 #: C4's terminal-punctuation set (Raffel et al. 2020 §2.2): a line is

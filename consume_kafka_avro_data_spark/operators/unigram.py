@@ -2,11 +2,9 @@
 Improving Neural Network Translation Models with Multiple Subword
 Candidates" — the SentencePiece unigram algorithm; public knowledge).
 
-``operators/text.bpe_train`` learns the MERGE-table tokenizer family;
-this module learns the other production family: a piece VOCABULARY with
-unigram log-probabilities, fit by EM over the segmentation lattice and
-pruned to a target size.  Together they cover both tokenizer families a
-training-data pipeline deploys (reference parity target: the charter's
+This module learns a tokenizer as a piece VOCABULARY with unigram
+log-probabilities, fit by EM over the segmentation lattice and pruned
+to a target size (reference parity target: the charter's
 U7 text-analysis row; the reference itself has no tokenizer — this is
 EXT capability like the rest of the LLM-pipeline ladder).
 
@@ -33,12 +31,12 @@ for determinism — both standard in public reimplementations):
 4. Encoding (``unigram_segment``) is the Viterbi path: the segmentation
    maximizing the sum of piece log-probs (Kudo eq. 2's one-best).
 
-Scale shape (the ``bpe_train`` discipline):
+Scale shape:
 
 * ONE corpus-sized shuffle aggregates pre-tokens to the (word, cnt)
   word-type table — every later pass works on word TYPES, which are
-  vocabulary-bounded (≪ corpus), exactly like Sennrich/Kudo train on
-  the word dictionary.
+  vocabulary-bounded (≪ corpus), exactly like Kudo trains on the word
+  dictionary.
 * Seeding is JVM-side: substring fan-out via ``sequence``/``transform``
   + one word-type-bounded count shuffle.
 * Each E-step is ONE distributed pass: ``mapInPandas`` over word-type
@@ -46,13 +44,12 @@ Scale shape (the ``bpe_train`` discipline):
   entries — driver-bounded by construction), emitting PER-BATCH
   pre-aggregated (piece, partial) rows, then a piece-keyed sum whose
   result is vocab-sized; the M-step/prune run on the driver over that
-  vocab-sized frame (same justification as ``bpe_train``'s one argmax
-  row per round).
+  vocab-sized frame.
 * Driver job count: ``em_iters`` per prune round, ~log_{1/shrink}
   (seed/vocab) rounds — a dozen-ish jobs, independent of corpus size.
 
 Determinism contract: expected counts are floats summed across
-partitions, so unlike BPE's exact integer counts they carry
+partitions, so unlike exact integer counts they carry
 order-of-accumulation jitter (~1e-13 relative).  Every ranking input is
 therefore rounded to 9 SIGNIFICANT digits first (``_sig9``) — jitter
 vanishes, rankings and the resulting piece table are layout-independent
@@ -248,10 +245,10 @@ def unigram_train(
     """Learn a unigram-LM piece vocabulary of ``vocab_size`` entries.
 
     Returns [(piece, logp)] sorted by piece ascending (the model is
-    vocab-bounded — driver-sized by construction, like ``bpe_train``'s
-    merge table).  Single characters are always retained, so
-    ``vocab_size`` must exceed the corpus alphabet; the seed is capped
-    at ``seed_size`` pieces (chars exempt from the cap).
+    vocab-bounded — driver-sized by construction).  Single characters
+    are always retained, so ``vocab_size`` must exceed the corpus
+    alphabet; the seed is capped at ``seed_size`` pieces (chars exempt
+    from the cap).
 
     ``stats`` (optional dict) receives ``n_chars``, ``n_seed``,
     ``prune_rounds``, ``e_steps`` for bench/inspection.
@@ -367,9 +364,7 @@ def unigram_save(spark, model: list[tuple[str, float]], path: str) -> None:
 
     io = fs_for(spark, path)
     payload = {"version": 1, "pieces": [[p, lp] for p, lp in model]}
-    tmp = path + ".tmp"
-    io.write_bytes(tmp, json.dumps(payload).encode())
-    io.rename_overwrite(tmp, path)
+    io.write_atomic(path, json.dumps(payload).encode())
 
 
 def unigram_load(spark, path: str) -> list[tuple[str, float]]:

@@ -619,8 +619,8 @@ def q_hll_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB statistics pattern: each arriving shard contributes a
     KB-sized sketch, global/rollup distincts are sketch unions (a
     byte-sized shuffle), and re-computation after new data touches only
-    the new shard — exactly how ``AnnIndex.add_shard`` treats vectors
-    and ``incremental_minhash_dedup`` treats signatures.  Sketch bits
+    the new shard — exactly how ``incremental_minhash_dedup`` treats
+    signatures.  Sketch bits
     are implementation-defined, so the query emits the EXACT counts
     (oracle-verifiable) plus in-query accuracy assertions — the union
     estimate must sit within 5% of the exact global distinct and each

@@ -1282,16 +1282,13 @@ def corpus_drift(docs: DataFrame, head_k: int = 4096) -> DataFrame:
     order-identical to the DuckDB twin; and the fold is capped at the
     ``head_k`` highest-count terms per language (deterministic
     cnt-then-term rank) so the collected array is head-bounded — at
-    100 TB the per-lang vocab may be 10 M+ terms, but the drift
-    monitor folds only the head, and the churn counts (n_new/n_gone)
+    100 TB the per-lang vocab may be 10 M+ terms, but the census
+    folds only the head, and the churn counts (n_new/n_gone)
     still cover the full vocab via plain aggregation.
 
     A language with an EMPTY snapshot on either side reports
     head_tvd = 1.0 — disjoint supports are maximal drift by the TVD
-    convention, and the streaming twin
-    (``streaming/drift.StreamingDriftMonitor``) reports the same 1.0
-    for a language absent from its reference, so the offline census
-    and the ingest watcher agree at the loudest point."""
+    convention."""
     return _corpus_drift_census(
         docs.select((F.col("doc_id") % 2).alias("snap"), "lang", "text"),
         head_k,

@@ -1833,10 +1833,8 @@ def q_adc_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortlist comes back to the driver (bounded by the constant, never
     the data), and ONLY those vectors are re-ranked with true cosines —
     recall recovers from the PQ-loss cap while float-column IO stays
-    shortlist-sized (the persisted-index twin is
-    ``AnnIndex.query_adc_rerank``; this per-query form shares its
-    shape and is fully oracle-checked end-to-end: codes, LUT partial
-    sums, both deterministic cuts)."""
+    shortlist-sized.  Fully oracle-checked end-to-end: codes, LUT
+    partial sums, both deterministic cuts."""
     from consume_kafka_avro_data_spark.operators.similarity import (
         pq_adc_topk,
         pq_codebooks_from_sample,

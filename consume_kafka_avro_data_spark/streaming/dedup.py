@@ -145,7 +145,6 @@ class StreamingDedupIngest(BoundedReplayMixin):
         contam_gram_n: int = 8,
         contam_min_hits: int = 1,
         contam_dir: str | None = None,
-        drift_monitor=None,
     ):
         """``id_type`` is the document-id column's Spark type (default
         LongType) — it shapes the persisted store schema, so a stream
@@ -268,15 +267,6 @@ class StreamingDedupIngest(BoundedReplayMixin):
         bounded by construction — the bloom's
         ``MAX_BITS`` guard and the broadcast verify both refuse builds
         past plan-shippable size.
-
-        ``drift_monitor`` (a ``streaming/drift.StreamingDriftMonitor``)
-        rides the SAME foreachBatch: one stream scan drives dedup,
-        both gates, and the drift watch — no second consumer group, no
-        second checkpoint.  It observes each batch RAW, before any
-        gate (drift is about what's ARRIVING, not what survives), so
-        the stream must carry the monitor's expected columns
-        (``lang`` + ``text``).  Replay stays consistent: the monitor
-        keys by the same batch id this ingest's sinks key by.
 
         ``tune_for=(jaccard_threshold, num_hashes)`` (round 9) designs
         the banding scheme through ``operators/dedup.tune_lsh_params``
@@ -438,18 +428,8 @@ class StreamingDedupIngest(BoundedReplayMixin):
                 )
         else:
             io.mkdirs(store_dir)
-            io.write_bytes(pf + ".tmp", json.dumps(params).encode())
-            io.rename_overwrite(pf + ".tmp", pf)
+            io.write_atomic(pf, json.dumps(params).encode())
         self.metrics = self._new_metrics()
-        self.drift_monitor = drift_monitor
-
-    def _reset(self) -> None:
-        # a monitor riding this ingest shares its run lifecycle: a new
-        # run's batch ids restart at 0, and stale monitor state keyed
-        # by the previous run's ids would blend two streams' drift
-        super()._reset()
-        if self.drift_monitor is not None:
-            self.drift_monitor._reset()
 
     def gate_census(self) -> dict:
         """Aggregated per-gate census, in funnel order: ``{gate:
@@ -729,10 +709,6 @@ class StreamingDedupIngest(BoundedReplayMixin):
                 "id_type= so the persisted schema matches the stream"
             )
         replayed = self.metrics.ledger.admit(batch_id)
-        if self.drift_monitor is not None:
-            # RAW batch, before any gate: drift is about what's
-            # arriving; the monitor replaces its own counts on replay
-            self.drift_monitor.process_batch(batch, batch_id)
         idc = self.id_col
         held: list[DataFrame] = []  # checkpoints, released when the batch ends
         try:

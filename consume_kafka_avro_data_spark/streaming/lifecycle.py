@@ -15,13 +15,13 @@ once by :class:`BatchLedger`:
 * one lock serializes the stream thread's records against polling
   readers.
 
-The graph, dedup and ANN ingests, the drift and sketch monitors and the
-producer's delivery guard all keep their batch-id-keyed state in a
-ledger.  For the graph and dedup counters, replacing gives the same
-numbers as skipping the replay would: their replays are deterministic
-by design (the sinks merge by id and the dedup probe excludes the
-batch's own ids).  Data-side idempotence never depends on the ledger —
-the sinks anti-join or replace by id.
+The graph and dedup ingests and the producer's delivery guard keep
+their batch-id-keyed state in a ledger.  For the graph and dedup
+counters, replacing gives the same numbers as skipping the replay
+would: their replays are deterministic by design (the sinks merge by
+id and the dedup probe excludes the batch's own ids).  Data-side
+idempotence never depends on the ledger — the sinks anti-join or
+replace by id.
 
 :class:`BoundedReplayMixin` is the trigger wiring the ingests share.
 Subclass contract: ``process_batch(df, batch_id)``, ``checkpoint_dir``,
@@ -193,11 +193,9 @@ class BoundedReplayMixin:
             self.store.compact()
 
     def _reset(self) -> None:
-        """Fresh metrics, and with them a fresh ledger.  Ingests that
-        CARRY other stateful components (e.g. an attached drift monitor)
-        override this to reset them in the same breath — a composed
-        component left holding the previous run's batch-id-keyed
-        state would silently blend two streams' numbers."""
+        """Fresh metrics, and with them a fresh ledger: a new run's
+        batch ids restart at 0, so the previous run's records must not
+        stay to be replaced by them."""
         self.metrics = self._new_metrics()
 
     def start(

@@ -125,15 +125,13 @@ def register_engine_views(
     spark: SparkSession,
     graph=None,
     signatures=None,
-    ann_index=None,
-    drift_monitor=None,
 ) -> list[str]:
     """Expose the ENGINE'S materialized state — not just the input
     tables — through the same ad-hoc SQL surface: the reference's graph
     existed to be queried (its prepared SELECT/INSERT statements over
     ``objects``/``relationships``, src/Database.h:23-31), and this
-    engine additionally materializes a dedup signature store and ANN
-    index layouts.  Registers temp views for whatever is passed:
+    engine additionally materializes a dedup signature store.
+    Registers temp views for whatever is passed:
 
     * ``graph`` (operators/graph.GraphStore) → ``objects`` +
       ``relationships`` — the reference's two tables, queryable with
@@ -144,20 +142,10 @@ def register_engine_views(
       readable — the store's time travel (``read(version=k)``) reached
       from plain SQL.  ``compact()`` prunes history, so the version
       view count stays bounded by the compaction cadence, not the
-      micro-batch count;
-    * ``ann_index`` (operators/ann_index.AnnIndex) → ``ann_cells``
-      (the per-cell balance diagnostic) + ``ann_vectors`` (the live
-      generations' rows: id, codes, cell — probe pruning still applies
-      to a ``WHERE _ivf_cell IN (...)``);
-    * ``drift_monitor`` (streaming/drift.StreamingDriftMonitor) →
-      ``drift_tvd`` (lang, head_tvd over the accumulated arrivals) +
-      ``drift_terms`` (lang, term, arrivals — the head-bucketed
-      counts, OOV bucket included).  Head-bounded driver state
-      materialized as local relations, not a scan.
+      micro-batch count.
 
-    Views are lazy over the manifest/meta read at registration time
-    (drift views snapshot the monitor's counters at registration):
-    re-register after ingests/builds to see newer commits.  Returns the
+    Views are lazy over the manifest read at registration time:
+    re-register after ingests to see newer commits.  Returns the
     view names created."""
     created: list[str] = []
     if graph is not None:
@@ -187,27 +175,4 @@ def register_engine_views(
                 f"signatures_v{v}"
             )
             created.append(f"signatures_v{v}")
-    if ann_index is not None:
-        ann_index.cell_sizes().createOrReplaceTempView("ann_cells")
-        ann_index.vectors().createOrReplaceTempView("ann_vectors")
-        created += ["ann_cells", "ann_vectors"]
-    if drift_monitor is not None:
-        # ONE atomic snapshot: both views must describe the same moment
-        # even while a continuous-trigger stream keeps recording
-        tvd, totals = drift_monitor.snapshot()
-        # None-safe sort keys: a NULL-lang document stream yields None
-        # keys, and None < str is a TypeError (same guard as the
-        # monitor's own head-LUT construction)
-        spark.createDataFrame(
-            sorted(tvd.items(), key=lambda kv: kv[0] or ""),
-            "lang string, head_tvd double",
-        ).createOrReplaceTempView("drift_tvd")
-        term_rows = sorted(
-            ((lang, term, int(n)) for (lang, term), n in totals.items()),
-            key=lambda r: (r[0] or "", r[1]),
-        )
-        spark.createDataFrame(
-            term_rows, "lang string, term string, arrivals long"
-        ).createOrReplaceTempView("drift_terms")
-        created += ["drift_tvd", "drift_terms"]
     return created

@@ -63,17 +63,10 @@ def duck():
 # ---------------------------------------------------------------------------
 
 SLOW_TESTS = {
-    "test_ann_recall_tuning.py::test_auto_nprobe_recovers_filtered_recall",
-    "test_ann_recall_tuning.py::test_filtered_recall_floor_on_tuned_preset",
-    "test_ann_recall_tuning.py::test_knn_join_adc_matches_per_query_adc",
-    "test_ann_recall_tuning.py::test_knn_join_adc_rerank_matches_per_query_rerank",
-    "test_bpe.py::test_batched_rounds_train_identical_table",
-    "test_bpe.py::test_trainer_matches_reference_implementation",
     "test_cli.py::test_cli_batch_ingest_end_to_end",
     "test_cli.py::test_cli_empty_engine_section_uses_defaults",
     "test_cli.py::test_cli_ocf_ingest_end_to_end",
     "test_cli.py::test_cli_produce_csv_then_consume_full_loop",
-    "test_fsio.py::test_ann_index_over_hadoop_uri",
     "test_fsio.py::test_streaming_dedup_store_over_hadoop_uri",
     "test_graph.py::test_compact_preserves_rows_and_reduces_files",
     "test_graph.py::test_connected_components_long_path_converges_fast",
@@ -109,19 +102,10 @@ SLOW_TESTS = {
     "test_streaming.py::test_graph_ingest_auto_compaction_replay_safe",
     "test_streaming.py::test_stream_ingest_end_to_end",
     "test_streaming.py::test_stream_replay_is_idempotent",
-    "test_streaming_ann.py::test_index_compact_merges_generations_and_noops_folded_replays",
-    "test_streaming_ann.py::test_index_compact_subset_folds_only_named_dirs",
-    "test_streaming_ann.py::test_streaming_ann_auto_compaction_replay_safe",
-    "test_streaming_ann.py::test_streaming_ann_ingest_matches_full_build",
-    "test_streaming_ann.py::test_streaming_ann_tiered_compaction",
-    "test_streaming_ann.py::test_tiered_cascade_retires_legacy_empty_generations",
-    "test_streaming_ann.py::test_tiered_fold_levels_persist_across_restart",
-    "test_streaming_ann.py::test_tiered_policy_validates_fold_width_and_bounds_cache",
     "test_streaming_dedup.py::test_all_gates_compose_on_one_stream",
     "test_streaming_dedup.py::test_c4_and_heuristic_quality_counts_both_rejects",
     "test_streaming_dedup.py::test_c4_gate_cleans_text_before_downstream_gates",
     "test_streaming_dedup.py::test_dedup_replay_guard_is_bounded",
-    "test_streaming_dedup.py::test_drift_monitor_rides_the_dedup_ingest",
     "test_streaming_dedup.py::test_dsir_gate_at_ingest",
     "test_streaming_dedup.py::test_gopher_repetition_gate_at_ingest",
     "test_streaming_dedup.py::test_learned_quality_gate_at_ingest",
@@ -133,10 +117,6 @@ SLOW_TESTS = {
     "test_streaming_dedup.py::test_streaming_dedup_replay_is_idempotent",
     "test_streaming_dedup.py::test_streaming_dedup_routes_and_merges",
     "test_streaming_dedup.py::test_streaming_quality_gate_rejects_before_signing",
-    "test_streaming_drift.py::test_composed_dedup_ingest_retune_loop_flips_midstream",
-    "test_streaming_drift.py::test_ingest_reset_resets_attached_monitor",
-    "test_streaming_drift.py::test_null_lang_stream_matches_null_lang_reference",
-    "test_streaming_drift.py::test_replay_replaces_batch_counts",
     "test_unigram.py::test_character_coverage_and_vocab_size",
     "test_unigram.py::test_em_improves_likelihood",
     "test_unigram.py::test_layout_independence",

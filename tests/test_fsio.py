@@ -43,7 +43,8 @@ def test_unconfigured_scheme_fails_at_construction(spark, tmp_path):
 
 def test_hadoop_io_primitives_match_local(spark, tmp_path):
     """Same bytes through both backends: write/read/rename-overwrite/
-    list/delete, plus footer row counts on a real parquet file."""
+    atomic replace/list/delete, plus footer row counts on a real parquet
+    file."""
     local = LocalIO()
     hd = fs_for(spark, f"file://{tmp_path}")
     base_l = str(tmp_path / "l")
@@ -58,6 +59,8 @@ def test_hadoop_io_primitives_match_local(spark, tmp_path):
             os.path.join(base, "b.json"), os.path.join(base, "a.json")
         )
         assert io.read_bytes(os.path.join(base, "a.json")) == b'{"x": 2}'
+        io.write_atomic(os.path.join(base, "a.json"), b'{"x": 3}')
+        assert io.read_bytes(os.path.join(base, "a.json")) == b'{"x": 3}'
         assert io.list_names(base) == ["a.json"]
         assert io.list_names(os.path.join(base, "missing")) == []
         io.delete(os.path.join(base, "a.json"))
@@ -128,45 +131,6 @@ def test_publish_backfills_snapshot_lost_in_crash_window(spark, tmp_path):
     assert sorted(r.k for r in t.read(3).collect()) == [1, 2, 3]
     doc = json.loads((tmp_path / "t" / "_manifest.v2.json").read_bytes())
     assert doc["version"] == 2
-
-
-def test_ann_index_over_hadoop_uri(spark, tmp_path):
-    """Build + add_shard + load + both query paths through file:// —
-    the meta sidecar, footer counts, GC sweep, and generation commits
-    all ride HadoopIO."""
-    import numpy as np
-
-    from consume_kafka_avro_data_spark.operators.ann_index import AnnIndex
-
-    rng = np.random.default_rng(7)
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(40)],
-        ["vec_id", "embedding"],
-    )
-    path = f"file://{tmp_path}/idx"
-    idx = AnnIndex.build(spark, emb, path, n_cells=4, m=4, k_codes=8)
-    assert isinstance(idx._io, HadoopIO)
-
-    shard = spark.createDataFrame(
-        [(100 + i, [float(x) for x in rng.standard_normal(8)]) for i in range(10)],
-        ["vec_id", "embedding"],
-    )
-    idx.add_shard(shard, shard_id="s1")
-    assert idx.last_shard_rows == 10
-    assert sum(idx.last_shard_cell_counts.values()) == 10
-
-    qv = emb.where("vec_id = 1").collect()[0]["embedding"]
-    top = idx.query_exact(qv, k=5, nprobe=4).collect()
-    assert len(top) == 5
-    adc = idx.query_adc(qv, k=5, nprobe=4).collect()
-    assert len(adc) == 5
-
-    loaded = AnnIndex.load(spark, path)
-    assert loaded.vectors_dirs == idx.vectors_dirs
-    assert (
-        idx.query_exact(qv, k=5, nprobe=4).collect()
-        == loaded.query_exact(qv, k=5, nprobe=4).collect()
-    )
 
 
 def test_streaming_dedup_store_over_hadoop_uri(spark, sf_dir, tmp_path):

@@ -380,11 +380,10 @@ def test_null_keyed_rows_stay_idempotent_on_replay(spark, tmp_path):
 
 def test_engine_state_sql_views(spark, tmp_path, triples):
     """register_engine_views exposes the MATERIALIZED graph (and the
-    other engine stores) to ad-hoc spark.sql — the reference's graph
+    signature store) to ad-hoc spark.sql — the reference's graph
     existed to be queried (Database.h:23-31).  Run the reference's own
     prepared-statement shapes over a populated GraphStore view, then
-    query a signature store and an ANN index through the same surface."""
-    from consume_kafka_avro_data_spark.operators.ann_index import AnnIndex
+    query a signature store through the same surface."""
     from consume_kafka_avro_data_spark.tables import register_engine_views
 
     store = GraphStore(spark, str(tmp_path / "graph"))
@@ -440,24 +439,8 @@ def test_engine_state_sql_views(spark, tmp_path, triples):
     )
     sigs.merge_new(spark.createDataFrame([(3, [11, 12])], sigs.schema))
 
-    # tiny ANN index
-    import numpy as np
-
-    rng = np.random.default_rng(0)
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(20)],
-        ["vec_id", "embedding"],
-    )
-    idx = AnnIndex.build(spark, emb, str(tmp_path / "ann"), n_cells=4, m=4)
-
-    created = register_engine_views(spark, signatures=sigs, ann_index=idx)
-    assert created == [
-        "signatures",
-        "signatures_v1",
-        "signatures_v2",
-        "ann_cells",
-        "ann_vectors",
-    ]
+    created = register_engine_views(spark, signatures=sigs)
+    assert created == ["signatures", "signatures_v1", "signatures_v2"]
     assert spark.sql("SELECT count(*) AS n FROM signatures").collect()[0].n == 3
     # time travel from plain SQL: v1 = first merge only, v2 = both
     assert (
@@ -467,18 +450,6 @@ def test_engine_state_sql_views(spark, tmp_path, triples):
     assert sorted(
         r._id for r in spark.sql("SELECT _id FROM signatures_v2").collect()
     ) == [1, 2, 3]
-    assert (
-        spark.sql("SELECT sum(n) AS total FROM ann_cells").collect()[0].total
-        == 20
-    )
-    assert (
-        spark.sql(
-            "SELECT count(*) AS n FROM ann_vectors WHERE _ivf_cell = 1"
-        ).collect()[0].n
-        == spark.sql(
-            "SELECT n FROM ann_cells WHERE _ivf_cell = 1"
-        ).collect()[0].n
-    )
 
 
 def test_manifest_table_time_travel(spark, tmp_path):

@@ -386,6 +386,7 @@ def test_ivf_assignment_is_deterministic(spark, sf_dir):
     from consume_kafka_avro_data_spark.operators.similarity import (
         ivf_assign,
         kmeans_centroids,
+        lloyd_unit_kmeans,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -396,6 +397,9 @@ def test_ivf_assignment_is_deterministic(spark, sf_dir):
     a2 = {r.vec_id: r._ivf_cell for r in ivf_assign(emb, cent).collect()}
     assert a1 == a2
     assert set(a1.values()) <= set(range(1, 9))
+    # an empty training sample yields an empty centroid matrix, not an
+    # argmax-of-empty error inside the Lloyd loop
+    assert lloyd_unit_kmeans(np.empty((0, 8)), k=4).shape == (0, 8)
 
 
 def test_signature_tables_equal_hof_columns(docs):

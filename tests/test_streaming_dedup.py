@@ -272,59 +272,6 @@ def test_streaming_decontamination_min_hits_threshold(spark, tmp_path):
     assert ingest.metrics.dup_docs == 1 and ingest.metrics.novel_docs == 2
 
 
-def test_drift_monitor_rides_the_dedup_ingest(spark, tmp_path):
-    """One stream scan drives dedup AND the drift watch: a
-    StreamingDriftMonitor passed to the ingest observes every batch
-    RAW (pre-gate — gated docs still count toward arrival drift), and
-    a checkpoint-less replay leaves both components' numbers
-    unchanged."""
-    from consume_kafka_avro_data_spark.streaming.drift import (
-        StreamingDriftMonitor,
-    )
-
-    ref = spark.createDataFrame(
-        [(100, BASE, "en"), (101, FAR, "en")],
-        "doc_id long, text string, lang string",
-    )
-    mon = StreamingDriftMonitor(spark, ref, str(tmp_path / "mck"))
-    ingest = StreamingDedupIngest(
-        spark,
-        store_dir=str(tmp_path / "store"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        quality_threshold=0.5,  # some docs may be gated; drift sees all
-        drift_monitor=mon,
-    )
-
-    path = str(tmp_path / "docs")
-    for rows in (BATCH1, BATCH2):
-        spark.createDataFrame(
-            [(i, t, "en") for i, t in rows],
-            "doc_id long, text string, lang string",
-        ).coalesce(1).write.mode("append").parquet(path)
-
-    def reader():
-        return (
-            spark.readStream.schema("doc_id long, text string, lang string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(path)
-        )
-
-    m = ingest.run_to_completion(reader())
-    assert m.batches == 2
-    # the monitor saw every arriving doc, gates notwithstanding
-    assert mon.metrics.docs == len(BATCH1) + len(BATCH2)
-    tvd1 = mon.drift_tvd()
-    assert "en" in tvd1
-
-    # crash-recovery replay: fresh checkpoints, metrics not reset —
-    # batch-id keying must leave both sides' numbers unchanged
-    ingest.checkpoint_dir = str(tmp_path / "ckpt2")
-    mon_before = mon.metrics.ledger.records()
-    ingest.run_to_completion(reader(), reset_metrics=False)
-    assert mon.metrics.ledger.records() == mon_before
-    assert mon.drift_tvd() == tvd1
-
-
 def test_dedup_replay_guard_is_bounded(spark, tmp_path, ingest):
     """The per-batch records must not grow one entry per trigger
     forever: records beyond the ledger's horizon fold into its running

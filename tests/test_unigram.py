@@ -21,7 +21,10 @@ from consume_kafka_avro_data_spark.operators.unigram import (
     unigram_train,
     viterbi_pieces,
 )
-from consume_kafka_avro_data_spark.operators.text import BPE_PRETOKEN_RE
+from consume_kafka_avro_data_spark.operators.text import (
+    BPE_PRETOKEN_RE,
+    bpe_ish_tokens,
+)
 
 CORPUS = [
     "the cat sat on the mat",
@@ -145,6 +148,21 @@ def _ref_unigram_train(
 @pytest.fixture(scope="module")
 def corpus_df(spark):
     return spark.createDataFrame([(t,) for t in CORPUS], "text string")
+
+
+def test_pretokenizers_agree(spark, corpus_df, sf_dir):
+    """bpe_ish_tokens (JVM regex, the trainer's word types) and the
+    Python re the encoder and the reference trainer use must split
+    identically, on the toy corpus and on real documents — one
+    drifting pattern would silently change every trained table."""
+    from consume_kafka_avro_data_spark.tables import load_table
+
+    pretoken = re.compile(BPE_PRETOKEN_RE)
+    docs = load_table(spark, sf_dir, "documents").select("text").limit(64)
+    for df in (corpus_df, docs):
+        rows = df.select("text", bpe_ish_tokens("text").alias("toks")).collect()
+        for r in rows:
+            assert list(r.toks or []) == pretoken.findall(r.text or "")
 
 
 def test_trainer_matches_reference_implementation(spark, corpus_df):
