@@ -987,13 +987,16 @@ def cc_distributed_bench(spark, sf_dir: str) -> dict:
     from pyspark.sql import functions as F
 
     src0 = pairs.agg(F.min("id_a").alias("m")).collect()[0]["m"]
+    edges = pairs.select(
+        F.col("id_a").alias("source_id"), F.col("id_b").alias("target_id")
+    )
     t0 = time.perf_counter()
-    bfs = shortest_paths(pairs, [src0], src="id_a", dst="id_b")
+    bfs = shortest_paths(edges, [src0])
     n_reached = bfs.count()
     t_bfs = time.perf_counter() - t0
     bfs.unpersist()
     t0 = time.perf_counter()
-    lpa = label_propagation(pairs, src="id_a", dst="id_b", max_iter=5)
+    lpa = label_propagation(edges, max_iter=5)
     n_communities = lpa.select("label").distinct().count()
     t_lpa = time.perf_counter() - t0
     lpa.unpersist()
@@ -1175,7 +1178,7 @@ def skew_stress_bench(spark, sf_dir: str) -> dict:
             plain = checksum(e.join(dim, "k"))
             t_plain = min(t_plain, time.perf_counter() - t0)
             t0 = time.perf_counter()
-            salted = checksum(salted_join(e, dim, "k", salt_buckets=64))
+            salted = checksum(salted_join(e, dim, "k"))
             t_salted = min(t_salted, time.perf_counter() - t0)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)

@@ -36,12 +36,10 @@ def exploded_word_grams(
     docs: DataFrame,
     *keys: str,
     n: int = 8,
-    text_col: str = "text",
-    gram_col: str = "g",
     pos_col: str | None = None,
 ) -> DataFrame:
-    """One row per word ``n``-gram window of ``text_col``:
-    ``(*keys, [pos_col,] gram_col)`` with 1-based window-start
+    """One row per word ``n``-gram window of ``text``:
+    ``(*keys, [pos_col,] g)`` with 1-based window-start
     positions; docs shorter than ``n`` census tokens emit no rows.
 
     Value-identical to ``F.posexplode(word_grams(n))`` (same census
@@ -61,7 +59,7 @@ def exploded_word_grams(
 
     Working columns are underscore-prefixed (``__wg_toks``/``__wg_pos``)
     so caller column names can never collide."""
-    toks = lower_tokens(text_col)
+    toks = lower_tokens("text")
     pos = F.when(
         F.size("__wg_toks") >= n,
         F.sequence(F.lit(1), F.size("__wg_toks") - (n - 1)),
@@ -71,7 +69,7 @@ def exploded_word_grams(
     return (
         docs.select(*keys, toks.alias("__wg_toks"))
         .select(*keys, "__wg_toks", F.explode(pos).alias("__wg_pos"))
-        .select(*keys, *out_cols, gram.alias(gram_col))
+        .select(*keys, *out_cols, gram.alias("g"))
     )
 
 
@@ -79,12 +77,10 @@ def exploded_char_grams(
     docs: DataFrame,
     *keys: str,
     n: int,
-    text_col: str = "text",
-    gram_col: str = "g",
     pos_col: str | None = None,
 ) -> DataFrame:
     """Character-gram twin of :func:`exploded_word_grams`: one row per
-    char ``n``-gram window of ``lower(text_col)`` with 1-based offsets
+    char ``n``-gram window of ``lower(text)`` with 1-based offsets
     into the LOWERED text (offset semantics per the r10 advisor fix —
     both the window bound and the slices derive from the same lowered
     string, so length-changing lowercase mappings like U+0130 stay
@@ -93,7 +89,7 @@ def exploded_char_grams(
     ``transform(sequence(1, length(lower(text)) - (n-1)),
     i -> substring(lower(text), i, n))`` form but codegen'd: lower()
     runs once per doc, substring once per window."""
-    low = F.lower(F.col(text_col))
+    low = F.lower(F.col("text"))
     pos = F.when(
         F.length("__cg_low") >= n,
         F.sequence(F.lit(1), F.length("__cg_low") - (n - 1)),
@@ -103,5 +99,5 @@ def exploded_char_grams(
     return (
         docs.select(*keys, low.alias("__cg_low"))
         .select(*keys, "__cg_low", F.explode(pos).alias("__cg_pos"))
-        .select(*keys, *out_cols, gram.alias(gram_col))
+        .select(*keys, *out_cols, gram.alias("g"))
     )

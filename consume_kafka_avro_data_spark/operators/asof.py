@@ -40,13 +40,12 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     right_cols: Sequence[str] | None = None,
-    prefix: str = "asof_",
     direction: str = "backward",
     strict: bool = False,
     tolerance_seconds: float | None = None,
 ) -> DataFrame:
     """Left as-of join: every left row, plus the matched right row's
-    ``right_cols`` (renamed ``{prefix}{col}``), NULL when no match.
+    ``right_cols`` (renamed ``asof_{col}``), NULL when no match.
 
     direction='backward'  → match greatest right_ts <= left_ts;
     direction='forward'   → match least   right_ts >= left_ts;
@@ -68,6 +67,7 @@ def asof_join(
     groups NULL keys into ONE partition, so without the guard a
     NULL-key left row would adopt a NULL-key right row as its match.
     """
+    prefix = "asof_"
     keys = [on] if isinstance(on, str) else list(on)
     if direction not in ("backward", "forward"):
         raise ValueError(f"direction must be backward|forward, got {direction!r}")

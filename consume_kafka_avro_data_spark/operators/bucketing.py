@@ -98,7 +98,7 @@ def o_zorder_key(cols: list[str], bits: int = 8) -> str:
 
 
 def zorder_frame(
-    df: DataFrame, dims: list[str], bits: int = 8, zkey_col: str = "zkey"
+    df: DataFrame, dims: list[str], bits: int = 8
 ) -> DataFrame:
     """Attach a Morton key computed from corpus min/max grids of
     ``dims`` (numeric columns): one 1-row stats aggregate broadcast onto
@@ -106,6 +106,7 @@ def zorder_frame(
     pipeline behind ``q_zorder_layout`` and the layout tests — at scale,
     follow with ``repartitionByRange(zkey).sortWithinPartitions(zkey)``
     and the parquet write IS the clustered layout."""
+    zkey_col = "zkey"
     aggs = []
     for d in dims:
         aggs += [F.min(d).alias(f"_mn_{d}"), F.max(d).alias(f"_mx_{d}")]

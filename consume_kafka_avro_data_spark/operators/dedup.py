@@ -28,8 +28,6 @@ methods.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import Column, DataFrame, functions as F
 
 # ---------------------------------------------------------------------------
@@ -42,6 +40,18 @@ from pyspark.sql import Column, DataFrame, functions as F
 #: ≤ ~524k pair structs in one array value, the most one task should hold
 #: when pairs carry shingle-set payloads.
 MAX_BUCKET_SIZE = 1024
+
+#: The banding scheme of every MinHash operator and of the streaming
+#: signature store: 8 bands of 4 rows (32 signature components), the
+#: ~0.5 similarity knee, P(candidate) = 1 - (1 - s^4)^8.
+BANDS, ROWS = 8, 4
+#: Shingle width in words: every MinHash signature is over word 3-shingles.
+SHINGLE_K = 3
+#: A near-dup pair: exact Jaccard ≥ ``JACCARD_THRESHOLD`` on the verified
+#: paths, ≥ ``MIN_MATCHES`` of the 32 signature components agreeing (an
+#: estimated Jaccard ≥ 0.5) on the signature-only paths.
+JACCARD_THRESHOLD = 0.5
+MIN_MATCHES = BANDS * ROWS // 2
 
 
 _SPLIT_PROBE_CACHE: dict[tuple[int, int], int] = {}
@@ -262,7 +272,7 @@ def hamming_hex(a: Column, b: Column) -> Column:
 
 
 
-def _minhash_agg_components(hash_fn: str, sig_col: str, bands: int, rows: int):
+def _minhash_agg_components(hash_fn: str, sig_col: str):
     """(comp, band_expr) for the aggregate-form MinHash signature.
 
     ``comp(i)`` is the native min() aggregate for seed i over the
@@ -289,8 +299,8 @@ def _minhash_agg_components(hash_fn: str, sig_col: str, bands: int, rows: int):
 
         parts = ", ".join(
             f"md5(concat('{b}:', array_join("
-            f"slice({sig_col}, {b * rows + 1}, {rows}), ',')))"
-            for b in range(bands)
+            f"slice({sig_col}, {b * ROWS + 1}, {ROWS}), ',')))"
+            for b in range(BANDS)
         )
         return comp, F.expr(f"array({parts})")
     if hash_fn == "xxhash64":
@@ -299,8 +309,8 @@ def _minhash_agg_components(hash_fn: str, sig_col: str, bands: int, rows: int):
 
         parts = ", ".join(
             f"xxhash64({b}, array_join("
-            f"slice({sig_col}, {b * rows + 1}, {rows}), ','))"
-            for b in range(bands)
+            f"slice({sig_col}, {b * ROWS + 1}, {ROWS}), ','))"
+            for b in range(BANDS)
         )
         return comp, F.expr(f"array({parts})")
     raise ValueError(f"hash_fn must be 'md5' or 'xxhash64', got {hash_fn!r}")
@@ -322,8 +332,9 @@ def _explode_keepall(df: DataFrame, id_col: str, arr: Column, out: str) -> DataF
     return df.select(F.col(id_col).alias("_id"), F.explode(safe).alias(out))
 
 
-def _exploded_shingles(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
-    """(_id, _sh) — one row per k-token shingle WINDOW, codegen'd.
+def _exploded_shingles(df: DataFrame) -> DataFrame:
+    """(_id, _sh) — one row per 3-token shingle WINDOW of ``text``,
+    keyed by ``doc_id``, codegen'd.
 
     r11 hot-path form of ``explode(array_distinct(shingles(toks, k)))``:
     the :func:`shingles` transform-lambda is a ``CodegenFallback``
@@ -348,13 +359,14 @@ def _exploded_shingles(df: DataFrame, id_col: str, text_col: str, k: int) -> Dat
       guards defensive-only here (pinned by
       test_signature_tables_equal_hof_columns incl. NULL/empty text).
     """
-    toks = tokens_col(text_col)
+    k = SHINGLE_K
+    toks = tokens_col("text")
     pos = F.when(
         F.size("__sh_toks") >= k,
         F.sequence(F.lit(1), F.size("__sh_toks") - (k - 1)),
     ).otherwise(F.array(F.lit(1)))
     return (
-        df.select(F.col(id_col).alias("_id"), toks.alias("__sh_toks"))
+        df.select(F.col("doc_id").alias("_id"), toks.alias("__sh_toks"))
         .select("_id", "__sh_toks", F.explode(pos).alias("__sh_pos"))
         .select(
             "_id",
@@ -365,55 +377,38 @@ def _exploded_shingles(df: DataFrame, id_col: str, text_col: str, k: int) -> Dat
     )
 
 
-def _minhash_base(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_k: int,
-    bands: int,
-    rows: int,
-    hash_fn: str,
-) -> DataFrame:
+def _minhash_base(df: DataFrame, hash_fn: str) -> DataFrame:
     """(_id, _shingles, _sig) per document: ONE explode + aggregate pass
     builds both the distinct shingle set and the native-min signature
     (see module docstring for why aggregates, not HOFs).  Shared by the
     intra-corpus LSH pipeline and the incremental new-vs-corpus form."""
-    n = bands * rows
-    comp, _ = _minhash_agg_components(hash_fn, "_sig", bands, rows)
+    comp, _ = _minhash_agg_components(hash_fn, "_sig")
     df = ensure_min_splits(df)
-    exploded = _exploded_shingles(df, id_col, text_col, shingle_k)
+    exploded = _exploded_shingles(df)
     return (
         exploded.groupBy("_id")
         .agg(
-            *[comp(i) for i in range(n)],
+            *[comp(i) for i in range(BANDS * ROWS)],
             F.collect_set("_sh").alias("_shingles"),
         )
         .select(
             "_id",
             "_shingles",
-            F.array(*[f"_h{i}" for i in range(n)]).alias("_sig"),
+            F.array(*[f"_h{i}" for i in range(BANDS * ROWS)]).alias("_sig"),
         )
     )
 
 
-def minhash_sig_table(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int = 3,
-    bands: int = 8,
-    rows: int = 4,
-    hash_fn: str = "xxhash64",
-) -> DataFrame:
+def minhash_sig_table(df: DataFrame, hash_fn: str = "xxhash64") -> DataFrame:
     """(_id, _sim) signature-only table: the explode + native-min
     aggregate pass WITHOUT the shingle-set payload — what the estimator
     pipeline shuffles and what a persistent signature store (streaming
     dedup) writes to disk.  Signature elements are longs for xxhash64,
     16-char hex strings for md5."""
-    n = bands * rows
-    comp, _ = _minhash_agg_components(hash_fn, "_sim", bands, rows)
+    n = BANDS * ROWS
+    comp, _ = _minhash_agg_components(hash_fn, "_sim")
     df = ensure_min_splits(df)
-    exploded = _exploded_shingles(df, id_col, text_col, shingle_k)
+    exploded = _exploded_shingles(df)
     return (
         exploded.groupBy("_id")
         .agg(*[comp(i) for i in range(n)])
@@ -422,17 +417,7 @@ def minhash_sig_table(
 
 
 def incremental_minhash_dedup(
-    new_docs: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int = 3,
-    bands: int | None = None,
-    rows: int | None = None,
-    jaccard_threshold: float = 0.5,
-    hash_fn: str = "xxhash64",
-    max_bucket_size: int = MAX_BUCKET_SIZE,
-    tune_for: tuple[float, int] | None = None,
+    new_docs: DataFrame, corpus: DataFrame, hash_fn: str = "xxhash64"
 ) -> DataFrame:
     """Incremental near-dup: score an arriving shard ONLY against the
     existing corpus — the operational dedup shape at 100 TB, where the
@@ -440,7 +425,7 @@ def incremental_minhash_dedup(
     pairwise pipeline per shard would redo |corpus|-sized band work for
     |shard|-sized questions.
 
-    Returns (new_id, corpus_id, jaccard) with exact Jaccard ≥ τ.
+    Returns (new_id, corpus_id, jaccard) with exact Jaccard ≥ 0.5.
 
     Plan shape: both sides run the one-pass signature aggregate
     (:func:`_minhash_base`); band keys explode on each side and meet in
@@ -450,22 +435,17 @@ def incremental_minhash_dedup(
     alone).  No broadcast hint on either side: a daily shard may be
     tiny or huge, so the planner picks broadcast vs shuffle from its
     own estimates.  Hot-bucket guard: corpus band buckets with more
-    than ``max_bucket_size`` members are dropped (same contract and
+    than ``MAX_BUCKET_SIZE`` members are dropped (same contract and
     rationale as :func:`_bucket_candidate_pairs`) — at scale the corpus
     side's banded signature store is what you persist, so the count is
     a metadata lookup, not a recompute.
     """
-    bands, rows = resolve_banding(bands, rows, tune_for)
-    nb = _minhash_base(
-        new_docs, id_col, text_col, shingle_k, bands, rows, hash_fn
-    )
-    cb = _minhash_base(
-        corpus, id_col, text_col, shingle_k, bands, rows, hash_fn
-    )
+    nb = _minhash_base(new_docs, hash_fn)
+    cb = _minhash_base(corpus, hash_fn)
     # ONE band expression for both sides — two independently-built
     # copies could be edited apart, which is exactly the silent
     # false-negative drift _minhash_agg_components warns about
-    _, bh = _minhash_agg_components(hash_fn, "_sig", bands, rows)
+    _, bh = _minhash_agg_components(hash_fn, "_sig")
     nbanded = nb.select(
         F.col("_id").alias("new_id"),
         F.col("_shingles").alias("_sa"),
@@ -479,7 +459,7 @@ def incremental_minhash_dedup(
     hot = (
         cbanded.groupBy("_block")
         .agg(F.count(F.lit(1)).alias("_n"))
-        .where(F.col("_n") > max_bucket_size)
+        .where(F.col("_n") > MAX_BUCKET_SIZE)
         .select("_block")
     )
     cbanded = cbanded.join(hot, "_block", "left_anti")
@@ -494,63 +474,10 @@ def incremental_minhash_dedup(
         "new_id",
         "corpus_id",
         (inter.cast("double") / union).alias("jaccard"),
-    ).where(F.col("jaccard") >= jaccard_threshold)
+    ).where(F.col("jaccard") >= JACCARD_THRESHOLD)
 
 
-def resolve_banding(
-    bands: int | None,
-    rows: int | None,
-    tune_for: tuple[float, int] | None,
-    default: tuple[int, int] = (8, 4),
-) -> tuple[int, int]:
-    """The ONE deployment-path banding resolution (round 9), shared by
-    :func:`minhash_lsh_pairs` and ``StreamingDedupIngest``:
-
-    * explicit ``bands``/``rows`` pass through (both or neither);
-    * ``tune_for=(jaccard_threshold, num_hashes)`` designs the scheme
-      through :func:`tune_lsh_params` — deterministic, so a replay or
-      a store reopen configured with the same ``tune_for`` resolves to
-      the same scheme;
-    * neither → the pinned defaults (b=8, r=4 — the ~0.5-knee scheme
-      every pre-round-9 store was built with);
-    * both explicit AND ``tune_for`` is a config conflict, rejected
-      eagerly (silently preferring one would desynchronize a store
-      from its caller's intent)."""
-    if tune_for is not None:
-        if bands is not None or rows is not None:
-            raise ValueError(
-                "pass either explicit bands/rows or tune_for=(threshold, "
-                "num_hashes), not both"
-            )
-        # isinstance BEFORE len(): a scalar misuse like tune_for=0.5
-        # must get this message, not a bare TypeError from len().
-        if not isinstance(tune_for, (tuple, list)) or len(tune_for) != 2:
-            raise ValueError(
-                f"tune_for must be (jaccard_threshold, num_hashes), got "
-                f"{tune_for!r}"
-            )
-        threshold, num_hashes = tune_for
-        p = tune_lsh_params(float(threshold), int(num_hashes))
-        return p.bands, p.rows
-    if (bands is None) != (rows is None):
-        raise ValueError("bands and rows must be set together")
-    if bands is None:
-        return default
-    return int(bands), int(rows)
-
-
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int = 3,
-    bands: int | None = None,
-    rows: int | None = None,
-    jaccard_threshold: float = 0.5,
-    hash_fn: str = "xxhash64",
-    max_bucket_size: int = MAX_BUCKET_SIZE,
-    tune_for: tuple[float, int] | None = None,
-) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame, hash_fn: str = "xxhash64") -> DataFrame:
     """Near-duplicate pairs via MinHash-LSH with exact-Jaccard verify.
 
     Pipeline: one explode + aggregate pass builds BOTH the signature
@@ -558,12 +485,8 @@ def minhash_lsh_pairs(
     and the distinct shingle set per doc → explode band hashes →
     bucket-and-expand candidate pairs carrying the shingle sets →
     verify with exact Jaccard (array_intersect/union, native collection
-    expressions).  Default banding (b=8, r=4) targets the ~0.5
-    similarity knee: P(candidate) = 1-(1-s^r)^b; pass
-    ``tune_for=(threshold, num_hashes)`` to have
-    :func:`tune_lsh_params` design (bands, rows) for a different knee
-    instead (see :func:`resolve_banding` — at 100 TB the designed FP
-    area IS the candidate volume the verify join pays for).
+    expressions).  The banding (``BANDS``=8, ``ROWS``=4) targets the
+    ~0.5 similarity knee: P(candidate) = 1-(1-s^r)^b.
 
     ``hash_fn``: "xxhash64" (default, fastest JVM hash — the 100 TB
     path) or "md5" (portable hex-prefix variant whose buckets a DuckDB
@@ -571,9 +494,8 @@ def minhash_lsh_pairs(
     The verify step is exact Jaccard either way, so the hash choice only
     moves candidate recall, never the correctness of emitted pairs.
     """
-    bands, rows = resolve_banding(bands, rows, tune_for)
-    _, bh = _minhash_agg_components(hash_fn, "_sig", bands, rows)
-    base = _minhash_base(df, id_col, text_col, shingle_k, bands, rows, hash_fn)
+    _, bh = _minhash_agg_components(hash_fn, "_sig")
+    base = _minhash_base(df, hash_fn)
     banded = base.select(
         "_id",
         # the pair payload (_sim) is the shingle set: the verify step
@@ -581,7 +503,7 @@ def minhash_lsh_pairs(
         F.col("_shingles").alias("_sim"),
         F.explode(bh).alias("_block"),
     )
-    cand = _bucket_candidate_pairs(banded, max_bucket_size)
+    cand = _bucket_candidate_pairs(banded)
     inter = F.size(F.array_intersect(F.col("_sa"), F.col("_sb")))
     union = F.size(F.col("_sa")) + F.size(F.col("_sb")) - inter
     return (
@@ -590,13 +512,11 @@ def minhash_lsh_pairs(
             "id_b",
             (inter.cast("double") / union).alias("jaccard"),
         )
-        .where(F.col("jaccard") >= jaccard_threshold)
+        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
 
 
-def _bucket_candidate_pairs(
-    blocked: DataFrame, max_bucket_size: int = MAX_BUCKET_SIZE
-) -> DataFrame:
+def _bucket_candidate_pairs(blocked: DataFrame) -> DataFrame:
     """(_id, _sim, _block) rows → distinct candidate pairs
     (id_a, id_b, _sa, _sb).
 
@@ -611,23 +531,22 @@ def _bucket_candidate_pairs(
 
     Hot-bucket guard (ENFORCED): a bucket of K members materializes its
     K·(K-1)/2 pair structs as one array value in one task, so buckets
-    over ``max_bucket_size`` are dropped rather than OOMing the executor
+    over ``MAX_BUCKET_SIZE`` are dropped rather than OOMing the executor
     — banding bounds K only probabilistically, and EXACT duplicates
     agree on every band.  Run exact dedup (fingerprint group-by /
     dropDuplicates) before near-dup detection to collapse those buckets
     to singletons; the ``_block`` groups of ``blocked`` whose count
-    exceeds ``max_bucket_size`` are exactly what this guard skips.
+    exceeds ``MAX_BUCKET_SIZE`` are exactly what this guard skips.
 
     Oracle note: the DuckDB twins model NO cap, so oracle parity holds
-    exactly while every bucket stays under ``max_bucket_size`` (true for
+    exactly while every bucket stays under ``MAX_BUCKET_SIZE`` (true for
     the driver testdata by orders of magnitude — the guard exists for
-    pathological corpora).  If any bucket is over the cap, either
-    pre-collapse exact duplicates or raise the cap via the
-    ``max_bucket_size`` parameter every public operator forwards."""
+    pathological corpora).  If any bucket is over the cap, pre-collapse
+    exact duplicates first."""
     buckets = blocked.groupBy("_block").agg(
         F.sort_array(F.collect_list(F.struct("_id", "_sim"))).alias("_members")
     )
-    buckets = buckets.where(F.size("_members") <= max_bucket_size)
+    buckets = buckets.where(F.size("_members") <= MAX_BUCKET_SIZE)
     pair_arr = F.flatten(
         F.transform(
             "_members",
@@ -671,9 +590,7 @@ def _bucket_candidate_pairs(
     )
 
 
-def _bucket_candidate_id_pairs(
-    blocked: DataFrame, max_bucket_size: int = MAX_BUCKET_SIZE
-) -> DataFrame:
+def _bucket_candidate_id_pairs(blocked: DataFrame) -> DataFrame:
     """(_id, _block) rows → distinct light candidate pairs
     (id_a, id_b) — the payload-free twin of
     :func:`_bucket_candidate_pairs` (r11, guide §8: decide on
@@ -695,7 +612,7 @@ def _bucket_candidate_id_pairs(
     buckets = blocked.groupBy("_block").agg(
         F.sort_array(F.collect_list(F.struct("_id"))).alias("_members")
     )
-    buckets = buckets.where(F.size("_members") <= max_bucket_size)
+    buckets = buckets.where(F.size("_members") <= MAX_BUCKET_SIZE)
     pair_arr = F.flatten(
         F.transform(
             "_members",
@@ -715,18 +632,19 @@ def _bucket_candidate_id_pairs(
     )
 
 
-def minhash_estimate_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int = 3,
-    bands: int | None = None,
-    rows: int | None = None,
-    min_matches: int | None = None,
-    hash_fn: str = "md5",
-    max_bucket_size: int = MAX_BUCKET_SIZE,
-    tune_for: tuple[float, int] | None = None,
-) -> DataFrame:
+def agreement(a: Column, b: Column) -> Column:
+    """How many components two equal-length signature arrays agree on:
+    the MinHash estimator's numerator, E[agreement/n] = J(A, B)."""
+    return F.aggregate(
+        F.zip_with(
+            a, b, lambda x, y: F.when(x == y, F.lit(1)).otherwise(F.lit(0))
+        ),
+        F.lit(0),
+        lambda acc, v: acc + v,
+    )
+
+
+def minhash_estimate_pairs(df: DataFrame, hash_fn: str = "md5") -> DataFrame:
     """Signature-only near-dup scoring — the true 100 TB dedup path.
 
     Unlike :func:`minhash_lsh_pairs` (which re-reads the full shingle
@@ -743,55 +661,29 @@ def minhash_estimate_pairs(
     (one JVM-intrinsic hash per seed×shingle instead of an md5 — ~10×
     cheaper signatures, the hash to deploy at 100 TB; benchmarked as
     q_minhash_est_fast)."""
-    bands, rows = resolve_banding(bands, rows, tune_for)
-    n = bands * rows
-    if min_matches is None:
-        min_matches = n // 2
-    _, bh = _minhash_agg_components(hash_fn, "_sim", bands, rows)
-    base = minhash_sig_table(
-        df, id_col, text_col, shingle_k, bands, rows, hash_fn
-    )
+    n = BANDS * ROWS
+    _, bh = _minhash_agg_components(hash_fn, "_sim")
+    base = minhash_sig_table(df, hash_fn)
     banded = base.select(
         "_id",
         "_sim",
         F.explode(bh).alias("_band"),
     ).withColumnRenamed("_band", "_block")
-    cand = _bucket_candidate_pairs(banded, max_bucket_size)
-    matches = F.aggregate(
-        F.zip_with(
-            F.col("_sa"),
-            F.col("_sb"),
-            lambda x, y: F.when(x == y, F.lit(1)).otherwise(F.lit(0)),
-        ),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-    return cand.where(matches >= min_matches).select(
+    cand = _bucket_candidate_pairs(banded)
+    matches = agreement(F.col("_sa"), F.col("_sb"))
+    return cand.where(matches >= MIN_MATCHES).select(
         "id_a", "id_b", (matches.cast("double") / n).alias("jaccard_est")
     )
 
 
-def simhash_hex_neardup_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    block_chars: int = 4,
-    max_bucket_size: int = MAX_BUCKET_SIZE,
-) -> DataFrame:
-    """Portable-SimHash near-dup pairs over hex signatures: candidates
-    share one of the 16/block_chars hex blocks (pigeonhole over 4·block
-    bits), verified by exact per-digit Hamming distance.  One
-    aggregated signature table, then block bucket-and-expand; every
-    expression has a 1:1 DuckDB translation."""
-    n_blocks = 16 // block_chars
-    if max_hamming >= n_blocks:
-        # a hard error, not an assert: under python -O an assert vanishes
-        # and the blocking would silently MISS near-dup pairs
-        raise ValueError(
-            f"pigeonhole needs max_hamming ({max_hamming}) < n_blocks ({n_blocks})"
-        )
-    base = simhash_hex_table(df, id_col, text_col)
+def simhash_hex_neardup_pairs(df: DataFrame) -> DataFrame:
+    """Portable-SimHash near-dup pairs over hex signatures, Hamming
+    distance ≤ 3: candidates share one of the four 4-hex-digit blocks
+    (pigeonhole: 3 differing bits leave one of 4 blocks intact),
+    verified by exact per-digit Hamming distance.  One aggregated
+    signature table, then block bucket-and-expand; every expression has
+    a 1:1 DuckDB translation."""
+    base = simhash_hex_table(df, "doc_id", "text")
     blocked = base.select(
         "_id",
         "_sim",
@@ -800,34 +692,28 @@ def simhash_hex_neardup_pairs(
                 *[
                     F.concat(
                         F.lit(f"{blk}:"),
-                        F.substring("_sim", blk * block_chars + 1, block_chars),
+                        F.substring("_sim", blk * 4 + 1, 4),
                     )
-                    for blk in range(n_blocks)
+                    for blk in range(4)
                 ]
             )
         ).alias("_block"),
     )
     return (
-        _bucket_candidate_pairs(blocked, max_bucket_size)
+        _bucket_candidate_pairs(blocked)
         .select(
             "id_a",
             "id_b",
             hamming_hex(F.col("_sa"), F.col("_sb")).alias("hamming"),
         )
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= 3)
     )
 
 
-def _ngram_candidate_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int,
-    max_ngram_df: int,
-) -> DataFrame:
-    """Shared inverted-index candidate stage for the exact n-gram
-    similarity joins: explode distinct n-grams, drop stop-grams with
-    document frequency > ``max_ngram_df`` (quadratic candidates, no
+def _ngram_candidate_pairs(df: DataFrame) -> DataFrame:
+    """Shared inverted-index candidate stage for the exact word-3-gram
+    similarity joins: explode distinct 3-grams, drop stop-grams with
+    document frequency > 200 (quadratic candidates, no
     signal — the skew guard for this join at scale), pair docs sharing a
     surviving gram, and re-attach both full gram sets for exact
     verification.  Returns (id_a, id_b, _ga, _gb).
@@ -843,13 +729,13 @@ def _ngram_candidate_pairs(
     so duplicate ids in the input never produce (x, x) self-pairs,
     matching the strict a < b predicate of a pair join."""
     df = ensure_min_splits(df)
-    grams = F.array_distinct(shingles(tokens_col(text_col), n))
-    base = df.select(F.col(id_col).alias("_id"), grams.alias("_grams"))
+    grams = F.array_distinct(shingles(tokens_col("text"), 3))
+    base = df.select(F.col("doc_id").alias("_id"), grams.alias("_grams"))
     posting = base.select("_id", F.explode("_grams").alias("_g"))
     hot = (
         posting.groupBy("_g")
         .agg(F.count(F.lit(1)).alias("_df"))
-        .where(F.col("_df") > max_ngram_df)
+        .where(F.col("_df") > 200)
         .select("_g")
     )
     buckets = (
@@ -876,18 +762,11 @@ def _ngram_candidate_pairs(
     return cand.join(ga, "id_a").join(gb, "id_b")
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.4,
-    max_ngram_df: int = 200,
-) -> DataFrame:
-    """Exact n-gram Jaccard join via the shared inverted-index candidate
-    stage (:func:`_ngram_candidate_pairs`), verified with exact Jaccard
-    on the full n-gram sets."""
-    joined = _ngram_candidate_pairs(df, id_col, text_col, n, max_ngram_df)
+def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.4) -> DataFrame:
+    """Exact word-3-gram Jaccard join via the shared inverted-index
+    candidate stage (:func:`_ngram_candidate_pairs`), verified with
+    exact Jaccard on the full 3-gram sets."""
+    joined = _ngram_candidate_pairs(df)
     inter = F.size(F.array_intersect(F.col("_ga"), F.col("_gb")))
     union = F.size(F.col("_ga")) + F.size(F.col("_gb")) - inter
     return joined.select(
@@ -895,135 +774,19 @@ def ngram_jaccard_pairs(
     ).where(F.col("jaccard") >= threshold)
 
 
-def ngram_containment_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.8,
-    max_ngram_df: int = 200,
-) -> DataFrame:
-    """Containment similarity join: |A∩B| / min(|A|,|B|) over n-gram
-    sets — the partial-duplicate detector.  A document quoted or
-    embedded inside a larger one has LOW Jaccard (the big doc's grams
+def ngram_containment_pairs(df: DataFrame) -> DataFrame:
+    """Containment similarity join, containment ≥ 0.8: |A∩B| /
+    min(|A|,|B|) over word-3-gram sets — the partial-duplicate
+    detector.  A document quoted or embedded inside a larger one has LOW Jaccard (the big doc's grams
     dominate the union) but containment ≈ 1; corpus curation needs both
     signals (cf. the containment dedup in Gopher/CCNet-style cleaning).
     Same candidate stage as :func:`ngram_jaccard_pairs`, different
     verification score."""
-    joined = _ngram_candidate_pairs(df, id_col, text_col, n, max_ngram_df)
+    joined = _ngram_candidate_pairs(df)
     inter = F.size(F.array_intersect(F.col("_ga"), F.col("_gb")))
     containment = inter.cast("double") / F.least(
         F.size(F.col("_ga")), F.size(F.col("_gb"))
     )
     return joined.select(
         "id_a", "id_b", containment.alias("containment")
-    ).where(F.col("containment") >= threshold)
-
-
-# ---------------------------------------------------------------------------
-# LSH parameter tuning (driver math; the banding knob's designer)
-# ---------------------------------------------------------------------------
-
-
-@dataclass(frozen=True)
-class LshParams:
-    """A tuned banding scheme plus its predicted operating point:
-    ``fp_area`` = ∫₀^t P(s) ds (expected false-positive mass below the
-    threshold under a uniform similarity prior), ``fn_area`` =
-    ∫_t^1 (1−P(s)) ds (missed mass above it), and ``s50`` — the
-    similarity at which the collision probability crosses 1/2 (the
-    scheme's effective knee)."""
-
-    bands: int
-    rows: int
-    fp_area: float
-    fn_area: float
-    s50: float
-
-    @property
-    def num_hashes(self) -> int:
-        return self.bands * self.rows
-
-
-def lsh_collision_prob(s: float, bands: int, rows: int) -> float:
-    """The banding S-curve (Leskovec/Rajaraman/Ullman, *Mining of
-    Massive Datasets* ch. 3 — public): the probability two documents
-    with MinHash similarity ``s`` share at least one band bucket,
-    P(s) = 1 − (1 − s^rows)^bands."""
-    return 1.0 - (1.0 - s**rows) ** bands
-
-
-def tune_lsh_params(
-    threshold: float,
-    num_hashes: int,
-    fp_weight: float = 0.5,
-    fn_weight: float = 0.5,
-    resolution: int = 1000,
-) -> LshParams:
-    """Pick (bands, rows) for a target Jaccard ``threshold`` — the
-    datasketch-style optimization (public method; implemented from the
-    published math): among every factorization bands·rows ≤
-    ``num_hashes`` (rows = num_hashes // bands, remainder hashes
-    unused), minimize
-
-        fp_weight·∫₀^t P(s) ds  +  fn_weight·∫_t^1 (1 − P(s)) ds
-
-    with P the banding S-curve — the weighted candidate-error mass
-    under a uniform similarity prior.  Midpoint quadrature at
-    ``resolution`` steps per side; deterministic tie-break on
-    (error, bands) so equal-error schemes prefer fewer, wider bands
-    (fewer band hashes to explode and shuffle).
-
-    Raising ``fn_weight`` buys recall (the knee s50 drops below the
-    threshold); raising ``fp_weight`` buys candidate precision.  The
-    returned scheme plugs straight into ``minhash_lsh_pairs`` /
-    ``StreamingDedupIngest(bands=, rows=)`` — at 100 TB the FP area is
-    the fraction of the uniform-prior pair stream that needlessly
-    enters the verify join, so this knob is the candidate-volume
-    designer, not a cosmetic."""
-    if not 0.0 < threshold < 1.0:
-        raise ValueError("threshold must be in (0, 1)")
-    if num_hashes < 1:
-        raise ValueError("num_hashes must be positive")
-    if fp_weight < 0 or fn_weight < 0 or fp_weight + fn_weight <= 0:
-        raise ValueError("weights must be non-negative and not both zero")
-    if resolution < 2:
-        raise ValueError("resolution must be >= 2")
-
-    def fp_area(b: int, r: int) -> float:
-        dx = threshold / resolution
-        return sum(
-            lsh_collision_prob((i + 0.5) * dx, b, r)
-            for i in range(resolution)
-        ) * dx
-
-    def fn_area(b: int, r: int) -> float:
-        dx = (1.0 - threshold) / resolution
-        return sum(
-            1.0 - lsh_collision_prob(threshold + (i + 0.5) * dx, b, r)
-            for i in range(resolution)
-        ) * dx
-
-    best: LshParams | None = None
-    best_key: tuple[float, int] | None = None
-    for bands in range(1, num_hashes + 1):
-        rows = num_hashes // bands
-        if rows < 1:
-            break
-        fp = fp_area(bands, rows)
-        fn = fn_area(bands, rows)
-        err = fp_weight * fp + fn_weight * fn
-        key = (err, bands)
-        if best_key is None or key < best_key:
-            best_key = key
-            # s50: 1 − (1 − s^r)^b = 1/2  ⇒  s = (1 − 2^(−1/b))^(1/r)
-            s50 = (1.0 - 0.5 ** (1.0 / bands)) ** (1.0 / rows)
-            best = LshParams(
-                bands=bands,
-                rows=rows,
-                fp_area=fp,
-                fn_area=fn,
-                s50=s50,
-            )
-    assert best is not None  # num_hashes >= 1 guarantees one candidate
-    return best
+    ).where(F.col("containment") >= 0.8)

@@ -75,7 +75,7 @@ def _rotl(x: int, r: int) -> int:
     return ((x << r) | (x >> (64 - r))) & _U64
 
 
-def _xxh64(data: bytes, seed: int = 42) -> int:
+def _xxh64(data: bytes) -> int:
     """Pure-Python XXH64 (Collet's public xxHash spec, 64-bit variant)
     — the reference twin of Spark's ``xxhash64`` expression, which
     hashes a string column's UTF-8 bytes with seed 42.  Returns the
@@ -85,6 +85,7 @@ def _xxh64(data: bytes, seed: int = 42) -> int:
     tests; slow (per-byte Python) — the xxhash64 family's production
     path is the JVM engine, this exists so ``engine="pandas"`` stays
     available everywhere."""
+    seed = 42
     n = len(data)
     i = 0
     if n >= 32:
@@ -372,7 +373,6 @@ def _smoothed_log_probs(
 def dsir_fit(
     target: DataFrame,
     raw: DataFrame,
-    text_col: str = "text",
     buckets: int = DEFAULT_BUCKETS,
     smoothing: float = 1.0,
     engine: str = "pandas",
@@ -386,6 +386,7 @@ def dsir_fit(
     identical model, pinned; no Python workers).  ``hash_fn``
     ("md5" default / "xxhash64" the fast JVM family) is recorded on
     the model and drives every later scoring pass."""
+    text_col = "text"
     _check_buckets(buckets)
     if smoothing <= 0.0:
         raise ValueError("smoothing must be > 0 (unsmoothed ratios diverge)")
@@ -417,7 +418,6 @@ def dsir_log_weights(
     model: DsirModel,
     df: DataFrame,
     text_col: str = "text",
-    out_col: str = "dsir_logw",
     engine: str = "pandas",
 ) -> DataFrame:
     """Append log w(x) = Σ n-gram log-ratios — map-only (the plan is
@@ -433,6 +433,7 @@ def dsir_log_weights(
     ``transform``), in the same document gram order as the pandas
     tier, so the sums agree to float tolerance with NO Python workers
     and NO Arrow transfer in the hot path."""
+    out_col = "dsir_logw"
     if engine == "jvm":
         spark = df.sparkSession
         ratio_col = "_dsir_ratio"
@@ -511,8 +512,6 @@ def dsir_resample(
     df: DataFrame,
     k: int,
     seed: int = 0,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     engine: str = "pandas",
 ) -> DataFrame:
     """Select k documents WITHOUT replacement with probability ∝ w(x)
@@ -521,9 +520,11 @@ def dsir_resample(
     2014).  Plan: map-only weigh + TakeOrdered(k) — no global sort, no
     shuffle of the corpus.  Returns the caller's columns plus
     ``dsir_logw``; selection is reproducible for a fixed seed and
-    independent of partition layout.  ``id_col`` must be unique per
+    independent of partition layout.  ``doc_id`` must be unique per
     row — the noise derives from it (see ``gumbel_key_expr``), so
     duplicated ids would be selected all-or-nothing."""
+    id_col = "doc_id"
+    text_col = "text"
     if k < 1:
         raise ValueError("k must be positive")
     weighted = dsir_log_weights(model, df, text_col, engine=engine)

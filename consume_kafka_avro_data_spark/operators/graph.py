@@ -274,8 +274,6 @@ def connected_components(
 
 def label_propagation(
     edges: DataFrame,
-    src: str = "source_id",
-    dst: str = "target_id",
     max_iter: int = 5,
 ) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan
@@ -294,7 +292,7 @@ def label_propagation(
     aggregate + one per-node argmax — all hash-partitioned by node id
     so AQE reuses the exchange, with ``localCheckpoint`` cutting the
     per-round plan growth (the connected_components discipline)."""
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    e = edges.select(F.col("source_id").alias("a"), F.col("target_id").alias("b"))
     e = e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     e = e.where(F.col("a") != F.col("b")).distinct()
     e = e.localCheckpoint(eager=True)
@@ -357,8 +355,6 @@ def label_propagation(
 def shortest_paths(
     edges: DataFrame,
     sources: list,
-    src: str = "source_id",
-    dst: str = "target_id",
     directed: bool = False,
     max_hops: int = 30,
 ) -> DataFrame:
@@ -381,7 +377,7 @@ def shortest_paths(
     per round cuts the growing plan; the empty-frontier stop is one
     cheap count per round.  Distances only settle once, so the loop
     runs eccentricity(sources) rounds, not max_hops, on real graphs."""
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    e = edges.select(F.col("source_id").alias("a"), F.col("target_id").alias("b"))
     if not directed:
         e = e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     e = e.distinct().localCheckpoint(eager=True)
@@ -515,14 +511,13 @@ class GraphStore:
     def ingest_triples(
         self,
         triples: DataFrame,
-        object_type: str = "MyObjectType",
         created_at: str | None = None,
     ) -> tuple[int, int]:
         """The reference's per-message hot path (KafkaConsumerCallback.cpp:
         101-110), batch-amortized: upsert vertices, then edges.  Returns
         (new_vertices, new_edges)."""
         nv = self.upsert_objects(
-            vertices_from_triples(triples, object_type, created_at)
+            vertices_from_triples(triples, "MyObjectType", created_at)
         )
         ne = self.upsert_relationships(edges_from_triples(triples))
         return nv, ne

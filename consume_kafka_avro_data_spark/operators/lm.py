@@ -590,8 +590,6 @@ class NgramKN:
         docs: DataFrame,
         text_col: str = "text",
         id_col: str = "doc_id",
-        p_floor: float = 1e-9,
-        max_model_rows: int = MAX_LOCAL_MODEL_ROWS,
         _local: dict | None = None,
     ) -> DataFrame:
         """(id_col, n_ngrams, avg_nll) — :meth:`score`'s contract from
@@ -650,7 +648,7 @@ class NgramKN:
             local = (
                 _local
                 if _local is not None
-                else self.local_tables_flat(max_model_rows)
+                else self.local_tables_flat(MAX_LOCAL_MODEL_ROWS)
             )
         if "vocab" not in local:  # the marker of flatten_local_tables
             raise ValueError(
@@ -664,7 +662,7 @@ class NgramKN:
             )
         if bc is None:
             bc = docs.sparkSession.sparkContext.broadcast(local)
-        floor = float(p_floor)
+        floor = 1e-9  # score()'s default p_floor
 
         @F.pandas_udf("struct<_n: long, _slp: double>")
         def kn_partials(texts: pd.Series) -> pd.DataFrame:

@@ -89,12 +89,12 @@ def _fnv1a64(data: bytes) -> int:
     return h
 
 
-def _fake_decode(data: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
+def _fake_decode(data: bytes) -> np.ndarray:
     """Deterministic stand-in for decode→feature-extract: a unit vector
     seeded by the payload hash.  Identical bytes ⇒ identical features,
     so exact/near-dup semantics downstream stay meaningful."""
     rng = np.random.default_rng(_fnv1a64(data))
-    v = rng.standard_normal(dim)
+    v = rng.standard_normal(FEATURE_DIM)
     return (v / np.linalg.norm(v)).astype(np.float32)
 
 
@@ -204,14 +204,15 @@ def decode_ppm(data: bytes) -> dict:
     }
 
 
-def _real_decode(data: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
+def _real_decode(data: bytes) -> np.ndarray:
     """Real byte→feature extraction, format-dispatched on magic bytes:
 
-    * WAV  → first ``dim`` samples scaled to [-1, 1] (zero-padded);
-    * PPM  → ``dim``-bin grayscale histogram (fractions summing to 1);
-    * else → ``dim``-bin byte-value histogram (the honest content
+    * WAV  → first ``FEATURE_DIM`` samples scaled to [-1, 1] (zero-padded);
+    * PPM  → ``FEATURE_DIM``-bin grayscale histogram (fractions summing to 1);
+    * else → ``FEATURE_DIM``-bin byte-value histogram (the honest content
       summary for payloads with no decodable structure, e.g. text).
     """
+    dim = FEATURE_DIM
     if data[:4] == b"RIFF":
         s = decode_wav(data)["samples"].astype(np.float64) / 32768.0
         out = np.zeros(dim)

@@ -37,12 +37,13 @@ N_FEATURES = 1 << 15
 
 
 def quality_training_frame(
-    high: DataFrame, low: DataFrame, text_col: str = "text"
+    high: DataFrame, low: DataFrame
 ) -> DataFrame:
     """Label a trusted corpus 1 and a raw corpus 0 — the GPT-3/CCNet
     weak-labeling recipe (no hand labels; the trusted side IS the
     label).  Only the text column is kept: training must not see
     incidental columns that leak the split."""
+    text_col = "text"
     return high.select(
         F.col(text_col).alias("text"), F.lit(1.0).alias("label")
     ).unionByName(
@@ -84,7 +85,6 @@ def _pipeline(n_features: int, reg_param: float, max_iter: int):
 def train_quality_classifier(
     labeled: DataFrame,
     n_features: int = N_FEATURES,
-    reg_param: float = 1e-3,
     max_iter: int = 50,
 ):
     """Fit the tokenize → hash → logistic-regression pipeline on a
@@ -92,6 +92,7 @@ def train_quality_classifier(
     the fitted ``PipelineModel`` — persist with ``model.save(path)``
     and reload with ``PipelineModel.load`` (both tested), so the
     deployed filter is a load + one map-only transform."""
+    reg_param = 1e-3
     if "label" not in labeled.columns or "text" not in labeled.columns:
         raise ValueError(
             "training frame needs (text, label) columns — build it with "
@@ -104,9 +105,8 @@ def quality_probability(
     model,
     docs: DataFrame,
     text_col: str = "text",
-    out_col: str = "quality_prob",
 ) -> DataFrame:
-    """Score documents with a fitted classifier: appends ``out_col`` =
+    """Score documents with a fitted classifier: appends ``quality_prob`` =
     P(label=1 | text) and drops the pipeline's intermediate columns.
     NULL text scores as empty text (the corpus-wide NULL convention) —
     the transformer would otherwise throw on nulls mid-scan.
@@ -118,6 +118,7 @@ def quality_probability(
     a derived coalesced copy that never escapes."""
     from pyspark.ml.functions import vector_to_array
 
+    out_col = "quality_prob"
     orig = "_orig"
     while orig in docs.columns:
         orig += "_"

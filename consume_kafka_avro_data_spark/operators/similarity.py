@@ -119,10 +119,6 @@ def knn_join(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 10,
-    query_id: str = "q_id",
-    query_vec: str = "q_vec",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int | None = None,
 ) -> DataFrame:
     """Brute-force k-NN join: broadcast the (small) query side over the
@@ -150,6 +146,10 @@ def knn_join(
     ``embedding_neardup_pairs``)."""
     from pyspark.sql import Window
 
+    query_id = "q_id"
+    query_vec = "q_vec"
+    id_col = "vec_id"
+    vec_col = "embedding"
     del dim  # see docstring: BNLJ projections never codegen
     c = corpus.select(
         F.col(id_col), F.col(vec_col), l2_norm(F.col(vec_col), dim=None).alias("_cn")
@@ -196,9 +196,9 @@ def quantize_np(x: np.ndarray) -> np.ndarray:
     return np.trunc(np.asarray(x, dtype=np.float64) * Q20)
 
 
-def o_quantize(vec_sql: str = "CAST(embedding AS DOUBLE[])") -> str:
-    """DuckDB twin of :func:`quantize_np` over a list column."""
-    return f"list_transform({vec_sql}, x -> trunc(x * {Q20!r}))"
+def o_quantize() -> str:
+    """DuckDB twin of :func:`quantize_np` over the ``embedding`` column."""
+    return f"list_transform(CAST(embedding AS DOUBLE[]), x -> trunc(x * {Q20!r}))"
 
 
 def srp_bucket_table(
@@ -269,7 +269,6 @@ def blocked_allpairs_cosine(
     corpus: DataFrame,
     threshold: float,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_blocks: int = 8,
     group_col: str | None = None,
 ) -> DataFrame:
@@ -297,6 +296,7 @@ def blocked_allpairs_cosine(
     import pandas as pd
     from pyspark.sql.types import DoubleType, StructField, StructType
 
+    vec_col = "embedding"
     gcols = [group_col] if group_col is not None else []
     blk = (F.crc32(F.col(id_col).cast("string")) % n_blocks).cast("int")
     base = corpus.select(
@@ -396,21 +396,21 @@ def srp_lsh_topk(
     corpus: DataFrame,
     query_vec,
     k: int = 10,
-    dim: int = 64,
-    nbits: int = 12,
-    ntables: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
 ) -> DataFrame:
     """Approximate top-k: exact-rescored bucket collisions across
-    ``ntables`` SRP tables — ONE corpus pass computing every table's
+    6 SRP tables of 12 bits — ONE corpus pass computing every table's
     bucket id (:func:`srp_bucket_table`, Arrow/numpy over q20 exact
     arithmetic), one OR-filter for the collisions, then the codegen'd
     float rescore.  The previous shape (ntables separate scans, each
     evaluating nbits interpreted lambda folds per row, then a
     union+dropDuplicates) measured 6.4 s at sf0.1; this is <1 s with
     identical candidate semantics."""
+    dim = 64
+    nbits = 12
+    ntables = 6
+    id_col = "vec_id"
+    vec_col = "embedding"
+    seed = 42
     bucketed = srp_bucket_table(
         corpus, dim, nbits, ntables, seed, id_col, vec_col
     )
@@ -468,10 +468,6 @@ def kmeans_sample(
 
 def sample_with_query_row(
     corpus: DataFrame,
-    query_id=0,
-    sample: int = 4096,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ):
     """ONE collect serving two driver needs: the deterministic k-means /
     codebook training sample (exactly :func:`kmeans_sample`'s ORDER BY
@@ -484,9 +480,13 @@ def sample_with_query_row(
     absence there is PROVABLE: the sample is the ascending-id prefix,
     so if the query id is missing from a full prefix whose last id
     sorts after it, it is not in the table at all.  Only when ≥
-    ``sample`` ids sort at-or-before the query id (possible with that
+    4096 ids sort at-or-before the query id (possible with that
     many negative/NULL ids) does a second bounded collect run — the
     pre-r12 behavior, never a wrong answer."""
+    query_id = 0
+    sample = 4096
+    id_col = "vec_id"
+    vec_col = "embedding"
     rows = (
         corpus.select(id_col, vec_col).orderBy(id_col).limit(sample).collect()
     )
@@ -505,7 +505,6 @@ def sample_with_query_row(
 def kmeans_centroids(
     corpus: DataFrame,
     k: int = 16,
-    sample: int = 4096,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
@@ -519,6 +518,7 @@ def kmeans_centroids(
     corpus row — runs as a pure JVM expression, one map-only pass that a
     real deployment computes once and persists as a partition column.
     """
+    sample = 4096
     x = kmeans_sample(corpus, sample, id_col, vec_col)
     return lloyd_unit_kmeans(x, k=k, seed=seed)
 
@@ -588,15 +588,15 @@ def ivf_topk(
     k: int = 10,
     n_centroids: int = 16,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
     centroids: np.ndarray | None = None,
 ) -> DataFrame:
     """IVF ANN top-k: probe the ``nprobe`` cells whose centroids are
     nearest the query, exact-rescore only their members.  Scan cost drops
     to ~nprobe/n_centroids of the corpus (file-level pruning when the
     cell id is a partition column)."""
+    id_col = "vec_id"
+    vec_col = "embedding"
+    seed = 42
     if centroids is None:
         centroids = kmeans_centroids(corpus, k=n_centroids, id_col=id_col, vec_col=vec_col, seed=seed)
     qv = np.asarray(query_vec, dtype=np.float64)
@@ -669,9 +669,6 @@ def semantic_dedup(
     corpus: DataFrame,
     threshold: float = 0.35,
     n_centroids: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
     centroids: np.ndarray | None = None,
     n_blocks: int | None = None,
 ) -> DataFrame:
@@ -711,6 +708,9 @@ def semantic_dedup(
         StructType,
     )
 
+    id_col = "vec_id"
+    vec_col = "embedding"
+    seed = 42
     if centroids is None or n_blocks is None:
         centroids, _, n_blocks = semantic_dedup_params(
             corpus,
@@ -829,10 +829,7 @@ def embedding_neardup_pairs(
     dim: int = 64,
     nbits: int = 14,
     ntables: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     seed: int = 42,
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-dup (the dedup-family member over vectors):
     pairs colliding in any SRP table, verified by exact cosine ≥ τ.
@@ -853,12 +850,11 @@ def embedding_neardup_pairs(
     bit-identical to the DuckDB twin (see the in-function comment for
     the measured JVM alternatives it beats)."""
     from consume_kafka_avro_data_spark.operators.dedup import (
-        MAX_BUCKET_SIZE,
         _bucket_candidate_id_pairs,
     )
 
-    if max_bucket_size is None:
-        max_bucket_size = MAX_BUCKET_SIZE
+    id_col = "vec_id"
+    vec_col = "embedding"
     blocked = srp_bucket_table(
         corpus, dim, nbits, ntables, seed, id_col, vec_col, keep_vec=False
     ).select(
@@ -875,7 +871,7 @@ def embedding_neardup_pairs(
             )
         ).alias("_block"),
     )
-    pairs = _bucket_candidate_id_pairs(blocked, max_bucket_size)
+    pairs = _bucket_candidate_id_pairs(blocked)
     # NULL-SAFE attach (r12, r11 advisor): _bucket_candidate_id_pairs
     # deliberately preserves NULL-id pairs (PERMISSIVE decode output is
     # in the dedup family's threat model), but a plain equi-join never
@@ -1022,16 +1018,16 @@ def pq_codebooks(
     m: int = 8,
     k: int = 16,
     sample: int = 4096,
-    iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
 ) -> np.ndarray:
     """Train per-subspace codebooks on a deterministic driver-side
     sample (first ``sample`` ids).  Returns shape (m, k, dim//m).  Like
     :func:`kmeans_centroids`, the expensive corpus-wide step (encoding)
     is separate and map-only; only m·k·(dim/m) = dim·k floats ever live
     on the driver, at any corpus size."""
+    iters = 5
+    id_col = "vec_id"
+    vec_col = "embedding"
+    seed = 42
     rows = corpus.select(id_col, vec_col).orderBy(id_col).limit(sample).collect()
     x = np.array([r[vec_col] for r in rows], dtype=np.float64)
     return pq_codebooks_from_sample(x, m=m, k=k, iters=iters, seed=seed)
@@ -1121,8 +1117,6 @@ def pq_adc_topk(
     query_vec,
     codebooks: np.ndarray,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """ADC top-k over PQ codes: encode (map-only) → posexplode the m
     codes → broadcast-join the m·k LUT → per-id partial-aggregated sum
@@ -1131,6 +1125,8 @@ def pq_adc_topk(
     Ascending distance with id tie-break keeps the cut deterministic."""
     from pyspark.sql.functions import broadcast as _bc
 
+    id_col = "vec_id"
+    vec_col = "embedding"
     spark = corpus.sparkSession
     lut = spark.createDataFrame(
         pq_adc_lut(query_vec, codebooks),

@@ -38,9 +38,8 @@ def salted_join(
     small: DataFrame,
     on: str | list[str],
     how: str = "inner",
-    salt_buckets: int = 16,
 ) -> DataFrame:
-    """Equi-join with the skewed side scattered over ``salt_buckets``
+    """Equi-join with the skewed side scattered over 64 salted
     sub-keys and the small side replicated to every sub-key.
 
     Equivalent row-for-row to ``skewed.join(small, on, how)`` for
@@ -51,6 +50,7 @@ def salted_join(
     copy (salt_buckets spurious NULL-padded rows), so the equivalence
     silently breaks — use the small side as the probe side instead.
     """
+    salt_buckets = 64  # bench.py skew_stress: the fastest count measured
     # normalize the way Spark's own JoinType does (lowercase, strip
     # underscores) so 'Inner'/'LEFT_OUTER' keep working
     allowed = {"inner", "left", "leftouter", "semi", "leftsemi", "anti",

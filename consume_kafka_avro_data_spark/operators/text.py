@@ -154,35 +154,27 @@ def _winnow(text: str | Column, k: int, window: int, gram_hash) -> Column:
     )
 
 
-def winnow_fingerprints(
-    text: str | Column = "text", k: int = 8, window: int = 4
-) -> Column:
+def winnow_fingerprints(text: str | Column = "text") -> Column:
     """Winnowing document fingerprints on xxhash64 (the cheap scale
-    hash).  Near-identical documents share most fingerprints, so a
+    hash): 8-gram hashes, the min of each window of 4.  Near-identical documents share most fingerprints, so a
     group-by on exploded fingerprints finds overlap clusters.  All
     higher-order functions — one projection, no UDF."""
-    return _winnow(text, k, window, F.xxhash64)
+    return _winnow(text, 8, 4, F.xxhash64)
 
 
-def winnow_fingerprints_md5(
-    text: str | Column = "text", k: int = 8, window: int = 4
-) -> Column:
+def winnow_fingerprints_md5(text: str | Column = "text") -> Column:
     """Portable winnowing twin of :func:`winnow_fingerprints`: the
     rolling k-gram hash is the first 16 md5 hex chars, so the per-window
     lexicographic min (≡ uint64 min on fixed-width hex) is reproducible
     in any engine with md5/substr — used by the oracle-checked
     q_winnow_fingerprints query."""
     return _winnow(
-        text, k, window, lambda g: F.substring(F.md5(g), 1, 16)
+        text, 8, 4, lambda g: F.substring(F.md5(g), 1, 16)
     )
 
 
 def winnow_fingerprint_counts(
     df,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    window: int = 4,
     hash_fn: str = "md5",
 ):
     """Per-document winnowing fingerprint COUNTS as a table:
@@ -201,6 +193,10 @@ def winnow_fingerprint_counts(
     from pyspark.sql import Window as W
     from consume_kafka_avro_data_spark.operators.dedup import ensure_min_splits
 
+    id_col = "doc_id"
+    text_col = "text"
+    k = 8
+    window = 4
     df = ensure_min_splits(df)
     # NULL text is treated as "" so the document keeps its (single,
     # empty-gram) fingerprint row instead of being dropped by the explode
@@ -250,9 +246,10 @@ def _count_in(toks: Column, words: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, lambda x: F.array_contains(lex, x)))
 
 
-def sentiment_score(df: DataFrame, text_col: str = "text") -> DataFrame:
+def sentiment_score(df: DataFrame) -> DataFrame:
     """Lexicon sentiment: (pos-hits − neg-hits) / n_tokens, duplicates
     counted (filter, not intersect).  Map-only, codegen-friendly."""
+    text_col = "text"
     toks = tokens(F.col(text_col))
     n_pos, n_neg = _count_in(toks, POSITIVE_WORDS), _count_in(toks, NEGATIVE_WORDS)
     return df.withColumns(
@@ -264,9 +261,7 @@ def sentiment_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def tf_idf(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def tf_idf(df: DataFrame) -> DataFrame:
     """Per-(doc, term) tf-idf with sklearn-style smoothing:
     ``idf = ln((N+1)/(df+1)) + 1``.
 
@@ -275,6 +270,8 @@ def tf_idf(
     BROADCAST (document-frequency table is vocabulary-sized, tiny next
     to the corpus) — so the big tf side shuffles exactly once at 100 TB.
     """
+    id_col = "doc_id"
+    text_col = "text"
     terms = df.select(
         F.col(id_col), F.explode(tokens(F.col(text_col))).alias("term")
     )

@@ -239,7 +239,6 @@ def unigram_train(
     em_iters: int = 2,
     shrink: float = 0.75,
     min_word_count: int = 1,
-    text_col: str = "text",
     stats: dict | None = None,
 ) -> list[tuple[str, float]]:
     """Learn a unigram-LM piece vocabulary of ``vocab_size`` entries.
@@ -264,6 +263,7 @@ def unigram_train(
     them, and encode-time coverage degrades gracefully (a word with an
     out-of-vocab character returns whole, the documented fallback).
     """
+    text_col = "text"
     if vocab_size < 1:
         raise ValueError("vocab_size must be positive")
     if not 0.0 < shrink < 1.0:
@@ -564,8 +564,6 @@ def unigram_segment(
 def corpus_nll(
     corpus: DataFrame,
     model: list[tuple[str, float]],
-    max_piece_len: int | None = None,
-    text_col: str = "text",
     on_unsegmentable: str = "error",
 ) -> float:
     """Total corpus negative log-likelihood under the model's FULL
@@ -582,15 +580,14 @@ def corpus_nll(
     bias (the skipped-mass caveat is then on the caller)."""
     import pandas as pd
 
+    text_col = "text"
     if on_unsegmentable not in ("error", "skip"):
         raise ValueError('on_unsegmentable must be "error" or "skip"')
     types = _word_types(corpus, text_col)
     logp = dict(model)
-    if max_piece_len is None:
-        max_piece_len = max((len(p) for p in logp), default=1)
     spark = corpus.sparkSession
     bc = spark.sparkContext.broadcast(logp)
-    mpl = max_piece_len
+    mpl = max((len(p) for p in logp), default=1)
 
     def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         m = bc.value

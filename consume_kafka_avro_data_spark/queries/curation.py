@@ -515,15 +515,13 @@ _O_CURATION_STAGES = """
 """
 
 
-def _o_curation_pipeline(
-    threshold: float = 0.35, n_centroids: int | None = None, seed: int = 42
-) -> str | None:
+def _o_curation_pipeline() -> str | None:
     """DuckDB twin of q_curation_pipeline.  Lazy factory (the _o_ivf
     pattern): replays the quality gate + fingerprint collapse in DuckDB
     to find the survivors, loads THEIR embeddings (ORDER BY vec_id
     LIMIT 4096 — the same driver-bounded sample kmeans_centroids takes
     from the survivor frame), re-derives k from the SAME survivor count
-    (auto_n_centroids, when ``n_centroids=None``) and the deterministic
+    (auto_n_centroids) and the deterministic
     centroids with the shared numpy Lloyd's routine, and inlines them
     as literals.  Degrades to rows-only (None) when the parquet is
     unreadable or the survivor set is empty."""
@@ -572,9 +570,8 @@ def _o_curation_pipeline(
     if not rows:
         return None
     x = np.array([r[0] for r in rows], dtype=np.float64)
-    if n_centroids is None:
-        n_centroids = auto_n_centroids(int(n_surv), x.shape[1])
-    cent = lloyd_unit_kmeans(x, k=n_centroids, seed=seed)
+    n_centroids = auto_n_centroids(int(n_surv), x.shape[1])
+    cent = lloyd_unit_kmeans(x, k=n_centroids, seed=42)
 
     from consume_kafka_avro_data_spark.operators.similarity import (
         o_quantize,
@@ -600,7 +597,7 @@ def _o_curation_pipeline(
         ON x.cell = y.cell AND y.vec_id < x.vec_id
       WHERE list_dot_product(x.qv, y.qv)
             / (sqrt(list_dot_product(x.qv, x.qv))
-               * sqrt(list_dot_product(y.qv, y.qv))) >= {threshold!r}
+               * sqrt(list_dot_product(y.qv, y.qv))) >= 0.35
       GROUP BY x.vec_id
     )
     SELECT d.doc_id,
@@ -887,7 +884,7 @@ def duplicate_token_spans(
     )
 
 
-def _o_span_ctes(n: int = 10, keep_first: bool = False) -> str:
+def _o_span_ctes(keep_first: bool = False) -> str:
     """The toks→wins→dup→spans CTE chain shared by every span-dedup
     oracle (census, scrub, keep-one census): ONE definition, so a fix
     to the gram window or the island merge can never desynchronize the
@@ -895,6 +892,7 @@ def _o_span_ctes(n: int = 10, keep_first: bool = False) -> str:
     occurrence exclusion — lexicographic min (doc_id, pos) as a ROW
     comparison, injective for ANY doc length (the earlier arithmetic
     doc_id·10⁶+pos encoding collided for million-token docs)."""
+    n = 10
     k = n - 1
     if keep_first:
         mark = f"""

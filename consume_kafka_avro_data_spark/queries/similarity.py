@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from consume_kafka_avro_data_spark.operators.dedup import (
+    BANDS,
+    ROWS,
     incremental_minhash_dedup,
     minhash_estimate_pairs,
     minhash_lsh_pairs,
@@ -93,7 +95,7 @@ def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return knn_join(queries, emb, k=10, dim=64)
 
 
-def _o_srp_ann(k=10, dim=64, nbits=12, ntables=6, seed=42) -> str:
+def _o_srp_ann() -> str:
     """DuckDB twin of srp_lsh_topk: bucket ids recomputed from
     QUANTIZED (q20 fixed-point) hyperplane literals — integer-valued
     dots are exact in float64, so numpy's matmul on the Spark side and
@@ -108,6 +110,11 @@ def _o_srp_ann(k=10, dim=64, nbits=12, ntables=6, seed=42) -> str:
         quantize_np,
     )
 
+    k = 10
+    dim = 64
+    nbits = 12
+    ntables = 6
+    seed = 42
     bucket_cols = []
     for t in range(ntables):
         qplanes = quantize_np(_hyperplanes(dim, nbits, t, seed))
@@ -226,7 +233,7 @@ def _ivf_oracle_ctx(n_centroids=16, seed=42):
     return cent, qn, scores
 
 
-def _o_ivf(k=10, n_centroids=16, nprobe=4, seed=42) -> str | None:
+def _o_ivf() -> str | None:
     """DuckDB twin of ivf_topk at the driver's sf0.01: recompute the
     SAME deterministic centroids (identical numpy Lloyd's routine over
     the identical ORDER BY vec_id LIMIT 4096 sample), inline them as
@@ -242,6 +249,10 @@ def _o_ivf(k=10, n_centroids=16, nprobe=4, seed=42) -> str | None:
     the oracle is used, query-module import does no file I/O, and a
     degradation to rows-only (unreadable parquet → None) is logged by
     Query.oracle_text instead of passing silently."""
+    k = 10
+    n_centroids = 16
+    nprobe = 4
+    seed = 42
     ctx = _ivf_oracle_ctx(n_centroids, seed)
     if ctx is None:
         return None
@@ -307,12 +318,15 @@ def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _o_ann_recall(k=10, n_centroids=16, seed=42) -> str | None:
+def _o_ann_recall() -> str | None:
     """DuckDB twin of q_ann_recall: the same re-derived centroid
     literals as _o_ivf, one CTE per nprobe's probed top-k, the exact
     brute-force top-k as ground truth, recall as an exact count/k
     division — deterministic on both engines because every cosine is a
     q20 fixed-point dot and every cut tie-breaks on vec_id."""
+    k = 10
+    n_centroids = 16
+    seed = 42
     ctx = _ivf_oracle_ctx(n_centroids, seed)
     if ctx is None:
         return None
@@ -469,11 +483,11 @@ def _o_minhash_mins(n: int) -> str:
     )
 
 
-def _o_minhash_bands(bands: int, rows: int) -> str:
+def _o_minhash_bands() -> str:
     """Band bucket keys over the signature array (column ``sig``)."""
     return ", ".join(
-        f"md5('{b}:' || array_to_string(sig[{b * rows + 1} : {b * rows + rows}], ','))"
-        for b in range(bands)
+        f"md5('{b}:' || array_to_string(sig[{b * ROWS + 1} : {b * ROWS + ROWS}], ','))"
+        for b in range(BANDS)
     )
 
 
@@ -485,14 +499,14 @@ _O_SHINGLE_SET = """list_distinct(CASE WHEN len(toks) < 3
              END)"""
 
 
-def _o_minhash(bands: int = 8, rows: int = 4, threshold: float = 0.5) -> str:
+def _o_minhash() -> str:
     """DuckDB twin of minhash_lsh_pairs(hash_fn="md5"): rebuilds the same
     distinct shingle sets, the same per-seed md5 hex-prefix minima
     (fixed-width lowercase hex → string-min ≡ uint64-min in both
     engines), the same band hashes, and verifies with the same exact-int
     Jaccard division — so candidates AND scores match bit-for-bit."""
-    mins = _o_minhash_mins(bands * rows)
-    bexprs = _o_minhash_bands(bands, rows)
+    mins = _o_minhash_mins(BANDS * ROWS)
+    bexprs = _o_minhash_bands()
     return rf"""
     WITH base AS (
       SELECT doc_id AS _id,
@@ -514,18 +528,18 @@ def _o_minhash(bands: int = 8, rows: int = 4, threshold: float = 0.5) -> str:
       FROM cand JOIN base ga ON ga._id = cand.id_a
                 JOIN base gb ON gb._id = cand.id_b
     )
-    SELECT * FROM scored WHERE jaccard >= {threshold}
+    SELECT * FROM scored WHERE jaccard >= 0.5
     """
 
 
-def _o_minhash_est(bands: int = 8, rows: int = 4) -> str:
+def _o_minhash_est() -> str:
     """DuckDB twin of minhash_estimate_pairs: same portable signatures
     and band buckets as _o_minhash, but scored by the signature-agreement
     estimator instead of exact Jaccard — the shingle sets are never
     re-read after signature computation, exactly like the Spark plan."""
-    n = bands * rows
+    n = BANDS * ROWS
     mins = _o_minhash_mins(n)
-    bexprs = _o_minhash_bands(bands, rows)
+    bexprs = _o_minhash_bands()
     matches = f"len(list_filter(range(1, {n} + 1), i -> sa[i] = sb[i]))"
     return rf"""
     WITH base AS (
@@ -580,16 +594,14 @@ def q_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_lsh_pairs(load_table(spark, sf_dir, "documents"), hash_fn="md5")
 
 
-def _o_incremental_dedup(
-    bands: int = 8, rows: int = 4, threshold: float = 0.5
-) -> str:
+def _o_incremental_dedup() -> str:
     """DuckDB twin of incremental_minhash_dedup(hash_fn="md5") over the
     doc_id%4 shard split: same md5 hex-prefix signatures and band keys
     as _o_minhash, but candidates come from a new-side × corpus-side
     band join — corpus×corpus pairs are structurally impossible, which
     is the operator's whole contract."""
-    mins = _o_minhash_mins(bands * rows)
-    bexprs = _o_minhash_bands(bands, rows)
+    mins = _o_minhash_mins(BANDS * ROWS)
+    bexprs = _o_minhash_bands()
     return rf"""
     WITH base AS (
       SELECT doc_id AS _id,
@@ -612,7 +624,7 @@ def _o_incremental_dedup(
       FROM cand JOIN base ga ON ga._id = cand.new_id
                 JOIN base gb ON gb._id = cand.corpus_id
     )
-    SELECT * FROM scored WHERE jaccard >= {threshold}
+    SELECT * FROM scored WHERE jaccard >= 0.5
     """
 
 
@@ -669,15 +681,14 @@ def _o_simhash_sig_cte() -> str:
     """
 
 
-def _o_simhash_neardup(max_hamming: int = 3, block_chars: int = 4) -> str:
+def _o_simhash_neardup() -> str:
     hexs = "0123456789abcdef"
 
     def digit(expr: str, p: int) -> str:
         return f"(strpos('{hexs}', substr({expr}, {p}, 1)) - 1)"
 
     blocks = ", ".join(
-        f"'{blk}:' || substr(simhash, {blk * block_chars + 1}, {block_chars})"
-        for blk in range(16 // block_chars)
+        f"'{blk}:' || substr(simhash, {blk * 4 + 1}, 4)" for blk in range(4)
     )
     ham = " + ".join(
         f"bit_count(xor({digit('sa', p)}, {digit('sb', p)}))" for p in range(1, 17)
@@ -692,7 +703,7 @@ def _o_simhash_neardup(max_hamming: int = 3, block_chars: int = 4) -> str:
       FROM banded a JOIN banded b ON a.blk = b.blk AND a.doc_id < b.doc_id
     )
     SELECT id_a, id_b, CAST({ham} AS INT) AS hamming
-    FROM cand WHERE {ham} <= {max_hamming}
+    FROM cand WHERE {ham} <= 3
     """
     )
 
@@ -830,7 +841,7 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return blocked_allpairs_cosine(emb, threshold=0.35)
 
 
-def _o_semantic_dedup(threshold=0.35, n_centroids=None, seed=42) -> str | None:
+def _o_semantic_dedup() -> str | None:
     """DuckDB twin of operators.similarity.semantic_dedup: recompute
     the SAME deterministic centroids from the SAME ORDER BY vec_id
     LIMIT 4096 sample (the _o_ivf trick) — with ``n_centroids=None``
@@ -865,9 +876,8 @@ def _o_semantic_dedup(threshold=0.35, n_centroids=None, seed=42) -> str | None:
     if not rows:
         return None
     x = np.array([r[0] for r in rows], dtype=np.float64)
-    if n_centroids is None:
-        n_centroids = auto_n_centroids(int(n_corpus), x.shape[1])
-    cent = lloyd_unit_kmeans(x, k=n_centroids, seed=seed)
+    n_centroids = auto_n_centroids(int(n_corpus), x.shape[1])
+    cent = lloyd_unit_kmeans(x, k=n_centroids, seed=42)
 
     from consume_kafka_avro_data_spark.operators.similarity import (
         o_quantize,
@@ -891,7 +901,7 @@ def _o_semantic_dedup(threshold=0.35, n_centroids=None, seed=42) -> str | None:
         ON x.cell = y.cell AND y.vec_id < x.vec_id
       WHERE list_dot_product(x.qv, y.qv)
             / (sqrt(list_dot_product(x.qv, x.qv))
-               * sqrt(list_dot_product(y.qv, y.qv))) >= {threshold!r}
+               * sqrt(list_dot_product(y.qv, y.qv))) >= 0.35
       GROUP BY x.vec_id
     )
     SELECT a.vec_id, a.cell,
@@ -917,14 +927,14 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semantic_dedup(emb, threshold=0.35)
 
 
-def _o_dedup_pipeline(bands: int = 8, rows: int = 4) -> str:
+def _o_dedup_pipeline() -> str:
     """DuckDB twin of the full dedup pipeline: exact-fingerprint
     collapse → portable-MinHash estimator pairs between CANONICAL
     survivors only → recursive-CTE clustering → per-document
     (canonical, cluster, survivor) assignment."""
-    n = bands * rows
+    n = BANDS * ROWS
     mins = _o_minhash_mins(n)
-    bexprs = _o_minhash_bands(bands, rows)
+    bexprs = _o_minhash_bands()
     matches = f"len(list_filter(range(1, {n} + 1), i -> sa[i] = sb[i]))"
     return rf"""
     WITH RECURSIVE
@@ -1010,7 +1020,7 @@ def q_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _o_neardup_lsh(tau=0.4, dim=64, nbits=6, ntables=6, seed=42) -> str:
+def _o_neardup_lsh() -> str:
     """DuckDB twin of embedding_neardup_pairs: candidates = pairs
     sharing any table's q20 bucket (quantized plane literals, exact
     integer dots — order-independent), verified by the float left-fold
@@ -1022,6 +1032,11 @@ def _o_neardup_lsh(tau=0.4, dim=64, nbits=6, ntables=6, seed=42) -> str:
         quantize_np,
     )
 
+    tau = 0.4
+    dim = 64
+    nbits = 6
+    ntables = 6
+    seed = 42
     bucket_cols = [
         f"{o_srp_bucket(quantize_np(_hyperplanes(dim, nbits, t, seed)))} AS b{t}"
         for t in range(ntables)
@@ -1786,13 +1801,15 @@ def q_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_adc_topk(emb, qv, cb, k=10)
 
 
-def _o_adc_rerank(shortlist=50, k=10) -> str | None:
+def _o_adc_rerank() -> str | None:
     """DuckDB twin of q_adc_rerank: the shared PQ-codes CTE + ADC LUT
     produce the same deterministic shortlist cut (adc asc, id asc), and
     the re-rank is the exact float cosine with the same (score desc,
     id asc) cut — every stage engine-portable."""
     from consume_kafka_avro_data_spark.operators.similarity import pq_adc_lut
 
+    shortlist = 50
+    k = 10
     cte = _o_pq_codes_cte()
     got = _pq_codebooks_np()
     if cte is None or got is None or got[1] is None:

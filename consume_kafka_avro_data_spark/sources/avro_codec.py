@@ -249,7 +249,6 @@ def to_confluent_avro(
     df: DataFrame,
     schema_config: SchemaConfig,
     schema_id: int,
-    value_col: str = "value",
     use_native: bool | None = None,
 ) -> DataFrame:
     """Project per config, then encode each row to a Confluent-framed
@@ -262,6 +261,7 @@ def to_confluent_avro(
     present (SURVEY §7 step 4); otherwise (and with ``use_native=False``)
     it uses the Arrow-batched pandas codec.  Both paths emit byte-
     identical CP1 frames for the flat scalar schema universe."""
+    value_col = "value"
     if use_native is None:
         use_native = native_avro_available(df.sparkSession)
     if use_native:
@@ -445,7 +445,6 @@ def from_confluent_avro(
     df: DataFrame,
     schema_config: SchemaConfig,
     expected_schema_id: int | None = None,
-    value_col: str = "value",
     keep_raw: bool = False,
     use_native: bool | None = None,
 ) -> DataFrame:
@@ -464,6 +463,7 @@ def from_confluent_avro(
     hot-ingest shape, no Python in the plan — falling back to the
     Arrow-batched pandas codec in jar-less deployments (this sandbox).
     """
+    value_col = "value"
     if use_native is None:
         use_native = native_avro_available(df.sparkSession)
     if use_native:
@@ -598,7 +598,6 @@ def _json_scalar(v):
 def from_confluent_avro_multi(
     df: DataFrame,
     configs: dict[int, SchemaConfig],
-    value_col: str = "value",
     keep_raw: bool = False,
 ) -> DataFrame:
     """Decode a MULTI-schema topic (SURVEY §7 hard part): each frame
@@ -616,6 +615,7 @@ def from_confluent_avro_multi(
     """
     import json as _json
 
+    value_col = "value"
     fields_by_id = {i: _schema_fields(c) for i, c in configs.items()}
     _guard_decode_columns(
         df,
@@ -761,7 +761,6 @@ def from_confluent_avro_resolved(
     writer_configs: dict[int, SchemaConfig],
     reader_config: SchemaConfig,
     defaults: dict[str, object] | None = None,
-    value_col: str = "value",
     keep_raw: bool = False,
 ) -> DataFrame:
     """Decode a topic whose frames may carry OLDER writer schemas into
@@ -774,6 +773,7 @@ def from_confluent_avro_resolved(
     frame dead-lettered for 'unknown writer schema id N' is exactly the
     one you re-decode after adding the missing writer config, which an
     error-string-only DLQ cannot do."""
+    value_col = "value"
     defaults = defaults or {}
     writer_fields = {
         sid: _schema_fields(sc) for sid, sc in writer_configs.items()

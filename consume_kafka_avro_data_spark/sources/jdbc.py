@@ -118,12 +118,11 @@ def jdbc_writer_options(
     user: str | None = None,
     password: str | None = None,
     driver: str = POSTGRES_DRIVER_CLASS,
-    batchsize: int = 10_000,
 ) -> dict[str, str]:
     """The JDBC datasource option map, as a pure function so tests can
     pin the assembly with no database.
 
-    ``batchsize`` bounds the per-partition insert batches (Spark's
+    ``batchsize`` (10,000) bounds the per-partition insert batches (Spark's
     JDBC writer default is 1000 — too chatty for a bulk staging load);
     eager URL validation mirrors ``kafka_reader_options``'s policy of
     failing with the config-layer error instead of the driver's."""
@@ -138,7 +137,7 @@ def jdbc_writer_options(
         "url": url,
         "dbtable": table,
         "driver": driver,
-        "batchsize": str(batchsize),
+        "batchsize": "10000",
     }
     if user is not None:
         opts["user"] = user

@@ -248,8 +248,6 @@ def write_ocf(
     df: DataFrame,
     schema_config: SchemaConfig,
     path: str,
-    codec: str = "deflate",
-    records_per_block: int = 1000,
 ) -> int:
     """Driver-side OCF export (see module docstring for why write is
     the utility direction): shape per config, stream rows through
@@ -266,13 +264,7 @@ def write_ocf(
             n += 1
             yield {k: r[k] for k in names}
 
-    data = write_ocf_bytes(
-        fields,
-        rows(),
-        schema_config.to_avro_schema_json(),
-        codec,
-        records_per_block,
-    )
+    data = write_ocf_bytes(fields, rows(), schema_config.to_avro_schema_json())
     os.makedirs(path, exist_ok=True)
     tmp = os.path.join(path, "part-00000.avro.tmp")
     with open(tmp, "wb") as f:

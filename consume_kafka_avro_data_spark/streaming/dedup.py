@@ -34,23 +34,20 @@ import json
 import os
 import time
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DataType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from consume_kafka_avro_data_spark.functions.textops import exploded_word_grams
 from consume_kafka_avro_data_spark.operators.bloom import BroadcastBloom
+from consume_kafka_avro_data_spark.operators import dedup as _dedup
 from consume_kafka_avro_data_spark.operators.dedup import (
-    MAX_BUCKET_SIZE,
+    BANDS,
+    MIN_MATCHES,
+    ROWS,
+    SHINGLE_K,
     _minhash_agg_components,
+    agreement,
     minhash_sig_table,
-    resolve_banding,
 )
 from consume_kafka_avro_data_spark.operators.store import ManifestTable
 from consume_kafka_avro_data_spark.operators.text import (
@@ -64,6 +61,21 @@ from consume_kafka_avro_data_spark.streaming.lifecycle import (
     BoundedReplayMixin,
     total_of,
 )
+
+
+#: The stream's document columns.  Ids are longs: they key the
+#: persisted signature store.
+ID_COL, TEXT_COL = "doc_id", "text"
+#: The hash the ingest signs with: the fastest JVM MinHash hash.
+HASH_FN = "xxhash64"
+#: The signature hyperparameters, persisted beside the store as
+#: ``_signature_params.json`` (see ``StreamingDedupIngest.__init__``).
+SIGNATURE_PARAMS = {
+    "shingle_k": SHINGLE_K,
+    "bands": BANDS,
+    "rows": ROWS,
+    "hash_fn": HASH_FN,
+}
 
 
 class DedupMetrics:
@@ -111,18 +123,8 @@ class StreamingDedupIngest(BoundedReplayMixin):
         spark: SparkSession,
         store_dir: str,
         checkpoint_dir: str,
-        id_col: str = "doc_id",
-        text_col: str = "text",
-        shingle_k: int = 3,
-        bands: int | None = None,
-        rows: int | None = None,
-        tune_for: tuple[float, int] | None = None,
-        min_matches: int | None = None,
-        hash_fn: str = "xxhash64",
-        max_bucket_size: int = MAX_BUCKET_SIZE,
         dupes_dir: str | None = None,
         compact_every: int | None = None,
-        id_type: DataType | None = None,
         quality_threshold: float | None = None,
         rejects_dir: str | None = None,
         quality_model=None,
@@ -146,9 +148,9 @@ class StreamingDedupIngest(BoundedReplayMixin):
         contam_min_hits: int = 1,
         contam_dir: str | None = None,
     ):
-        """``id_type`` is the document-id column's Spark type (default
-        LongType) — it shapes the persisted store schema, so a stream
-        whose ``id_col`` disagrees is rejected at the first micro-batch
+        """The stream carries ``doc_id`` (long) and ``text``.  The id
+        type shapes the persisted store schema, so a stream whose
+        ``doc_id`` is not a long is rejected at the first micro-batch
         with a clear error instead of corrupting the store (parquet
         would accept the mismatched write and every later read would
         fail with a column-type mismatch).
@@ -249,7 +251,7 @@ class StreamingDedupIngest(BoundedReplayMixin):
 
         ``eval_docs`` enables DECONTAMINATION AT INGEST (the streaming
         form of q_decontaminate/q_decontaminate_bloom): a static frame
-        of benchmark/eval documents (same ``text_col``) whose word
+        of benchmark/eval documents (same ``text`` column) whose word
         ``contam_gram_n``-grams are, once at construction, distinct'd,
         checkpointed, and compiled into a ``BroadcastBloom``.  Each
         micro-batch's grams pass the bloom's pure-JVM bit-test
@@ -268,28 +270,13 @@ class StreamingDedupIngest(BoundedReplayMixin):
         ``MAX_BITS`` guard and the broadcast verify both refuse builds
         past plan-shippable size.
 
-        ``tune_for=(jaccard_threshold, num_hashes)`` (round 9) designs
-        the banding scheme through ``operators/dedup.tune_lsh_params``
-        instead of taking explicit ``bands``/``rows`` — the resolution
-        is deterministic and the RESOLVED scheme is what lands in
-        ``_signature_params.json``, so a replay or reopen configured
-        with the same ``tune_for`` always agrees with the store (and a
-        reopen with mismatched parameters is rejected exactly as for
-        explicit ones).  Passing both is a config conflict; passing
-        neither keeps the pinned (8, 4) defaults every pre-round-9
-        store was built with — see ``resolve_banding``."""
-        bands, rows = resolve_banding(bands, rows, tune_for)
-        n = bands * rows
+        Signatures are ``HASH_FN`` (xxhash64) MinHash over word
+        ``operators/dedup.SHINGLE_K``-shingles (3), banded
+        ``operators/dedup.BANDS`` × ``ROWS`` (8 × 4); the store records
+        them in ``_signature_params.json`` and refuses a reopen by a
+        build whose parameters differ."""
         self.spark = spark
         self.checkpoint_dir = checkpoint_dir
-        self.id_col = id_col
-        self.text_col = text_col
-        self.shingle_k = shingle_k
-        self.bands = bands
-        self.rows = rows
-        self.min_matches = n // 2 if min_matches is None else min_matches
-        self.hash_fn = hash_fn
-        self.max_bucket_size = max_bucket_size
         self.dupes_dir = dupes_dir
         self.compact_every = compact_every
         self.quality_threshold = quality_threshold
@@ -381,54 +368,47 @@ class StreamingDedupIngest(BoundedReplayMixin):
             # BroadcastBloom.build enforces MAX_BITS.
             self._eval_grams = (
                 exploded_word_grams(
-                    eval_docs.select(F.col(text_col).alias("text")),
+                    eval_docs.select(F.col(TEXT_COL).alias("text")),
                     n=contam_gram_n,
                 )
                 .distinct()
                 .localCheckpoint(eager=True)
             )
             self._bloom = BroadcastBloom.build(self._eval_grams, "g")
-        elem = LongType() if hash_fn == "xxhash64" else StringType()
-        self.id_type = id_type or LongType()
         self.store = ManifestTable(
             spark,
             os.path.join(store_dir, "signatures"),
             StructType(
                 [
-                    StructField("_id", self.id_type, True),
-                    StructField("_sim", ArrayType(elem, True), True),
+                    StructField("_id", LongType(), True),
+                    StructField("_sim", ArrayType(LongType(), True), True),
                 ]
             ),
             keys=["_id"],
         )
         # persist the signature hyperparameters beside the store and
-        # validate on reopen: the id_type guard protects the schema,
-        # but reopening with different bands/rows/shingle_k/hash_fn
-        # would recompute band keys and zip_with agreements against
-        # arrays shaped by the OLD parameters — near-dups of stored
-        # docs silently stop matching and merge as novel, permanently
-        # un-deduping the corpus with no signal
-        params = {
-            "shingle_k": shingle_k,
-            "bands": self.bands,
-            "rows": self.rows,
-            "hash_fn": hash_fn,
-        }
+        # validate on reopen: the id type guard protects the schema,
+        # but a store built with different bands/rows/shingle_k/hash_fn
+        # (by another build) would have its band keys and zip_with
+        # agreements recomputed against arrays shaped by the OLD
+        # parameters — near-dups of stored docs silently stop matching
+        # and merge as novel, permanently un-deduping the corpus with
+        # no signal
         pf = os.path.join(store_dir, "_signature_params.json")
         io = self.store._io
         if io.is_file(pf):
             stored = json.loads(io.read_bytes(pf))
-            if stored != params:
+            if stored != SIGNATURE_PARAMS:
                 raise ValueError(
                     f"signature store at {store_dir!r} was built with "
-                    f"{stored}, but this ingest was configured with "
-                    f"{params}; matching across mismatched signature "
-                    "parameters silently finds nothing — reuse the "
-                    "stored parameters or rebuild the store"
+                    f"{stored}, but this ingest signs with "
+                    f"{SIGNATURE_PARAMS}; matching across mismatched "
+                    "signature parameters silently finds nothing — open "
+                    "it with the build that made it or rebuild the store"
                 )
         else:
             io.mkdirs(store_dir)
-            io.write_atomic(pf, json.dumps(params).encode())
+            io.write_atomic(pf, json.dumps(SIGNATURE_PARAMS).encode())
         self.metrics = self._new_metrics()
 
     def gate_census(self) -> dict:
@@ -457,9 +437,9 @@ class StreamingDedupIngest(BoundedReplayMixin):
         get its group's score (plain EqualTo never matches NULL, so a
         contaminated NULL-id doc would pass, be signed and merged).  A
         doc with no score row gets NULL scores, which no gate rejects."""
-        s = scores.withColumnRenamed(self.id_col, "_score_id")
+        s = scores.withColumnRenamed(ID_COL, "_score_id")
         return docs.join(
-            s, F.col(self.id_col).eqNullSafe(F.col("_score_id")), "left"
+            s, F.col(ID_COL).eqNullSafe(F.col("_score_id")), "left"
         ).drop("_score_id")
 
     def _banded(self, sigs: DataFrame) -> DataFrame:
@@ -467,29 +447,16 @@ class StreamingDedupIngest(BoundedReplayMixin):
         (codegen'd hashes over array slices; cheap relative to the
         signature pass, and what lets the store persist signatures
         only)."""
-        _, bh = _minhash_agg_components(
-            self.hash_fn, "_sim", self.bands, self.rows
-        )
+        _, bh = _minhash_agg_components(HASH_FN, "_sim")
         return sigs.select("_id", "_sim", F.explode(bh).alias("_block"))
-
-    def _agreement(self) -> Column:
-        return F.aggregate(
-            F.zip_with(
-                F.col("_sa"),
-                F.col("_sb"),
-                lambda x, y: F.when(x == y, F.lit(1)).otherwise(F.lit(0)),
-            ),
-            F.lit(0),
-            lambda acc, v: acc + v,
-        )
 
     def _matches(self, probe: DataFrame, target: DataFrame) -> DataFrame:
         """(dup_id, match_id, matches) for probe docs whose signature
-        agrees with a target doc on ≥ min_matches components, meeting
+        agrees with a target doc on ≥ ``MIN_MATCHES`` components, meeting
         only through band-bucket collisions.  Self-pairs (same id) are
         excluded — on a post-crash replay the batch's own already-
         stored signatures must not count as duplicates.  Hot target
-        buckets (> max_bucket_size members) are dropped, same contract
+        buckets (> ``MAX_BUCKET_SIZE`` members) are dropped, same contract
         as _bucket_candidate_pairs."""
         p = probe.select(
             F.col("_id").alias("dup_id"),
@@ -516,7 +483,7 @@ class StreamingDedupIngest(BoundedReplayMixin):
             t.withColumn(
                 "_bn", F.count(F.lit(1)).over(_W.partitionBy("_block"))
             )
-            .where(F.col("_bn") <= self.max_bucket_size)
+            .where(F.col("_bn") <= _dedup.MAX_BUCKET_SIZE)
             .drop("_bn")
         )
         cand = (
@@ -541,11 +508,13 @@ class StreamingDedupIngest(BoundedReplayMixin):
             # key).  The zip_with re-runs per band collision: 32
             # codegen'd comparisons, noise by comparison.
             cand.select(
-                "dup_id", "match_id", self._agreement().alias("matches")
+                "dup_id",
+                "match_id",
+                agreement(F.col("_sa"), F.col("_sb")).alias("matches"),
             )
             .groupBy("dup_id", "match_id")
             .agg(F.max("matches").alias("matches"))
-            .where(F.col("matches") >= self.min_matches)
+            .where(F.col("matches") >= MIN_MATCHES)
         )
 
     def _lm_scored(self, batch: DataFrame) -> DataFrame:
@@ -554,16 +523,16 @@ class StreamingDedupIngest(BoundedReplayMixin):
         construction the plan has ZERO model joins (one Arrow pass
         plus the per-doc aggregate); otherwise it is the relational
         ``score()``."""
-        docs = batch.select(self.id_col, self.text_col)
+        docs = batch.select(ID_COL, TEXT_COL)
         if self._lm_local is not None:
             return self.lm_model.score_broadcast(
                 docs,
-                text_col=self.text_col,
-                id_col=self.id_col,
+                text_col=TEXT_COL,
+                id_col=ID_COL,
                 _local=self._lm_local,
             )
         return self.lm_model.score(
-            docs, text_col=self.text_col, id_col=self.id_col
+            docs, text_col=TEXT_COL, id_col=ID_COL
         )
 
     def _verdicts(self, batch: DataFrame) -> tuple[DataFrame | None, list]:
@@ -577,13 +546,13 @@ class StreamingDedupIngest(BoundedReplayMixin):
         all docs is exactly the gate a sequential funnel would have
         removed the doc at.
 
-        C4 rewrites ``text_col`` for every later gate (and for the
+        C4 rewrites ``text`` for every later gate (and for the
         signatures); the row gates append their scores in place; the
         LM and decontamination scores are per-id aggregates, joined
         back NULL-safely.  Those two branch from the C4-cleaned frame,
         not from the scored one: a branch below the Arrow passes
         (Gopher, DSIR) would run them a second time."""
-        idc, txt = self.id_col, self.text_col
+        idc, txt = ID_COL, TEXT_COL
         stream_cols = batch.columns
         gates: list = []  # (name, reject, audit columns, rejects dir)
         if self.c4:
@@ -701,15 +670,14 @@ class StreamingDedupIngest(BoundedReplayMixin):
     # -- per-micro-batch body ------------------------------------------------
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        got = batch.schema[self.id_col].dataType
-        if got != self.id_type:
+        got = batch.schema[ID_COL].dataType
+        if got != LongType():
             raise TypeError(
-                f"{self.id_col!r} is {got.simpleString()} but the signature "
-                f"store was declared {self.id_type.simpleString()}; pass "
-                "id_type= so the persisted schema matches the stream"
+                f"{ID_COL!r} is {got.simpleString()} but the signature "
+                "store keys are bigint; cast the stream's ids to long"
             )
         replayed = self.metrics.ledger.admit(batch_id)
-        idc = self.id_col
+        idc = ID_COL
         held: list[DataFrame] = []  # checkpoints, released when the batch ends
         try:
             t0 = time.perf_counter()
@@ -744,15 +712,8 @@ class StreamingDedupIngest(BoundedReplayMixin):
             # stage is ~48% of six-gate wall time — these split it into
             # signature computation / store band-join probe / merge_new
             # write so the next optimization aims at the real component
-            sigs = minhash_sig_table(
-                batch,
-                self.id_col,
-                self.text_col,
-                self.shingle_k,
-                self.bands,
-                self.rows,
-                self.hash_fn,
-            ).localCheckpoint(eager=True)  # signed once; used by 3 consumers
+            # signed once; used by 3 consumers
+            sigs = minhash_sig_table(batch, HASH_FN).localCheckpoint(eager=True)
             held.append(sigs)
             t_sig = time.perf_counter()
             banded = self._banded(sigs)
@@ -760,7 +721,7 @@ class StreamingDedupIngest(BoundedReplayMixin):
             # ids.  After a post-merge crash the store already holds the
             # batch's novel docs; beyond the self-pair exclusion in
             # _matches, their presence could push a band bucket past
-            # max_bucket_size on the retry, silently dropping matches
+            # MAX_BUCKET_SIZE on the retry, silently dropping matches
             # the first attempt found (a previously-detected duplicate
             # would re-route as novel and merge — permanent un-dedup).
             # Excluding the batch's ids restores the exact store view

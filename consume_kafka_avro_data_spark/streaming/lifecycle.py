@@ -35,7 +35,7 @@ from __future__ import annotations
 
 import os
 import threading
-from typing import Any, Callable
+from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
@@ -64,7 +64,7 @@ class BatchLedger:
     """Driver state keyed by batch id, under the replace-by-id contract
     (see the module docstring).
 
-    ``fold(acc, record)`` combines records; records of ids that leave
+    ``add_counts(acc, record)`` combines records; records of ids that leave
     the window fold into ``folded`` in arrival order.  ``total()`` is
     the fold of everything recorded, built on the first read and kept
     incrementally after it: a new id folds into it, and only replacing
@@ -76,12 +76,10 @@ class BatchLedger:
     def __init__(
         self,
         horizon: int = REPLAY_WINDOW,
-        fold: Callable[[Any, Any], Any] = add_counts,
         empty: Any = None,
     ):
         self.horizon = horizon
         self.lock = threading.RLock()
-        self._fold = fold
         self._window: dict[int, Any] = {}
         self.folded = {} if empty is None else empty
         self._folded_batches = 0
@@ -111,11 +109,11 @@ class BatchLedger:
             if replaced:
                 self._total = None
             elif self._total is not None:
-                self._total = self._fold(self._total, rec)
+                self._total = add_counts(self._total, rec)
             if len(self._window) > self.horizon:
                 cutoff = max(self._window) - self.horizon
                 for bid in [b for b in self._window if b <= cutoff]:
-                    self.folded = self._fold(self.folded, self._window.pop(bid))
+                    self.folded = add_counts(self.folded, self._window.pop(bid))
                     self._folded_batches += 1
                     if self._folded_max is None or bid > self._folded_max:
                         self._folded_max = bid
@@ -137,7 +135,7 @@ class BatchLedger:
             if self._total is None:
                 total = self.folded
                 for rec in self._window.values():
-                    total = self._fold(total, rec)
+                    total = add_counts(total, rec)
                 self._total = total
             return self._total
 

@@ -205,8 +205,6 @@ class AvroProducer:
         self,
         stream: DataFrame,
         checkpoint_dir: str,
-        available_now: bool = True,
-        processing_time: str = "1 second",
     ) -> StreamingQuery:
         """writeStream into the topic via foreachBatch on BOTH paths, so
         the delivery report ticks per batch against a real broker too
@@ -240,8 +238,4 @@ class AvroProducer:
         writer = writer.option(
             "checkpointLocation", os.path.join(checkpoint_dir, "produce")
         )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        else:
-            writer = writer.trigger(processingTime=processing_time)
-        return writer.start()
+        return writer.trigger(availableNow=True).start()

@@ -36,12 +36,13 @@ def noop(df):
 _orig = D._exploded_shingles
 
 
-def _exploded_dedup(df, id_col, text_col, k):
-    return _orig(df, id_col, text_col, k).dropDuplicates(["_id", "_sh"])
+def _exploded_dedup(df):
+    return _orig(df).dropDuplicates(["_id", "_sh"])
 
 
-def _exploded_arraydistinct(df, id_col, text_col, k):
-    toks = D.tokens_col(text_col)
+def _exploded_arraydistinct(df):
+    k = 3
+    toks = D.tokens_col("text")
     grams = F.when(
         F.size("__sh_toks") >= k,
         F.transform(
@@ -50,7 +51,7 @@ def _exploded_arraydistinct(df, id_col, text_col, k):
         ),
     ).otherwise(F.array(F.array_join(F.slice("__sh_toks", 1, k), " ")))
     return (
-        df.select(F.col(id_col).alias("_id"), toks.alias("__sh_toks"))
+        df.select(F.col("doc_id").alias("_id"), toks.alias("__sh_toks"))
         .select("_id", F.explode(F.array_distinct(grams)).alias("_sh"))
     )
 
@@ -64,7 +65,7 @@ def main():
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
     # dup-factor probe: exploded windows vs distinct (_id, _sh)
-    ex = _orig(docs, "doc_id", "text", 3)
+    ex = _orig(docs)
     n_all = ex.count()
     n_distinct = ex.dropDuplicates(["_id", "_sh"]).count()
     print(

@@ -74,7 +74,6 @@ SLOW_TESTS = {
     "test_label_propagation.py::test_lpa_models_reference_on_any_graph",
     "test_llm_ops.py::test_signature_forms_agree_on_null_and_empty_text",
     "test_llm_ops.py::test_signature_tables_equal_hof_columns",
-    "test_lsh_tuning.py::test_tune_for_parity_across_banding_consumers",
     "test_ngram_lm.py::test_flat_kernel_identical_to_relational",
     "test_ngram_lm.py::test_local_tables_guard_and_reuse",
     "test_ngram_lm.py::test_local_tables_keyed_by_name_not_position",

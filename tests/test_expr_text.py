@@ -49,7 +49,7 @@ def test_minhash_expr_text_equals_column_forms(spark):
             band_hashes_md5,
         ),
     ):
-        comp, band = _minhash_agg_components(hash_fn, "_sim", 8, 4)
+        comp, band = _minhash_agg_components(hash_fn, "_sim")
         n = 32
         new = (
             df.groupBy("_id")

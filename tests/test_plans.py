@@ -666,7 +666,7 @@ def test_incremental_dedup_band_equi_join_no_nested_loop(q):
     plan = I.simple_plan(q("q_incremental_dedup"))
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
-    assert "LeftAnti" in plan, plan  # the max_bucket_size guard
+    assert "LeftAnti" in plan, plan  # the MAX_BUCKET_SIZE guard
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 

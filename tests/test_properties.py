@@ -79,17 +79,20 @@ DOC_TEXTS = st.lists(
 
 @given(texts=DOC_TEXTS)
 @SETTINGS
-def test_minhash_estimator_vs_exact_jaccard_model(spark, texts):
+def test_minhash_estimator_vs_exact_jaccard_model(spark, monkeypatch, texts):
     """The signature-agreement estimate must (a) keep every emitted pair's
     ids ordered, (b) stay in [0, 1], and (c) equal 1.0 whenever the two
     docs have identical shingle sets (a permutation-min over equal sets is
     equal componentwise) — the law that makes exact dupes always score 1."""
+    from consume_kafka_avro_data_spark.operators import dedup
     from consume_kafka_avro_data_spark.operators.dedup import (
         minhash_estimate_pairs,
         shingles,
         tokens_col,
     )
     from pyspark.sql import functions as F
+
+    monkeypatch.setattr(dedup, "MIN_MATCHES", 0)  # every candidate pair
 
     docs = spark.createDataFrame(
         list(enumerate(texts)), ["doc_id", "text"]
@@ -102,7 +105,7 @@ def test_minhash_estimator_vs_exact_jaccard_model(spark, texts):
     }
     pairs = {
         (r.id_a, r.id_b): r.jaccard_est
-        for r in minhash_estimate_pairs(docs, min_matches=0).collect()
+        for r in minhash_estimate_pairs(docs).collect()
     }
     for (a, b), est in pairs.items():
         assert a < b

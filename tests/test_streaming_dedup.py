@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import pytest
 
-from consume_kafka_avro_data_spark.streaming.dedup import StreamingDedupIngest
+from consume_kafka_avro_data_spark.streaming.dedup import MIN_MATCHES, StreamingDedupIngest
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat sleeps "
@@ -105,11 +105,9 @@ def test_streaming_dedup_auto_compaction(spark, tmp_path):
 
 
 def test_streaming_dedup_rejects_mismatched_id_type(spark, tmp_path):
-    """A stream whose id column disagrees with the declared store type
+    """A stream whose id column disagrees with the store's bigint keys
     must fail FAST with a clear TypeError — parquet would accept the
     mismatched write and corrupt the store for every later read."""
-    from pyspark.sql.types import StringType
-
     ingest = StreamingDedupIngest(
         spark,
         store_dir=str(tmp_path / "store"),
@@ -118,23 +116,9 @@ def test_streaming_dedup_rejects_mismatched_id_type(spark, tmp_path):
     bad = spark.createDataFrame(
         [("a", BASE)], "doc_id string, text string"
     )
-    with pytest.raises(TypeError, match="signature store was declared"):
+    with pytest.raises(TypeError, match="signature store keys are bigint"):
         ingest.process_batch(bad, batch_id=0)
     assert ingest.store.files() == []  # nothing was written
-
-    # declaring the type makes string ids first-class
-    typed = StreamingDedupIngest(
-        spark,
-        store_dir=str(tmp_path / "store2"),
-        checkpoint_dir=str(tmp_path / "ckpt2"),
-        id_type=StringType(),
-    )
-    batch = spark.createDataFrame(
-        [("a", BASE), ("b", BASE), ("c", FAR)], "doc_id string, text string"
-    )
-    typed.process_batch(batch, batch_id=0)
-    assert typed.metrics.dup_docs == 1 and typed.metrics.novel_docs == 2
-    assert sorted(r["_id"] for r in typed.store.read().collect()) == ["a", "c"]
 
 
 def test_streaming_dedup_replayed_batch_id_skips_counters(spark, ingest):
@@ -322,92 +306,50 @@ def test_null_id_docs_are_gated_null_safely(spark, tmp_path):
 
 
 def test_store_rejects_mismatched_signature_params(spark, tmp_path):
-    """Reopening a signature store with different bands/rows/shingle_k
-    silently finds nothing (band keys and zip_with agreements recompute
-    against arrays shaped by the OLD parameters) — it must refuse with
-    a clear error instead, like the id_type guard."""
-    store_dir = str(tmp_path / "store")
-    StreamingDedupIngest(
-        spark, store_dir=store_dir, checkpoint_dir=str(tmp_path / "ck1"),
-        bands=8, rows=4,
-    )
-    # same params reopen fine
-    StreamingDedupIngest(
-        spark, store_dir=store_dir, checkpoint_dir=str(tmp_path / "ck2"),
-        bands=8, rows=4,
-    )
-    with pytest.raises(ValueError, match="signature store .* was built"):
-        StreamingDedupIngest(
-            spark, store_dir=store_dir,
-            checkpoint_dir=str(tmp_path / "ck3"), bands=4, rows=4,
-        )
-
-
-def test_tune_for_designs_and_persists_the_scheme(spark, tmp_path):
-    """Round-9: StreamingDedupIngest(tune_for=(threshold, num_hashes))
-    resolves (bands, rows) through tune_lsh_params; the RESOLVED
-    scheme lands in _signature_params.json, so a reopen with the same
-    tune_for (or with the equivalent explicit values) agrees, while
-    mismatched explicit values are rejected; explicit + tune_for is a
-    config conflict; no tune_for keeps the pinned (8, 4) defaults."""
+    """Reopening a signature store built with different bands/rows/
+    shingle_k (by another build) silently finds nothing (band keys and
+    zip_with agreements recompute against arrays shaped by the OLD
+    parameters) — it must refuse with a clear error instead, like the
+    id type guard."""
     import json as _json
 
-    from consume_kafka_avro_data_spark.operators.dedup import (
-        tune_lsh_params,
-    )
-
-    p = tune_lsh_params(0.8, 128)
-    store_dir = str(tmp_path / "store")
-    ingest = StreamingDedupIngest(
-        spark,
-        store_dir=store_dir,
-        checkpoint_dir=str(tmp_path / "ck1"),
-        tune_for=(0.8, 128),
-    )
-    assert (ingest.bands, ingest.rows) == (p.bands, p.rows)
-    stored = _json.loads(
-        (tmp_path / "store" / "_signature_params.json").read_text()
-    )
-    assert stored["bands"] == p.bands and stored["rows"] == p.rows
-    # reopen: same tune_for agrees; equivalent explicit values agree
+    store_dir = tmp_path / "store"
     StreamingDedupIngest(
-        spark, store_dir=store_dir, checkpoint_dir=str(tmp_path / "ck2"),
-        tune_for=(0.8, 128),
+        spark, store_dir=str(store_dir), checkpoint_dir=str(tmp_path / "ck1")
     )
+    params = store_dir / "_signature_params.json"
+    assert _json.loads(params.read_text()) == {
+        "shingle_k": 3, "bands": 8, "rows": 4, "hash_fn": "xxhash64",
+    }
+    # same params reopen fine
     StreamingDedupIngest(
-        spark, store_dir=store_dir, checkpoint_dir=str(tmp_path / "ck3"),
-        bands=p.bands, rows=p.rows,
+        spark, store_dir=str(store_dir), checkpoint_dir=str(tmp_path / "ck2")
+    )
+    params.write_text(
+        _json.dumps({"shingle_k": 3, "bands": 4, "rows": 4, "hash_fn": "xxhash64"})
     )
     with pytest.raises(ValueError, match="signature store .* was built"):
         StreamingDedupIngest(
-            spark, store_dir=store_dir,
-            checkpoint_dir=str(tmp_path / "ck4"), bands=8, rows=4,
+            spark, store_dir=str(store_dir), checkpoint_dir=str(tmp_path / "ck3")
         )
-    with pytest.raises(ValueError, match="not both"):
-        StreamingDedupIngest(
-            spark, store_dir=str(tmp_path / "other"),
-            checkpoint_dir=str(tmp_path / "ck5"),
-            bands=8, rows=4, tune_for=(0.8, 128),
-        )
-    plain = StreamingDedupIngest(
-        spark, store_dir=str(tmp_path / "plain"),
-        checkpoint_dir=str(tmp_path / "ck6"),
-    )
-    assert (plain.bands, plain.rows) == (8, 4)
 
 
-def test_replay_after_merge_keeps_dup_routing_stable(spark, tmp_path):
+def test_replay_after_merge_keeps_dup_routing_stable(
+    spark, tmp_path, monkeypatch
+):
     """Post-merge crash replay: the store already holds the batch's
-    novel docs, and with max_bucket_size=1 their presence would push
+    novel docs, and with MAX_BUCKET_SIZE=1 their presence would push
     the shared band bucket over the cap and silently drop the match —
     the store probe excludes the batch's own ids, so the replay routes
     the SAME duplicates as the first attempt."""
+    from consume_kafka_avro_data_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "MAX_BUCKET_SIZE", 1)
     ingest = StreamingDedupIngest(
         spark,
         store_dir=str(tmp_path / "store"),
         checkpoint_dir=str(tmp_path / "ckpt"),
         dupes_dir=str(tmp_path / "dupes"),
-        max_bucket_size=1,
     )
     seed = spark.createDataFrame([(1, BASE)], "doc_id long, text string")
     batch = spark.createDataFrame(
@@ -507,7 +449,7 @@ def test_null_id_doc_dedups_against_batch_and_store(spark, tmp_path):
     assert (d, m) == (7, None)
     # the witness row keeps its agreement count even for the NULL
     # canonical (a bare MIN/min_by would null-skip it away)
-    assert k is not None and k >= ingest.min_matches
+    assert k is not None and k >= MIN_MATCHES
 
 
 def test_null_id_dup_is_not_merged(spark, tmp_path):

@@ -83,7 +83,7 @@ def test_exploded_word_grams_codegen_plan(docs):
 
 def test_exploded_shingles_equals_hof_set(docs):
     """operators/dedup._exploded_shingles: same per-doc shingle SET as
-    explode(array_distinct(shingles(tokens_col, k))) — duplicates and
+    explode(array_distinct(shingles(tokens_col, 3))) — duplicates and
     short/NULL docs included (duplicates are value-neutral for the
     min-agg/collect_set consumers)."""
     from consume_kafka_avro_data_spark.operators.dedup import (
@@ -92,18 +92,14 @@ def test_exploded_shingles_equals_hof_set(docs):
         tokens_col,
     )
 
-    for k in (1, 3, 40):
-        hof = docs.select(
-            "doc_id",
-            F.explode(F.array_distinct(shingles(tokens_col("text"), k))).alias(
-                "_sh"
-            ),
-        )
-        fast = _exploded_shingles(docs, "doc_id", "text", k)
-        want = {}
-        for r in hof.collect():
-            want.setdefault(r[0], set()).add(r[1])
-        got = {}
-        for r in fast.collect():
-            got.setdefault(r[0], set()).add(r[1])
-        assert got == want, f"k={k}"
+    hof = docs.select(
+        "doc_id",
+        F.explode(F.array_distinct(shingles(tokens_col("text"), 3))).alias("_sh"),
+    )
+    want = {}
+    for r in hof.collect():
+        want.setdefault(r[0], set()).add(r[1])
+    got = {}
+    for r in _exploded_shingles(docs).collect():
+        got.setdefault(r[0], set()).add(r[1])
+    assert got == want
